@@ -128,19 +128,20 @@ def test_pq_gate_entries_fit_replica_budget(spark):
         assert oracle_sec < 15, f"{name} oracle replay {oracle_sec:.1f}s (budget 15)"
 
 
-def test_trained_state_cold_vs_memo(spark):
+def test_trained_state_cold_vs_memo(spark, monkeypatch):
     """VERDICT r13 ask #7: the trained-state MEMO path and the fully
     COLD path hash-identically. The gate normally runs entries with
-    `_PQ_TRAIN_CACHE`/`_ASSET_CACHE` already warm from earlier entries;
-    this clears the trainer memo and the materialized PQ/IVF assets and
-    re-runs the trainer-backed entries from scratch — if the memoized
-    state ever drifted from what a cold train produces, the frames
-    would diverge here (the oracle would also catch it, since it
+    trained-state and asset memos already warm from earlier entries;
+    this swaps in an empty memo table (trainer state AND the
+    materialized PQ/IVF assets go cold) and re-runs the trainer-backed
+    entries from scratch — if the memoized state ever drifted from what
+    a cold train produces, the frames would diverge here (the oracle would also catch it, since it
     replays trainers per entry; this pins the SPARK side's two paths
     against each other directly)."""
     import pandas as pd
 
     from tests.conftest import SF_CORRECT
+    from tickdb_spark import cachereg
     from tickdb_spark import querybank as Q
 
     names = ["text_unigram_tokenize", "sim_ann_pq_adc",
@@ -155,11 +156,10 @@ def test_trained_state_cold_vs_memo(spark):
     # pass 1: warms the memos (or reuses ones earlier tests populated)
     warm = {n: run(n) for n in names}
 
-    # go cold: drop the trained books/centroids AND the materialized
-    # code/cell assets derived from them
-    Q._PQ_TRAIN_CACHE.clear()
-    for k in [k for k in Q._ASSET_CACHE if k[0] in ("pq_codes", "ivf_cells")]:
-        del Q._ASSET_CACHE[k]
+    # go cold: an empty memo table drops the trained books/centroids/
+    # weights/vocab AND the materialized code/cell assets derived from
+    # them; the warm table is restored for later tests
+    monkeypatch.setattr(cachereg, "_MEMO", {})
 
     for n in names:
         cold = run(n)

@@ -231,6 +231,29 @@ def test_incremental_refresh_matches_full(tmp_path, spark):
     assert incremental == full
 
 
+def test_full_refresh_after_incremental_drops_departed_series(tmp_path, spark):
+    """An incremental refresh must leave the session's overwrite mode
+    alone: a later full refresh() still replaces each level whole, so a
+    series dropped from the ticks table leaves the rollups too."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    tdb = TickDB(spark, str(tmp_path / "wh"))
+    tdb.create_db("ow")
+    path = tdb.catalog._existing("ow")
+    tdb.put("ow", [
+        {"time": f"2016-08-0{d}T06:00:00Z", "index": s, "value": {"x": float(d)}}
+        for d in (1, 2) for s in ("a", "b")
+    ])
+    store = RollupStore(spark, path)
+    store.refresh()
+    mode = spark.conf.get(conf)
+    tdb.put("ow", [{"time": "2016-08-03T06:00:00Z", "index": "a", "value": {"x": 3.0}}])
+    store.refresh_incremental()
+    assert spark.conf.get(conf) == mode
+    tdb.drop_index("ow", "b")
+    store.refresh()
+    assert {r["series"] for r in store.read("day").select("series").collect()} == {"a"}
+
+
 def test_refresh_salted_write_bounds_files_per_series(db, spark):
     """r17 (VERDICT r16 ask #2): the salted write shape must bound BOTH
     writers and files per series — at most SPLITS_PER_SERIES parquet

@@ -1,62 +1,93 @@
-"""Bounded lifecycle for corpus-token-sized cached substrates.
+"""The one owner of state reused across registry entries.
 
-r17 (VERDICT r16 ask #4 / ADVICE): the r16 detector/gram caches are
-corpus-TOKEN-volume frames (exploded shingles, n-gram streams) persisted
-with ``DataFrame.cache()`` and never unpersisted. Within one entry that
-is the right call — the substrate feeds 5–12 consumer subtrees and nine
-registry entries share the same detector plan verbatim, so the
-InMemoryRelation reuse is the optimization. Across a long multi-entry
-session, though, every DISTINCT corpus substrate accumulates in storage
-memory and (at the default MEMORY_AND_DISK level) spills to local disk
-under pressure — at 100 TB that is ~the corpus written to executor
-disks, with nothing ever reclaiming it.
+Entries of one session share derived state: a planted warehouse, trained
+tokenizer or classifier state, a corpus gram table, verified detector
+pairs. Each kind lives here under one stated policy, so no operator or
+query module keeps a memo of its own (``tests/test_cache_ownership.py``
+enforces that).
 
-The contract here makes both decisions explicit:
+**Memos** — ``memo(spark, key, fill)`` returns the value filled for
+``key`` in ``spark``'s SparkContext, calling ``fill()`` on a miss.
 
-* **Storage level**: ``MEMORY_AND_DISK`` (deserialized), stated rather
-  than inherited — evicted blocks spill instead of being recomputed,
-  because every holder feeds multiple parallel consumer stages of one
-  action (the r13 lazy-cache lesson: a recompute-on-miss level pays the
-  tokenize per consumer exactly when memory is tight).
-* **Lifecycle**: at most ``SPARKTICK_CORPUS_CACHE_SLOTS`` (default 8)
-  corpus substrates are held; materializing a new one unpersists the
-  oldest beyond the cap (FIFO — the oldest is the least likely to be
-  shared by upcoming entries). Total cache footprint is therefore
-  bounded by ``slots x substrate size`` regardless of session length.
-  The gate/bench session creates ~6 distinct substrates, so locally the
-  cap never evicts and plans are unchanged; a production session over
-  many corpora sets the env var lower — or materializes the substrate
-  as an intermediate TABLE, which is the documented 100 TB shape.
+* *Key*: ``(applicationId, *key)``. The caller's ``key`` names the site
+  and its inputs (``("unigram_vocab", sf_dir)``).
+* *Session scope*: a value filled under one SparkContext is never
+  returned under another. The first miss under a new context drops every
+  memo of the old one: its checkpointed frames and metastore tables are
+  gone with it, and a path fixture is rebuilt rather than trusted.
+* *Storage level*: whatever ``fill`` returns. The memo persists nothing
+  itself; a frame that must stay materialized is checkpointed or
+  ``corpus_persist``-ed by its fill.
+* *Eviction*: a context change, or ``evict_all()``.
 
-Dimension-sized frames (per-doc ``sizes``, τ-reduced ``prefix``,
-doc x band ``banded``, query-term-filtered tf) stay on plain
-``cache()`` — their footprint does not scale with token volume.
+**Corpus substrates** — ``corpus_persist(df)`` for corpus-token-sized
+frames (exploded shingles, n-gram streams) that several consumer stages
+and entries read.
+
+* *Key*: the plan's semantic hash, not ``id(df)``. Detector helpers
+  build a new DataFrame over the same plan for every consumer entry, and
+  Spark's CacheManager dedupes those to one InMemoryRelation; a
+  per-object key would burn a slot per call and, on eviction, unpersist
+  a relation other handles still serve. A re-registration refreshes
+  recency.
+* *Storage level*: ``MEMORY_AND_DISK``, stated rather than inherited:
+  evicted blocks spill instead of being recomputed, because every holder
+  feeds several parallel consumer stages of one action (a
+  recompute-on-miss level pays the tokenize per consumer exactly when
+  memory is tight). Materialized eagerly by default for the same reason.
+* *Eviction*: FIFO past ``CORPUS_CACHE_SLOTS`` substrates, so the cache
+  footprint is bounded by ``slots x substrate size`` however long the
+  session runs; the oldest is the least likely to serve upcoming
+  entries. A session over many corpora materializes the substrate as an
+  intermediate table instead. Also ``evict_all()``.
+
+**Dimension frames** — ``dimension_persist(df)`` for frames that
+outlive one entry but whose size follows the output, not token volume
+(the dedup detectors' verified pairs).
+
+* *Key*: the plan's semantic hash, as above.
+* *Storage level*: ``DataFrame.cache()``'s, lazily: the first consuming
+  action materializes it once per session.
+* *Eviction*: ``evict_all()`` only; the number of distinct detector
+  plans is small and fixed.
+
+Out of scope: persistence inside one entry's plan (``.cache()`` or
+``localCheckpoint`` of a frame several branches of one action read)
+belongs to that plan. Never memoize an entry's own output frame: that
+memoizes the benchmark.
 """
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+#: Corpus substrates held at once; see the module docstring.
+CORPUS_CACHE_SLOTS = 8
 
-def _slots() -> int:
-    return int(os.environ.get("SPARKTICK_CORPUS_CACHE_SLOTS", "8"))
+_MEMO: dict[tuple, Any] = {}
 
-
-#: Live corpus-sized substrates, insertion-ordered. Keyed by the plan's
-#: SEMANTIC HASH, not id(df): detector helpers are called once per
-#: consumer entry and every call builds a new DataFrame over the SAME
-#: plan — Spark's CacheManager dedupes those to one InMemoryRelation,
-#: so per-object keys would (a) burn a slot per call and (b) on
-#: eviction unpersist a relation other registered handles still serve
-#: (measured r17: nine τ=0.5 detector calls evicted the shared corpus
-#: gram table mid-bench and its next consumer re-derived it at RUN
-#: time). One slot per distinct substrate; a re-registration refreshes
-#: recency instead of evicting.
+#: Live corpus substrates by plan key, oldest first.
 _LIVE: "OrderedDict[int, DataFrame]" = OrderedDict()
+
+#: Live dimension frames by plan key.
+_KEPT: dict[int, DataFrame] = {}
+
+
+def memo(spark: SparkSession, key: tuple, fill: Callable[[], Any]) -> Any:
+    """The value memoized under ``key`` in ``spark``'s SparkContext,
+    filled by ``fill()`` on a miss."""
+    app = spark.sparkContext.applicationId
+    ck = (app, *key)
+    if ck not in _MEMO:
+        for stale in [k for k in _MEMO if k[0] != app]:
+            del _MEMO[stale]
+        _MEMO[ck] = fill()
+    return _MEMO[ck]
 
 
 def _plan_key(df: DataFrame) -> int:
@@ -66,31 +97,37 @@ def _plan_key(df: DataFrame) -> int:
         return id(df)  # degraded mode: per-object key (still bounded)
 
 
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session torn down; nothing to reclaim
+
+
 def corpus_persist(df: DataFrame, materialize: bool = True) -> DataFrame:
-    """Persist a corpus-token-sized substrate under the bounded contract
-    above. Returns ``df`` (persisted, and materialized by default so
-    parallel consumer stages of the first action read the cache instead
-    of re-running the tokenize — the r13/r16 eager-cache discipline)."""
+    """Persist a corpus-token-sized substrate under the policy above and
+    return it, materialized unless ``materialize`` is false."""
     df.persist(StorageLevel.MEMORY_AND_DISK)
     if materialize:
         df.count()
     key = _plan_key(df)
     _LIVE.pop(key, None)  # re-registration refreshes recency
     _LIVE[key] = df
-    while len(_LIVE) > _slots():
-        _, old = _LIVE.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session torn down; nothing to reclaim
+    while len(_LIVE) > CORPUS_CACHE_SLOTS:
+        _unpersist(_LIVE.popitem(last=False)[1])
+    return df
+
+
+def dimension_persist(df: DataFrame) -> DataFrame:
+    """Cache a dimension-sized frame under the policy above and return it."""
+    _KEPT[_plan_key(df)] = df.cache()
     return df
 
 
 def evict_all() -> None:
-    """Unpersist every registered substrate (tests / session teardown)."""
+    """Drop every memo and unpersist every frame registered here."""
+    _MEMO.clear()
     while _LIVE:
-        _, old = _LIVE.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+        _unpersist(_LIVE.popitem(last=False)[1])
+    while _KEPT:
+        _unpersist(_KEPT.popitem()[1])

@@ -35,7 +35,7 @@ import random as _random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from tickdb_spark.cachereg import corpus_persist
+from tickdb_spark.cachereg import corpus_persist, dimension_persist
 
 NGRAM_N = 3
 MINHASH_K = 12  # total hash functions
@@ -280,11 +280,11 @@ def ngram_jaccard_pairs(
     # self-join + exact verify — is the expensive part of every graph
     # consumer (nine entries share this τ=0.5 plan verbatim, and each was
     # re-running the join: CC collect, triangles wedge build, pagerank,
-    # k-core, retention, leakage audits). A lazy cache() makes the first
-    # consumer's action materialize it once per session; consumers that
-    # reference it multiply WITHIN one action keep their own
-    # checkpoint/collect discipline (r12/r13 lessons).
-    return (
+    # k-core, retention, leakage audits). A lazy dimension_persist makes
+    # the first consumer's action materialize it once per session;
+    # consumers that reference it multiply WITHIN one action keep their
+    # own checkpoint/collect discipline (r12/r13 lessons).
+    return dimension_persist(
         shared.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn(
@@ -293,7 +293,6 @@ def ngram_jaccard_pairs(
         )
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-        .cache()
     )
 
 
@@ -570,7 +569,7 @@ def minhash_lsh_pairs(
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
     # r17 opt: same dimension-sized output cache as ngram_jaccard_pairs —
     # the banded self-join + verify re-ran in every consumer entry.
-    return (
+    return dimension_persist(
         shared.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn(
@@ -579,7 +578,6 @@ def minhash_lsh_pairs(
         )
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-        .cache()
     )
 
 

@@ -2002,8 +2002,7 @@ def source_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "read, not just the write",
 )
 def source_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ck = ("schema_evo", sf_dir)
-    if ck not in _ASSET_CACHE:
+    def fill():
         base = _os.path.join(_tempfile.mkdtemp(prefix="tickdb_schevo_"), "tbl")
         ev = _read(spark, sf_dir, "events").select(
             "event_id", "user_id", "value", "event_type"
@@ -2012,9 +2011,11 @@ def source_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         new = ev.where(F.col("event_id") % 2 == 1)
         old.write.mode("overwrite").parquet(_os.path.join(base, "v1"))
         new.write.mode("overwrite").parquet(_os.path.join(base, "v2"))
-        _ASSET_CACHE[ck] = base
+        return base
+
+    base = _cachereg.memo(spark, ("schema_evo", sf_dir), fill)
     merged = spark.read.option("mergeSchema", "true").parquet(
-        _os.path.join(_ASSET_CACHE[ck], "v1"), _os.path.join(_ASSET_CACHE[ck], "v2")
+        _os.path.join(base, "v1"), _os.path.join(base, "v2")
     )
     return merged.select("event_id", "user_id", "value", "event_type").orderBy(
         "event_id"
@@ -2062,19 +2063,17 @@ def agg_salted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 from tickdb_spark.operators import bpe as _bpe  # noqa: E402
 
 
-#: Trained BPE merge state per sf_dir (r16 opt, the `_PQ_TRAIN_CACHE`
+#: Trained BPE merge state per sf_dir (r16 opt, the `_pq_books`
 #: pattern): three entries (train_merges, tokenize, eval_tokenizer_
 #: compression) each re-ran the 8-step trainer. The merge list is
 #: driver-side already; the output frame is checkpointed so reuse is
 #: lineage-free. The oracle replays the trainer per entry.
-_BPE_TRAIN_CACHE: dict = {}
-
-
 def _bpe_trained(docs: DataFrame, sf_dir: str):
-    if sf_dir not in _BPE_TRAIN_CACHE:
+    def fill():
         out, merges = _bpe.bpe_train(docs, "text", n_merges=8)
-        _BPE_TRAIN_CACHE[sf_dir] = (out.localCheckpoint(eager=True), merges)
-    return _BPE_TRAIN_CACHE[sf_dir]
+        return out.localCheckpoint(eager=True), merges
+
+    return _cachereg.memo(docs.sparkSession, ("bpe_trained", sf_dir), fill)
 
 
 @register(
@@ -2111,22 +2110,19 @@ def bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from tickdb_spark.operators import unigram as _unigram  # noqa: E402
 
-#: Trained unigram vocab per sf_dir (r16 opt) — the `_PQ_TRAIN_CACHE`
+#: Trained unigram vocab per sf_dir (r16 opt) — the `_pq_books`
 #: pattern: trained tokenizer state is ingest-time state, and THREE
 #: entries (train_vocab, tokenize, eval_tokenizer_compression) each
 #: re-ran the full 2-round prune/rescore trainer (~7-9 s of construct
 #: apiece). The memo stores the ~56-row vocab as an eager checkpoint;
 #: the oracle replays the trainer per entry, so drift is caught, not
 #: hidden.
-_UNIGRAM_VOCAB_CACHE: dict = {}
-
-
 def _unigram_vocab(docs: DataFrame, sf_dir: str) -> DataFrame:
-    if sf_dir not in _UNIGRAM_VOCAB_CACHE:
-        _UNIGRAM_VOCAB_CACHE[sf_dir] = _unigram.unigram_train(docs).localCheckpoint(
-            eager=True
-        )
-    return _UNIGRAM_VOCAB_CACHE[sf_dir]
+    return _cachereg.memo(
+        docs.sparkSession,
+        ("unigram_vocab", sf_dir),
+        lambda: _unigram.unigram_train(docs).localCheckpoint(eager=True),
+    )
 
 
 @register(
@@ -2375,12 +2371,9 @@ def join_salted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASSET_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _materialized_assets(key: str, sf_dir: str, media: DataFrame) -> DataFrame:
-    """Materialize a planted-asset frame to a per-process temp parquet
-    once, and hand decode paths a fresh multi-split read of it.
+    """Materialize a planted-asset frame to a temp parquet once per
+    session, and hand decode paths a fresh multi-split read of it.
 
     The Python encoder fixtures (JPEG Huffman, PNG deflate, …) are
     harness SETUP, not the operator under test — inlining them into the
@@ -2389,8 +2382,7 @@ def _materialized_assets(key: str, sf_dir: str, media: DataFrame) -> DataFrame:
     Same eager-fixture pattern as ``_events_warehouse``; the parquet
     round-trip also gives the decode a properly split input instead of
     one mapInPandas lineage."""
-    ck = (key, sf_dir)
-    if ck not in _ASSET_CACHE:
+    def fill():
         import os as __os
         import tempfile as __tempfile
 
@@ -2398,8 +2390,10 @@ def _materialized_assets(key: str, sf_dir: str, media: DataFrame) -> DataFrame:
             __tempfile.mkdtemp(prefix=f"gate_media_{key}_"), "assets"
         )
         media.write.mode("overwrite").parquet(path)
-        _ASSET_CACHE[ck] = path
-    return media.sparkSession.read.parquet(_ASSET_CACHE[ck])
+        return path
+
+    spark = media.sparkSession
+    return spark.read.parquet(_cachereg.memo(spark, ("assets", key, sf_dir), fill))
 
 
 @register(
@@ -2690,14 +2684,11 @@ from tickdb_spark.ingest import append_batch as _append_batch  # noqa: E402
 from tickdb_spark.rollup import RollupStore as _RollupStore  # noqa: E402
 from tickdb_spark.rollup import route_tick_query as _route  # noqa: E402
 
-_WH_CACHE: dict[str, str] = {}
-
-
 def _events_warehouse(spark: SparkSession, sf_dir: str) -> str:
     """Ingest the events table into a real tick warehouse (once per
-    process) and build the rollup cascade — the full engine write path
+    session) and build the rollup cascade — the full engine write path
     exercised inside the correctness gate."""
-    if sf_dir not in _WH_CACHE:
+    def fill():
         db_path = _os.path.join(_tempfile.mkdtemp(prefix="tickdb_gate_wh_"), "db")
         _os.makedirs(db_path)
         _append_batch(db_path, events_as_ticks(spark, sf_dir).drop("ts_raw"))
@@ -2705,8 +2696,9 @@ def _events_warehouse(spark: SparkSession, sf_dir: str) -> str:
         # (cheaper than re-scanning raw), and N-minute anchored queries
         # (tick_bucket_5min_routed) become rollup-answerable
         _RollupStore(spark, db_path).refresh(("minute", "hour", "day", "month"))
-        _WH_CACHE[sf_dir] = db_path
-    return _WH_CACHE[sf_dir]
+        return db_path
+
+    return _cachereg.memo(spark, ("events_warehouse", sf_dir), fill)
 
 
 def _write_landing(pdf, spark_schema, path: str, mtime: int) -> None:
@@ -3201,11 +3193,8 @@ def stream_ann_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Plant once per sf_dir; the landing dir is READ-ONLY to the streams —
 #: every entry keeps its own state/checkpoint dirs, so sharing couples
 #: no state across entries.
-_EMB_LANDING_CACHE: dict[str, tuple] = {}
-
-
 def _emb_landing(spark: SparkSession, sf_dir: str):
-    if sf_dir not in _EMB_LANDING_CACHE:
+    def fill():
         landing = _os.path.join(
             _tempfile.mkdtemp(prefix="tickdb_emb_landing_"), "landing"
         )
@@ -3218,8 +3207,9 @@ def _emb_landing(spark: SparkSession, sf_dir: str):
             part = pdf.iloc[k * step : (k + 1) * step]
             p = _os.path.join(landing, f"batch_{k}.parquet")
             _write_landing(part, emb.schema, p, base + k)
-        _EMB_LANDING_CACHE[sf_dir] = (landing, emb.schema)
-    return _EMB_LANDING_CACHE[sf_dir]
+        return landing, emb.schema
+
+    return _cachereg.memo(spark, ("emb_landing", sf_dir), fill)
 
 
 
@@ -3617,7 +3607,6 @@ def unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_CACHE: dict[str, tuple[str, str]] = {}
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -3625,29 +3614,29 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     order key, sorted within buckets) — built once per sf_dir. The write
     pays the clustering shuffle; every later join on the key is
     exchange-free."""
-    if sf_dir in _BUCKETED_CACHE:
-        return _BUCKETED_CACHE[sf_dir]
-    import atexit as _atexit
-    import shutil as _shutil
+    def fill():
+        import atexit as _atexit
+        import shutil as _shutil
 
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = _tempfile.mkdtemp(prefix="tickdb_bucketed_")
-    _atexit.register(_shutil.rmtree, base, ignore_errors=True)
-    names = (f"orders_bkt_{tag}", f"lineitem_bkt_{tag}")
-    for name, table, key, sort in (
-        (names[0], "orders", "o_orderkey", ["o_orderkey"]),
-        (names[1], "lineitem", "l_orderkey", ["l_orderkey"]),
-    ):
-        # a prior session in this process (or a stale metastore entry from
-        # a crashed one) may still own the table name — drop it first; the
-        # cache is per-process, the metastore per-JVM
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        df = _read(spark, sf_dir, table)
-        df.write.mode("overwrite").option(
-            "path", _os.path.join(base, name)
-        ).bucketBy(16, key).sortBy(*sort).saveAsTable(name)
-    _BUCKETED_CACHE[sf_dir] = names
-    return names
+        tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
+        base = _tempfile.mkdtemp(prefix="tickdb_bucketed_")
+        _atexit.register(_shutil.rmtree, base, ignore_errors=True)
+        names = (f"orders_bkt_{tag}", f"lineitem_bkt_{tag}")
+        for name, table, key, sort in (
+            (names[0], "orders", "o_orderkey", ["o_orderkey"]),
+            (names[1], "lineitem", "l_orderkey", ["l_orderkey"]),
+        ):
+            # a prior session in this process (or a stale metastore entry from
+            # a crashed one) may still own the table name — drop it first; the
+            # memo is per session, the metastore per-JVM
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            df = _read(spark, sf_dir, table)
+            df.write.mode("overwrite").option(
+                "path", _os.path.join(base, name)
+            ).bucketBy(16, key).sortBy(*sort).saveAsTable(name)
+        return names
+
+    return _cachereg.memo(spark, ("bucketed_tables", sf_dir), fill)
 
 
 @register(
@@ -3746,7 +3735,6 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NULL semantics (B8), second/year granularity (B5), N-month buckets (D4)
 # ---------------------------------------------------------------------------
 
-_WH2_CACHE: dict[str, str] = {}
 _DEL_FROM, _DEL_TO = "2024-01-10T00:00:00Z", "2024-01-15T00:00:00Z"
 
 
@@ -3754,7 +3742,7 @@ def _lifecycle_warehouse(spark: SparkSession, sf_dir: str) -> str:
     """Warehouse exercising the full write lifecycle: initial ingest →
     upsert batch (click values doubled for user_id < 10, same timestamps
     → LWW replace, D6) → range delete of click [Jan 10, Jan 15) (D7)."""
-    if sf_dir not in _WH2_CACHE:
+    def fill():
         from tickdb_spark.ingest import delete_range as _delete_range
 
         db_path = _os.path.join(_tempfile.mkdtemp(prefix="tickdb_gate_wh2_"), "db")
@@ -3769,8 +3757,9 @@ def _lifecycle_warehouse(spark: SparkSession, sf_dir: str) -> str:
         )
         _append_batch(db_path, upserts)
         _delete_range(spark, db_path, "click", _DEL_FROM, _DEL_TO)
-        _WH2_CACHE[sf_dir] = db_path
-    return _WH2_CACHE[sf_dir]
+        return db_path
+
+    return _cachereg.memo(spark, ("lifecycle_warehouse", sf_dir), fill)
 
 
 @register(
@@ -3848,8 +3837,6 @@ def tick_time_travel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVO_WH_CACHE: dict[str, str] = {}
-
 #: v2-producer source tag — ONE formula text shared with the oracle.
 _EVO_SRC_EXPR = "CASE WHEN user_id % 2 = 0 THEN 'web' ELSE 'app' END"
 
@@ -3859,7 +3846,7 @@ def _evolution_warehouse(spark: SparkSession, sf_dir: str) -> str:
     0 writes all events as v1 ticks (its partitions physically lack
     ``src``); batch 1 re-keys the click rows to series 'evolved' with
     ``src`` attached — the schema-evolution fixture for read_ticks."""
-    if sf_dir not in _EVO_WH_CACHE:
+    def fill():
         db_path = _os.path.join(_tempfile.mkdtemp(prefix="tickdb_gate_whevo_"), "db")
         _os.makedirs(db_path)
         _append_batch(db_path, events_as_ticks(spark, sf_dir).drop("ts_raw"))
@@ -3871,8 +3858,9 @@ def _evolution_warehouse(spark: SparkSession, sf_dir: str) -> str:
             F.expr(_EVO_SRC_EXPR).alias("src"),
         )
         _append_batch(db_path, v2)
-        _EVO_WH_CACHE[sf_dir] = db_path
-    return _EVO_WH_CACHE[sf_dir]
+        return db_path
+
+    return _cachereg.memo(spark, ("evolution_warehouse", sf_dir), fill)
 
 
 @register(
@@ -4050,9 +4038,6 @@ def tick_snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WH3_CACHE: dict[str, str] = {}
-
-
 def _fragmented_warehouse(spark: SparkSession, sf_dir: str) -> str:
     """Warehouse ingested as FOUR interleaved append batches (event_id % 4)
     plus an LWW upsert batch (error values tripled for user_id < 20), then
@@ -4060,7 +4045,7 @@ def _fragmented_warehouse(spark: SparkSession, sf_dir: str) -> str:
     and consolidates each (series, dt) partition's file spray back to one
     sorted file — the no-Delta OPTIMIZE. Queries after compaction take the
     clean path (no dedup aggregate)."""
-    if sf_dir not in _WH3_CACHE:
+    def fill():
         from tickdb_spark.ingest import compact as _compact
 
         db_path = _os.path.join(_tempfile.mkdtemp(prefix="tickdb_gate_wh3_"), "db")
@@ -4081,8 +4066,9 @@ def _fragmented_warehouse(spark: SparkSession, sf_dir: str) -> str:
         )
         _append_batch(db_path, upserts)
         _compact(spark, db_path)
-        _WH3_CACHE[sf_dir] = db_path
-    return _WH3_CACHE[sf_dir]
+        return db_path
+
+    return _cachereg.memo(spark, ("fragmented_warehouse", sf_dir), fill)
 
 
 @register(
@@ -5390,21 +5376,16 @@ from tickdb_spark.operators import decontam as _decontam  # noqa: E402
 #: slices (gram derivation is row-local, so the filter commutes and the
 #: slice is bit-identical to deriving from the filtered docs — the r16
 #: train_grams argument; the oracle still re-derives grams per entry, so
-#: the memo cannot mask drift). Keyed by (applicationId, sf_dir): the
-#: DataFrame is session-bound state, unlike the plain-Python trainer
-#: memos.
-_CORPUS_GRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: the memo cannot mask drift).
 def _corpus_grams8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    if ck not in _CORPUS_GRAM_CACHE:
+    def fill():
         docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
         par = spark.sparkContext.defaultParallelism
-        _CORPUS_GRAM_CACHE[ck] = _cachereg.corpus_persist(
+        return _cachereg.corpus_persist(
             _decontam._gram_hashes(docs.repartition(par), "text", "doc_id", 8)
         )
-    return _CORPUS_GRAM_CACHE[ck]
+
+    return _cachereg.memo(spark, ("corpus_grams8", sf_dir), fill)
 
 
 @register(
@@ -5850,7 +5831,7 @@ def sim_ivf_kmeans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one full-corpus assignment pass at the end. tol=0 pins the
     # iteration count so the oracle's unroll depth always matches.
     # r16 opt: the shared coarse-quantizer memo (`_pq_coarse`, the
-    # `_PQ_TRAIN_CACHE` pattern) — five entries train the IDENTICAL
+    # `_pq_books` pattern) — five entries train the IDENTICAL
     # k=4/3-iteration/half-sample model on this corpus; kmeans_fit is
     # partitioning-independent and exactly reproducible (docstring), so
     # the memoized centroids are the ones this entry would train. The
@@ -5926,7 +5907,7 @@ def analytics_cluster_topics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     # r16 opt: the shared coarse-quantizer memo (`_pq_coarse`, the
-    # `_PQ_TRAIN_CACHE` pattern) — five entries train the IDENTICAL
+    # `_pq_books` pattern) — five entries train the IDENTICAL
     # k=4/3-iteration/half-sample model on this corpus; kmeans_fit is
     # partitioning-independent and exactly reproducible (docstring), so
     # the memoized centroids are the ones this entry would train. The
@@ -5987,7 +5968,7 @@ def sim_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     # r16 opt: the shared coarse-quantizer memo (`_pq_coarse`, the
-    # `_PQ_TRAIN_CACHE` pattern) — five entries train the IDENTICAL
+    # `_pq_books` pattern) — five entries train the IDENTICAL
     # k=4/3-iteration/half-sample model on this corpus; kmeans_fit is
     # partitioning-independent and exactly reproducible (docstring), so
     # the memoized centroids are the ones this entry would train. The
@@ -6032,7 +6013,7 @@ def sim_semantic_dedup_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     # r16 opt: the shared coarse-quantizer memo (`_pq_coarse`, the
-    # `_PQ_TRAIN_CACHE` pattern) — five entries train the IDENTICAL
+    # `_pq_books` pattern) — five entries train the IDENTICAL
     # k=4/3-iteration/half-sample model on this corpus; kmeans_fit is
     # partitioning-independent and exactly reproducible (docstring), so
     # the memoized centroids are the ones this entry would train. The
@@ -6311,17 +6292,14 @@ _PLANNER_PAIRS_SQL = " UNION ALL ".join(
 #: "ANALYZE TABLE once, plan many joins" shape; the aggregate is
 #: identical, so every decision input is bit-identical, and the oracle
 #: re-derives the stats per entry.
-_PLANNER_KC_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _planner_kc(spark: SparkSession, sf_dir: str, label: str, build) -> DataFrame:
-    ck = (spark.sparkContext.applicationId, sf_dir, label)
-    if ck not in _PLANNER_KC_CACHE:
+    def fill():
         from tickdb_spark.operators.sketch import key_counts
 
         frame, col = build()
-        _PLANNER_KC_CACHE[ck] = key_counts(frame, col).localCheckpoint()
-    return _PLANNER_KC_CACHE[ck]
+        return key_counts(frame, col).localCheckpoint()
+
+    return _cachereg.memo(spark, ("planner_kc", sf_dir, label), fill)
 
 
 @register(
@@ -7278,9 +7256,6 @@ def profile_lineitem_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _read(spark, sf_dir, "lineitem").select(*_PROFILE_COLS)
     return _profile.profile_table(li, _PROFILE_COLS).orderBy("column")
 
-_STREAM_ROLLUP_CACHE: dict[str, str] = {}
-
-
 @register(
     "stream_rollup_maintenance",
     f"""
@@ -7303,9 +7278,7 @@ _STREAM_ROLLUP_CACHE: dict[str, str] = {}
     "partition fan-out, not the table size",
 )
 def stream_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if sf_dir not in _STREAM_ROLLUP_CACHE:
-        import shutil as _shutil
-
+    def fill():
         from tickdb_spark.streaming.ingest import stream_ingest
 
         root = _tempfile.mkdtemp(prefix="tickdb_stream_rollup_")
@@ -7370,10 +7343,11 @@ def stream_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, landing, db_path, _os.path.join(root, "ck"), maintain_rollups=True
         )
         q.awaitTermination(300)
-        _STREAM_ROLLUP_CACHE[sf_dir] = db_path
+        return db_path
+
     return _route(
         spark,
-        _STREAM_ROLLUP_CACHE[sf_dir],
+        _cachereg.memo(spark, ("stream_rollup", sf_dir), fill),
         {
             "index": "click",
             "from": "2024-01-01T00:00:00Z",
@@ -7417,10 +7391,10 @@ def text_perceptron_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state). The 20-epoch driver loop ran at EVERY construction
     # (~2.5 s/rep); the oracle replays the trainer per entry, so the
     # memo cannot mask drift.
-    ck = ("perceptron_w", sf_dir)
-    if ck not in _PQ_TRAIN_CACHE:
-        _PQ_TRAIN_CACHE[ck] = _perc.perceptron_train(docs, label)
-    return _perc.perceptron_score(docs, label, weights=_PQ_TRAIN_CACHE[ck])
+    weights = _cachereg.memo(
+        spark, ("perceptron_w", sf_dir), lambda: _perc.perceptron_train(docs, label)
+    )
+    return _perc.perceptron_score(docs, label, weights=weights)
 
 
 @register(
@@ -8549,27 +8523,22 @@ _PQ_QUERIES = [0, 101, 202, 303, 404]
 #: re-encoding the media fixtures per decode (`_materialized_assets`).
 #: The oracle still replays BOTH trainers independently per entry, so a
 #: drifted cached state is caught by the hash check, not hidden by it.
-_PQ_TRAIN_CACHE: dict = {}
-
-
 def _pq_books(emb, sf_dir: str):
-    ck = ("books", sf_dir)
-    if ck not in _PQ_TRAIN_CACHE:
-        _PQ_TRAIN_CACHE[ck] = _pq.pq_train(
-            emb, dim=64, m_sub=8, k=16, iters=2, sample_fraction=0.5
-        )
-    return _PQ_TRAIN_CACHE[ck]
+    return _cachereg.memo(
+        emb.sparkSession,
+        ("pq_books", sf_dir),
+        lambda: _pq.pq_train(emb, dim=64, m_sub=8, k=16, iters=2, sample_fraction=0.5),
+    )
 
 
 def _pq_coarse(emb, sf_dir: str):
     from tickdb_spark.operators.kmeans import kmeans_fit
 
-    ck = ("coarse", sf_dir)
-    if ck not in _PQ_TRAIN_CACHE:
-        _PQ_TRAIN_CACHE[ck] = kmeans_fit(
-            emb, k=4, max_iter=3, tol=0.0, sample_fraction=0.5
-        )
-    return _PQ_TRAIN_CACHE[ck]
+    return _cachereg.memo(
+        emb.sparkSession,
+        ("pq_coarse", sf_dir),
+        lambda: kmeans_fit(emb, k=4, max_iter=3, tol=0.0, sample_fraction=0.5),
+    )
 
 
 def _pq_codes(emb, sf_dir: str):
@@ -12276,7 +12245,6 @@ def analytics_na_cumhaz_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT_ALL_CACHE: dict[str, list] = {}
 
 
 def _compact_all_fixture(spark: SparkSession, sf_dir: str) -> list:
@@ -12285,123 +12253,123 @@ def _compact_all_fixture(spark: SparkSession, sf_dir: str) -> list:
     return deterministic per-log audit tuples. Memoized per sf_dir (the
     trained-state precedent) — the oracle predicts literals, so the
     memo cannot hide drift."""
-    if sf_dir in _COMPACT_ALL_CACHE:
-        return _COMPACT_ALL_CACHE[sf_dir]
-    from pyspark.sql import types as _T
+    def fill():
+        from pyspark.sql import types as _T
 
-    from tickdb_spark.streaming.index import (
-        _read_maintained,
-        compact_all,
-        compaction_policy,
-        stream_ann_index_maintenance,
-        stream_groupby_mv_maintenance,
-    )
+        from tickdb_spark.streaming.index import (
+            _read_maintained,
+            compact_all,
+            compaction_policy,
+            stream_ann_index_maintenance,
+            stream_groupby_mv_maintenance,
+        )
 
-    work = _os.path.join(_tempfile.mkdtemp(prefix="tickdb_compact_all_"), "state")
-    base = 1_700_000_000
-    emb = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    epdf = emb.toPandas()
-    land_e = _os.path.join(_os.path.dirname(work), "landing_emb")
-    _os.makedirs(land_e)
-    for k in range(3):
-        part = epdf[epdf.vec_id % 3 == k]
-        _write_landing(
-            part, emb.schema, _os.path.join(land_e, f"b{k}.parquet"), base + k
+        work = _os.path.join(_tempfile.mkdtemp(prefix="tickdb_compact_all_"), "state")
+        base = 1_700_000_000
+        emb = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        epdf = emb.toPandas()
+        land_e = _os.path.join(_os.path.dirname(work), "landing_emb")
+        _os.makedirs(land_e)
+        for k in range(3):
+            part = epdf[epdf.vec_id % 3 == k]
+            _write_landing(
+                part, emb.schema, _os.path.join(land_e, f"b{k}.parquet"), base + k
+            )
+        ev = (
+            _read_events(spark, sf_dir)
+            .where(F.col("user_id") < 50)
+            .select("event_id", "event_type", "value")
         )
-    ev = (
-        _read_events(spark, sf_dir)
-        .where(F.col("user_id") < 50)
-        .select("event_id", "event_type", "value")
-    )
-    mv_schema = _T.StructType(
-        [
-            _T.StructField("event_id", _T.LongType(), False),
-            _T.StructField("event_type", _T.StringType(), False),
-            _T.StructField("value", _T.DoubleType(), True),
-        ]
-    )
-    evdf = ev.toPandas()
-    land_m = _os.path.join(_os.path.dirname(work), "landing_mv")
-    _os.makedirs(land_m)
-    for k in range(3):
-        part = evdf[evdf.event_id % 3 == k]
-        _write_landing(
-            part, mv_schema, _os.path.join(land_m, f"b{k}.parquet"), base + k
-        )
-    sig_live = stream_ann_index_maintenance(
-        spark, land_e, work,
-        schema=_T.StructType(
+        mv_schema = _T.StructType(
             [
-                _T.StructField("vec_id", _T.LongType(), False),
-                _T.StructField("embedding", _T.ArrayType(_T.FloatType()), True),
+                _T.StructField("event_id", _T.LongType(), False),
+                _T.StructField("event_type", _T.StringType(), False),
+                _T.StructField("value", _T.DoubleType(), True),
             ]
-        ),
-    )
-    mv_live_rows = sorted(
-        map(
-            tuple,
-            stream_groupby_mv_maintenance(
-                spark, land_m, work, mv_schema, ["event_type"], "value"
-            ).collect(),
         )
-    )
-    sig_live_rows = sorted(map(tuple, sig_live.collect()))
-    # swap=True: the rewrite is ADOPTED in place (base_<n>/ inside the
-    # table dir, covered epochs retired via the journaled roll-forward),
-    # so epochs_after and rows_identical are measured on the LIVE dir —
-    # the full compact → swap → read-path lifecycle in one entry
-    reports = compact_all(spark, work, max_epochs=2, swap=True)
-    rows = []
-    for r in sorted(reports, key=lambda x: x["table"]):
-        if r["compacted"]:
-            live_dir = _os.path.join(work, r["table"])
-            if r["table"] == "mv_partials":
-                # partials are epoch-log rows; compare the merged VIEW
-                from tickdb_spark.streaming.index import (
-                    _mv_seed_schema,
-                    groupby_mv_report,
-                )
-
-                comp = sorted(
-                    map(
-                        tuple,
-                        groupby_mv_report(
-                            _read_maintained(
-                                spark, live_dir,
-                                _mv_seed_schema(mv_schema, ["event_type"], None),
-                            ).drop("epoch", "rebuilt"),
-                            ["event_type"],
-                        ).collect(),
-                    )
-                )
-                live = mv_live_rows
-            else:
-                from tickdb_spark.streaming.index import _SIG_SCHEMA
-
-                comp = sorted(
-                    map(
-                        tuple,
-                        _read_maintained(spark, live_dir, _SIG_SCHEMA).collect(),
-                    )
-                )
-                live = sig_live_rows
-            identical = comp == live
-            epochs_after = compaction_policy(live_dir)["epochs"]
-        else:
-            identical = None
-            epochs_after = None
-        rows.append(
-            (
-                r["table"],
-                bool(r["due"]),
-                bool(r["compacted"]),
-                int(r["epochs"]),
-                epochs_after,
-                identical,
+        evdf = ev.toPandas()
+        land_m = _os.path.join(_os.path.dirname(work), "landing_mv")
+        _os.makedirs(land_m)
+        for k in range(3):
+            part = evdf[evdf.event_id % 3 == k]
+            _write_landing(
+                part, mv_schema, _os.path.join(land_m, f"b{k}.parquet"), base + k
+            )
+        sig_live = stream_ann_index_maintenance(
+            spark, land_e, work,
+            schema=_T.StructType(
+                [
+                    _T.StructField("vec_id", _T.LongType(), False),
+                    _T.StructField("embedding", _T.ArrayType(_T.FloatType()), True),
+                ]
+            ),
+        )
+        mv_live_rows = sorted(
+            map(
+                tuple,
+                stream_groupby_mv_maintenance(
+                    spark, land_m, work, mv_schema, ["event_type"], "value"
+                ).collect(),
             )
         )
-    _COMPACT_ALL_CACHE[sf_dir] = rows
-    return rows
+        sig_live_rows = sorted(map(tuple, sig_live.collect()))
+        # swap=True: the rewrite is ADOPTED in place (base_<n>/ inside the
+        # table dir, covered epochs retired via the journaled roll-forward),
+        # so epochs_after and rows_identical are measured on the LIVE dir —
+        # the full compact → swap → read-path lifecycle in one entry
+        reports = compact_all(spark, work, max_epochs=2, swap=True)
+        rows = []
+        for r in sorted(reports, key=lambda x: x["table"]):
+            if r["compacted"]:
+                live_dir = _os.path.join(work, r["table"])
+                if r["table"] == "mv_partials":
+                    # partials are epoch-log rows; compare the merged VIEW
+                    from tickdb_spark.streaming.index import (
+                        _mv_seed_schema,
+                        groupby_mv_report,
+                    )
+
+                    comp = sorted(
+                        map(
+                            tuple,
+                            groupby_mv_report(
+                                _read_maintained(
+                                    spark, live_dir,
+                                    _mv_seed_schema(mv_schema, ["event_type"], None),
+                                ).drop("epoch", "rebuilt"),
+                                ["event_type"],
+                            ).collect(),
+                        )
+                    )
+                    live = mv_live_rows
+                else:
+                    from tickdb_spark.streaming.index import _SIG_SCHEMA
+
+                    comp = sorted(
+                        map(
+                            tuple,
+                            _read_maintained(spark, live_dir, _SIG_SCHEMA).collect(),
+                        )
+                    )
+                    live = sig_live_rows
+                identical = comp == live
+                epochs_after = compaction_policy(live_dir)["epochs"]
+            else:
+                identical = None
+                epochs_after = None
+            rows.append(
+                (
+                    r["table"],
+                    bool(r["due"]),
+                    bool(r["compacted"]),
+                    int(r["epochs"]),
+                    epochs_after,
+                    identical,
+                )
+            )
+        return rows
+
+    return _cachereg.memo(spark, ("compact_all", sf_dir), fill)
 
 
 @register(

@@ -102,43 +102,26 @@ def rollup_merge(finer: DataFrame, unit: str) -> DataFrame:
     )
 
 
-#: Write shape for the cascade levels (r17, VERDICT r16 ask #2 — the r16
-#: "direct" shape was the round's one unverified change and its one
-#: plausible regression; the serial A/B lives in scripts/r17_rollup_ab.py
-#: and the decision + numbers in OPTIMIZATION_r17.md):
-#:   "salted"  (default): one explicit exchange on (series, salt) where
-#:             salt = pmod(xxhash64(bucket), SPLITS_PER_SERIES). Bounds
-#:             files per series AND writers per series at SPLITS — the
-#:             small-files defense of the old per-series exchange without
-#:             its one-writer-per-series straggler.
-#:   "series"  the pre-r16 shape (repartition("series")): one writer —
-#:             and one file — per series.
-#:   "direct"  the r16 shape: write straight from the aggregate's
-#:             AQE-coalesced partitions; no second exchange, but every
-#:             writer task can touch every series dir (tasks x series
-#:             files at scale).
-_WRITE_SHAPE = os.environ.get("SPARKTICK_ROLLUP_WRITE_SHAPE", "salted")
-
-#: Salt cardinality for the "salted" shape: max writers (= max files)
-#: per series per level. 8 keeps gate-scale file counts tiny while
-#: splitting a TB-sized production series across 8 writers; raise via
-#: env for clusters where per-series volume / advisory >> 8.
-SPLITS_PER_SERIES = int(os.environ.get("SPARKTICK_ROLLUP_SPLITS_PER_SERIES", "8"))
+#: Max writers (= max files) per series per level of the salted write
+#: (``_shape_for_write``). 8 keeps gate-scale file counts tiny while
+#: splitting a TB-sized production series across 8 writers.
+SPLITS_PER_SERIES = 8
 
 
 def _shape_for_write(spark: SparkSession, df: DataFrame, src_path: str) -> DataFrame:
-    """Apply the configured pre-write exchange for one cascade level.
+    """The pre-write exchange for one cascade level: one explicit
+    exchange on (series, salt), salt = pmod(xxhash64(bucket),
+    SPLITS_PER_SERIES). It bounds files AND writers per series at
+    SPLITS_PER_SERIES without a one-writer-per-series straggler; writing
+    straight from the aggregate's partitions would spray tasks x series
+    files (OPTIMIZATION_r17.md has the measured comparison).
 
-    For "salted", the partition count is SIZE-ADAPTIVE (never a constant
-    tuned to one box): ceil(source bytes / maxPartitionBytes), floored at
+    The partition count is SIZE-ADAPTIVE (never a constant tuned to one
+    box): ceil(source bytes / maxPartitionBytes), floored at
     defaultParallelism — the source (raw ticks for the base level, the
     just-written finer level for merges) upper-bounds the level's state,
     and extra partitions beyond the distinct (series, salt) pairs stay
     empty (no files, scheduling-only cost)."""
-    if _WRITE_SHAPE == "direct":
-        return df
-    if _WRITE_SHAPE == "series":
-        return df.repartition("series")
     nbytes = 0
     for root, _dirs, files in os.walk(src_path):
         nbytes += sum(
@@ -206,8 +189,8 @@ class RollupStore:
         db metadata; per level we recompute ONLY the buckets covering
         those dates (partition-pruned raw scan for the base level, pruned
         finer-level scan for merges), keep every untouched row of the
-        dirty series, and dynamically overwrite just the dirty series'
-        partitions. Untouched series are never read or written.
+        dirty series, and swap in just the dirty series' partitions.
+        Untouched series are never read or written.
         """
         from tickdb_spark.ingest import _read_meta, _write_meta
 
@@ -216,9 +199,6 @@ class RollupStore:
         levels = self.available()
         if not levels:
             self.refresh()
-            meta = _read_meta(self.db_path)
-            meta["dirty"] = []
-            _write_meta(self.db_path, meta)
             return
         if not dirty:
             return
@@ -229,8 +209,6 @@ class RollupStore:
             F.col("series").isin(dirty_series)
             & F.to_date("ts_utc").isin(dirty_dates)
         )
-        spark = self.spark
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         prev_unit: str | None = None
         for unit in LEVELS:
             if unit not in levels:
