@@ -8,6 +8,8 @@ raw batch stream with LWW resolved declaratively."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import duckdb
 import pandas as pd
 import pytest
@@ -15,15 +17,18 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from tickdb_spark.api import TickDB
+from tickdb_spark.ingest import _read_meta, _write_meta
 from tickdb_spark.schema import NS_PER_SECOND
 
-BASE = 1470009600  # 2016-08-01T00:00:00Z
+BASE = 1470092400  # 2016-08-01T23:00:00Z: batches cross midnight
 FIELDS = ("x", "y")
+SERIES = ("s", "a:b")  # the queried series, and one Spark escapes on disk
 
-# One doc: offset seconds (covers ~2 hours incl. exact minute edges),
-# sub-second ns, and a sparse field map.
+# One doc: series, offset seconds (covers ~2 hours incl. exact minute
+# edges), sub-second ns, and a sparse field map.
 doc_st = st.fixed_dictionaries(
     {
+        "series": st.sampled_from(SERIES),
         "off": st.integers(min_value=0, max_value=7200),
         "sub_ns": st.sampled_from([0, 1_000, 999_000, 500_000_000, 999_999_000]),
         "fields": st.dictionaries(
@@ -43,6 +48,8 @@ def _oracle(batches: list[list[dict]], group_s: int) -> pd.DataFrame:
         # within-batch: last doc wins per ts (mirrors normalize_docs)
         per_ts: dict[int, tuple] = {}
         for d in batch:
+            if d["series"] != "s":
+                continue
             ts = (BASE + d["off"]) * NS_PER_SECOND + d["sub_ns"]
             per_ts[ts] = (ts, seq, d["fields"].get("x"), d["fields"].get("y"))
         rows.extend(per_ts.values())
@@ -84,16 +91,27 @@ def tdb_factory(spark, tmp_path_factory):
 def test_engine_matches_oracle_on_random_batches(batches, tdb_factory):
     tdb = tdb_factory()
     tdb.create_db("p")
+    path = tdb.catalog._existing("p")
+    # an empty batch, then the first batch again into its own partitions
+    batches = [*batches, [], batches[0]]
     for batch in batches:
         docs = [
             {
                 "time": (BASE + d["off"]) * NS_PER_SECOND + d["sub_ns"],
-                "index": "s",
+                "index": d["series"],
                 "value": d["fields"],
             }
             for d in batch
         ]
         tdb.put("p", docs)
+        # dirty grew from empty by exactly this batch's (series, dt)
+        meta = _read_meta(path)
+        assert {tuple(p) for p in meta["dirty"]} == {
+            (d["series"], str(dt.datetime.fromtimestamp(BASE + d["off"], dt.timezone.utc).date()))
+            for d in batch
+        }
+        meta["dirty"] = []  # consumed, as a rollup refresh does
+        _write_meta(path, meta)
 
     out = tdb.query(
         "p",

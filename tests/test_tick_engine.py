@@ -183,6 +183,51 @@ def test_drop_index(tmp_path, spark):
     assert tdb.get("db1", "s2", "2016-08-01T00:00:00Z") == {"x": 2.0}
 
 
+def test_escaped_series_names(tmp_path, spark):
+    """Spark stores series ``a:b`` in ``series=a%3Ab``: listing, range
+    delete, expiry and index drop all take and return the decoded name."""
+    from tickdb_spark.ingest import expire_before
+
+    tdb = _mk(tmp_path, spark)
+    tdb.put("db1", [
+        *({"time": f"2016-08-0{d}T12:00:00Z", "index": "a:b", "value": {"v": float(d)}}
+          for d in (1, 2, 3)),
+        *({"time": f"2016-08-0{d}T12:00:00Z", "index": "plain", "value": {"v": 9.0}}
+          for d in (1, 3)),
+    ])
+    assert tdb.db_info("db1")["indexes"] == ["a:b", "plain"]
+    tdb.delete("db1", "a:b", "2016-08-02T00:00:00Z", "2016-08-03T00:00:00Z")
+    assert tdb.get("db1", "a:b", "2016-08-02T12:00:00Z") is None
+    assert tdb.get("db1", "a:b", "2016-08-03T12:00:00Z") == {"v": 3.0}
+    dropped = expire_before(spark, tdb.catalog._existing("db1"), "2016-08-02T00:00:00Z")
+    assert sorted(dropped) == [("a:b", "2016-08-01"), ("plain", "2016-08-01")]
+    tdb.drop_index("db1", "a:b")
+    assert tdb.db_info("db1")["indexes"] == ["plain"]
+    assert [(r["series"], r["ts"]) for r in tdb.ticks("db1").collect()] == [
+        ("plain", parse_time_ns("2016-08-03T12:00:00Z"))
+    ]
+
+
+def test_dirty_partitions_ignore_the_writer_clock(tmp_path, spark, monkeypatch):
+    """Append dirty tracking reads no clock: with the writer's clock an
+    hour ahead of the filesystem's, a batch that crosses midnight still
+    marks both of its days dirty."""
+    import time
+
+    from tickdb_spark.ingest import _read_meta
+
+    tdb = _mk(tmp_path, spark)
+    real = time.time
+    with monkeypatch.context() as m:
+        m.setattr(time, "time", lambda: real() + 3600)
+        tdb.put("db1", [
+            {"time": "2016-08-01T23:59:00Z", "index": "s", "value": {"v": 1.0}},
+            {"time": "2016-08-02T00:01:00Z", "index": "s", "value": {"v": 2.0}},
+        ])
+    meta = _read_meta(tdb.catalog._existing("db1"))
+    assert meta["dirty"] == [["s", "2016-08-01"], ["s", "2016-08-02"]]
+
+
 def test_sql_surface(tmp_path, spark):
     tdb = _mk(tmp_path, spark, "sq")
     tdb.put(

@@ -18,7 +18,8 @@ from __future__ import annotations
 import os
 import shutil
 
-from tickdb_spark.ingest import TICKS_DIR
+from tickdb_spark.ingest import TICKS_DIR, partition_dirs
+from tickdb_spark.rollup import LEVELS, ROLLUPS_DIR
 
 
 class DatabaseExistsError(Exception):
@@ -60,20 +61,20 @@ class Catalog:
         shutil.rmtree(self._existing(name))
 
     def list_indexes(self, name: str) -> list[str]:
-        ticks = os.path.join(self._existing(name), TICKS_DIR)
-        if not os.path.isdir(ticks):
-            return []
-        return sorted(
-            d.split("=", 1)[1] for d in os.listdir(ticks) if d.startswith("series=")
-        )
+        return sorted(partition_dirs(os.path.join(self._existing(name), TICKS_DIR)))
 
     def drop_index(self, name: str, series: str) -> None:
         """Reference S7: ``DELETE /{db}/{index}/_all`` (``handlers.go:115-124``)
-        — here a partition-subtree drop, no table rewrite."""
-        ticks = os.path.join(self._existing(name), TICKS_DIR)
-        target = os.path.join(ticks, f"series={series}")
-        if os.path.isdir(target):
-            shutil.rmtree(target)
+        — here a partition-subtree drop, no table rewrite. The series'
+        slice of every rollup level goes with it, so a routed query
+        cannot answer for a dropped index."""
+        path = self._existing(name)
+        tables = [os.path.join(path, TICKS_DIR)]
+        tables += [os.path.join(path, ROLLUPS_DIR, unit) for unit in LEVELS]
+        for table in tables:
+            target = partition_dirs(table).get(series)
+            if target is not None:
+                shutil.rmtree(target)
 
     def _existing(self, name: str) -> str:
         path = self.db_path(name)

@@ -147,35 +147,35 @@ def normalize_docs(spark: SparkSession, docs: list[dict], ingest_seq: int) -> Da
     return df.withColumn("ts_utc", ns_to_ts(F.col("ts")))
 
 
-def _touched_partitions(ticks_dir: str, since: float) -> list[list[str]]:
-    """(series, dt) partition dirs whose mtime is >= ``since`` — the
-    partitions a just-committed write added files to (renaming a file
-    into a directory updates the directory's mtime). Values are
-    Hive-unescaped the way Spark escaped them on write."""
+def partition_dirs(path: str) -> dict[str, str]:
+    """``{value: directory}`` for the ``<col>=<value>`` partition
+    directories directly under ``path`` (``{}`` when ``path`` is absent).
+    Values are Hive-unescaped the way Spark escaped them on write
+    (series ``a:b`` lives in ``series=a%3Ab``). The only reader of
+    partition directory names: callers look directories up here and
+    never build a name, so Spark stays the only code that escapes."""
     from urllib.parse import unquote
 
-    touched: list[list[str]] = []
     try:
-        series_dirs = [
-            d for d in os.scandir(ticks_dir)
-            if d.is_dir() and d.name.startswith("series=")
-        ]
-    except OSError:
-        return touched
-    for sdir in series_dirs:
-        series = unquote(sdir.name[len("series="):])
-        try:
-            dt_dirs = os.scandir(sdir.path)
-        except OSError:
-            continue
-        for ddir in dt_dirs:
-            if (
-                ddir.is_dir()
-                and ddir.name.startswith("dt=")
-                and ddir.stat().st_mtime >= since
-            ):
-                touched.append([series, unquote(ddir.name[len("dt="):])])
-    return touched
+        entries = list(os.scandir(path))
+    except FileNotFoundError:
+        return {}
+    return {
+        unquote(e.name.split("=", 1)[1]): e.path
+        for e in entries
+        if "=" in e.name and not e.name.startswith(("_", ".")) and e.is_dir()
+    }
+
+
+def _partition_files(ticks_dir: str) -> dict[tuple[str, str], frozenset[str]]:
+    """Data file names of every ``(series, dt)`` partition."""
+    return {
+        (series, day): frozenset(
+            n for n in os.listdir(ddir) if not n.startswith(("_", "."))
+        )
+        for series, sdir in partition_dirs(ticks_dir).items()
+        for day, ddir in partition_dirs(sdir).items()
+    }
 
 
 def append_batch(db_path: str, ticks: DataFrame) -> int:
@@ -195,32 +195,17 @@ def append_batch(db_path: str, ticks: DataFrame) -> int:
     # then prune [from, to) scans within a day — the file-level analogue
     # of the reference's time-sorted leaf order (node.go:229-245).
     out = out.repartition("series", "dt").sortWithinPartitions("ts")
-    import time as _time
-
-    t0 = _time.time()
-    out.write.mode("append").partitionBy("series", "dt").parquet(
-        os.path.join(db_path, TICKS_DIR)
-    )
-    # Record which (series, dt) partitions this batch touched so rollup
-    # refresh can be incremental (reference: dirty-path tracking,
-    # node.go:34 / cursor.go:34-39).
-    # r17 opt (VERDICT r16 ask #8, guide §1.2 "don't compute things you
-    # throw away"): derive the touched set from the COMMITTED PARTITION
-    # DIRECTORIES instead of a second Spark scan of the batch. The
-    # commit protocol renames every data file into its final
-    # series=/dt= dir, which bumps that dir's mtime, so "dirs with
-    # mtime >= write start" IS the touched set — a metadata-only
-    # two-level listing (O(partition dirs), no data re-scan, no Spark
-    # job). Jobs per append: 2 → 1.
-    # The 1 s slack biases toward OVER-inclusion, which is safe: dirty
-    # tracking only schedules idempotent partition rebuilds, so an extra
-    # (series, dt) costs a little refresh work while a missed one would
-    # leave a stale rollup. (r16 tried df.observe to fuse the old second
-    # pass into the write job — MEASURED WORSE, 4.80 → 7.07 s min-of-3:
-    # CollectMetrics pays an interpreted per-row struct set-insert in
-    # every write task. This listing has no per-row cost at all.)
-    touched = _touched_partitions(os.path.join(db_path, TICKS_DIR), t0 - 1.0)
-    dirty = {tuple(x) for x in meta.get("dirty", [])} | {tuple(t) for t in touched}
+    path = os.path.join(db_path, TICKS_DIR)
+    before = _partition_files(path)
+    out.write.mode("append").partitionBy("series", "dt").parquet(path)
+    # Dirty (series, dt) for incremental rollup refresh (reference:
+    # dirty-path tracking, node.go:34 / cursor.go:34-39): every write job
+    # names its files with a fresh UUID, so the partitions whose file set
+    # changed are exactly the ones this batch wrote — a listing diff that
+    # works on any listable store, reads no clock and runs no Spark job.
+    after = _partition_files(path)
+    touched = {k for k, files in after.items() if before.get(k) != files}
+    dirty = {tuple(x) for x in meta.get("dirty", [])} | touched
     meta["dirty"] = sorted([list(t) for t in dirty])
     meta["next_seq"] = seq + 1
     meta["clean"] = meta.get("clean", True) and seq == 0
@@ -350,26 +335,23 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
     if to_ns <= frm_ns:
         return
     base = os.path.join(db_path, TICKS_DIR)
-    series_dir = os.path.join(base, f"series={series}")
-    if not os.path.isdir(series_dir):
+    series_dir = partition_dirs(base).get(series)
+    if series_dir is None:
         return
     import datetime as dt
 
     d_from = dt.datetime.fromtimestamp(frm_ns / 1e9, dt.timezone.utc).date()
     d_to = dt.datetime.fromtimestamp(max(frm_ns, to_ns - 1) / 1e9, dt.timezone.utc).date()
-    affected = []
-    for name in os.listdir(series_dir):
-        if not name.startswith("dt="):
-            continue
-        d = dt.date.fromisoformat(name.split("=", 1)[1])
-        if d_from <= d <= d_to:
-            affected.append(name)
+    affected = {
+        day: ddir
+        for day, ddir in partition_dirs(series_dir).items()
+        if d_from <= dt.date.fromisoformat(day) <= d_to
+    }
     if not affected:
         return
-    paths = [os.path.join(series_dir, n) for n in affected]
     keep = (
         spark.read.option("basePath", base)
-        .parquet(*paths)
+        .parquet(*affected.values())
         .where(~((F.col("ts") >= frm_ns) & (F.col("ts") < to_ns)))
     )
     tmp = os.path.join(db_path, f"_delete-{uuid.uuid4().hex[:8]}")
@@ -379,32 +361,32 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
     # deletes invalidate rollups for the touched partitions too
     meta = _read_meta(db_path)
     dirty = {tuple(x) for x in meta.get("dirty", [])}
-    dirty |= {(series, n.split("=", 1)[1]) for n in affected}
+    dirty |= {(series, day) for day in affected}
     meta["dirty"] = sorted([list(t) for t in dirty])
     # Journal-then-swap (see recover()): partitionBy only materializes
     # partitions with surviving rows, so record which affected partitions
     # have a staged replacement vs disappear outright — recovery needs the
     # split to stay idempotent from any crash point.
-    staged = {n for n in os.listdir(tmp) if n.startswith("dt=")}
+    staged = partition_dirs(tmp)
+    gone = [ddir for day, ddir in affected.items() if day not in staged]
     _write_journal(
         db_path,
         {
             "op": "delete_range",
             "series_dir": series_dir,
             "tmp": tmp,
-            "with_replacement": sorted(n for n in affected if n in staged),
-            "pure_delete": sorted(n for n in affected if n not in staged),
+            "with_replacement": sorted(os.path.basename(p) for p in staged.values()),
+            "pure_delete": sorted(os.path.basename(p) for p in gone),
             "meta": meta,
         },
     )
-    for n in affected:
-        if n not in staged:
-            shutil.rmtree(os.path.join(series_dir, n))
-    for n in sorted(staged):
-        live = os.path.join(series_dir, n)
+    for ddir in gone:
+        shutil.rmtree(ddir)
+    for src in sorted(staged.values()):
+        live = os.path.join(series_dir, os.path.basename(src))
         if os.path.isdir(live):
             shutil.rmtree(live)
-        os.rename(os.path.join(tmp, n), live)
+        os.rename(src, live)
     shutil.rmtree(tmp)
     _write_meta(db_path, meta)
     os.remove(_journal_path(db_path))
@@ -442,18 +424,11 @@ def expire_before(spark: SparkSession, db_path: str, cutoff) -> list[tuple[str, 
     meta = _read_meta(db_path)  # also runs recovery first
     dropped: list[tuple[str, str]] = []
     dirs: list[str] = []
-    if os.path.isdir(base):
-        for sname in os.listdir(base):
-            if not sname.startswith("series="):
-                continue
-            sdir = os.path.join(base, sname)
-            for dname in os.listdir(sdir):
-                if not dname.startswith("dt="):
-                    continue
-                d = dt.date.fromisoformat(dname.split("=", 1)[1])
-                if d < cutoff_day:
-                    dropped.append((sname.split("=", 1)[1], str(d)))
-                    dirs.append(os.path.join(sdir, dname))
+    for series, sdir in partition_dirs(base).items():
+        for day, ddir in partition_dirs(sdir).items():
+            if dt.date.fromisoformat(day) < cutoff_day:
+                dropped.append((series, day))
+                dirs.append(ddir)
     if not dirs:
         return []
     meta["expired_before_ns"] = max(

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 
 from tickdb_spark import cachereg as _cachereg
 from tickdb_spark.operators.asof import asof_join
-from tickdb_spark.tickquery import run_tick_query
+from tickdb_spark.session import scan_splits
+from tickdb_spark.tickquery import push_ts_range, run_tick_query
 
 DEC = "decimal(18,6)"  # exact-sum carrier type (see EXACT_DECIMAL)
 
@@ -122,15 +123,6 @@ def _read_fanned(
     return _fan_small(spark, df, sf_dir, table)
 
 
-def _size_bytes(value: str) -> int:
-    """Spark byte-size conf parse (r17, ADVICE fix: the old ``rstrip('b')``
-    raised on any suffixed value like ``128m``/``512MB`` and silently fell
-    back to 128 MB). Shared with rollup's salted write sizing."""
-    from tickdb_spark.session import size_bytes
-
-    return size_bytes(value)
-
-
 def _fan_small(
     spark: SparkSession, df: DataFrame, sf_dir: str, table: str
 ) -> DataFrame:
@@ -139,35 +131,17 @@ def _fan_small(
     below this call stay pushed to the scan — deterministic predicates
     push through a Repartition). See ``_read_fanned`` for the
     size-adaptive gate and the order-independence contract."""
-    import os
-
     try:
-        path = f"{sf_dir}/{table}.parquet"
-        if os.path.isfile(path):
-            nbytes = os.path.getsize(path)
-        else:
-            # Sum recursively: partitioned tables keep their data files in
-            # nested partition subdirs (r17, ADVICE fix — a flat listdir
-            # undercounted them and could fan a many-split input).
-            nbytes = 0
-            for root, _dirs, files in os.walk(path):
-                nbytes += sum(
-                    os.path.getsize(os.path.join(root, f))
-                    for f in files
-                    if f.endswith(".parquet")
-                )
+        splits = scan_splits(spark, f"{sf_dir}/{table}.parquet")
     except OSError:
         return df
-    max_split = _size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
     par = spark.sparkContext.defaultParallelism
-    # Fan ONLY the single-split case (nbytes fits one scan split) AND
+    # Fan ONLY the single-split case (the input fits one scan split) AND
     # only when that single task would starve the session's cores. A
     # multi-split input never fans: the exchange would move the whole
     # projection below the partial-agg barrier (r17 scale probe: 4-split
     # 430 MB input, plain 2.8 s vs fanned 4.8 s warm, 424 MB shuffled).
-    if nbytes > max_split or par <= 1:
+    if splits > 1 or par <= 1:
         return df
     return df.repartition(par)
 
@@ -222,19 +196,6 @@ def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events table with ``ts`` normalized to BIGINT epoch-ns
     (see ``_with_ts_ns``)."""
     return _with_ts_ns(_read(spark, sf_dir, "events"))
-
-
-def _push_ts_range(df: DataFrame, frm_ns: int, to_ns: int) -> DataFrame:
-    """Redundant, conservatively-widened range filter on the raw timestamp
-    column (``ts_raw``), which — unlike the computed ns column — pushes
-    down to the parquet scan. Callers keep their exact ns predicate; this
-    just makes the scan read the time slice instead of the corpus."""
-    if "ts_raw" not in df.columns:
-        return df
-    dt = df.schema["ts_raw"].dataType
-    lo = F.timestamp_micros(F.lit(frm_ns // 1_000)).cast(dt)
-    hi = F.timestamp_micros(F.lit(-(-to_ns // 1_000))).cast(dt)
-    return df.where((F.col("ts_raw") >= lo) & (F.col("ts_raw") < hi))
 
 
 def events_as_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -297,7 +258,7 @@ register(
     "truncates ns→µs); engine-side it's a half-open ns range, which pushes "
     "down to the parquet scan as a plain range predicate.",
 )(
-    lambda spark, sf_dir: _push_ts_range(
+    lambda spark, sf_dir: push_ts_range(
         events_as_ticks(spark, sf_dir), _GET_US * 1000, (_GET_US + 1) * 1000
     )
     .where(
@@ -4345,7 +4306,7 @@ def tick_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cannot see sub-µs, and TWA weights are Δt-sensitive. TWA uses only
     # in-range points (step interpolation starts at the first in-range
     # point), so the pushable range pre-filter is semantics-preserving.
-    ticks = _push_ts_range(
+    ticks = push_ts_range(
         events_as_ticks(spark, sf_dir), _TWA_FROM, _TWA_TO
     ).withColumn("ts", F.expr("(ts div 1000) * 1000"))
     return _ts.time_weighted_avg(ticks, "purchase", _TWA_FROM, _TWA_TO, _TWA_W)
@@ -4366,7 +4327,7 @@ _GAP_INNER = f"""
 
 def _gap_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared sparse 2-hour bucket aggregate for the gap-fill entries."""
-    ev = _push_ts_range(
+    ev = push_ts_range(
         events_as_ticks(spark, sf_dir), _GAP_FROM, _GAP_FROM + 7 * 86400 * 10**9
     ).where(
         (F.col("series") == "error")
@@ -4441,7 +4402,7 @@ _GAP_MULTI_INNER = f"""
     "observed buckets; n_obs flags filled rows",
 )
 def tick_gapfill_multi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _push_ts_range(_read_events(spark, sf_dir), _GAP_FROM, _GAP_TO).where(
+    ev = push_ts_range(_read_events(spark, sf_dir), _GAP_FROM, _GAP_TO).where(
         (F.expr("(ts div 1000) % 5") == 0)
         & (F.col("ts") >= _GAP_FROM)
         & (F.col("ts") < _GAP_TO)
@@ -5683,7 +5644,7 @@ _TREND_ANCHOR_US = 1704067200 * 10**6  # 2024-01-01 in µs
 )
 def trend_series_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _push_ts_range(
+        push_ts_range(
             _read_events(spark, sf_dir),
             _TREND_ANCHOR_US * 1000,
             (_TREND_ANCHOR_US + 31 * 86400 * 10**6) * 1000,
@@ -5779,7 +5740,7 @@ def collection_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "concatenation deterministic)",
 )
 def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _push_ts_range(
+    ev = push_ts_range(
         _read_events(spark, sf_dir), 1704067200 * 10**9, 1706745600 * 10**9
     ).where(
         (F.col("ts") >= 1704067200 * 10**9) & (F.col("ts") < 1706745600 * 10**9)

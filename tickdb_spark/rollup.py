@@ -33,8 +33,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tickdb_spark.ingest import TICKS_DIR, read_ticks
+from tickdb_spark.ingest import TICKS_DIR, partition_dirs, read_ticks
 from tickdb_spark.schema import parse_time_ns
+from tickdb_spark.session import scan_splits
 from tickdb_spark.tickquery import (
     _UNIT_NS,
     TickQuery,
@@ -122,19 +123,7 @@ def _shape_for_write(spark: SparkSession, df: DataFrame, src_path: str) -> DataF
     just-written finer level for merges) upper-bounds the level's state,
     and extra partitions beyond the distinct (series, salt) pairs stay
     empty (no files, scheduling-only cost)."""
-    nbytes = 0
-    for root, _dirs, files in os.walk(src_path):
-        nbytes += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if f.endswith(".parquet")
-        )
-    from tickdb_spark.session import size_bytes
-
-    max_split = size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    par = max(spark.sparkContext.defaultParallelism, nbytes // max_split + 1)
+    par = max(spark.sparkContext.defaultParallelism, scan_splits(spark, src_path))
     salt = F.pmod(F.xxhash64(F.col("bucket")), F.lit(SPLITS_PER_SERIES))
     return df.repartition(par, F.col("series"), salt)
 
@@ -160,7 +149,7 @@ class RollupStore:
         partition layout already supports it."""
         ticks = read_ticks(self.spark, self.db_path)
         prev: DataFrame | None = None
-        src_path = os.path.join(self.db_path, "ticks")
+        src_path = os.path.join(self.db_path, TICKS_DIR)
         for unit in LEVELS:
             if unit not in levels:
                 continue  # a coarser level merges fine from any finer one
@@ -251,13 +240,11 @@ class RollupStore:
                 .partitionBy("series")
                 .parquet(tmp)
             )
-            for name in os.listdir(tmp):
-                if not name.startswith("series="):
-                    continue
-                dst = os.path.join(self._path(unit), name)
-                if os.path.isdir(dst):
-                    _shutil.rmtree(dst)
-                os.rename(os.path.join(tmp, name), dst)
+            live = partition_dirs(self._path(unit))
+            for series, src in partition_dirs(tmp).items():
+                if series in live:
+                    _shutil.rmtree(live[series])
+                os.rename(src, os.path.join(self._path(unit), os.path.basename(src)))
             _shutil.rmtree(tmp)
             prev_unit = unit
         meta = _read_meta(self.db_path)

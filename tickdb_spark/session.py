@@ -50,6 +50,28 @@ def size_bytes(value: str) -> int:
     return int(s)
 
 
+def parquet_bytes(path: str) -> int:
+    """Bytes of the parquet file at ``path``, or of every ``.parquet``
+    file under a (partitioned) table directory."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def scan_splits(spark: SparkSession, path: str) -> int:
+    """ceil(:func:`parquet_bytes` / ``maxPartitionBytes``): about how many
+    splits a scan of ``path`` is cut into."""
+    max_split = size_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    )
+    return -(-parquet_bytes(path) // max_split)
+
+
 def get_spark(
     app_name: str = "tickdb_spark",
     master: str | None = None,

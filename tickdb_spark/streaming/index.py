@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tickdb_spark.session import parquet_bytes
+
 _SIG_SCHEMA = T.StructType(
     [
         T.StructField("vec_id", T.LongType(), False),
@@ -356,12 +358,7 @@ def compaction_policy(
     base_bytes = None
     base = base_dir if base_dir is not None else table_dir.rstrip("/") + "_compacted"
     if os.path.isdir(base):
-        base_bytes = sum(
-            os.path.getsize(os.path.join(r, n))
-            for r, _, ns in os.walk(base)
-            for n in ns
-            if n.endswith(".parquet")
-        )
+        base_bytes = parquet_bytes(base)
     if has_inplace:
         base_bytes = (base_bytes or 0) + inplace_base
     avg = log_bytes // files if files else 0

@@ -210,6 +210,21 @@ def _agg_expr(value: Column, ts: Column, red: Reducer, alias: str, exact: bool =
     raise ValueError(f"unknown reducer: {name}")
 
 
+def push_ts_range(df: DataFrame, frm_ns: int, to_ns: int) -> DataFrame:
+    """Redundant range filter on the raw timestamp column ``ts_raw``, when
+    the frame has one. The ns column is computed from a timestamp-typed
+    source, so its range predicate cannot reach the parquet scan; the
+    same range on the raw column (conservatively widened to whole µs —
+    callers keep their exact ns predicate) pushes down, turning the scan
+    into a time-slice read instead of a corpus read."""
+    if "ts_raw" not in df.columns:
+        return df
+    dt = df.schema["ts_raw"].dataType
+    lo = F.timestamp_micros(F.lit(frm_ns // 1_000)).cast(dt)
+    hi = F.timestamp_micros(F.lit(-(-to_ns // 1_000))).cast(dt)
+    return df.where((F.col("ts_raw") >= lo) & (F.col("ts_raw") < hi))
+
+
 def run_tick_query(ticks: DataFrame, query: TickQuery | dict) -> DataFrame:
     """Execute a tick query against the canonical (deduped) ticks DataFrame.
 
@@ -225,21 +240,11 @@ def run_tick_query(ticks: DataFrame, query: TickQuery | dict) -> DataFrame:
 
     multi = not isinstance(query.series, str)
     cond = (F.col("ts") >= frm) & (F.col("ts") < to)
-    if "ts_raw" in ticks.columns:
-        # The ns column is computed from a timestamp-typed source, so its
-        # range predicate cannot reach the parquet scan. Add the same range
-        # on the raw column (conservatively widened to whole µs — the ns
-        # filter stays authoritative): this one pushes down, turning the
-        # scan into a time-slice read instead of a corpus read.
-        dt = ticks.schema["ts_raw"].dataType
-        lo = F.timestamp_micros(F.lit(frm // 1_000)).cast(dt)
-        hi = F.timestamp_micros(F.lit(-(-to // 1_000))).cast(dt)
-        cond = cond & (F.col("ts_raw") >= lo) & (F.col("ts_raw") < hi)
     if isinstance(query.series, str):
         cond = (F.col("series") == query.series) & cond
     elif query.series is not None:
         cond = F.col("series").isin(list(query.series)) & cond
-    df = ticks.where(cond).drop("ts_raw")
+    df = push_ts_range(ticks, frm, to).where(cond).drop("ts_raw")
     bucket = bucket_start_ns(F.col("ts"), count, unit, frm).alias("bucket")
 
     aggs, ma_cols = [], []
