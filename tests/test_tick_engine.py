@@ -725,3 +725,134 @@ def test_expire_before_downsampled_retention_and_crash(tmp_path, spark, monkeypa
 
     # idempotent re-run: nothing left to drop
     assert ing.expire_before(spark, db, "2024-01-03T00:00:00Z") == []
+
+
+def _raw_rows(df):
+    return sorted(
+        (r["series"], r["ts"], tuple(sorted(r["value"].items()))) for r in df.collect()
+    )
+
+
+def _assert_scan_is_fresh(spark, db):
+    """The reused base scan reads exactly what an uncached read reads."""
+    import os as _os
+
+    from tickdb_spark.ingest import TICKS_DIR, read_ticks
+
+    reused = read_ticks(spark, db, dedup=False)  # recovers first
+    fresh = spark.read.parquet(_os.path.join(db, TICKS_DIR))
+    assert _raw_rows(reused) == _raw_rows(fresh)
+
+
+def test_scan_reuse_follows_every_write_kind(tmp_path, spark, monkeypatch):
+    """Each read after a write of every kind sees the write: the scan is
+    reused only while the table's data-file set is unchanged."""
+    import tickdb_spark.ingest as ing
+
+    tdb = _mk(tmp_path, spark)
+    db = tdb.catalog._existing("db1")
+
+    def put(day, series="s", v=1.0):
+        tdb.put("db1", [{"time": f"2016-08-0{day}T12:00:00Z", "index": series,
+                         "value": {"v": v}}])
+
+    put(1)
+    put(2, "t")
+    _assert_scan_is_fresh(spark, db)
+    put(3)  # new partition
+    _assert_scan_is_fresh(spark, db)
+    put(3, v=2.0)  # existing partition
+    _assert_scan_is_fresh(spark, db)
+    ing.delete_range(spark, db, "s", "2016-08-03T00:00:00Z", "2016-08-04T00:00:00Z")
+    _assert_scan_is_fresh(spark, db)
+    ing.compact(spark, db)
+    _assert_scan_is_fresh(spark, db)
+    ing.expire_before(spark, db, "2016-08-02T00:00:00Z")
+    _assert_scan_is_fresh(spark, db)
+    put(5)
+    _assert_scan_is_fresh(spark, db)
+    tdb.drop_index("db1", "t")
+    _assert_scan_is_fresh(spark, db)
+    put(6)
+    _assert_scan_is_fresh(spark, db)
+    with monkeypatch.context() as m:
+        _crash_after(m, ing.os, "rename", 1, "injected crash")
+        with pytest.raises(RuntimeError, match="injected crash"):
+            ing.compact(spark, db)
+    _assert_scan_is_fresh(spark, db)  # recover() rolls the swap forward
+    assert sorted(r["ts"] for r in ing.read_ticks(spark, db).collect()) == [
+        parse_time_ns(f"2016-08-0{d}T12:00:00Z") for d in (5, 6)
+    ]
+
+
+def test_scan_reuse_holds_one_entry_per_table(tmp_path, spark):
+    """A new version replaces the table's old scan; evict_all drops all."""
+    from tickdb_spark import cachereg
+    from tickdb_spark.ingest import TICKS_DIR, read_ticks
+
+    tdb = _mk(tmp_path, spark)
+    db = tdb.catalog._existing("db1")
+    table = str(tmp_path / "warehouse" / "db1" / TICKS_DIR)
+    for d in range(1, 5):
+        tdb.put("db1", [{"time": f"2016-08-0{d}T12:00:00Z", "index": "s",
+                         "value": {"v": float(d)}}])
+        read_ticks(spark, db)
+    assert len([k for k in cachereg._SCANS if k[1] == table]) == 1
+    cachereg.evict_all()
+    assert cachereg._SCANS == {}
+
+
+def test_second_read_of_an_unchanged_table_runs_no_job(tmp_path, spark):
+    """Listing and schema inference run once per table version, so a
+    repeated read builds its frame without any Spark job."""
+    from tickdb_spark.ingest import read_ticks
+
+    tdb = _mk(tmp_path, spark)
+    tdb.put("db1", [{"time": "2016-08-01T12:00:00Z", "index": "s", "value": {"v": 1.0}}])
+    db = tdb.catalog._existing("db1")
+    sc = spark.sparkContext
+
+    def jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            read_ticks(spark, db)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(f"first-{db}") > 0
+    assert jobs(f"second-{db}") == 0
+
+
+def test_table_scan_pairs_each_version_with_its_own_frame(spark, monkeypatch):
+    """Reader threads racing on version changes each get the frame built
+    for the version they listed, never another version's."""
+    import sys
+    import threading
+
+    from tickdb_spark import cachereg
+
+    monkeypatch.setattr(cachereg, "_SCANS", {})
+    wrong = []
+
+    def reader(i):
+        for k in range(300):
+            v = (i + k) % 3
+            got = cachereg.table_scan(spark, ("stress",), v, lambda v=v: ("frame", v))
+            if got != ("frame", v):
+                wrong.append((v, got))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert wrong == []
+    assert len(cachereg._SCANS) == 1

@@ -2,9 +2,9 @@
 
 Entries of one session share derived state: a planted warehouse, trained
 tokenizer or classifier state, a corpus gram table, verified detector
-pairs. Each kind lives here under one stated policy, so no operator or
-query module keeps a memo of its own (``tests/test_cache_ownership.py``
-enforces that).
+pairs; the reads of a long-lived server share table scans. Each kind
+lives here under one stated policy, so no operator or query module keeps
+a memo of its own (``tests/test_cache_ownership.py`` enforces that).
 
 **Memos** — ``memo(spark, key, fill)`` returns the value filled for
 ``key`` in ``spark``'s SparkContext, calling ``fill()`` on a miss.
@@ -51,6 +51,26 @@ outlive one entry but whose size follows the output, not token volume
 * *Eviction*: ``evict_all()`` only; the number of distinct detector
   plans is small and fixed.
 
+**Table scans** — ``table_scan(spark, key, version, build)`` returns
+the base relation of one on-disk table (``spark.read.parquet`` of its
+directory), rebuilt only when the table changes, so a long-lived reader
+runs no file-listing or schema-inference job per request.
+
+* *Key*: ``(applicationId, table path, read schema or None)``.
+* *Version*: the table's data-file set, listed by the caller before it
+  builds (``ingest.partition_files``). Every write job names its files
+  with a fresh UUID, so any append, delete, compaction, expiry, index
+  drop, journal roll-forward or rollup refresh changes it; no clock,
+  mtime or counter is involved. Listing before the build means a write
+  racing the build can only pair an older version with a newer frame,
+  which the next call rebuilds.
+* *One value per key*: ``(version, frame)`` is stored as one tuple, so a
+  reader thread never sees a new version with an old frame; a new
+  version replaces the old value.
+* *Storage level*: none. The frame holds the plan and Spark's listed
+  file index, never data.
+* *Eviction*: a context change, or ``evict_all()``.
+
 Out of scope: persistence inside one entry's plan (``.cache()`` or
 ``localCheckpoint`` of a frame several branches of one action read)
 belongs to that plan. Never memoize an entry's own output frame: that
@@ -59,6 +79,7 @@ memoizes the benchmark.
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 from collections.abc import Callable
 from typing import Any
@@ -77,6 +98,10 @@ _LIVE: "OrderedDict[int, DataFrame]" = OrderedDict()
 #: Live dimension frames by plan key.
 _KEPT: dict[int, DataFrame] = {}
 
+#: Table scans: key -> (version, frame), one value per key.
+_SCANS: dict[tuple, tuple[Any, DataFrame]] = {}
+_SCANS_LOCK = threading.Lock()
+
 
 def memo(spark: SparkSession, key: tuple, fill: Callable[[], Any]) -> Any:
     """The value memoized under ``key`` in ``spark``'s SparkContext,
@@ -88,6 +113,24 @@ def memo(spark: SparkSession, key: tuple, fill: Callable[[], Any]) -> Any:
             del _MEMO[stale]
         _MEMO[ck] = fill()
     return _MEMO[ck]
+
+
+def table_scan(
+    spark: SparkSession, key: tuple, version: Any, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The frame built for ``key`` at ``version`` in ``spark``'s
+    SparkContext, calling ``build()`` when the stored version differs."""
+    app = spark.sparkContext.applicationId
+    ck = (app, *key)
+    with _SCANS_LOCK:
+        hit = _SCANS.get(ck)
+        if hit is not None and hit[0] == version:
+            return hit[1]
+        for stale in [k for k in _SCANS if k[0] != app]:
+            del _SCANS[stale]
+        frame = build()
+        _SCANS[ck] = (version, frame)
+        return frame
 
 
 def _plan_key(df: DataFrame) -> int:
@@ -125,8 +168,11 @@ def dimension_persist(df: DataFrame) -> DataFrame:
 
 
 def evict_all() -> None:
-    """Drop every memo and unpersist every frame registered here."""
+    """Drop every memo and table scan and unpersist every frame
+    registered here."""
     _MEMO.clear()
+    with _SCANS_LOCK:
+        _SCANS.clear()
     while _LIVE:
         _unpersist(_LIVE.popitem(last=False)[1])
     while _KEPT:

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tickdb_spark import cachereg
 from tickdb_spark.schema import TICKS_SCHEMA, ns_to_ts, parse_time_ns
 
 TICKS_DIR = "ticks"
@@ -167,15 +168,34 @@ def partition_dirs(path: str) -> dict[str, str]:
     }
 
 
-def _partition_files(ticks_dir: str) -> dict[tuple[str, str], frozenset[str]]:
-    """Data file names of every ``(series, dt)`` partition."""
+def partition_files(path: str, depth: int) -> dict[tuple[str, ...], frozenset[str]]:
+    """Data file names of every partition ``depth`` directory levels
+    below ``path``, keyed by its decoded values: ``(series, dt)`` for the
+    ticks table (depth 2), ``(series,)`` for a rollup level (depth 1).
+    The table's version: every write job names its files with a fresh
+    UUID, so any write changes it. Listed on the driver, no Spark job."""
+    if depth == 0:
+        try:
+            names = os.listdir(path)
+        except FileNotFoundError:
+            return {}
+        return {(): frozenset(n for n in names if not n.startswith(("_", ".")))}
     return {
-        (series, day): frozenset(
-            n for n in os.listdir(ddir) if not n.startswith(("_", "."))
-        )
-        for series, sdir in partition_dirs(ticks_dir).items()
-        for day, ddir in partition_dirs(sdir).items()
+        (value, *key): files
+        for value, pdir in partition_dirs(path).items()
+        for key, files in partition_files(pdir, depth - 1).items()
     }
+
+
+def read_table(
+    spark: SparkSession, path: str, depth: int, schema: "T.StructType | None" = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` (with ``schema`` when given), reused
+    while the table's data-file set (``partition_files``) is unchanged —
+    the ``cachereg`` table-scan policy."""
+    version = partition_files(path, depth)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return cachereg.table_scan(spark, (path, schema), version, lambda: reader.parquet(path))
 
 
 def append_batch(db_path: str, ticks: DataFrame) -> int:
@@ -196,14 +216,14 @@ def append_batch(db_path: str, ticks: DataFrame) -> int:
     # of the reference's time-sorted leaf order (node.go:229-245).
     out = out.repartition("series", "dt").sortWithinPartitions("ts")
     path = os.path.join(db_path, TICKS_DIR)
-    before = _partition_files(path)
+    before = partition_files(path, 2)
     out.write.mode("append").partitionBy("series", "dt").parquet(path)
     # Dirty (series, dt) for incremental rollup refresh (reference:
     # dirty-path tracking, node.go:34 / cursor.go:34-39): every write job
     # names its files with a fresh UUID, so the partitions whose file set
     # changed are exactly the ones this batch wrote — a listing diff that
     # works on any listable store, reads no clock and runs no Spark job.
-    after = _partition_files(path)
+    after = partition_files(path, 2)
     touched = {k for k, files in after.items() if before.get(k) != files}
     dirty = {tuple(x) for x in meta.get("dirty", [])} | touched
     meta["dirty"] = sorted([list(t) for t in dirty])
@@ -245,20 +265,24 @@ def read_ticks(
     the column existed — mergeSchema semantics with no footer-merge
     pass and no partition rewrite. Evolved columns ride the LWW
     resolution (they belong to the winning row).
+
+    The base scan (listing plus schema) is built once per version of the
+    table's data-file set and reused until a write changes it
+    (``read_table``); the snapshot filter and the dedup aggregate are
+    applied per call on top.
     """
     recover(db_path)  # roll forward any interrupted compact/delete first:
     # the table dir itself may be mid-swap, so this must precede the read
     path = os.path.join(db_path, TICKS_DIR)
     extra: list[str] = []
+    schema = None
     if evolved_fields is not None:
         extra = list(evolved_fields.fieldNames())
-        evolved = T.StructType(
+        schema = T.StructType(
             list(TICKS_SCHEMA.fields)
             + [T.StructField(f.name, f.dataType, True) for f in evolved_fields.fields]
         )
-        df = spark.read.schema(evolved).parquet(path)
-    else:
-        df = spark.read.parquet(path)
+    df = read_table(spark, path, 2, schema)
     if as_of_seq is not None:
         truncated_at = _read_meta(db_path).get("history_from_seq", 0)
         if as_of_seq < truncated_at:

@@ -33,8 +33,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tickdb_spark.ingest import TICKS_DIR, partition_dirs, read_ticks
-from tickdb_spark.schema import parse_time_ns
+from tickdb_spark.ingest import (
+    TICKS_DIR,
+    _read_meta,
+    _write_meta,
+    partition_dirs,
+    read_table,
+    read_ticks,
+)
+from tickdb_spark.schema import ns_to_ts, parse_time_ns
 from tickdb_spark.session import scan_splits
 from tickdb_spark.tickquery import (
     _UNIT_NS,
@@ -157,17 +164,18 @@ class RollupStore:
             path = self._path(unit)
             df = _shape_for_write(self.spark, df, src_path)
             df.write.mode("overwrite").partitionBy("series").parquet(path)
-            prev = self.spark.read.parquet(path)
+            prev = self.read(unit)
             src_path = path
         # a full rebuild supersedes any pending incremental work
-        from tickdb_spark.ingest import _read_meta, _write_meta
-
         meta = _read_meta(self.db_path)
         meta["dirty"] = []
         _write_meta(self.db_path, meta)
 
     def read(self, unit: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(unit))
+        """One level's table. The scan is built once per version of the
+        level's data-file set and reused until a refresh or an index drop
+        changes it (``ingest.read_table``)."""
+        return read_table(self.spark, self._path(unit), 1)
 
     def refresh_incremental(self) -> None:
         """Rebuild only the rollup slices invalidated since the last
@@ -179,10 +187,10 @@ class RollupStore:
         those dates (partition-pruned raw scan for the base level, pruned
         finer-level scan for merges), keep every untouched row of the
         dirty series, and swap in just the dirty series' partitions.
-        Untouched series are never read or written.
+        Untouched series are never read or written. The recomputed
+        buckets follow from the dirty dates, not from the ticks left in
+        them, so a bucket whose every tick was deleted goes away.
         """
-        from tickdb_spark.ingest import _read_meta, _write_meta
-
         meta = _read_meta(self.db_path)
         dirty = [tuple(x) for x in meta.get("dirty", [])]
         levels = self.available()
@@ -196,36 +204,27 @@ class RollupStore:
 
         ticks = read_ticks(self.spark, self.db_path).where(
             F.col("series").isin(dirty_series)
-            & F.to_date("ts_utc").isin(dirty_dates)
         )
         prev_unit: str | None = None
         for unit in LEVELS:
             if unit not in levels:
                 continue
-            # a dirty date invalidates the whole bucket containing it at
-            # this level (one dirty day → that entire month's bucket)
-            affected = [
-                r["b"]
-                for r in ticks.select(
-                    ts_to_trunc_ns(F.col("ts"), unit).alias("b")
-                ).distinct().collect()
-            ]
             if prev_unit is None:
-                # base level: every base bucket lies inside one dirty
-                # date, so the dirty-date tick scan covers it fully
-                fresh = rollup_from_ticks(ticks, unit)
+                # base level: every tick inside an affected bucket
+                inside = _covers(ts_to_trunc_ns(F.col("ts"), unit), unit, dirty_dates)
+                fresh = rollup_from_ticks(ticks.where(inside), unit)
             else:
                 # merge from ALL finer rows inside each affected bucket —
                 # including finer buckets from clean dates (the finer
                 # level was refreshed in the previous iteration)
                 finer = self.read(prev_unit).where(
                     F.col("series").isin(dirty_series)
-                    & ts_to_trunc_ns(F.col("bucket"), unit).isin(affected)
+                    & _covers(ts_to_trunc_ns(F.col("bucket"), unit), unit, dirty_dates)
                 )
                 fresh = rollup_merge(finer, unit)
             kept = self.read(unit).where(
                 F.col("series").isin(dirty_series)
-                & ~F.col("bucket").isin(affected)
+                & ~_covers(F.col("bucket"), unit, dirty_dates)
             )
             # can't lazily read and overwrite the same path: write the
             # refreshed series partitions to a tmp dir, then swap them in
@@ -240,16 +239,37 @@ class RollupStore:
                 .partitionBy("series")
                 .parquet(tmp)
             )
-            live = partition_dirs(self._path(unit))
-            for series, src in partition_dirs(tmp).items():
+            # a dirty series left with no rows has no staged partition:
+            # its live one still goes
+            live, staged = partition_dirs(self._path(unit)), partition_dirs(tmp)
+            for series in dirty_series:
                 if series in live:
                     _shutil.rmtree(live[series])
-                os.rename(src, os.path.join(self._path(unit), os.path.basename(src)))
+                if series in staged:
+                    src = staged[series]
+                    os.rename(src, os.path.join(self._path(unit), os.path.basename(src)))
             _shutil.rmtree(tmp)
             prev_unit = unit
         meta = _read_meta(self.db_path)
         meta["dirty"] = []
         _write_meta(self.db_path, meta)
+
+
+def _covers(bucket, unit: str, dates: list[str]):
+    """Whether the level-``unit`` bucket starting at ``bucket`` (epoch ns)
+    covers one of ``dates`` (ISO days): a dirty date invalidates every
+    minute and hour bucket inside it, and the one day, month or year
+    bucket containing it."""
+    if unit in ("minute", "hour"):
+        return F.to_date(ns_to_ts(bucket)).isin(dates)
+    import datetime as dt
+
+    starts = set()
+    for d in map(dt.date.fromisoformat, dates):
+        if unit != "day":
+            d = d.replace(day=1) if unit == "month" else d.replace(month=1, day=1)
+        starts.add((d - dt.date(1970, 1, 1)).days * _ALIGN_CHECK["day"])
+    return bucket.isin(sorted(starts))
 
 
 def _aligned(ns: int, unit: str) -> bool:
@@ -293,6 +313,12 @@ def route_tick_query(
         for r in ([rs] if isinstance(rs, str) else rs)
     ]
     if not specs or any(s.startswith("ma:") for s in specs):
+        return run_tick_query(read_ticks(spark, db_path), query)
+    # a queried series with writes since the last refresh has stale
+    # rollup rows (expiry dirties nothing: downsampled retention)
+    dirty = {s for s, _ in _read_meta(db_path).get("dirty", [])}
+    queried = {query.series} if isinstance(query.series, str) else query.series
+    if dirty and (queried is None or not dirty.isdisjoint(queried)):
         return run_tick_query(read_ticks(spark, db_path), query)
     store = RollupStore(spark, db_path)
     avail = store.available()
