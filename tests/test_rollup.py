@@ -412,3 +412,84 @@ def test_incremental_refresh_from_a_coarse_base_level(tmp_path, spark):
     tdb.put("cb", [{"time": "2016-08-02T06:00:00Z", "index": "a", "value": {"v": 2.0}}])
     store.refresh_incremental()
     assert [(float(r["sum"]), r["count"]) for r in store.read("month").collect()] == [(3.0, 2)]
+
+
+@pytest.fixture
+def unshrunk_shuffles(spark):
+    """Keep every shuffle partition of the aggregate (no AQE coalescing
+    of these tiny shuffles into one), so a result ordered only within
+    partitions would show."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, before)
+
+
+def _recompute(docs, series, frm, to, with_ma):
+    """Hour buckets of ``x`` per series in pandas: sum, first and a
+    trailing 3-bucket moving average of the bucket means, each series'
+    average over that series alone; sorted by (series, bucket)."""
+    import pandas as pd
+
+    from tickdb_spark.schema import parse_time_ns
+
+    pdf = pd.DataFrame(
+        [(d["index"], parse_time_ns(d["time"]), d["value"]["x"]) for d in docs],
+        columns=["series", "ts", "x"],
+    )
+    lo, hi = parse_time_ns(frm), parse_time_ns(to)
+    pdf = pdf[(pdf.ts >= lo) & (pdf.ts < hi) & pdf.series.isin(series)]
+    pdf["bucket"] = pdf.ts - pdf.ts % (3_600 * 10**9)
+    pdf = pdf.sort_values("ts")
+    g = pdf.groupby(["series", "bucket"], sort=True).x
+    out = pd.DataFrame({"x_sum": g.sum(), "x_first": g.first(), "x_ma": g.mean()})
+    out = out.reset_index()
+    out["x_ma"] = out.groupby("series").x_ma.transform(
+        lambda s: s.rolling(3, min_periods=1).mean()
+    )
+    cols = ["series", "bucket", "x_sum", "x_first"] + (["x_ma"] if with_ma else [])
+    return [tuple(r) for r in out[cols].itertuples(index=False)]
+
+
+@pytest.mark.parametrize("index", [None, ("s1", "s3")])
+def test_result_order_of_raw_and_routed_bucket_queries(tmp_path, spark, unshrunk_shuffles, index):
+    """Bucket answers come back sorted by (series, bucket) on the raw
+    path (with an ``ma:3`` window) and the routed path, from ticks spread
+    over several days and appends, so the aggregate reads several
+    shuffle partitions."""
+    import random
+
+    tdb = TickDB(spark, str(tmp_path / "wh"))
+    tdb.create_db("o")
+    rng = random.Random(7)
+    docs = [
+        {"time": f"2016-08-{d:02d}T{h:02d}:{m:02d}:00Z", "index": s,
+         "value": {"x": rng.randrange(-400, 400) / 4}}
+        for s in ("s1", "s2", "s3") for d in (1, 2, 3, 4) for h in (0, 5, 9, 23)
+        for m in (0, 13, 29)
+    ]
+    rng.shuffle(docs)
+    for i in range(3):  # three appends: several files per partition
+        tdb.put("o", docs[i::3])
+    path = tdb.catalog._existing("o")
+    RollupStore(spark, path).refresh()
+    series = ["s1", "s2", "s3"] if index is None else list(index)
+    spec = {"index": index, "from": "2016-08-01T00:00:00Z", "to": "2016-08-05T00:00:00Z",
+            "group": "hour", "fields": {"x": ["sum", "first", "ma:3"]}, "exact": True}
+    plain = {**spec, "fields": {"x": ["sum", "first"]}}
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    want = _recompute(docs, series, spec["from"], spec["to"], with_ma=True)
+    assert len(want) == 4 * 4 * len(series)
+    for got in (rows(tdb.query("o", spec)), rows(route_tick_query(spark, path, spec))):
+        assert [g[:4] for g in got] == [w[:4] for w in want]
+        assert [g[4] for g in got] == pytest.approx([w[4] for w in want], rel=1e-12)
+    want = _recompute(docs, series, spec["from"], spec["to"], with_ma=False)
+    routed = route_tick_query(spark, path, plain)
+    assert _reads_rollup(routed, "hour")
+    assert rows(routed) == want
+    assert rows(tdb.query("o", plain)) == want

@@ -802,6 +802,18 @@ def test_scan_reuse_holds_one_entry_per_table(tmp_path, spark):
     assert cachereg._SCANS == {}
 
 
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn()`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_second_read_of_an_unchanged_table_runs_no_job(tmp_path, spark):
     """Listing and schema inference run once per table version, so a
     repeated read builds its frame without any Spark job."""
@@ -810,19 +822,8 @@ def test_second_read_of_an_unchanged_table_runs_no_job(tmp_path, spark):
     tdb = _mk(tmp_path, spark)
     tdb.put("db1", [{"time": "2016-08-01T12:00:00Z", "index": "s", "value": {"v": 1.0}}])
     db = tdb.catalog._existing("db1")
-    sc = spark.sparkContext
-
-    def jobs(group):
-        sc.setJobGroup(group, group)
-        try:
-            read_ticks(spark, db)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    assert jobs(f"first-{db}") > 0
-    assert jobs(f"second-{db}") == 0
+    assert _jobs(spark, f"first-{db}", lambda: read_ticks(spark, db)) > 0
+    assert _jobs(spark, f"second-{db}", lambda: read_ticks(spark, db)) == 0
 
 
 def test_table_scan_pairs_each_version_with_its_own_frame(spark, monkeypatch):
@@ -856,3 +857,68 @@ def test_table_scan_pairs_each_version_with_its_own_frame(spark, monkeypatch):
     assert not any(t.is_alive() for t in threads)
     assert wrong == []
     assert len(cachereg._SCANS) == 1
+
+
+@pytest.mark.parametrize("rmtrees_before_crash", [None, 1, 2, 3])
+def test_deleting_every_tick_of_a_series_drops_it_from_the_catalog(
+    tmp_path, spark, monkeypatch, rmtrees_before_crash
+):
+    """A delete that empties every partition of a series removes the
+    series directory too, live and when ``recover()`` rolls an injected
+    crash forward (after 1 or 2 partition removals, or after the staging
+    directory's removal)."""
+    import tickdb_spark.ingest as ing
+
+    tdb = _mk(tmp_path, spark)
+    tdb.put("db1", [
+        {"time": f"2016-08-0{d}T12:00:00Z", "index": s, "value": {"v": float(d)}}
+        for d in (1, 2) for s in ("a", "b")
+    ])
+    db = tdb.catalog._existing("db1")
+    assert tdb.db_info("db1")["indexes"] == ["a", "b"]
+    frm, to = "2016-08-01T00:00:00Z", "2016-08-03T00:00:00Z"
+    if rmtrees_before_crash is None:
+        tdb.delete("db1", "b", frm, to)
+    else:
+        with monkeypatch.context() as m:
+            _crash_after(m, ing.shutil, "rmtree", rmtrees_before_crash, "injected crash")
+            with pytest.raises(RuntimeError, match="injected crash"):
+                ing.delete_range(spark, db, "b", frm, to)
+        assert ing.recover(db)
+    assert tdb.catalog.list_indexes("db1") == ["a"]
+    assert tdb.db_info("db1")["indexes"] == ["a"]
+    assert tdb.get("db1", "b", "2016-08-01T12:00:00Z") is None
+    assert tdb.get("db1", "a", "2016-08-02T12:00:00Z") == {"v": 2.0}
+
+
+def test_each_read_runs_its_fewest_jobs(tmp_path, spark):
+    """The post-aggregate work of a read runs in one partition: a
+    collected bucket query (raw or routed) runs the aggregate's shuffle
+    job and the result job, no range-partitioned sort; a raw range scan
+    and a point get (hit or miss) run one job."""
+    from tickdb_spark.rollup import RollupStore, route_tick_query
+
+    tdb = _mk(tmp_path, spark)
+    # one append into an empty database (a clean table, no dedup), one
+    # file per day, so a scan of the series has several splits
+    tdb.put("db1", [
+        {"time": f"2016-08-0{d}T{h:02d}:00:00Z", "index": "s", "value": {"v": float(h)}}
+        for d in (1, 2, 3, 4) for h in (0, 6, 12, 18)
+    ])
+    db = tdb.catalog._existing("db1")
+    RollupStore(spark, db).refresh()
+    bucket = {"index": "s", "from": "2016-08-01T00:00:00Z", "to": "2016-08-05T00:00:00Z",
+              "group": "day", "fields": {"v": ["sum", "max"]}}
+    scan = {**bucket, "fields": {}}
+    reads = {
+        "raw bucket": (lambda: tdb.query("db1", bucket).collect(), 2),
+        "routed bucket": (lambda: route_tick_query(spark, db, bucket).collect(), 2),
+        "raw range scan": (lambda: tdb.query("db1", scan).collect(), 1),
+        "get hit": (lambda: tdb.get("db1", "s", "2016-08-03T06:00:00Z"), 1),
+        "get miss": (lambda: tdb.get("db1", "s", "2016-08-03T07:00:00Z"), 1),
+    }
+    assert any("/rollups/day/" in f for f in route_tick_query(spark, db, bucket).inputFiles())
+    for name, (read, most) in reads.items():
+        read()  # the first read of a table version lists it
+        group = f"{name}-{db}"
+        assert 0 < _jobs(spark, group, read) <= most, name

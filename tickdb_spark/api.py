@@ -63,7 +63,10 @@ class TickDB:
     def get(self, db: str, series: str, time) -> dict | None:
         """Exact point lookup, ``GET /{db}/{index}/{time}`` (Q1:
         ``handlers.go:98-113``, ``storage/db.go:127-138``). Partition-pruned
-        equality filter; returns the value map or None (ErrNotFound)."""
+        equality filter; returns the value map or None (ErrNotFound).
+        ``(series, ts)`` is unique after dedup, so the answer has at most
+        one row: ``collect()`` reads it in one job, where ``take(1)``
+        scans one split first and starts a second job on every miss."""
         ts = parse_time_ns(time)
         from pyspark.sql import functions as F
 
@@ -71,7 +74,7 @@ class TickDB:
             self.ticks(db)
             .where((F.col("series") == series) & (F.col("ts") == ts))
             .select("value")
-            .take(1)
+            .collect()
         )
         return dict(rows[0][0]) if rows else None
 

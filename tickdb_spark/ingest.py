@@ -109,9 +109,17 @@ def recover(db_path: str) -> bool:
                 os.rename(src, live)
         if os.path.isdir(tmp):
             shutil.rmtree(tmp)
+        _drop_if_empty(series_dir)
     _write_meta(db_path, entry["meta"])
     os.remove(jp)
     return True
+
+
+def _drop_if_empty(series_dir: str) -> None:
+    """Remove a series directory left with no partition by a delete, so
+    the catalog stops listing a series that holds no tick."""
+    if os.path.isdir(series_dir) and not partition_dirs(series_dir):
+        shutil.rmtree(series_dir)
 
 
 def _read_meta(db_path: str) -> dict:
@@ -412,6 +420,7 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
             shutil.rmtree(live)
         os.rename(src, live)
     shutil.rmtree(tmp)
+    _drop_if_empty(series_dir)
     _write_meta(db_path, meta)
     os.remove(_journal_path(db_path))
 

@@ -76,6 +76,10 @@ def rollup_from_ticks(ticks: DataFrame, unit: str) -> DataFrame:
     # DECIMAL sum state: exact and order-independent, so a rollup-routed
     # answer is bit-identical to the exact-mode raw-tick answer (and to
     # any other engine summing through decimal) at every cascade level.
+    # It is NOT the default double answer: the cast rounds each value to
+    # 6 fractional digits, so a value smaller than 5e-7 in magnitude adds
+    # 0 to sum/avg. Routing the HTTP `_query` path (double by default)
+    # waits for a sum state exact for every double.
     return (
         exploded.groupBy("series", bucket, "field")
         .agg(
@@ -290,9 +294,13 @@ def route_tick_query(
 ) -> DataFrame:
     """Answer a bucket query from the best rollup, falling back to raw
     ticks when semantics demand it (unaligned bounds, bucket widths no
-    level divides, or no rollup built). Result is identical either way —
-    routing is purely a physical choice, like the reference's
-    rollup-vs-leaf read path (``cursor.go:269-352``).
+    level divides, or no rollup built), like the reference's
+    rollup-vs-leaf read path (``cursor.go:269-352``). The routed result
+    equals the EXACT-mode raw answer (``exact=True``), not the default
+    double one: the rollup's ``sum`` state is ``decimal(28,6)``, which
+    rounds each value to 6 fractional digits, so ``sum``/``avg`` of a
+    routed answer drop every value smaller than 5e-7 in magnitude
+    (``max``/``min``/``count``/``first``/``last`` match either way).
 
     N-unit anchored buckets (D4) route too: a ``count > 1`` bucket is a
     union of whole level-L buckets whenever L's width divides the bucket
@@ -352,7 +360,8 @@ def _answer_from_rollup(
     """One conditional-aggregation pass: every (field, reducer) pair is a
     field-gated merge aggregate in a single groupBy(bucket) — one shuffle
     over the (tiny) rollup rows instead of the aggregate-then-pivot
-    two-shuffle shape (routed day query: 0.70 s → ~0.5 s constant cost)."""
+    two-shuffle shape. As in ``run_tick_query``, the at-most-one-row-per-
+    bucket answer is then sorted within one partition, not globally."""
     frm, to = parse_time_ns(query.frm), parse_time_ns(query.to)
     multi = not isinstance(query.series, str)
     cond = (F.col("bucket") >= frm) & (F.col("bucket") < to)
@@ -383,7 +392,7 @@ def _answer_from_rollup(
         raise ValueError("raw scans cannot be answered from a rollup")
     group_cols = (["series"] if multi else []) + [bucket]
     order_cols = (["series"] if multi else []) + ["bucket"]
-    return df.groupBy(*group_cols).agg(*aggs).orderBy(*order_cols)
+    return df.groupBy(*group_cols).agg(*aggs).coalesce(1).sortWithinPartitions(*order_cols)
 
 
 def _merge_reducer_gated(rspec: str, alias: str, gate):

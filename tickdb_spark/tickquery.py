@@ -229,8 +229,13 @@ def run_tick_query(ticks: DataFrame, query: TickQuery | dict) -> DataFrame:
     """Execute a tick query against the canonical (deduped) ticks DataFrame.
 
     Returns one row per non-empty bucket: ``(bucket BIGINT ns, <field>_<reducer>...)``
-    ordered by bucket. Plan shape: partition-pruned scan → single hash
-    aggregate (partial+final) → optional window for ``ma:<k>`` → sort.
+    ordered by bucket. Plan shape: partition-pruned scan → partial
+    aggregate → one exchange → final aggregate → one partition (optional
+    ``ma:<k>`` window, then a sort within it). The answer is at most one
+    row per bucket and goes to the driver whole, so everything after the
+    aggregate runs in one partition: no exchange for the window and no
+    range-partitioned global sort (that sort's sampling job and second
+    shuffle cost more driver time than the rows they order).
     """
     if isinstance(query, dict):
         query = TickQuery.from_dict(query)
@@ -260,17 +265,21 @@ def run_tick_query(ticks: DataFrame, query: TickQuery | dict) -> DataFrame:
                 ma_cols.append((alias, red.ma_window))
 
     if not aggs:  # raw range scan (D2) when no reducers requested
+        # every row goes to the driver: on a clean table (no dedup
+        # exchange) the scan itself then reads in that one partition
         cols = (["series"] if multi else []) + ["ts", "value"]
-        return df.select(*cols).orderBy(*cols[: 2 if multi else 1])
+        return (
+            df.select(*cols).coalesce(1).sortWithinPartitions(*cols[: 2 if multi else 1])
+        )
 
     group_cols = (["series"] if multi else []) + [bucket]
-    out = df.groupBy(*group_cols).agg(*aggs)
+    out = df.groupBy(*group_cols).agg(*aggs).coalesce(1)
     order_cols = (["series"] if multi else []) + ["bucket"]
     for alias, k in ma_cols:
         base = Window.partitionBy("series") if multi else Window
         w = base.orderBy("bucket").rowsBetween(-(k - 1), 0)
         out = out.withColumn(alias, F.avg(alias).over(w))
-    return out.orderBy(*order_cols)
+    return out.sortWithinPartitions(*order_cols)
 
 
 def wide_view(ticks: DataFrame, fields: list[str]) -> DataFrame:
