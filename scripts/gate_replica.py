@@ -7,11 +7,20 @@ dtype-kind). Usage:
     python scripts/gate_replica.py            # head-50 (what the driver samples)
     python scripts/gate_replica.py all        # every registry entry
     python scripts/gate_replica.py name1 name2 ...   # specific entries
+    python scripts/gate_replica.py --reaching fn1,fn2  # entries reaching fn1/fn2
+
+``--reaching`` selects the entries whose construction reaches any of
+the named functions or classes (a ``__qualname__`` such as ``compact``,
+``RollupStore.refresh`` or ``RollupStore``, or one prefixed with its
+module) by walking code objects' global and attribute names
+transitively through ``tickdb_spark``; it prints them before running.
 """
 
+import inspect
 import os
 import sys
 import time
+import types
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -24,6 +33,66 @@ TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
+
+
+def _package_object(obj) -> bool:
+    return (inspect.isfunction(obj) or inspect.isclass(obj)) and (
+        getattr(obj, "__module__", "") or ""
+    ).startswith(("tickdb_spark", "__spark_entry__"))
+
+
+def _named(fn) -> list:
+    """The package functions and classes that ``fn``'s code names: its
+    globals and attributes of the package modules it names
+    (``_ingest.append_batch``, ``from tickdb_spark.ingest import
+    compact``), over its nested code objects too."""
+    fn = inspect.unwrap(fn)
+    found = []
+    codes = [fn.__code__]
+    while codes:
+        code = codes.pop()
+        codes += [c for c in code.co_consts if isinstance(c, types.CodeType)]
+        scope = [fn.__globals__.get(n, sys.modules.get(n)) for n in code.co_names]
+        modules = [
+            m for m in scope
+            if isinstance(m, types.ModuleType) and m.__name__.startswith("tickdb_spark")
+        ]
+        found += [o for o in scope if _package_object(o)]
+        found += [
+            o for m in modules for n in code.co_names
+            if _package_object(o := getattr(m, n, None))
+        ]
+    return found
+
+
+def reaching(targets: set[str], entries: dict) -> list[str]:
+    """Names of ``entries`` (registry name -> construction function) whose
+    construction reaches one of ``targets``."""
+    named: dict[int, list] = {}
+
+    def refs(obj) -> list:
+        if id(obj) not in named:
+            if inspect.isclass(obj):
+                members = [m for c in obj.__mro__ for m in vars(c).values()]
+                members = [getattr(m, "__func__", getattr(m, "fget", m)) for m in members]
+                named[id(obj)] = [m for m in members if _package_object(m)]
+            else:
+                named[id(obj)] = _named(obj)
+        return named[id(obj)]
+
+    out = []
+    for name, fn in entries.items():
+        seen, stack = set(), [fn]
+        while stack:
+            obj = stack.pop()
+            if id(obj) in seen:
+                continue
+            seen.add(id(obj))
+            if {obj.__qualname__, f"{obj.__module__}.{obj.__qualname__}"} & targets:
+                out.append(name)
+                break
+            stack += refs(obj)
+    return out
 
 
 def _driver_like_spark():
@@ -56,6 +125,17 @@ def _driver_like_spark():
 
 def main() -> int:
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    qs, osql = E.queries(), E.oracle_sql()
+    args = sys.argv[1:]
+    if not args:
+        names = list(qs)[:50]
+    elif args == ["all"]:
+        names = list(qs)
+    elif args[0] == "--reaching":
+        names = reaching(set(args[1].split(",")), qs)
+        print(f"{len(names)} entries reach {args[1]}: {' '.join(names)}")
+    else:
+        names = args
     spark = _driver_like_spark()
 
     def oracle(sql: str):
@@ -76,14 +156,6 @@ def main() -> int:
         finally:
             con.close()
 
-    qs, osql = E.queries(), E.oracle_sql()
-    args = sys.argv[1:]
-    if not args:
-        names = list(qs)[:50]
-    elif args == ["all"]:
-        names = list(qs)
-    else:
-        names = args
     n_red = 0
     results = {}
     for n in names:

@@ -286,28 +286,43 @@ def test_drop_index_leaves_no_rollup_rows(tmp_path, spark):
         assert {r["series"] for r in store.read(unit).select("series").collect()} == {"a"}
 
 
-def test_refresh_salted_write_bounds_files_per_series(db, spark):
+def test_refresh_salted_write_bounds_files_per_series(db, spark, tmp_path):
     """r17 (VERDICT r16 ask #2): the salted write shape must bound BOTH
     writers and files per series — at most SPLITS_PER_SERIES parquet
     files in any series dir at any level (the small-files guarantee the
     removed per-series exchange used to give, without its one-writer-
-    per-series straggler)."""
+    per-series straggler). Full and incremental refreshes share it."""
     import os
 
     from tickdb_spark.rollup import SPLITS_PER_SERIES
 
-    _tdb, path = db
-    for unit in ("minute", "hour", "day"):
-        lvl = os.path.join(path, "rollups", unit)
-        assert os.path.isdir(lvl)
-        per_series = {}
-        for root, _dirs, files in os.walk(lvl):
-            pq = [f for f in files if f.endswith(".parquet")]
-            if pq and "series=" in root:
-                key = [p for p in root.split(os.sep) if p.startswith("series=")][0]
-                per_series[key] = per_series.get(key, 0) + len(pq)
-        assert per_series, f"no series dirs under {lvl}"
-        assert max(per_series.values()) <= SPLITS_PER_SERIES, (unit, per_series)
+    tdb = TickDB(spark, str(tmp_path / "wh"))
+    tdb.create_db("inc")
+    incremental = tdb.catalog._existing("inc")
+
+    def docs(days, v):
+        return [
+            {"time": f"2016-08-{d:02d}T{h:02d}:{m:02d}:30Z", "index": s,
+             "value": {"x": v + d * 100 + h}}
+            for d in days for h in (0, 7, 13, 23) for m in (0, 17, 42) for s in ("s1", "s2")
+        ]
+
+    tdb.put("inc", docs((1, 2), 0.0))
+    RollupStore(spark, incremental).refresh()
+    tdb.put("inc", docs((2, 3, 5), 0.5))
+    RollupStore(spark, incremental).refresh_incremental()
+    for path in (db[1], incremental):
+        for unit in ("minute", "hour", "day"):
+            lvl = os.path.join(path, "rollups", unit)
+            assert os.path.isdir(lvl)
+            per_series = {}
+            for root, _dirs, files in os.walk(lvl):
+                pq = [f for f in files if f.endswith(".parquet")]
+                if pq and "series=" in root:
+                    key = [p for p in root.split(os.sep) if p.startswith("series=")][0]
+                    per_series[key] = per_series.get(key, 0) + len(pq)
+            assert per_series, f"no series dirs under {lvl}"
+            assert max(per_series.values()) <= SPLITS_PER_SERIES, (unit, per_series)
 
 
 def _two_series_db(tmp_path, spark, name):
@@ -493,3 +508,75 @@ def test_result_order_of_raw_and_routed_bucket_queries(tmp_path, spark, unshrunk
     assert _reads_rollup(routed, "hour")
     assert rows(routed) == want
     assert rows(tdb.query("o", plain)) == want
+
+
+def _crash_on_call(m, n):
+    """Make the (n+1)-th ``os.rename`` or ``shutil.rmtree`` call, counted
+    together, raise: a crash injected at one step of a rewrite."""
+    import tickdb_spark.ingest as ing
+
+    calls = {"k": 0}
+
+    def crashing(real):
+        def call(*a, **kw):
+            if calls["k"] >= n:
+                raise RuntimeError("injected crash")
+            calls["k"] += 1
+            return real(*a, **kw)
+
+        return call
+
+    m.setattr(ing.os, "rename", crashing(ing.os.rename))
+    m.setattr(ing.shutil, "rmtree", crashing(ing.shutil.rmtree))
+
+
+_REWRITES = {
+    "refresh": lambda tdb, store: store.refresh(),
+    "refresh_incremental": lambda tdb, store: store.refresh_incremental(),
+    "drop_index": lambda tdb, store: tdb.drop_index("cr", "b"),
+}
+
+
+@pytest.mark.parametrize(
+    "rewrite,calls_before_crash",
+    [("refresh", 1), ("refresh", 16)]
+    + [("refresh_incremental", n) for n in (0, 1, 2, 16)]
+    + [("drop_index", n) for n in (0, 1, 11)],
+)
+def test_rollup_rewrite_crash_rolls_forward(
+    tmp_path, spark, monkeypatch, rewrite, calls_before_crash
+):
+    """A crash at any step of a full refresh, an incremental refresh or
+    an index drop is finished by the next read's recover(): every level
+    then holds the rows of an uninterrupted run, no staging dir is left
+    under rollups/, and a later incremental refresh runs."""
+    import os
+
+    from tickdb_spark.rollup import LEVELS
+
+    tdb = TickDB(spark, str(tmp_path / "wh"))
+    tdb.create_db("cr")
+    path = tdb.catalog._existing("cr")
+    tdb.put("cr", [
+        {"time": f"2016-08-0{d}T06:00:00Z", "index": s, "value": {"v": float(d)}}
+        for s, days in (("a", (1, 2, 3)), ("b", (1,))) for d in days
+    ])
+    store = RollupStore(spark, path)
+    store.refresh()
+    tdb.put("cr", [{"time": "2016-08-03T07:00:00Z", "index": "a", "value": {"v": 10.0}}])
+    before = {u: _rollup_rows(store.read(u)) for u in LEVELS}
+    with monkeypatch.context() as m:
+        _crash_on_call(m, calls_before_crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            _REWRITES[rewrite](tdb, store)
+    tdb.ticks("cr")  # any read rolls the journaled commit forward
+    got = {u: _rollup_rows(store.read(u)) for u in LEVELS}
+    assert sorted(os.listdir(os.path.join(path, "rollups"))) == sorted(LEVELS)
+    store.refresh_incremental()
+    if rewrite == "drop_index":
+        expected = {u: [r for r in rows if r[0] != "b"] for u, rows in before.items()}
+    else:
+        store.refresh()
+        expected = {u: _rollup_rows(store.read(u)) for u in LEVELS}
+        assert ("a", 1470207600 * 10**9) in {r[:2] for r in expected["hour"]}
+    assert got == expected

@@ -922,3 +922,69 @@ def test_each_read_runs_its_fewest_jobs(tmp_path, spark):
         read()  # the first read of a table version lists it
         group = f"{name}-{db}"
         assert 0 < _jobs(spark, group, read) <= most, name
+
+
+def test_concurrent_puts_each_get_their_own_seq(tmp_path, spark):
+    """Writers take the database's lock: threads putting batches over the
+    same keys get distinct ingest_seqs, the table is not marked clean,
+    and a read resolves each key to one row, the last batch's."""
+    import sys
+    import threading
+
+    import tickdb_spark.ingest as ing
+
+    tdb = _mk(tmp_path, spark)
+    db = tdb.catalog._existing("db1")
+    n = 6
+    times = [f"2016-08-0{d}T{h:02d}:00:00Z" for d in (1, 2) for h in range(0, 24, 2)]
+    seqs, errors = {}, []
+
+    def put(i):
+        try:
+            seqs[i] = tdb.put("db1", [
+                {"time": t, "index": s, "value": {"v": float(i)}} for t in times for s in "ab"
+            ])
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=put, args=(i,)) for i in range(n)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == [] and not any(t.is_alive() for t in threads)
+    assert sorted(seqs.values()) == list(range(n))
+    meta = ing._read_meta(db)
+    assert meta["next_seq"] == n
+    assert meta["clean"] is False
+    rows = tdb.ticks("db1").collect()
+    assert len(rows) == len(times) * 2
+    last = max(seqs, key=seqs.get)
+    assert {r["value"]["v"] for r in rows} == {float(last)}
+
+
+def test_expiring_every_partition_of_a_series_drops_it_from_the_catalog(tmp_path, spark):
+    """The catalog lists the series that still hold raw ticks: expiring
+    all of a series' days removes it, while its rollup rows stay
+    routable (downsampled retention)."""
+    import tickdb_spark.ingest as ing
+    from tickdb_spark.rollup import RollupStore, route_tick_query
+
+    tdb = _mk(tmp_path, spark)
+    tdb.put("db1", [
+        {"time": f"2016-08-0{d}T12:00:00Z", "index": s, "value": {"v": float(d)}}
+        for s, d in (("a", 1), ("b", 1), ("a", 5))
+    ])
+    db = tdb.catalog._existing("db1")
+    RollupStore(spark, db).refresh()
+    dropped = ing.expire_before(spark, db, "2016-08-03T00:00:00Z")
+    assert sorted(dropped) == [("a", "2016-08-01"), ("b", "2016-08-01")]
+    assert tdb.db_info("db1")["indexes"] == ["a"]
+    day_q = {"index": "b", "from": "2016-08-01T00:00:00Z", "to": "2016-08-02T00:00:00Z",
+             "group": "day", "fields": {"v": "sum"}}
+    assert [r["v_sum"] for r in route_tick_query(spark, db, day_q).collect()] == [1.0]

@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from tickdb_spark.ingest import TICKS_DIR, partition_dirs
+from tickdb_spark.ingest import TICKS_DIR, _commit, _read_meta, partition_dirs, writer
 from tickdb_spark.rollup import LEVELS, ROLLUPS_DIR
 
 
@@ -66,15 +66,16 @@ class Catalog:
     def drop_index(self, name: str, series: str) -> None:
         """Reference S7: ``DELETE /{db}/{index}/_all`` (``handlers.go:115-124``)
         — here a partition-subtree drop, no table rewrite. The series'
-        slice of every rollup level goes with it, so a routed query
-        cannot answer for a dropped index."""
+        slice of every rollup level goes with it, in the same commit, so a
+        routed query cannot answer for a dropped index."""
         path = self._existing(name)
         tables = [os.path.join(path, TICKS_DIR)]
         tables += [os.path.join(path, ROLLUPS_DIR, unit) for unit in LEVELS]
-        for table in tables:
-            target = partition_dirs(table).get(series)
-            if target is not None:
-                shutil.rmtree(target)
+        with writer(path):
+            targets = [partition_dirs(table).get(series) for table in tables]
+            swaps = [(target, None) for target in targets if target is not None]
+            if swaps:
+                _commit(path, swaps, _read_meta(path))
 
     def _existing(self, name: str) -> str:
         path = self.db_path(name)

@@ -15,6 +15,15 @@ layout ``series/dt`` gives both series pruning (reference: file-per-index,
 ``database.go:49-69``) and time pruning (reference: tree descent,
 ``cursor.go:188-241``).
 
+Rewrites: every operation that replaces or removes warehouse
+directories (``compact``, ``delete_range``, ``expire_before``, the
+rollup refreshes, ``Catalog.drop_index``) stages its new directories,
+then hands one swap list to ``_commit``, the only code that makes a
+rewrite visible. It journals the list with the final metadata before
+the first rename, so ``recover()`` finishes it after a crash at any
+point by applying the journal again. Writers take one lock per
+database (``writer``); readers take none.
+
 Compression: writes honor the session's
 ``spark.sql.parquet.compression.codec``. Measured on the 10M-point bench
 warehouse (random-double values — the WORST case for compression):
@@ -26,11 +35,14 @@ where real values compress far better than this synthetic corpus).
 
 from __future__ import annotations
 
+import contextlib
+import datetime as dt
+import fcntl
 import json
 import os
 import shutil
-import time
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +54,7 @@ from tickdb_spark.schema import TICKS_SCHEMA, ns_to_ts, parse_time_ns
 TICKS_DIR = "ticks"
 META_FILE = "_meta.json"
 JOURNAL_FILE = "_commit_journal.json"
+LOCK_FILE = "_writer.lock"
 
 
 def _meta_path(db_path: str) -> str:
@@ -53,73 +66,88 @@ def _journal_path(db_path: str) -> str:
 
 
 def _write_journal(db_path: str, entry: dict) -> None:
-    """Atomically persist the destructive plan BEFORE the first destructive
-    rename/rmtree. The journal is the commit point: present → the operation
-    WILL complete (recover() rolls it forward); absent → it never started
-    (a crash mid-Spark-write leaves only an orphan staging dir)."""
+    """Atomically persist a commit's swap list and final metadata. The
+    journal is the commit point: present → the rewrite WILL complete
+    (``_roll_forward`` finishes it); absent → it never started (a crash
+    during staging leaves only an orphan staging dir)."""
     tmp = _journal_path(db_path) + ".tmp"
     with open(tmp, "w") as f:
         json.dump(entry, f)
     os.replace(tmp, _journal_path(db_path))
 
 
-def recover(db_path: str) -> bool:
-    """Roll forward an interrupted ``compact``/``delete_range``.
+def _commit(db_path: str, swaps: list[tuple[str, str | None]], meta: dict) -> None:
+    """Make a staged rewrite visible; the only code that does. ``swaps``
+    holds ``(live_dir, staged_dir)`` pairs: the staged dir replaces the
+    live one, and ``staged_dir=None`` removes the live one. The pairs and
+    ``meta`` are journaled first, then applied. Each live dir is first
+    renamed aside to a ``.``-prefixed name, which neither Spark nor
+    ``partition_dirs`` lists, so a reader sees the old dir or the new
+    one, never a half-removed one."""
+    old = f".old-{uuid.uuid4().hex[:8]}-"
+    entry = [
+        [live, staged, os.path.join(os.path.dirname(live), old + os.path.basename(live))]
+        for live, staged in swaps
+    ]
+    _write_journal(db_path, {"swaps": entry, "meta": meta})
+    _roll_forward(db_path)
 
-    Both operations stage their full replacement data, then journal the
-    swap plan (with the final metadata), then swap. Every destructive step
-    is idempotent given the journal, so replaying from any crash point
-    converges on the committed state — readers see old-or-new, never a
-    partial delete or a missing table dir. (The streaming index faces use
-    the same epoch-commit discipline, streaming/index.py; the reference
-    has no durability at all on this path — quirk B11.)
-    """
+
+def _roll_forward(db_path: str) -> bool:
+    """Apply the journaled commit, if any; every step checks the state it
+    moves from, so a rerun from any crash point converges on the same
+    tree. A staged dir still in place proves its swap has not happened.
+    Then drops the series dirs the swaps left without partitions,
+    installs the metadata and removes the journal."""
     jp = _journal_path(db_path)
     if not os.path.exists(jp):
         return False
     with open(jp) as f:
         entry = json.load(f)
-    if entry["op"] == "compact":
-        path, tmp, old = entry["path"], entry["tmp"], entry["old"]
-        if os.path.isdir(tmp):
-            if os.path.isdir(path):
-                os.rename(path, old)
-            os.rename(tmp, path)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-    elif entry["op"] == "expire":
-        for d in entry["dirs"]:
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-    elif entry["op"] == "delete_range":
-        series_dir, tmp = entry["series_dir"], entry["tmp"]
-        # Pure deletes (no surviving rows): old partition just goes away.
-        for n in entry["pure_delete"]:
-            live = os.path.join(series_dir, n)
-            if os.path.isdir(live):
-                shutil.rmtree(live)
-        # Replacements: tmp/<n> still existing proves the swap for <n> has
-        # not happened, so live/<n> (if present) is the OLD partition.
-        for n in entry["with_replacement"]:
-            src = os.path.join(tmp, n)
-            live = os.path.join(series_dir, n)
-            if os.path.isdir(src):
-                if os.path.isdir(live):
-                    shutil.rmtree(live)
-                os.rename(src, live)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        _drop_if_empty(series_dir)
+    for live, staged, aside in entry["swaps"]:
+        if os.path.isdir(live) and (staged is None or os.path.isdir(staged)):
+            os.rename(live, aside)
+        if staged is not None and os.path.isdir(staged):
+            os.rename(staged, live)
+        if os.path.isdir(aside):
+            shutil.rmtree(aside)
+    for live, _staged, _aside in entry["swaps"]:
+        parent = os.path.dirname(live)
+        if "=" in os.path.basename(parent) and os.path.isdir(parent) and not partition_dirs(parent):
+            shutil.rmtree(parent)
     _write_meta(db_path, entry["meta"])
     os.remove(jp)
     return True
 
 
-def _drop_if_empty(series_dir: str) -> None:
-    """Remove a series directory left with no partition by a delete, so
-    the catalog stops listing a series that holds no tick."""
-    if os.path.isdir(series_dir) and not partition_dirs(series_dir):
-        shutil.rmtree(series_dir)
+@contextlib.contextmanager
+def writer(db_path: str):
+    """Hold the database's one writer lock for the block: an exclusive
+    ``fcntl.flock`` on ``<db>/_writer.lock``, taken by every append,
+    rewrite and rollup refresh, never by a reader. A lock file needs no
+    module-level lock table (``cachereg`` owns shared state) and also
+    serializes writers in different processes. It rolls an interrupted
+    commit forward on entry. flock is held per open file, so it is not
+    re-entrant: a holder must not enter ``writer`` again, and reaches
+    ``recover()`` only while no journal exists."""
+    os.makedirs(db_path, exist_ok=True)
+    with open(os.path.join(db_path, LOCK_FILE), "a") as f:
+        fcntl.flock(f, fcntl.LOCK_EX)
+        _roll_forward(db_path)
+        yield
+
+
+def recover(db_path: str) -> bool:
+    """Finish the commit a crash interrupted: if a journal exists, apply
+    it again under the writer lock (see ``_commit``; every rewrite goes
+    through that one journaled swap list, so there is nothing else to
+    replay). Returns whether one existed. Reads call this first; with no
+    journal it takes no lock. (The reference has no durability at all on
+    this path — quirk B11.)"""
+    if not os.path.exists(_journal_path(db_path)):
+        return False
+    with writer(db_path):
+        return True
 
 
 def _read_meta(db_path: str) -> dict:
@@ -163,8 +191,6 @@ def partition_dirs(path: str) -> dict[str, str]:
     (series ``a:b`` lives in ``series=a%3Ab``). The only reader of
     partition directory names: callers look directories up here and
     never build a name, so Spark stays the only code that escapes."""
-    from urllib.parse import unquote
-
     try:
         entries = list(os.scandir(path))
     except FileNotFoundError:
@@ -196,7 +222,7 @@ def partition_files(path: str, depth: int) -> dict[tuple[str, ...], frozenset[st
 
 
 def read_table(
-    spark: SparkSession, path: str, depth: int, schema: "T.StructType | None" = None
+    spark: SparkSession, path: str, depth: int, schema: "T.StructType | str | None" = None
 ) -> DataFrame:
     """``spark.read.parquet(path)`` (with ``schema`` when given), reused
     while the table's data-file set (``partition_files``) is unchanged —
@@ -208,36 +234,38 @@ def read_table(
 
 def append_batch(db_path: str, ticks: DataFrame) -> int:
     """Atomically-visible batch append (fixes B11: the reference never
-    flushes on any handler path). Returns the batch's ingest_seq."""
-    meta = _read_meta(db_path)
-    seq = meta["next_seq"]
-    out = ticks.withColumn("ingest_seq", F.lit(seq).cast("long")).withColumn(
-        "dt", F.to_date("ts_utc")
-    )
-    # Cluster rows by their target partition so each (series, dt) is
-    # written by one task in parallel — one file per partition instead of
-    # one task sequentially emitting every partition's files. (Measured
-    # 2.3× ingest throughput at sf0.1; at cluster scale this is also the
-    # small-files defense.)
-    # Time-sort inside each file: parquet row-group min/max stats on ts
-    # then prune [from, to) scans within a day — the file-level analogue
-    # of the reference's time-sorted leaf order (node.go:229-245).
-    out = out.repartition("series", "dt").sortWithinPartitions("ts")
-    path = os.path.join(db_path, TICKS_DIR)
-    before = partition_files(path, 2)
-    out.write.mode("append").partitionBy("series", "dt").parquet(path)
-    # Dirty (series, dt) for incremental rollup refresh (reference:
-    # dirty-path tracking, node.go:34 / cursor.go:34-39): every write job
-    # names its files with a fresh UUID, so the partitions whose file set
-    # changed are exactly the ones this batch wrote — a listing diff that
-    # works on any listable store, reads no clock and runs no Spark job.
-    after = partition_files(path, 2)
-    touched = {k for k, files in after.items() if before.get(k) != files}
-    dirty = {tuple(x) for x in meta.get("dirty", [])} | touched
-    meta["dirty"] = sorted([list(t) for t in dirty])
-    meta["next_seq"] = seq + 1
-    meta["clean"] = meta.get("clean", True) and seq == 0
-    _write_meta(db_path, meta)
+    flushes on any handler path), under the writer lock so concurrent
+    batches get distinct ingest_seqs. Returns the batch's ingest_seq."""
+    with writer(db_path):
+        meta = _read_meta(db_path)
+        seq = meta["next_seq"]
+        out = ticks.withColumn("ingest_seq", F.lit(seq).cast("long")).withColumn(
+            "dt", F.to_date("ts_utc")
+        )
+        # Cluster rows by their target partition so each (series, dt) is
+        # written by one task in parallel — one file per partition instead of
+        # one task sequentially emitting every partition's files. (Measured
+        # 2.3× ingest throughput at sf0.1; at cluster scale this is also the
+        # small-files defense.)
+        # Time-sort inside each file: parquet row-group min/max stats on ts
+        # then prune [from, to) scans within a day — the file-level analogue
+        # of the reference's time-sorted leaf order (node.go:229-245).
+        out = out.repartition("series", "dt").sortWithinPartitions("ts")
+        path = os.path.join(db_path, TICKS_DIR)
+        before = partition_files(path, 2)
+        out.write.mode("append").partitionBy("series", "dt").parquet(path)
+        # Dirty (series, dt) for incremental rollup refresh (reference:
+        # dirty-path tracking, node.go:34 / cursor.go:34-39): every write job
+        # names its files with a fresh UUID, so the partitions whose file set
+        # changed are exactly the ones this batch wrote — a listing diff that
+        # works on any listable store, reads no clock and runs no Spark job.
+        after = partition_files(path, 2)
+        touched = {k for k, files in after.items() if before.get(k) != files}
+        dirty = {tuple(x) for x in meta.get("dirty", [])} | touched
+        meta["dirty"] = sorted([list(t) for t in dirty])
+        meta["next_seq"] = seq + 1
+        meta["clean"] = meta.get("clean", True) and seq == 0
+        _write_meta(db_path, meta)
     return seq
 
 
@@ -279,8 +307,8 @@ def read_ticks(
     (``read_table``); the snapshot filter and the dedup aggregate are
     applied per call on top.
     """
-    recover(db_path)  # roll forward any interrupted compact/delete first:
-    # the table dir itself may be mid-swap, so this must precede the read
+    recover(db_path)  # roll forward any interrupted commit first: the
+    # table dir itself may be mid-swap, so this must precede the read
     path = os.path.join(db_path, TICKS_DIR)
     extra: list[str] = []
     schema = None
@@ -324,34 +352,26 @@ def compact(spark: SparkSession, db_path: str) -> None:
     dedup shuffle.
     """
     path = os.path.join(db_path, TICKS_DIR)
-    deduped = read_ticks(spark, db_path, dedup=True).withColumn(
-        "ingest_seq", F.lit(0).cast("long")
-    )
-    tmp = path + f".compact-{uuid.uuid4().hex[:8]}"
-    (
-        deduped.withColumn("dt", F.to_date("ts_utc"))
-        .repartition("series", "dt")
-        .sortWithinPartitions("ts")
-        .write.mode("overwrite")
-        .partitionBy("series", "dt")
-        .parquet(tmp)
-    )
-    old = path + f".old-{int(time.time())}"
-    meta = _read_meta(db_path)
-    meta["clean"] = True
-    meta["next_seq"] = max(1, meta.get("next_seq", 1))
-    # compaction rewrites every row at seq 0: snapshots older than this
-    # point are no longer reconstructable (document, don't silently lie)
-    meta["history_from_seq"] = meta["next_seq"] - 1
-    # Journal-then-swap: the staged table is complete, so persisting the
-    # plan makes the swap crash-atomic — a reader after a kill at ANY point
-    # below triggers recover() and sees exactly the compacted table.
-    _write_journal(db_path, {"op": "compact", "path": path, "tmp": tmp, "old": old, "meta": meta})
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    _write_meta(db_path, meta)
-    os.remove(_journal_path(db_path))
+    with writer(db_path):
+        deduped = read_ticks(spark, db_path, dedup=True).withColumn(
+            "ingest_seq", F.lit(0).cast("long")
+        )
+        tmp = path + f".compact-{uuid.uuid4().hex[:8]}"
+        (
+            deduped.withColumn("dt", F.to_date("ts_utc"))
+            .repartition("series", "dt")
+            .sortWithinPartitions("ts")
+            .write.mode("overwrite")
+            .partitionBy("series", "dt")
+            .parquet(tmp)
+        )
+        meta = _read_meta(db_path)
+        meta["clean"] = True
+        meta["next_seq"] = max(1, meta.get("next_seq", 1))
+        # compaction rewrites every row at seq 0: snapshots older than this
+        # point are no longer reconstructable (document, don't silently lie)
+        meta["history_from_seq"] = meta["next_seq"] - 1
+        _commit(db_path, [(path, tmp)], meta)
 
 
 def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> None:
@@ -366,63 +386,39 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
     frm_ns, to_ns = parse_time_ns(frm), parse_time_ns(to)
     if to_ns <= frm_ns:
         return
-    base = os.path.join(db_path, TICKS_DIR)
-    series_dir = partition_dirs(base).get(series)
-    if series_dir is None:
-        return
-    import datetime as dt
-
     d_from = dt.datetime.fromtimestamp(frm_ns / 1e9, dt.timezone.utc).date()
     d_to = dt.datetime.fromtimestamp(max(frm_ns, to_ns - 1) / 1e9, dt.timezone.utc).date()
-    affected = {
-        day: ddir
-        for day, ddir in partition_dirs(series_dir).items()
-        if d_from <= dt.date.fromisoformat(day) <= d_to
-    }
-    if not affected:
-        return
-    keep = (
-        spark.read.option("basePath", base)
-        .parquet(*affected.values())
-        .where(~((F.col("ts") >= frm_ns) & (F.col("ts") < to_ns)))
-    )
-    tmp = os.path.join(db_path, f"_delete-{uuid.uuid4().hex[:8]}")
-    keep.select("ts", "ts_utc", "value", "ingest_seq", "dt").write.mode("overwrite").partitionBy(
-        "dt"
-    ).parquet(tmp)
-    # deletes invalidate rollups for the touched partitions too
-    meta = _read_meta(db_path)
-    dirty = {tuple(x) for x in meta.get("dirty", [])}
-    dirty |= {(series, day) for day in affected}
-    meta["dirty"] = sorted([list(t) for t in dirty])
-    # Journal-then-swap (see recover()): partitionBy only materializes
-    # partitions with surviving rows, so record which affected partitions
-    # have a staged replacement vs disappear outright — recovery needs the
-    # split to stay idempotent from any crash point.
-    staged = partition_dirs(tmp)
-    gone = [ddir for day, ddir in affected.items() if day not in staged]
-    _write_journal(
-        db_path,
-        {
-            "op": "delete_range",
-            "series_dir": series_dir,
-            "tmp": tmp,
-            "with_replacement": sorted(os.path.basename(p) for p in staged.values()),
-            "pure_delete": sorted(os.path.basename(p) for p in gone),
-            "meta": meta,
-        },
-    )
-    for ddir in gone:
-        shutil.rmtree(ddir)
-    for src in sorted(staged.values()):
-        live = os.path.join(series_dir, os.path.basename(src))
-        if os.path.isdir(live):
-            shutil.rmtree(live)
-        os.rename(src, live)
-    shutil.rmtree(tmp)
-    _drop_if_empty(series_dir)
-    _write_meta(db_path, meta)
-    os.remove(_journal_path(db_path))
+    base = os.path.join(db_path, TICKS_DIR)
+    with writer(db_path):
+        series_dir = partition_dirs(base).get(series)
+        if series_dir is None:
+            return
+        affected = {
+            day: ddir
+            for day, ddir in partition_dirs(series_dir).items()
+            if d_from <= dt.date.fromisoformat(day) <= d_to
+        }
+        if not affected:
+            return
+        keep = (
+            spark.read.option("basePath", base)
+            .parquet(*affected.values())
+            .where(~((F.col("ts") >= frm_ns) & (F.col("ts") < to_ns)))
+        )
+        tmp = os.path.join(db_path, f"_delete-{uuid.uuid4().hex[:8]}")
+        keep.select("ts", "ts_utc", "value", "ingest_seq", "dt").write.mode(
+            "overwrite"
+        ).partitionBy("dt").parquet(tmp)
+        # deletes invalidate rollups for the touched partitions too
+        meta = _read_meta(db_path)
+        dirty = {tuple(x) for x in meta.get("dirty", [])}
+        dirty |= {(series, day) for day in affected}
+        meta["dirty"] = sorted([list(t) for t in dirty])
+        # partitionBy only materializes partitions with surviving rows: an
+        # affected partition with no staged replacement just goes away
+        staged = partition_dirs(tmp)
+        swaps = [(ddir, staged.get(day)) for day, ddir in sorted(affected.items())]
+        _commit(db_path, [*swaps, (tmp, None)], meta)
 
 
 def expire_before(spark: SparkSession, db_path: str, cutoff) -> list[tuple[str, str]]:
@@ -437,16 +433,15 @@ def expire_before(spark: SparkSession, db_path: str, cutoff) -> list[tuple[str, 
     REMAIN queryable — the standard keep-aggregates-drop-raw policy.
     Expiry therefore does NOT mark partitions dirty (a refresh would
     rebuild them from the now-empty raw and erase the retained
-    aggregates). Snapshot reads (``as_of_seq``) lose expired rows —
-    physical retention trumps time travel, recorded in
+    aggregates). The catalog lists the series that still hold raw
+    ticks, so a series whose every partition expired leaves it, while
+    its rollup rows stay routable until ``Catalog.drop_index``.
+    Snapshot reads (``as_of_seq``) lose expired rows — physical
+    retention trumps time travel, recorded in
     ``meta['expired_before_ns']``.
 
-    Crash-safe via the same journal discipline as compact/delete_range:
-    the drop list is persisted before the first rmtree (pure deletes —
-    recovery just finishes them). Returns the dropped (series, dt)
-    pairs."""
-    import datetime as dt
-
+    One journaled commit of removals, like every rewrite. Returns the
+    dropped (series, dt) pairs."""
     cutoff_ns = parse_time_ns(cutoff)
     # Integer day math: cutoff_ns / 1e9 on a >2^53 nanosecond value can
     # round across midnight for non-second-aligned cutoffs (ADVICE r13).
@@ -454,24 +449,21 @@ def expire_before(spark: SparkSession, db_path: str, cutoff) -> list[tuple[str, 
         days=cutoff_ns // 86_400_000_000_000
     )
     base = os.path.join(db_path, TICKS_DIR)
-    meta = _read_meta(db_path)  # also runs recovery first
-    dropped: list[tuple[str, str]] = []
-    dirs: list[str] = []
-    for series, sdir in partition_dirs(base).items():
-        for day, ddir in partition_dirs(sdir).items():
-            if dt.date.fromisoformat(day) < cutoff_day:
-                dropped.append((series, day))
-                dirs.append(ddir)
-    if not dirs:
-        return []
-    meta["expired_before_ns"] = max(
-        int(meta.get("expired_before_ns", 0)), cutoff_ns
-    )
-    _write_journal(db_path, {"op": "expire", "dirs": dirs, "meta": meta})
-    for d in dirs:
-        shutil.rmtree(d)
-    _write_meta(db_path, meta)
-    os.remove(_journal_path(db_path))
+    with writer(db_path):
+        dropped: list[tuple[str, str]] = []
+        dirs: list[str] = []
+        for series, sdir in partition_dirs(base).items():
+            for day, ddir in partition_dirs(sdir).items():
+                if dt.date.fromisoformat(day) < cutoff_day:
+                    dropped.append((series, day))
+                    dirs.append(ddir)
+        if not dirs:
+            return []
+        meta = _read_meta(db_path)
+        meta["expired_before_ns"] = max(
+            int(meta.get("expired_before_ns", 0)), cutoff_ns
+        )
+        _commit(db_path, [(d, None) for d in dirs], meta)
     return dropped
 
 

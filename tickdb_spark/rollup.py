@@ -28,18 +28,21 @@ ticks. Pure Python planning — no Catalyst extension needed (SURVEY.md
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tickdb_spark.ingest import (
     TICKS_DIR,
+    _commit,
     _read_meta,
-    _write_meta,
     partition_dirs,
     read_table,
     read_ticks,
+    writer,
 )
 from tickdb_spark.schema import ns_to_ts, parse_time_ns
 from tickdb_spark.session import scan_splits
@@ -53,6 +56,13 @@ from tickdb_spark.tickquery import (
 )
 
 ROLLUPS_DIR = "rollups"
+
+#: Every level's schema (``series`` is the partition column). Reads pass
+#: it, so a level with no rows reads as zero rows, with no inference.
+ROLLUP_SCHEMA = (
+    "bucket bigint, field string, sum decimal(38,6), max double, min double, count bigint, "
+    "first double, first_ts bigint, last double, last_ts bigint, series string"
+)
 
 #: Cascade order, finest first.
 LEVELS = ("minute", "hour", "day", "month", "year")
@@ -155,31 +165,16 @@ class RollupStore:
     def refresh(self, levels: tuple[str, ...] = LEVELS) -> None:
         """(Re)build the cascade. Each level reads the previous level's
         parquet (not raw ticks), so the whole refresh is one raw scan plus
-        progressively tiny merges. Incremental refresh would rebuild only
-        date partitions touched since the last ingest batch — the
-        partition layout already supports it."""
-        ticks = read_ticks(self.spark, self.db_path)
-        prev: DataFrame | None = None
-        src_path = os.path.join(self.db_path, TICKS_DIR)
-        for unit in LEVELS:
-            if unit not in levels:
-                continue  # a coarser level merges fine from any finer one
-            df = rollup_from_ticks(ticks, unit) if prev is None else rollup_merge(prev, unit)
-            path = self._path(unit)
-            df = _shape_for_write(self.spark, df, src_path)
-            df.write.mode("overwrite").partitionBy("series").parquet(path)
-            prev = self.read(unit)
-            src_path = path
-        # a full rebuild supersedes any pending incremental work
-        meta = _read_meta(self.db_path)
-        meta["dirty"] = []
-        _write_meta(self.db_path, meta)
+        progressively tiny merges. A full rebuild supersedes any pending
+        incremental work."""
+        with writer(self.db_path):
+            self._rebuild(levels, None)
 
     def read(self, unit: str) -> DataFrame:
         """One level's table. The scan is built once per version of the
         level's data-file set and reused until a refresh or an index drop
         changes it (``ingest.read_table``)."""
-        return read_table(self.spark, self._path(unit), 1)
+        return read_table(self.spark, self._path(unit), 1, ROLLUP_SCHEMA)
 
     def refresh_incremental(self) -> None:
         """Rebuild only the rollup slices invalidated since the last
@@ -195,68 +190,70 @@ class RollupStore:
         buckets follow from the dirty dates, not from the ticks left in
         them, so a bucket whose every tick was deleted goes away.
         """
-        meta = _read_meta(self.db_path)
-        dirty = [tuple(x) for x in meta.get("dirty", [])]
-        levels = self.available()
-        if not levels:
-            self.refresh()
-            return
-        if not dirty:
-            return
-        dirty_series = sorted({s for s, _ in dirty})
-        dirty_dates = sorted({d for _, d in dirty})
+        with writer(self.db_path):
+            levels = tuple(self.available())
+            dirty = [tuple(x) for x in _read_meta(self.db_path).get("dirty", [])]
+            if not levels:
+                self._rebuild(LEVELS, None)
+            elif dirty:
+                self._rebuild(levels, dirty)
 
-        ticks = read_ticks(self.spark, self.db_path).where(
-            F.col("series").isin(dirty_series)
-        )
-        prev_unit: str | None = None
+    def _rebuild(self, levels: tuple[str, ...], dirty: list[tuple[str, str]] | None) -> None:
+        """Stage ``levels`` finest first, each merged from the staged level
+        before it, then commit them in one swap list whose metadata clears
+        ``dirty``: whole level dirs when ``dirty`` is None, else the dirty
+        series' partitions, whose buckets covering a dirty date are
+        recomputed and whose other rows are kept. A reader sees each level
+        (or series partition) old or new, never half-written."""
+        meta = _read_meta(self.db_path)
+        stage = os.path.join(self.db_path, ROLLUPS_DIR, f"_refresh-{uuid.uuid4().hex[:8]}")
+        ticks = read_ticks(self.spark, self.db_path)
+        if dirty is not None:
+            series = sorted({s for s, _ in dirty})
+            dates = sorted({d for _, d in dirty})
+            ticks = ticks.where(F.col("series").isin(series))
+        src = os.path.join(self.db_path, TICKS_DIR)
+        prev: DataFrame | None = None
+        swaps: list[tuple[str, str | None]] = []
         for unit in LEVELS:
             if unit not in levels:
-                continue
-            if prev_unit is None:
-                # base level: every tick inside an affected bucket
-                inside = _covers(ts_to_trunc_ns(F.col("ts"), unit), unit, dirty_dates)
-                fresh = rollup_from_ticks(ticks.where(inside), unit)
+                continue  # a coarser level merges fine from any finer one
+            if dirty is None:
+                df = rollup_from_ticks(ticks, unit) if prev is None else rollup_merge(prev, unit)
             else:
-                # merge from ALL finer rows inside each affected bucket —
-                # including finer buckets from clean dates (the finer
-                # level was refreshed in the previous iteration)
-                finer = self.read(prev_unit).where(
-                    F.col("series").isin(dirty_series)
-                    & _covers(ts_to_trunc_ns(F.col("bucket"), unit), unit, dirty_dates)
+                # a dirty date invalidates every bucket covering it: the base
+                # level re-reduces all ticks inside those buckets, a coarser
+                # one merges all staged finer rows inside them
+                if prev is None:
+                    inside = _covers(ts_to_trunc_ns(F.col("ts"), unit), unit, dates)
+                    fresh = rollup_from_ticks(ticks.where(inside), unit)
+                else:
+                    inside = _covers(ts_to_trunc_ns(F.col("bucket"), unit), unit, dates)
+                    fresh = rollup_merge(prev.where(inside), unit)
+                kept = self.read(unit).where(
+                    F.col("series").isin(series) & ~_covers(F.col("bucket"), unit, dates)
                 )
-                fresh = rollup_merge(finer, unit)
-            kept = self.read(unit).where(
-                F.col("series").isin(dirty_series)
-                & ~_covers(F.col("bucket"), unit, dirty_dates)
-            )
-            # can't lazily read and overwrite the same path: write the
-            # refreshed series partitions to a tmp dir, then swap them in
-            import shutil as _shutil
-            import uuid as _uuid
-
-            tmp = self._path(unit) + f".inc-{_uuid.uuid4().hex[:8]}"
-            (
-                kept.unionByName(fresh)
-                .repartition("series")
-                .write.mode("overwrite")
-                .partitionBy("series")
-                .parquet(tmp)
-            )
-            # a dirty series left with no rows has no staged partition:
-            # its live one still goes
-            live, staged = partition_dirs(self._path(unit)), partition_dirs(tmp)
-            for series in dirty_series:
-                if series in live:
-                    _shutil.rmtree(live[series])
-                if series in staged:
-                    src = staged[series]
-                    os.rename(src, os.path.join(self._path(unit), os.path.basename(src)))
-            _shutil.rmtree(tmp)
-            prev_unit = unit
-        meta = _read_meta(self.db_path)
+                df = kept.unionByName(fresh)
+            staged = os.path.join(stage, unit)
+            _shape_for_write(self.spark, df, src).write.mode("overwrite").partitionBy(
+                "series"
+            ).parquet(staged)
+            prev = self.spark.read.schema(ROLLUP_SCHEMA).parquet(staged)
+            src = staged
+            if dirty is None:
+                swaps.append((self._path(unit), staged))
+            else:
+                # a dirty series left with no rows has no staged partition:
+                # its live one still goes
+                live, new = partition_dirs(self._path(unit)), partition_dirs(staged)
+                for s in series:
+                    if s in new:
+                        name = os.path.basename(new[s])
+                        swaps.append((os.path.join(self._path(unit), name), new[s]))
+                    elif s in live:
+                        swaps.append((live[s], None))
         meta["dirty"] = []
-        _write_meta(self.db_path, meta)
+        _commit(self.db_path, [*swaps, (stage, None)], meta)
 
 
 def _covers(bucket, unit: str, dates: list[str]):
@@ -266,8 +263,6 @@ def _covers(bucket, unit: str, dates: list[str]):
     bucket containing it."""
     if unit in ("minute", "hour"):
         return F.to_date(ns_to_ts(bucket)).isin(dates)
-    import datetime as dt
-
     starts = set()
     for d in map(dt.date.fromisoformat, dates):
         if unit != "day":
@@ -280,8 +275,6 @@ def _aligned(ns: int, unit: str) -> bool:
     if unit in _ALIGN_CHECK:
         return ns % _ALIGN_CHECK[unit] == 0
     # month/year alignment: must be at a month boundary (UTC)
-    import datetime as dt
-
     t = dt.datetime.fromtimestamp(ns / 1e9, dt.timezone.utc)
     month_ok = t.day == 1 and t.hour == t.minute == t.second == 0 and t.microsecond == 0
     if unit == "month":
