@@ -325,6 +325,22 @@ def test_refresh_salted_write_bounds_files_per_series(db, spark, tmp_path):
             assert max(per_series.values()) <= SPLITS_PER_SERIES, (unit, per_series)
 
 
+def test_rollup_schema_is_the_written_schema(db, spark):
+    """Level reads pass ROLLUP_SCHEMA instead of inferring it, so it must
+    name every column the cascade's aggregates write, with their types."""
+    import os
+
+    from tickdb_spark.rollup import LEVELS, ROLLUP_SCHEMA
+
+    for unit in LEVELS:
+        lvl = os.path.join(db[1], "rollups", unit)
+        written = spark.read.parquet(lvl).schema
+        declared = spark.read.schema(ROLLUP_SCHEMA).parquet(lvl).schema
+        assert [(f.name, f.dataType) for f in written] == [
+            (f.name, f.dataType) for f in declared
+        ], unit
+
+
 def _two_series_db(tmp_path, spark, name):
     tdb = TickDB(spark, str(tmp_path / "wh"))
     tdb.create_db(name)
@@ -549,7 +565,7 @@ def test_rollup_rewrite_crash_rolls_forward(
     """A crash at any step of a full refresh, an incremental refresh or
     an index drop is finished by the next read's recover(): every level
     then holds the rows of an uninterrupted run, no staging dir is left
-    under rollups/, and a later incremental refresh runs."""
+    behind, and a later incremental refresh runs."""
     import os
 
     from tickdb_spark.rollup import LEVELS
@@ -572,6 +588,7 @@ def test_rollup_rewrite_crash_rolls_forward(
     tdb.ticks("cr")  # any read rolls the journaled commit forward
     got = {u: _rollup_rows(store.read(u)) for u in LEVELS}
     assert sorted(os.listdir(os.path.join(path, "rollups"))) == sorted(LEVELS)
+    assert not [n for n in os.listdir(path) if n.startswith("_stage-")]
     store.refresh_incremental()
     if rewrite == "drop_index":
         expected = {u: [r for r in rows if r[0] != "b"] for u, rows in before.items()}

@@ -891,6 +891,81 @@ def test_deleting_every_tick_of_a_series_drops_it_from_the_catalog(
     assert tdb.get("db1", "a", "2016-08-02T12:00:00Z") == {"v": 2.0}
 
 
+def test_rewrites_keep_a_database_whose_name_holds_an_equals_sign(tmp_path, spark):
+    """A database named like a partition dir (``k=v``) survives every
+    rewrite: compact swaps its ticks dir, and a delete or an expiry that
+    empties a series removes that series dir alone."""
+    import os as _os
+
+    import tickdb_spark.ingest as ing
+
+    tdb = _mk(tmp_path, spark, "k=v")
+    tdb.put("k=v", [
+        {"time": f"2016-08-0{d}T12:00:00Z", "index": s, "value": {"v": float(d)}}
+        for d in (1, 2, 5) for s in ("a", "b", "c")
+    ])
+    db = tdb.catalog._existing("k=v")
+    ing.compact(spark, db)
+    tdb.delete("k=v", "b", "2016-08-01T00:00:00Z", "2016-08-06T00:00:00Z")
+    tdb.delete("k=v", "a", "2016-08-01T00:00:00Z", "2016-08-02T00:00:00Z")
+    ing.expire_before(spark, db, "2016-08-03T00:00:00Z")
+    assert _os.path.isfile(ing._meta_path(db))
+    assert tdb.db_info("k=v")["indexes"] == ["a", "c"]
+    assert tdb.get("k=v", "c", "2016-08-05T12:00:00Z") == {"v": 5.0}
+    assert tdb.get("k=v", "a", "2016-08-02T12:00:00Z") is None
+
+
+@pytest.mark.parametrize("rewrite,writes_before_failure", [
+    ("compact", 0), ("delete_range", 0), ("refresh", 0), ("refresh", 2),
+])
+def test_failed_staging_write_leaves_nothing_behind(
+    tmp_path, spark, monkeypatch, rewrite, writes_before_failure
+):
+    """A staging write that fails after its output landed changes nothing
+    a reader sees, and the next writer removes what the failed rewrite
+    staged."""
+    import os as _os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import tickdb_spark.ingest as ing
+    from tickdb_spark.rollup import LEVELS, RollupStore
+
+    db, rows = _mk_crash_db(tmp_path, spark)
+    store = RollupStore(spark, db)
+    store.refresh()
+
+    def seen():
+        return _state(spark, db), {u: sorted(map(tuple, store.read(u).collect())) for u in LEVELS}
+
+    before = seen()
+    run = {
+        "compact": lambda: ing.compact(spark, db),
+        "delete_range": lambda: ing.delete_range(spark, db, "A", rows[12][1], rows[60][1]),
+        "refresh": store.refresh,
+    }[rewrite]
+    real, calls = DataFrameWriter.parquet, []
+
+    def failing(self, *a, **kw):
+        real(self, *a, **kw)
+        calls.append(a)
+        if len(calls) > writes_before_failure:
+            raise RuntimeError("write failed")
+
+    def staged():
+        return [n for n in _os.listdir(db) if n.startswith(ing.STAGE_PREFIX)]
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", failing)
+        with pytest.raises(RuntimeError, match="write failed"):
+            run()
+    assert len(staged()) == 1
+    assert seen() == before
+    run()
+    assert staged() == []
+    assert not _os.path.exists(ing._journal_path(db))
+
+
 def test_each_read_runs_its_fewest_jobs(tmp_path, spark):
     """The post-aggregate work of a read runs in one partition: a
     collected bucket query (raw or routed) runs the aggregate's shuffle

@@ -21,8 +21,9 @@ rollup refreshes, ``Catalog.drop_index``) stages its new directories,
 then hands one swap list to ``_commit``, the only code that makes a
 rewrite visible. It journals the list with the final metadata before
 the first rename, so ``recover()`` finishes it after a crash at any
-point by applying the journal again. Writers take one lock per
-database (``writer``); readers take none.
+point by applying the journal again. A rewrite that fails before its
+commit leaves only its staging dir, which the next writer removes.
+Writers take one lock per database (``writer``); readers take none.
 
 Compression: writes honor the session's
 ``spark.sql.parquet.compression.codec``. Measured on the 10M-point bench
@@ -55,6 +56,7 @@ TICKS_DIR = "ticks"
 META_FILE = "_meta.json"
 JOURNAL_FILE = "_commit_journal.json"
 LOCK_FILE = "_writer.lock"
+STAGE_PREFIX = "_stage-"
 
 
 def _meta_path(db_path: str) -> str:
@@ -69,7 +71,7 @@ def _write_journal(db_path: str, entry: dict) -> None:
     """Atomically persist a commit's swap list and final metadata. The
     journal is the commit point: present → the rewrite WILL complete
     (``_roll_forward`` finishes it); absent → it never started (a crash
-    during staging leaves only an orphan staging dir)."""
+    during staging leaves only a staging dir, which ``writer`` removes)."""
     tmp = _journal_path(db_path) + ".tmp"
     with open(tmp, "w") as f:
         json.dump(entry, f)
@@ -83,7 +85,8 @@ def _commit(db_path: str, swaps: list[tuple[str, str | None]], meta: dict) -> No
     ``meta`` are journaled first, then applied. Each live dir is first
     renamed aside to a ``.``-prefixed name, which neither Spark nor
     ``partition_dirs`` lists, so a reader sees the old dir or the new
-    one, never a half-removed one."""
+    one, never a half-removed one. Only the named dirs change: a rewrite
+    that empties a series dir names it too."""
     old = f".old-{uuid.uuid4().hex[:8]}-"
     entry = [
         [live, staged, os.path.join(os.path.dirname(live), old + os.path.basename(live))]
@@ -93,15 +96,13 @@ def _commit(db_path: str, swaps: list[tuple[str, str | None]], meta: dict) -> No
     _roll_forward(db_path)
 
 
-def _roll_forward(db_path: str) -> bool:
+def _roll_forward(db_path: str) -> None:
     """Apply the journaled commit, if any; every step checks the state it
     moves from, so a rerun from any crash point converges on the same
-    tree. A staged dir still in place proves its swap has not happened.
-    Then drops the series dirs the swaps left without partitions,
-    installs the metadata and removes the journal."""
+    tree. A staged dir still in place proves its swap has not happened."""
     jp = _journal_path(db_path)
     if not os.path.exists(jp):
-        return False
+        return
     with open(jp) as f:
         entry = json.load(f)
     for live, staged, aside in entry["swaps"]:
@@ -111,13 +112,13 @@ def _roll_forward(db_path: str) -> bool:
             os.rename(staged, live)
         if os.path.isdir(aside):
             shutil.rmtree(aside)
-    for live, _staged, _aside in entry["swaps"]:
-        parent = os.path.dirname(live)
-        if "=" in os.path.basename(parent) and os.path.isdir(parent) and not partition_dirs(parent):
-            shutil.rmtree(parent)
     _write_meta(db_path, entry["meta"])
     os.remove(jp)
-    return True
+
+
+def _stage_dir(db_path: str) -> str:
+    """A fresh dir for a rewrite to stage its new directories in."""
+    return os.path.join(db_path, f"{STAGE_PREFIX}{uuid.uuid4().hex[:8]}")
 
 
 @contextlib.contextmanager
@@ -126,14 +127,19 @@ def writer(db_path: str):
     ``fcntl.flock`` on ``<db>/_writer.lock``, taken by every append,
     rewrite and rollup refresh, never by a reader. A lock file needs no
     module-level lock table (``cachereg`` owns shared state) and also
-    serializes writers in different processes. It rolls an interrupted
-    commit forward on entry. flock is held per open file, so it is not
-    re-entrant: a holder must not enter ``writer`` again, and reaches
-    ``recover()`` only while no journal exists."""
+    serializes writers in different processes. On entry it rolls an
+    interrupted commit forward, then removes, in one commit, the staging
+    dirs of rewrites that failed before theirs: no other writer is
+    staging. flock is held per open file, so it is not re-entrant: a
+    holder must not enter ``writer`` again, and reaches ``recover()``
+    only while no journal exists."""
     os.makedirs(db_path, exist_ok=True)
     with open(os.path.join(db_path, LOCK_FILE), "a") as f:
         fcntl.flock(f, fcntl.LOCK_EX)
         _roll_forward(db_path)
+        orphans = [e.path for e in os.scandir(db_path) if e.name.startswith(STAGE_PREFIX)]
+        if orphans:
+            _commit(db_path, [(d, None) for d in orphans], _read_meta(db_path))
         yield
 
 
@@ -356,7 +362,7 @@ def compact(spark: SparkSession, db_path: str) -> None:
         deduped = read_ticks(spark, db_path, dedup=True).withColumn(
             "ingest_seq", F.lit(0).cast("long")
         )
-        tmp = path + f".compact-{uuid.uuid4().hex[:8]}"
+        tmp = _stage_dir(db_path)
         (
             deduped.withColumn("dt", F.to_date("ts_utc"))
             .repartition("series", "dt")
@@ -393,10 +399,9 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
         series_dir = partition_dirs(base).get(series)
         if series_dir is None:
             return
+        days = partition_dirs(series_dir)
         affected = {
-            day: ddir
-            for day, ddir in partition_dirs(series_dir).items()
-            if d_from <= dt.date.fromisoformat(day) <= d_to
+            day: ddir for day, ddir in days.items() if d_from <= dt.date.fromisoformat(day) <= d_to
         }
         if not affected:
             return
@@ -405,7 +410,7 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
             .parquet(*affected.values())
             .where(~((F.col("ts") >= frm_ns) & (F.col("ts") < to_ns)))
         )
-        tmp = os.path.join(db_path, f"_delete-{uuid.uuid4().hex[:8]}")
+        tmp = _stage_dir(db_path)
         keep.select("ts", "ts_utc", "value", "ingest_seq", "dt").write.mode(
             "overwrite"
         ).partitionBy("dt").parquet(tmp)
@@ -418,6 +423,8 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
         # affected partition with no staged replacement just goes away
         staged = partition_dirs(tmp)
         swaps = [(ddir, staged.get(day)) for day, ddir in sorted(affected.items())]
+        if not staged and len(affected) == len(days):
+            swaps.append((series_dir, None))  # no partition of the series is left
         _commit(db_path, [*swaps, (tmp, None)], meta)
 
 
@@ -451,19 +458,21 @@ def expire_before(spark: SparkSession, db_path: str, cutoff) -> list[tuple[str, 
     base = os.path.join(db_path, TICKS_DIR)
     with writer(db_path):
         dropped: list[tuple[str, str]] = []
-        dirs: list[str] = []
+        swaps: list[tuple[str, str | None]] = []
         for series, sdir in partition_dirs(base).items():
-            for day, ddir in partition_dirs(sdir).items():
-                if dt.date.fromisoformat(day) < cutoff_day:
-                    dropped.append((series, day))
-                    dirs.append(ddir)
-        if not dirs:
+            days = partition_dirs(sdir)
+            old = {d: ddir for d, ddir in days.items() if dt.date.fromisoformat(d) < cutoff_day}
+            dropped += [(series, day) for day in old]
+            swaps += [(ddir, None) for ddir in old.values()]
+            if old and len(old) == len(days):
+                swaps.append((sdir, None))  # no partition of the series is left
+        if not swaps:
             return []
         meta = _read_meta(db_path)
         meta["expired_before_ns"] = max(
             int(meta.get("expired_before_ns", 0)), cutoff_ns
         )
-        _commit(db_path, [(d, None) for d in dirs], meta)
+        _commit(db_path, swaps, meta)
     return dropped
 
 

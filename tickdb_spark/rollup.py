@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +38,7 @@ from tickdb_spark.ingest import (
     TICKS_DIR,
     _commit,
     _read_meta,
+    _stage_dir,
     partition_dirs,
     read_table,
     read_ticks,
@@ -130,7 +130,7 @@ def rollup_merge(finer: DataFrame, unit: str) -> DataFrame:
 SPLITS_PER_SERIES = 8
 
 
-def _shape_for_write(spark: SparkSession, df: DataFrame, src_path: str) -> DataFrame:
+def _shape_for_write(spark: SparkSession, df: DataFrame, src_paths: list[str]) -> DataFrame:
     """The pre-write exchange for one cascade level: one explicit
     exchange on (series, salt), salt = pmod(xxhash64(bucket),
     SPLITS_PER_SERIES). It bounds files AND writers per series at
@@ -140,11 +140,12 @@ def _shape_for_write(spark: SparkSession, df: DataFrame, src_path: str) -> DataF
 
     The partition count is SIZE-ADAPTIVE (never a constant tuned to one
     box): ceil(source bytes / maxPartitionBytes), floored at
-    defaultParallelism — the source (raw ticks for the base level, the
-    just-written finer level for merges) upper-bounds the level's state,
-    and extra partitions beyond the distinct (series, salt) pairs stay
-    empty (no files, scheduling-only cost)."""
-    par = max(spark.sparkContext.defaultParallelism, scan_splits(spark, src_path))
+    defaultParallelism — the sources the level reads (raw ticks for the
+    base level, the just-staged finer level for merges, plus the kept
+    rows of an incremental refresh) upper-bound the level's state, and
+    extra partitions beyond the distinct (series, salt) pairs stay empty
+    (no files, scheduling-only cost)."""
+    par = max(spark.sparkContext.defaultParallelism, scan_splits(spark, *src_paths))
     salt = F.pmod(F.xxhash64(F.col("bucket")), F.lit(SPLITS_PER_SERIES))
     return df.repartition(par, F.col("series"), salt)
 
@@ -206,20 +207,24 @@ class RollupStore:
         recomputed and whose other rows are kept. A reader sees each level
         (or series partition) old or new, never half-written."""
         meta = _read_meta(self.db_path)
-        stage = os.path.join(self.db_path, ROLLUPS_DIR, f"_refresh-{uuid.uuid4().hex[:8]}")
+        stage = _stage_dir(self.db_path)
+        os.makedirs(os.path.join(self.db_path, ROLLUPS_DIR), exist_ok=True)
         ticks = read_ticks(self.spark, self.db_path)
+        src = [os.path.join(self.db_path, TICKS_DIR)]
         if dirty is not None:
             series = sorted({s for s, _ in dirty})
             dates = sorted({d for _, d in dirty})
             ticks = ticks.where(F.col("series").isin(series))
-        src = os.path.join(self.db_path, TICKS_DIR)
+            src = [d for s, d in partition_dirs(src[0]).items() if s in series]
         prev: DataFrame | None = None
         swaps: list[tuple[str, str | None]] = []
         for unit in LEVELS:
             if unit not in levels:
                 continue  # a coarser level merges fine from any finer one
+            staged = os.path.join(stage, unit)
             if dirty is None:
                 df = rollup_from_ticks(ticks, unit) if prev is None else rollup_merge(prev, unit)
+                swaps.append((self._path(unit), staged))
             else:
                 # a dirty date invalidates every bucket covering it: the base
                 # level re-reduces all ticks inside those buckets, a coarser
@@ -234,18 +239,17 @@ class RollupStore:
                     F.col("series").isin(series) & ~_covers(F.col("bucket"), unit, dates)
                 )
                 df = kept.unionByName(fresh)
-            staged = os.path.join(stage, unit)
+                live = partition_dirs(self._path(unit))
+                src += [d for s, d in live.items() if s in series]
             _shape_for_write(self.spark, df, src).write.mode("overwrite").partitionBy(
                 "series"
             ).parquet(staged)
             prev = self.spark.read.schema(ROLLUP_SCHEMA).parquet(staged)
-            src = staged
-            if dirty is None:
-                swaps.append((self._path(unit), staged))
-            else:
+            src = [staged]
+            if dirty is not None:
                 # a dirty series left with no rows has no staged partition:
                 # its live one still goes
-                live, new = partition_dirs(self._path(unit)), partition_dirs(staged)
+                new = partition_dirs(staged)
                 for s in series:
                     if s in new:
                         name = os.path.basename(new[s])

@@ -63,13 +63,13 @@ def parquet_bytes(path: str) -> int:
     )
 
 
-def scan_splits(spark: SparkSession, path: str) -> int:
+def scan_splits(spark: SparkSession, *paths: str) -> int:
     """ceil(:func:`parquet_bytes` / ``maxPartitionBytes``): about how many
-    splits a scan of ``path`` is cut into."""
+    splits a scan of ``paths`` is cut into."""
     max_split = size_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    return -(-parquet_bytes(path) // max_split)
+    return -(-sum(map(parquet_bytes, paths)) // max_split)
 
 
 def get_spark(
