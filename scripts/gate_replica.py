@@ -16,6 +16,7 @@ module) by walking code objects' global and attribute names
 transitively through ``tickdb_spark``; it prints them before running.
 """
 
+import importlib
 import inspect
 import os
 import sys
@@ -41,6 +42,14 @@ def _package_object(obj) -> bool:
     ).startswith(("tickdb_spark", "__spark_entry__"))
 
 
+def _package_module(name: str):
+    """The package module a function-local ``import tickdb_spark.x``
+    names, imported if no code has imported it yet."""
+    if name == "tickdb_spark" or name.startswith("tickdb_spark."):
+        return importlib.import_module(name)
+    return None
+
+
 def _named(fn) -> list:
     """The package functions and classes that ``fn``'s code names: its
     globals and attributes of the package modules it names
@@ -52,7 +61,7 @@ def _named(fn) -> list:
     while codes:
         code = codes.pop()
         codes += [c for c in code.co_consts if isinstance(c, types.CodeType)]
-        scope = [fn.__globals__.get(n, sys.modules.get(n)) for n in code.co_names]
+        scope = [fn.__globals__.get(n, _package_module(n)) for n in code.co_names]
         modules = [
             m for m in scope
             if isinstance(m, types.ModuleType) and m.__name__.startswith("tickdb_spark")

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from tickdb_spark.api import TickDB
 from tickdb_spark.streaming.ingest import stream_ingest, windowed_bucket_agg
 
@@ -2361,36 +2363,173 @@ def test_swap_absorbed_epoch_replay_does_not_double_count(tmp_path, spark):
     assert got2 == want
 
 
-def test_dedup_stream_sees_swapped_fingerprint_base(tmp_path, spark):
-    """After compact_all(swap=True) adopts the fingerprint log into
-    base_1/, the dedup stream's anti-join must still see every
-    committed hash — a duplicate of a pre-swap document landing
-    post-swap is dropped, not re-kept."""
+def _land(landing, i, rows, columns):
+    """Write landing file ``b<i>.parquet`` (int columns as int64) with
+    an mtime that keeps the file source's order."""
+    import os as _os
+
     import pandas as pd
 
+    pdf = pd.DataFrame(rows, columns=columns)
+    for c in columns:
+        if pdf[c].dtype.kind == "i":
+            pdf[c] = pdf[c].astype("int64")
+    p = landing / f"b{i}.parquet"
+    pdf.to_parquet(p, index=False)
+    _os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _dedup_face(spark, landing, work):
     from tickdb_spark.streaming.dedup import stream_dedup_ingest
+
+    return sorted(r.doc_id for r in stream_dedup_ingest(spark, landing, work).collect())
+
+
+def _dedup_batch(spark, rows):
+    first = {}
+    for doc_id, text in sorted(rows):
+        first.setdefault(text, doc_id)
+    return sorted(first.values())
+
+
+def _cc_face(spark, landing, work):
+    from tickdb_spark.streaming.index import stream_component_maintenance
+
+    got = stream_component_maintenance(spark, landing, work)
+    return {r.id: r.component for r in got.collect()}
+
+
+def _cc_batch(spark, rows):
+    from tickdb_spark.operators.cluster import connected_components
+
+    nodes = spark.createDataFrame(
+        [(i,) for i in sorted({x for pair in rows for x in pair})], "id long"
+    )
+    edges = spark.createDataFrame(rows, "id_a long, id_b long")
+    cc = connected_components(nodes, edges, id_col="id")
+    return {r.id: r.component for r in cc.collect()}
+
+
+def _scd2_face(spark, landing, work):
+    from tickdb_spark.streaming.index import stream_scd2_maintenance
+
+    return sorted(map(tuple, stream_scd2_maintenance(spark, landing, work).collect()))
+
+
+def _scd2_batch(spark, rows):
+    from tickdb_spark.operators.scd2 import scd2_history
+
+    events = spark.createDataFrame(
+        rows, "user_id long, event_type string, ts_us long, event_id long"
+    )
+    hist = scd2_history(events, "user_id", "event_type", "ts_us", "event_id")
+    return sorted(map(tuple, hist.collect()))
+
+
+_SCD2_COLS = ["user_id", "event_type", "ts_us", "event_id"]
+
+
+@pytest.mark.parametrize(
+    "columns, log, before, after, face, batch",
+    [
+        pytest.param(
+            ["doc_id", "text"], "fingerprints",
+            [[(1, "aa"), (2, "bb")], [(3, "cc")]],
+            [(10, "aa"), (11, "dd")],  # a dup of doc 1, one new doc
+            _dedup_face, _dedup_batch, id="dedup",
+        ),
+        pytest.param(
+            ["id_a", "id_b"], "components",
+            [[(1, 2), (10, 11)], [(2, 3)]],
+            [(3, 10)],  # merges the two chains
+            _cc_face, _cc_batch, id="components",
+        ),
+        pytest.param(
+            _SCD2_COLS, "scd2_events",
+            [[(1, "A", 10, 1)], [(1, "B", 80, 2)]],
+            [(1, "C", 30, 3)],  # late: splits the A run
+            _scd2_face, _scd2_batch, id="scd2",
+        ),
+    ],
+)
+def test_stream_face_sees_its_swapped_base(
+    tmp_path, spark, columns, log, before, after, face, batch
+):
+    """After compact_all(swap=True) adopts a face's own state log into
+    base_1/, the next batch must read the committed rows from the base:
+    the face's answer equals the batch-built one over everything landed
+    (a post-swap dup is dropped, a post-swap merge or late event sees
+    the pre-swap history)."""
     from tickdb_spark.streaming.index import compact_all, compaction_policy
 
     landing = tmp_path / "landing"
     landing.mkdir()
-    pd.DataFrame({"doc_id": [1, 2], "text": ["aa", "bb"]}).to_parquet(
-        landing / "b0.parquet", index=False
-    )
-    pd.DataFrame({"doc_id": [3], "text": ["cc"]}).to_parquet(
-        landing / "b1.parquet", index=False
-    )
     work = str(tmp_path / "state")
-    kept1 = stream_dedup_ingest(spark, str(landing), work)
-    assert sorted(r.doc_id for r in kept1.collect()) == [1, 2, 3]
+    for i, rows in enumerate(before):
+        _land(landing, i, rows, columns)
+    pre = [r for rows in before for r in rows]
+    assert face(spark, str(landing), work) == batch(spark, pre)
 
     reports = compact_all(spark, work, max_epochs=1, swap=True)
-    (fp,) = [r for r in reports if r["table"] == "fingerprints"]
-    assert fp["compacted"]
-    assert compaction_policy(str(tmp_path / "state" / "fingerprints"))["epochs"] == 0
+    (r,) = [r for r in reports if r["table"] == log]
+    assert r["compacted"]
+    assert compaction_policy(str(tmp_path / "state" / log))["epochs"] == 0
 
-    # post-swap batch: one dup of doc 1, one new doc
-    pd.DataFrame({"doc_id": [10, 11], "text": ["aa", "dd"]}).to_parquet(
-        landing / "b2.parquet", index=False
+    _land(landing, len(before), after, columns)
+    assert face(spark, str(landing), work) == batch(spark, pre + after)
+
+
+def _dedup_partial(spark, rows):
+    from pyspark.sql import functions as F
+
+    texts = spark.createDataFrame([(t,) for _, t in rows], "text string")
+    return "fingerprints", texts.select(F.md5("text").alias("content_hash"))
+
+
+def _scd2_partial(spark, rows):
+    from tickdb_spark.streaming.index import _SCD2_LOG_SCHEMA
+
+    return "scd2_events", spark.createDataFrame(
+        [(*r, 0) for r in rows], _SCD2_LOG_SCHEMA
     )
-    kept2 = stream_dedup_ingest(spark, str(landing), work)
-    assert sorted(r.doc_id for r in kept2.collect()) == [1, 2, 3, 11]
+
+
+@pytest.mark.parametrize(
+    "columns, batches, face, batch, partial",
+    [
+        pytest.param(
+            ["doc_id", "text"],
+            [[(1, "aa"), (2, "bb"), (3, "aa")], [(4, "bb"), (5, "cc")]],
+            _dedup_face, _dedup_batch, _dedup_partial, id="dedup",
+        ),
+        pytest.param(
+            _SCD2_COLS,
+            [
+                [(1, "A", 10, 1), (1, "A", 40, 2), (1, "B", 80, 3)],
+                [(1, "C", 30, 4)],
+                [(2, "X", 5, 5), (1, "D", 90, 6)],
+            ],
+            _scd2_face, _scd2_batch, _scd2_partial, id="scd2",
+        ),
+    ],
+)
+def test_stream_face_epoch_rerun_equals_clean_run(
+    tmp_path, spark, columns, batches, face, batch, partial
+):
+    """Crash replay for a face that reads its own state: epoch 0's state
+    write landed but the checkpoint commit did not, so the stream
+    re-runs epoch 0 over its own partial write. The handler reads its
+    committed state with its own epoch excluded, so the answer equals a
+    clean run's."""
+    answers = []
+    for run in ("clean", "rerun"):
+        landing = tmp_path / run / "landing"
+        landing.mkdir(parents=True)
+        for i, rows in enumerate(batches):
+            _land(landing, i, rows, columns)
+        work = tmp_path / run / "state"
+        if run == "rerun":
+            log, rows = partial(spark, batches[0])
+            rows.write.parquet(str(work / log / "epoch_0"))
+        answers.append(face(spark, str(landing), str(work)))
+    assert answers[1] == answers[0] == batch(spark, [r for b in batches for r in b])

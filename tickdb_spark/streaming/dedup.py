@@ -37,6 +37,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tickdb_spark.streaming.index import (
+    _drain_landing,
+    _log_dir,
+    _read_maintained,
+    _write_epoch,
+)
+
 DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -63,9 +70,6 @@ def stream_dedup_ingest(
     """
     from tickdb_spark.operators.dedup import incremental_exact_dedup
 
-    kept_dir = os.path.join(work_dir, "kept")
-    fp_dir = os.path.join(work_dir, "fingerprints")
-    ckpt_dir = os.path.join(work_dir, "checkpoint")
     # Derive the kept-table read schema from the LANDING schema's id
     # field (ADVICE r10): pinning LongType here would silently misread
     # the kept files if the landing id type ever changes — the two
@@ -77,71 +81,26 @@ def stream_dedup_ingest(
             T.StructField("content_hash", T.StringType(), False),
         ]
     )
-    os.makedirs(kept_dir, exist_ok=True)
-    os.makedirs(fp_dir, exist_ok=True)
-
-    def _committed_fps(s: SparkSession, own_epoch: int) -> DataFrame:
-        """Every fingerprint epoch EXCEPT the handler's own: on a crash
-        re-run the epoch's partial write must not feed its own
-        anti-join (it would filter the keepers out and overwrite the
-        kept epoch with nothing). Swap-aware (r16): a compacted-and-
-        adopted ``base_<n>/`` holds committed epochs' hashes and MUST
-        join the read, while absorbed replay-debris epoch dirs must
-        not (their rows are in the base — the index-face ledger rule)."""
-        from tickdb_spark.streaming.index import _absorbed_set
-
-        absorbed = _absorbed_set(fp_dir)
-        dirs = [
-            os.path.join(fp_dir, d)
-            for d in sorted(os.listdir(fp_dir))
-            if os.path.isdir(os.path.join(fp_dir, d))
-            and (
-                d.startswith("base_")
-                or (
-                    d.startswith("epoch_")
-                    and d != f"epoch_{own_epoch}"
-                    and d not in absorbed
-                )
-            )
-        ]
-        if not dirs:
-            return s.createDataFrame([], _FP_SCHEMA)
-        return s.read.schema(_FP_SCHEMA).parquet(*dirs)
+    kept_dir = _log_dir(spark, work_dir, "kept", kept_schema)
+    fp_dir = _log_dir(spark, work_dir, "fingerprints", _FP_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
-        seen = _committed_fps(s, epoch_id)
+        seen = _read_maintained(
+            batch.sparkSession, fp_dir, _FP_SCHEMA, exclude_epoch=epoch_id
+        )
         res = incremental_exact_dedup(batch, seen, text_col, id_col)
         keepers = res.where(F.col("is_new")).select(id_col, "content_hash")
         # persist before the writes: both must see the same batch
         # result, and hashes feed the NEXT batch's anti-join only (within
         # this batch, exact_dedup_groups already collapsed duplicates)
         keepers.persist()
-        keepers.write.mode("overwrite").parquet(
-            os.path.join(kept_dir, f"epoch_{epoch_id}")
-        )
-        keepers.select("content_hash").write.mode("overwrite").parquet(
-            os.path.join(fp_dir, f"epoch_{epoch_id}")
-        )
+        _write_epoch(keepers, kept_dir, epoch_id)
+        _write_epoch(keepers.select("content_hash"), fp_dir, epoch_id)
         keepers.unpersist()
 
-    stream = (
-        spark.readStream.schema(batch_schema(id_col, text_col))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.schema(kept_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(kept_dir)
-    )
+    ckpt_dir = os.path.join(work_dir, "checkpoint")
+    _drain_landing(spark, landing_dir, landing_schema, ckpt_dir, handle)
+    return _read_maintained(spark, kept_dir, kept_schema)
 
 
 def batch_schema(id_col: str = "doc_id", text_col: str = "text") -> T.StructType:

@@ -19,6 +19,26 @@ per table over the full corpus).
 Scale: each micro-batch costs O(new vectors × tables) — the corpus never
 re-encodes. State lives in the index table (small ints per vector), not
 in Spark streaming state, so the index horizon is unbounded.
+
+The epoch log — the layout every face here and in ``streaming/dedup.py``
+keeps its state in. A log is one directory of parquet files:
+
+* a seed file at the top: an empty file of the face's schema, so a first
+  probe sees a schema (:func:`_log_dir`);
+* ``epoch_<id>/``, one per micro-batch, overwritten whole when a crash
+  re-runs the epoch (:func:`_write_epoch`); an MV rebuild writes
+  ``epoch_rebuild_<cutoff>/``;
+* ``base_<n>/``: a compacted rewrite adopted in place by
+  :func:`swap_compacted`, holding the rows of the epochs it retired;
+* ``_absorbed_epochs.json``: the names of those retired epoch dirs. A
+  checkpoint replay that re-creates one is debris whose rows already
+  live in a base: readers skip it and the next compaction retires it.
+
+:func:`_list_log` walks a log once and sorts its files into these roles;
+:func:`_read_maintained`, built on it, is the one reader. A handler that
+reads its own face's state passes its epoch id as ``exclude_epoch``, so
+a crash re-run never reads its own partial write. :func:`_drain_landing`
+runs a face's handler over its landing dir, one file per micro-batch.
 """
 
 from __future__ import annotations
@@ -27,12 +47,11 @@ import json
 import math
 import os
 import shutil
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from tickdb_spark.session import parquet_bytes
 
 _SIG_SCHEMA = T.StructType(
     [
@@ -58,45 +77,112 @@ def _absorbed_set(table_dir: str) -> set[str]:
         return set(json.load(fh))
 
 
-def _maintained_files(table_dir: str) -> list[str]:
-    """Relative paths of the table's LIVE parquet files: everything
-    except files under absorbed epoch dirs (their rows are already in a
-    base — presence means checkpoint-replay debris, retired by the next
-    compact/swap cycle)."""
+def _log_dir(
+    spark: SparkSession, work_dir: str, name: str, schema: T.StructType
+) -> str:
+    """``work_dir/name``, seeded with one empty file of ``schema`` so a
+    first probe sees a schema, not a missing path (a no-op once the dir
+    exists)."""
+    path = os.path.join(work_dir, name)
+    spark.createDataFrame([], schema).write.mode("ignore").parquet(path)
+    return path
+
+
+def _write_epoch(df: DataFrame, table_dir: str, epoch) -> None:
+    """Overwrite ``epoch_<epoch>/``: a crash re-run of the epoch
+    rewrites the same dir instead of appending duplicates."""
+    df.write.mode("overwrite").parquet(os.path.join(table_dir, f"epoch_{epoch}"))
+
+
+def _drain_landing(
+    spark: SparkSession, landing_dir: str, schema: T.StructType, ckpt_dir: str, handle
+) -> None:
+    """Run ``handle(batch, epoch_id)`` over every landing file not yet
+    in ``ckpt_dir`` (availableNow), one file per micro-batch, and wait
+    for it to finish."""
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing_dir)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", ckpt_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+class _EpochLog(NamedTuple):
+    """One walk of a log dir: its parquet files, relative to the dir,
+    sorted by role."""
+
+    seed: list[str]
+    bases: list[str]
+    #: top-level dir name -> its files, for every dir that is neither a
+    #: base nor absorbed
+    epochs: dict[str, list[str]]
+    absorbed: list[str]
+
+    def files(self, exclude_epoch=None) -> list[str]:
+        """The files a reader sees: seed, bases and every live epoch but
+        ``epoch_<exclude_epoch>/``."""
+        own = None if exclude_epoch is None else f"epoch_{exclude_epoch}"
+        return sorted(
+            self.seed
+            + self.bases
+            + [f for d, fs in self.epochs.items() if d != own for f in fs]
+        )
+
+
+def _list_log(table_dir: str) -> _EpochLog:
+    """Walk ``table_dir`` once. Hidden and ``_``-prefixed names are
+    skipped, as Spark's own listing skips them (a crashed write's
+    ``_temporary/`` is not data)."""
     absorbed = _absorbed_set(table_dir)
-    out = []
-    for r, _, fs in os.walk(table_dir):
-        rel_root = os.path.relpath(r, table_dir)
-        top = rel_root.split(os.sep)[0]
-        if top in absorbed:
-            continue
-        for f in fs:
-            if f.endswith(".parquet"):
-                out.append(os.path.normpath(os.path.join(rel_root, f)))
-    return sorted(out)
+    log = _EpochLog([], [], {}, [])
+    for root, dirs, names in os.walk(table_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        rel = os.path.relpath(root, table_dir)
+        top = rel.split(os.sep)[0]
+        files = [
+            os.path.normpath(os.path.join(rel, n))
+            for n in sorted(names)
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        ]
+        if top == ".":
+            log.seed.extend(files)
+        elif top.startswith("base_"):
+            log.bases.extend(files)
+        elif top in absorbed:
+            log.absorbed.extend(files)
+        else:
+            log.epochs.setdefault(top, []).extend(files)
+    return log
 
 
 def _read_maintained(
-    spark: SparkSession, table_dir: str, schema: T.StructType
+    spark: SparkSession,
+    table_dir: str,
+    schema: T.StructType,
+    exclude_epoch=None,
 ) -> DataFrame:
-    """Read a maintained index table whose epochs live in per-epoch
-    subdirectories (the idempotent-write layout): recursiveFileLookup
-    flattens the seed file + every ``epoch_<id>/`` part file into one
-    scan, bypassing partition discovery (epoch is a write-idempotence
-    artifact, not a data column). Once a swap has ever absorbed epochs
-    into an in-place base, the read switches to an explicit driver-side
-    file listing that EXCLUDES absorbed epoch dirs — the epoch-overwrite
-    idempotence the faces rely on must keep holding when a replayed
-    epoch re-creates a dir whose rows already live in the base."""
-    if _absorbed_set(table_dir):
-        files = [os.path.join(table_dir, p) for p in _maintained_files(table_dir)]
-        if not files:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*files)
-    return (
-        spark.read.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(table_dir)
+    """Read a maintained log with an explicit schema (epoch is a
+    write-idempotence artifact, not a data column, so no partition
+    discovery). ``exclude_epoch`` leaves out ``epoch_<exclude_epoch>/``:
+    a handler reading its own face's state passes its epoch id, so a
+    crash re-run never reads its own partial write."""
+    return _read_files(
+        spark, table_dir, _list_log(table_dir).files(exclude_epoch), schema
+    )
+
+
+def _read_files(
+    spark: SparkSession, table_dir: str, files: list[str], schema: T.StructType
+) -> DataFrame:
+    if not files:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(table_dir, f) for f in files]
     )
 
 
@@ -146,23 +232,11 @@ def compact_index(
     # compacted output and a later swap's retire set must be the same
     # file set, or an epoch landing between two listings gets written
     # into the output AND left in the log (duplicated after the swap).
-    # Absorbed-epoch replay debris is excluded the same way the read
-    # path excludes it (and retiring it is what cleans it up — its rows
-    # already live in the base, so it is listed for retire only).
-    sources = _maintained_files(table_dir)
-    debris = sorted(
-        os.path.relpath(os.path.join(r, f), table_dir)
-        for r, _, fs in os.walk(table_dir)
-        for f in fs
-        if f.endswith(".parquet")
-        and os.path.relpath(r, table_dir).split(os.sep)[0] in _absorbed_set(table_dir)
-    )
-    if sources:
-        df = spark.read.schema(schema).parquet(
-            *[os.path.join(table_dir, p) for p in sources]
-        )
-    else:
-        df = spark.createDataFrame([], schema)
+    # Absorbed-epoch replay debris is not read (its rows already live in
+    # the base) but is listed for retire, which is what cleans it up.
+    log = _list_log(table_dir)
+    sources = log.files()
+    df = _read_files(spark, table_dir, sources, schema)
     if tombstones is not None:
         df = tombstone_filter(df, tombstones, id_col)
     (
@@ -173,7 +247,7 @@ def compact_index(
     )
     with open(os.path.join(dest, "_compact_manifest.json"), "w") as fh:
         json.dump({"table_dir": os.path.abspath(table_dir),
-                   "sources": sources + debris}, fh)
+                   "sources": sources + log.absorbed}, fh)
     return dest
 
 
@@ -302,6 +376,10 @@ def _swap_roll_forward(journal: dict, jpath: str) -> None:
     os.remove(jpath)
 
 
+def _bytes(table_dir: str, files: list[str]) -> int:
+    return sum(os.path.getsize(os.path.join(table_dir, f)) for f in files)
+
+
 def compaction_policy(
     table_dir: str,
     base_dir: str | None = None,
@@ -327,40 +405,20 @@ def compaction_policy(
 
     Returns ``{"due", "reasons", "epochs", "files", "log_bytes",
     "avg_file_bytes", "base_bytes"}`` so callers can log WHY."""
-    absorbed = _absorbed_set(table_dir)
-    epochs = 0
-    files = 0
-    log_bytes = 0
-    inplace_base = 0
-    has_inplace = False
-    for root, dirs, names in os.walk(table_dir):
-        rel = os.path.relpath(root, table_dir)
-        top = rel.split(os.sep)[0]
-        if root == table_dir:
-            epochs = sum(
-                1 for d in dirs if d.startswith("epoch_") and d not in absorbed
-            )
-        # a swap-adopted base_<n>/ is BASE, not log: its bytes feed the
-        # LSM ratio trigger and must not dilute the small-files average;
-        # absorbed replay debris belongs to neither
-        if top.startswith("base_"):
-            has_inplace = True
-            for n in names:
-                if n.endswith(".parquet"):
-                    inplace_base += os.path.getsize(os.path.join(root, n))
-            continue
-        if top in absorbed:
-            continue
-        for n in names:
-            if n.endswith(".parquet"):
-                files += 1
-                log_bytes += os.path.getsize(os.path.join(root, n))
+    log = _list_log(table_dir)
+    # a swap-adopted base_<n>/ is BASE, not log: its bytes feed the LSM
+    # ratio trigger and must not dilute the small-files average; absorbed
+    # replay debris belongs to neither
+    tail = log.seed + [f for fs in log.epochs.values() for f in fs]
+    epochs = len(log.epochs)
+    files = len(tail)
+    log_bytes = _bytes(table_dir, tail)
     base_bytes = None
     base = base_dir if base_dir is not None else table_dir.rstrip("/") + "_compacted"
     if os.path.isdir(base):
-        base_bytes = parquet_bytes(base)
-    if has_inplace:
-        base_bytes = (base_bytes or 0) + inplace_base
+        base_bytes = _bytes(base, _list_log(base).files())
+    if log.bases:
+        base_bytes = (base_bytes or 0) + _bytes(table_dir, log.bases)
     avg = log_bytes // files if files else 0
     reasons = []
     if epochs > max_epochs:
@@ -456,20 +514,15 @@ def compact_all(
         if name in exclude:
             continue
         swap_recover(d)  # roll forward any interrupted prior swap
-        has_parquet = any(
-            f.endswith(".parquet")
-            for _, _, fs in os.walk(d)
-            for f in fs
-        )
-        if not has_parquet:
+        files = _list_log(d).files()
+        if not files:
             continue
         pol = compaction_policy(d, **policy_kwargs)
         row = {"table": name, "compacted": False, "dest": None, **pol}
         if force or pol["due"]:
             merged_schema = (
-                spark.read.option("recursiveFileLookup", "true")
-                .option("mergeSchema", "true")
-                .parquet(d)
+                spark.read.option("mergeSchema", "true")
+                .parquet(*[os.path.join(d, f) for f in files])
                 .schema
             )
             sort_cols = COMPACT_SORT_COLS.get(
@@ -515,30 +568,18 @@ def stream_ann_index_maintenance(
     """
     from tickdb_spark.operators.similarity import lsh_signature_encode
 
-    sig_dir = os.path.join(work_dir, "signatures")
-    ckpt_dir = os.path.join(work_dir, "checkpoint")
-    # seed the table so first probes see a schema, not a missing path
-    spark.createDataFrame([], _SIG_SCHEMA).write.mode("ignore").parquet(sig_dir)
+    sig_dir = _log_dir(spark, work_dir, "signatures", _SIG_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        lsh_signature_encode(batch, id_col=id_col, vec_col=vec_col).select(
+        sigs = lsh_signature_encode(batch, id_col=id_col, vec_col=vec_col).select(
             F.col(id_col).cast("long").alias("vec_id"),
             F.col("table_id").cast("int"),
             F.col("bucket").cast("int"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(sig_dir, f"epoch_{epoch_id}")
         )
+        _write_epoch(sigs, sig_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema or emb_schema())
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint")
+    _drain_landing(spark, landing_dir, schema or emb_schema(), ckpt_dir, handle)
     return _read_maintained(spark, sig_dir, _SIG_SCHEMA)
 
 
@@ -572,29 +613,18 @@ def stream_pq_index_maintenance(
     instead of appending duplicates."""
     from tickdb_spark.operators.pq import pq_encode
 
-    code_dir = os.path.join(work_dir, "pq_codes")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_pq")
-    spark.createDataFrame([], _CODE_SCHEMA).write.mode("ignore").parquet(code_dir)
+    code_dir = _log_dir(spark, work_dir, "pq_codes", _CODE_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        pq_encode(batch, codebooks, id_col=id_col, vec_col=vec_col).select(
+        codes = pq_encode(batch, codebooks, id_col=id_col, vec_col=vec_col).select(
             F.col(id_col).cast("long").alias("vec_id"),
             F.col("m").cast("long"),
             F.col("code").cast("long"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(code_dir, f"epoch_{epoch_id}")
         )
+        _write_epoch(codes, code_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema or emb_schema())
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_pq")
+    _drain_landing(spark, landing_dir, schema or emb_schema(), ckpt_dir, handle)
     return _read_maintained(spark, code_dir, _CODE_SCHEMA)
 
 
@@ -626,28 +656,17 @@ def stream_ivf_cell_maintenance(
     (overwrite into ``epoch_<id>/``)."""
     from tickdb_spark.operators.kmeans import assign_cells
 
-    cell_dir = os.path.join(work_dir, "ivf_cells")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_ivf")
-    spark.createDataFrame([], _CELL_SCHEMA).write.mode("ignore").parquet(cell_dir)
+    cell_dir = _log_dir(spark, work_dir, "ivf_cells", _CELL_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        assign_cells(batch, centroids, id_col=id_col, vec_col=vec_col).select(
+        cells = assign_cells(batch, centroids, id_col=id_col, vec_col=vec_col).select(
             F.col(id_col).cast("long").alias("vec_id"),
             F.col("cell").cast("long"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(cell_dir, f"epoch_{epoch_id}")
         )
+        _write_epoch(cells, cell_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema or emb_schema())
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_ivf")
+    _drain_landing(spark, landing_dir, schema or emb_schema(), ckpt_dir, handle)
     return _read_maintained(spark, cell_dir, _CELL_SCHEMA)
 
 
@@ -676,25 +695,13 @@ def stream_phash_index_maintenance(
     pixels again. Idempotent per epoch like the other faces."""
     from tickdb_spark.operators.multimodal import image_dhash
 
-    fp_dir = os.path.join(work_dir, "phash_fingerprints")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_phash")
-    spark.createDataFrame([], _DHASH_SCHEMA).write.mode("ignore").parquet(fp_dir)
+    fp_dir = _log_dir(spark, work_dir, "phash_fingerprints", _DHASH_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        image_dhash(batch).write.mode("overwrite").parquet(
-            os.path.join(fp_dir, f"epoch_{epoch_id}")
-        )
+        _write_epoch(image_dhash(batch), fp_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_phash")
+    _drain_landing(spark, landing_dir, schema, ckpt_dir, handle)
     return _read_maintained(spark, fp_dir, _DHASH_SCHEMA)
 
 
@@ -723,27 +730,14 @@ def stream_decontam_gram_maintenance(
     Returns the maintained DISTINCT gram set."""
     from tickdb_spark.operators.decontam import _gram_hashes
 
-    gram_dir = os.path.join(work_dir, "eval_grams")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_grams")
-    spark.createDataFrame([], _GRAM_SCHEMA).write.mode("ignore").parquet(gram_dir)
+    gram_dir = _log_dir(spark, work_dir, "eval_grams", _GRAM_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        _gram_hashes(batch, text_col, id_col, n).select(
-            "gram"
-        ).distinct().write.mode("overwrite").parquet(
-            os.path.join(gram_dir, f"epoch_{epoch_id}")
-        )
+        grams = _gram_hashes(batch, text_col, id_col, n).select("gram")
+        _write_epoch(grams.distinct(), gram_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_grams")
+    _drain_landing(spark, landing_dir, schema, ckpt_dir, handle)
     return _read_maintained(spark, gram_dir, _GRAM_SCHEMA).distinct()
 
 
@@ -796,42 +790,24 @@ def stream_bm25_index_maintenance(
     never rescanned at query time."""
     from tickdb_spark.operators.bm25 import postings as _postings
 
-    post_dir = os.path.join(work_dir, "postings")
-    stats_dir = os.path.join(work_dir, "bm25_stats")
-    doc_dir = os.path.join(work_dir, "bm25_doc_ids")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_bm25")
-    spark.createDataFrame([], _POSTING_SCHEMA).write.mode("ignore").parquet(post_dir)
-    spark.createDataFrame([], _BM25_STATS_SCHEMA).write.mode("ignore").parquet(
-        stats_dir
-    )
-    spark.createDataFrame([], _DOCID_SCHEMA).write.mode("ignore").parquet(doc_dir)
+    post_dir = _log_dir(spark, work_dir, "postings", _POSTING_SCHEMA)
+    stats_dir = _log_dir(spark, work_dir, "bm25_stats", _BM25_STATS_SCHEMA)
+    doc_dir = _log_dir(spark, work_dir, "bm25_doc_ids", _DOCID_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        _postings(batch, text_col, id_col).write.mode("overwrite").parquet(
-            os.path.join(post_dir, f"epoch_{epoch_id}")
-        )
+        _write_epoch(_postings(batch, text_col, id_col), post_dir, epoch_id)
         toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-        batch.select(
+        stats = batch.select(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.coalesce(F.sum(F.size(toks)), F.lit(0)).cast("long").alias("total_dl"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(stats_dir, f"epoch_{epoch_id}")
         )
+        _write_epoch(stats, stats_dir, epoch_id)
         # disjointness evidence: one 8-byte row per doc (NOT per posting)
-        batch.select(F.col(id_col).cast("long").alias("doc_id")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(doc_dir, f"epoch_{epoch_id}"))
+        doc_ids = batch.select(F.col(id_col).cast("long").alias("doc_id"))
+        _write_epoch(doc_ids, doc_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_bm25")
+    _drain_landing(spark, landing_dir, schema, ckpt_dir, handle)
     # Invariant check (cheap: one agg over the doc-id log, an 8-byte
     # column with one row per document — never the postings table): a
     # doc_id delivered in two epochs means the SUM merge law
@@ -885,8 +861,6 @@ def stream_hll_maintenance(
     table ``(group_cols..., bucket, register)``."""
     from tickdb_spark.operators.sketch import hll_registers
 
-    reg_dir = os.path.join(work_dir, "hll_registers")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_hll")
     seed = T.StructType(
         [schema[c] for c in group_cols]
         + [
@@ -894,26 +868,17 @@ def stream_hll_maintenance(
             T.StructField("register", T.LongType(), False),
         ]
     )
-    spark.createDataFrame([], seed).write.mode("ignore").parquet(reg_dir)
+    reg_dir = _log_dir(spark, work_dir, "hll_registers", seed)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         # max-merge absorbs duplicate registers, so HLL needs no write
         # idempotence for correctness — per-epoch overwrite anyway keeps
         # the log restart-clean (no dead rows) and the layout uniform.
-        hll_registers(batch, group_cols, value_col, p).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(reg_dir, f"epoch_{epoch_id}"))
+        regs = hll_registers(batch, group_cols, value_col, p)
+        _write_epoch(regs, reg_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_hll")
+    _drain_landing(spark, landing_dir, schema, ckpt_dir, handle)
     log = _read_maintained(spark, reg_dir, seed)
     return log.groupBy(*group_cols, "bucket").agg(
         F.max("register").cast("long").alias("register")
@@ -960,9 +925,7 @@ def stream_docstats_maintenance(
     exactly the restart pattern of every other face.
 
     Returns the maintained log read with the evolved (v2) schema."""
-    stats_dir = os.path.join(work_dir, "doc_stats")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_docstats")
-    spark.createDataFrame([], _DOCSTATS_V2).write.mode("ignore").parquet(stats_dir)
+    stats_dir = _log_dir(spark, work_dir, "doc_stats", _DOCSTATS_V2)
     has_lang = "lang" in schema.fieldNames()
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
@@ -974,20 +937,10 @@ def stream_docstats_maintenance(
         ]
         if has_lang:
             cols.append(F.col("lang"))
-        batch.select(*cols).write.mode("overwrite").parquet(
-            os.path.join(stats_dir, f"epoch_{epoch_id}")
-        )
+        _write_epoch(batch.select(*cols), stats_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_docstats")
+    _drain_landing(spark, landing_dir, schema, ckpt_dir, handle)
     return _read_maintained(spark, stats_dir, _DOCSTATS_V2)
 
 
@@ -1025,25 +978,13 @@ def stream_quantile_sketch_maintenance(
     ``operators/sketch.bottomk_quantiles`` for estimates."""
     from tickdb_spark.operators.sketch import bottomk_sample
 
-    smp_dir = os.path.join(work_dir, "bk_samples")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_bk")
-    spark.createDataFrame([], _BKSAMPLE_SCHEMA).write.mode("ignore").parquet(smp_dir)
+    smp_dir = _log_dir(spark, work_dir, "bk_samples", _BKSAMPLE_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        bottomk_sample(batch, key_col, value_col, k).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(smp_dir, f"epoch_{epoch_id}"))
+        _write_epoch(bottomk_sample(batch, key_col, value_col, k), smp_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_bk")
+    _drain_landing(spark, landing_dir, schema, ckpt_dir, handle)
     return (
         _read_maintained(spark, smp_dir, _BKSAMPLE_SCHEMA)
         .orderBy("_h", "_key")
@@ -1121,24 +1062,14 @@ def stream_component_maintenance(
     the maintained label table (latest per id)."""
     from tickdb_spark.operators.cluster import connected_components
 
-    lbl_dir = os.path.join(work_dir, "components")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_cc")
-    spark.createDataFrame([], _LABEL_SCHEMA).write.mode("ignore").parquet(lbl_dir)
-
-    def _committed(s: SparkSession, own_epoch: int) -> DataFrame:
-        dirs = [
-            os.path.join(lbl_dir, d)
-            for d in sorted(os.listdir(lbl_dir))
-            if d.startswith("epoch_") and d != f"epoch_{own_epoch}"
-        ]
-        if not dirs:
-            return s.createDataFrame([], _LABEL_SCHEMA)
-        return s.read.schema(_LABEL_SCHEMA).parquet(*dirs)
+    lbl_dir = _log_dir(spark, work_dir, "components", _LABEL_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
+        committed = _read_maintained(
+            batch.sparkSession, lbl_dir, _LABEL_SCHEMA, exclude_epoch=epoch_id
+        )
         pairs = batch.select("id_a", "id_b").distinct().localCheckpoint()
-        current = _current_labels(_committed(s, epoch_id)).localCheckpoint()
+        current = _current_labels(committed).localCheckpoint()
         endpoints = (
             pairs.select(F.col("id_a").alias("id"))
             .unionAll(pairs.select(F.col("id_b").alias("id")))
@@ -1161,22 +1092,13 @@ def stream_component_maintenance(
         cc = connected_components(
             universe, pairs.unionAll(label_edges), id_col="id"
         )
-        cc.select(
+        labels = cc.select(
             "id", "component", F.lit(int(epoch_id)).cast("long").alias("epoch")
-        ).write.mode("overwrite").parquet(
-            os.path.join(lbl_dir, f"epoch_{epoch_id}")
         )
+        _write_epoch(labels, lbl_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(PAIR_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_cc")
+    _drain_landing(spark, landing_dir, PAIR_SCHEMA, ckpt_dir, handle)
     return _current_labels(_read_maintained(spark, lbl_dir, _LABEL_SCHEMA))
 
 
@@ -1264,52 +1186,29 @@ def stream_scd2_maintenance(
     LWW resolution unchanged). Returns the maintained current view."""
     from tickdb_spark.operators.scd2 import scd2_history
 
-    ev_dir = os.path.join(work_dir, "scd2_events")
-    hist_dir = os.path.join(work_dir, "scd2_history")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_scd2")
-    spark.createDataFrame([], _SCD2_LOG_SCHEMA).write.mode("ignore").parquet(ev_dir)
-    spark.createDataFrame([], SCD2_HIST_SCHEMA).write.mode("ignore").parquet(hist_dir)
-
-    def _committed_events(s: SparkSession, own_epoch: int) -> DataFrame:
-        dirs = [
-            os.path.join(ev_dir, d)
-            for d in sorted(os.listdir(ev_dir))
-            if d.startswith("epoch_") and d != f"epoch_{own_epoch}"
-        ]
-        if not dirs:
-            return s.createDataFrame([], _SCD2_LOG_SCHEMA)
-        return s.read.schema(_SCD2_LOG_SCHEMA).parquet(*dirs)
+    ev_dir = _log_dir(spark, work_dir, "scd2_events", _SCD2_LOG_SCHEMA)
+    hist_dir = _log_dir(spark, work_dir, "scd2_history", SCD2_HIST_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
         cols = ["user_id", "event_type", "ts_us", "event_id"]
         new = batch.select(*cols).localCheckpoint()
         touched = new.select("user_id").distinct()
         prior = (
-            _committed_events(s, epoch_id)
+            _read_maintained(
+                batch.sparkSession, ev_dir, _SCD2_LOG_SCHEMA, exclude_epoch=epoch_id
+            )
             .join(F.broadcast(touched), "user_id")
             .select(*cols)
         )
         hist = scd2_history(
             prior.unionAll(new), "user_id", "event_type", "ts_us", "event_id"
         )
-        hist.withColumn("epoch", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(hist_dir, f"epoch_{epoch_id}"))
-        new.withColumn("epoch", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(ev_dir, f"epoch_{epoch_id}"))
+        epoch = F.lit(int(epoch_id)).cast("long")
+        _write_epoch(hist.withColumn("epoch", epoch), hist_dir, epoch_id)
+        _write_epoch(new.withColumn("epoch", epoch), ev_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(SCD2_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_scd2")
+    _drain_landing(spark, landing_dir, SCD2_EVENT_SCHEMA, ckpt_dir, handle)
     return scd2_current_history(_read_maintained(spark, hist_dir, SCD2_HIST_SCHEMA))
 
 
@@ -1536,6 +1435,30 @@ def _mv_topk_partial(
     )
 
 
+def _mv_stamp(part: DataFrame, epoch, rebuilt: bool) -> DataFrame:
+    """A partial as the MV logs store it: tagged with its epoch and
+    whether it is a rebuild's replacement."""
+    return part.withColumn("epoch", F.lit(int(epoch)).cast("long")).withColumn(
+        "rebuilt", F.lit(rebuilt)
+    )
+
+
+def _mv_cutoffs(
+    spark: SparkSession,
+    work_dir: str,
+    schema: T.StructType,
+    group_cols: list[str],
+) -> DataFrame:
+    """Latest rebuild cutoff per tombstoned key, ``(group_cols...,
+    _cutoff)``. The tombstone log is seeded here when no rebuild ever
+    ran, so the read path is uniform."""
+    tomb_schema = _mv_tomb_schema(schema, group_cols)
+    tomb = _read_maintained(
+        spark, _log_dir(spark, work_dir, "mv_tombstones", tomb_schema), tomb_schema
+    )
+    return tomb.groupBy(*group_cols).agg(F.max("cutoff_epoch").alias("_cutoff"))
+
+
 def _mv_live(
     partials: DataFrame, last: DataFrame, group_cols: list[str]
 ) -> DataFrame:
@@ -1590,22 +1513,11 @@ def groupby_mv_view(
     group list derives from the hashed value stream)."""
     from tickdb_spark.operators.sketch import hll_estimate_from_sparse
 
-    tomb_schema = _mv_tomb_schema(schema, group_cols)
-    # seed the tombstone dir if no rebuild ever ran (mode-ignore no-op
-    # otherwise) so the read path is uniform
-    spark.createDataFrame([], tomb_schema).write.mode("ignore").parquet(
-        os.path.join(work_dir, "mv_tombstones")
-    )
     partials = _read_maintained(
         spark, os.path.join(work_dir, "mv_partials"),
         _mv_seed_schema(schema, group_cols, sq_scale),
     )
-    tomb = _read_maintained(
-        spark, os.path.join(work_dir, "mv_tombstones"), tomb_schema
-    )
-    last = tomb.groupBy(*group_cols).agg(
-        F.max("cutoff_epoch").alias("_cutoff")
-    )
+    last = _mv_cutoffs(spark, work_dir, schema, group_cols)
     live = _mv_live(partials, last, group_cols)
     report = groupby_mv_report(
         live, group_cols, with_variance=sq_scale is not None,
@@ -1645,16 +1557,7 @@ def groupby_mv_topk_view(
     the driver's canonicalizer (the agg_approx_sketches lesson)."""
     from pyspark.sql import Window
 
-    tomb_schema = _mv_tomb_schema(schema, group_cols)
-    spark.createDataFrame([], tomb_schema).write.mode("ignore").parquet(
-        os.path.join(work_dir, "mv_tombstones")
-    )
-    tomb = _read_maintained(
-        spark, os.path.join(work_dir, "mv_tombstones"), tomb_schema
-    )
-    last = tomb.groupBy(*group_cols).agg(
-        F.max("cutoff_epoch").alias("_cutoff")
-    )
+    last = _mv_cutoffs(spark, work_dir, schema, group_cols)
     partials = _read_maintained(
         spark, os.path.join(work_dir, "mv_topk_partials"),
         _mv_topk_schema(schema, group_cols),
@@ -1694,30 +1597,16 @@ def stream_groupby_mv_topk_maintenance(
     tombstone/per-key-rebuild path as the other MV states
     (:func:`groupby_mv_rebuild_keys` with ``topk=``/``tie_col=``).
     Returns the merged view ``(group_cols..., rnk, q, tie)``."""
-    tk_dir = os.path.join(work_dir, "mv_topk_partials")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_mv_topk")
-    seed = _mv_topk_schema(schema, group_cols)
-    spark.createDataFrame([], seed).write.mode("ignore").parquet(tk_dir)
+    tk_dir = _log_dir(
+        spark, work_dir, "mv_topk_partials", _mv_topk_schema(schema, group_cols)
+    )
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        _mv_topk_partial(
-            batch, group_cols, value_col, tie_col, scale, k
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("long")).withColumn(
-            "rebuilt", F.lit(False)
-        ).write.mode("overwrite").parquet(
-            os.path.join(tk_dir, f"epoch_{epoch_id}")
-        )
+        part = _mv_topk_partial(batch, group_cols, value_col, tie_col, scale, k)
+        _write_epoch(_mv_stamp(part, epoch_id, False), tk_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_mv_topk")
+    _drain_landing(spark, landing_dir, schema, ckpt_dir, handle)
     return groupby_mv_topk_view(spark, work_dir, schema, group_cols, k)
 
 
@@ -1772,47 +1661,38 @@ def groupby_mv_rebuild_keys(
     corrected_rows = corrected_rows.join(F.broadcast(keys), group_cols)
     if distinct_col is not None:
         corrected_rows = corrected_rows.localCheckpoint(eager=False)
-    _mv_partial_agg(
-        corrected_rows, group_cols, value_col, scale, sq_scale,
-        max_rows=max_rows,
-    ).withColumn("epoch", F.lit(int(cutoff_epoch)).cast("long")).withColumn(
-        "rebuilt", F.lit(True)
-    ).write.mode("overwrite").parquet(
-        os.path.join(work_dir, "mv_partials", f"epoch_rebuild_{int(cutoff_epoch)}")
+    rebuild = f"rebuild_{int(cutoff_epoch)}"
+
+    def replace(part: DataFrame, log: str) -> None:
+        stamped = _mv_stamp(part, cutoff_epoch, True)
+        _write_epoch(stamped, os.path.join(work_dir, log), rebuild)
+
+    replace(
+        _mv_partial_agg(
+            corrected_rows, group_cols, value_col, scale, sq_scale,
+            max_rows=max_rows,
+        ),
+        "mv_partials",
     )
     if distinct_col is not None:
         from tickdb_spark.operators.sketch import hll_hit_registers
 
-        hll_hit_registers(
-            corrected_rows, group_cols, distinct_col, distinct_p
-        ).withColumn(
-            "epoch", F.lit(int(cutoff_epoch)).cast("long")
-        ).withColumn("rebuilt", F.lit(True)).write.mode("overwrite").parquet(
-            os.path.join(
-                work_dir, "mv_hll_partials",
-                f"epoch_rebuild_{int(cutoff_epoch)}",
-            )
+        replace(
+            hll_hit_registers(corrected_rows, group_cols, distinct_col, distinct_p),
+            "mv_hll_partials",
         )
     if topk is not None:
-        _mv_topk_partial(
-            corrected_rows, group_cols, value_col, tie_col, scale, topk
-        ).withColumn(
-            "epoch", F.lit(int(cutoff_epoch)).cast("long")
-        ).withColumn("rebuilt", F.lit(True)).write.mode("overwrite").parquet(
-            os.path.join(
-                work_dir, "mv_topk_partials",
-                f"epoch_rebuild_{int(cutoff_epoch)}",
-            )
+        replace(
+            _mv_topk_partial(
+                corrected_rows, group_cols, value_col, tie_col, scale, topk
+            ),
+            "mv_topk_partials",
         )
-    tdir = os.path.join(work_dir, "mv_tombstones")
-    spark.createDataFrame([], _mv_tomb_schema(schema, group_cols)).write.mode(
-        "ignore"
-    ).parquet(tdir)
-    keys.withColumn(
-        "cutoff_epoch", F.lit(int(cutoff_epoch)).cast("long")
-    ).write.mode("overwrite").parquet(
-        os.path.join(tdir, f"epoch_rebuild_{int(cutoff_epoch)}")
+    tdir = _log_dir(
+        spark, work_dir, "mv_tombstones", _mv_tomb_schema(schema, group_cols)
     )
+    cutoffs = keys.withColumn("cutoff_epoch", F.lit(int(cutoff_epoch)).cast("long"))
+    _write_epoch(cutoffs, tdir, rebuild)
 
 
 def stream_groupby_mv_maintenance(
@@ -1863,15 +1743,13 @@ def stream_groupby_mv_maintenance(
     merged view (:func:`groupby_mv_view`): ``(group_cols..., cnt,
     sum_q, min_q, max_q[, sum_q2, sumsq_q2, avg_q][, hll_sum_scaled,
     distinct_hll])``."""
-    mv_dir = os.path.join(work_dir, "mv_partials")
-    hll_dir = os.path.join(work_dir, "mv_hll_partials")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_mv")
-    seed = _mv_seed_schema(schema, group_cols, sq_scale)
-    spark.createDataFrame([], seed).write.mode("ignore").parquet(mv_dir)
+    mv_dir = _log_dir(
+        spark, work_dir, "mv_partials", _mv_seed_schema(schema, group_cols, sq_scale)
+    )
     if distinct_col is not None:
-        spark.createDataFrame(
-            [], _mv_hll_schema(schema, group_cols)
-        ).write.mode("ignore").parquet(hll_dir)
+        hll_dir = _log_dir(
+            spark, work_dir, "mv_hll_partials", _mv_hll_schema(schema, group_cols)
+        )
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         if distinct_col is not None:
@@ -1879,31 +1757,15 @@ def stream_groupby_mv_maintenance(
 
             # ONE read of the batch feeds both partials
             batch = batch.localCheckpoint(eager=False)
-            hll_hit_registers(
-                batch, group_cols, distinct_col, distinct_p
-            ).withColumn("epoch", F.lit(int(epoch_id)).cast("long")).withColumn(
-                "rebuilt", F.lit(False)
-            ).write.mode("overwrite").parquet(
-                os.path.join(hll_dir, f"epoch_{epoch_id}")
-            )
-        _mv_partial_agg(
+            regs = hll_hit_registers(batch, group_cols, distinct_col, distinct_p)
+            _write_epoch(_mv_stamp(regs, epoch_id, False), hll_dir, epoch_id)
+        part = _mv_partial_agg(
             batch, group_cols, value_col, scale, sq_scale, max_rows=max_rows
-        ).withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("long")
-        ).withColumn("rebuilt", F.lit(False)).write.mode("overwrite").parquet(
-            os.path.join(mv_dir, f"epoch_{epoch_id}")
         )
+        _write_epoch(_mv_stamp(part, epoch_id, False), mv_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_mv")
+    _drain_landing(spark, landing_dir, schema, ckpt_dir, handle)
     return groupby_mv_view(
         spark, work_dir, schema, group_cols, sq_scale,
         distinct_p=distinct_p if distinct_col is not None else None,
@@ -2015,29 +1877,20 @@ def stream_dq_maintenance(
     Returns the merged report."""
     from tickdb_spark.operators.dq import run_checks
 
-    ctr_dir = os.path.join(work_dir, "dq_counters")
-    ckpt_dir = os.path.join(work_dir, "checkpoint_dq")
-    spark.createDataFrame([], DQ_COUNTER_SCHEMA).write.mode("ignore").parquet(ctr_dir)
+    ctr_dir = _log_dir(spark, work_dir, "dq_counters", DQ_COUNTER_SCHEMA)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         rep = run_checks(batch, table, checks)
-        rep.select(
+        counters = rep.select(
             "check_name",
             "violations",
             "total",
             F.lit(int(epoch_id)).cast("long").alias("epoch"),
-        ).write.mode("overwrite").parquet(os.path.join(ctr_dir, f"epoch_{epoch_id}"))
+        )
+        _write_epoch(counters, ctr_dir, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt_dir = os.path.join(work_dir, "checkpoint_dq")
+    _drain_landing(spark, landing_dir, schema, ckpt_dir, handle)
     report = dq_counters_report(
         _read_maintained(spark, ctr_dir, DQ_COUNTER_SCHEMA), table
     ).withColumn("check_class", F.lit("row"))
