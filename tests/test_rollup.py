@@ -597,3 +597,49 @@ def test_rollup_rewrite_crash_rolls_forward(
         expected = {u: _rollup_rows(store.read(u)) for u in LEVELS}
         assert ("a", 1470207600 * 10**9) in {r[:2] for r in expected["hour"]}
     assert got == expected
+
+
+@pytest.mark.parametrize("levels, files", [
+    pytest.param(("minute", "hour", "day", "month", "year"), 2, id="minute-base"),
+    pytest.param(("month", "year"), 7, id="month-base"),
+])
+def test_incremental_refresh_prunes_its_base_scan_to_the_covered_days(
+    tmp_path, spark, monkeypatch, levels, files
+):
+    """After one put on 1 of 10 days, the base level's raw scan reads
+    only the ``dt`` partitions its recomputed buckets cover: the dirty
+    day for a minute base (its file and the put's), the dirty day's
+    whole month (August's 6 days plus the put's file) for a month base.
+    Every refreshed level equals a full ``refresh()``."""
+    import tickdb_spark.rollup as rollup
+    from tickdb_spark.plans import files_read, partition_filters
+
+    tdb = TickDB(spark, str(tmp_path / "wh"))
+    tdb.create_db("pr")
+    path = tdb.catalog._existing("pr")
+    days = [f"2016-07-{d}" for d in (28, 29, 30, 31)] + [f"2016-08-0{d}" for d in range(1, 7)]
+    tdb.put("pr", [
+        {"time": f"{d}T{h:02d}:00:00Z", "index": s, "value": {"v": float(h)}}
+        for d in days for h in (6, 18) for s in ("a", "b")
+    ])
+    store = RollupStore(spark, path)
+    store.refresh(levels)
+    tdb.put("pr", [{"time": "2016-08-03T07:00:00Z", "index": "a", "value": {"v": 5.0}}])
+
+    base_scans, build = [], rollup.rollup_from_ticks
+
+    def recorded(ticks, unit):
+        base_scans.append(ticks)
+        return build(ticks, unit)
+
+    monkeypatch.setattr(rollup, "rollup_from_ticks", recorded)
+    store.refresh_incremental()
+    monkeypatch.undo()
+    (scan,) = base_scans
+    (pf,) = partition_filters(scan)
+    assert "dt" in pf
+    scan.collect()
+    assert files_read(scan) == files
+    incremental = {u: _rollup_rows(store.read(u)) for u in levels}
+    store.refresh(levels)
+    assert incremental == {u: _rollup_rows(store.read(u)) for u in levels}

@@ -913,9 +913,7 @@ def test_stream_dedup_epoch_rerun_does_not_lose_or_duplicate(tmp_path, spark):
 
     # half-committed epoch 0: fingerprints written, kept partial, no
     # checkpoint commit -> the stream will re-run epoch 0
-    fp0 = spark.createDataFrame(
-        [("0cc175b9c0f1b6a831c399e269772661",)], "content_hash string"
-    )  # md5("aa") — the exact hash the batch will produce
+    fp0 = _dedup_hashes(spark, ["aa"])  # the exact hash the batch will produce
     fp0.write.parquet(str(tmp_path / "state" / "fingerprints" / "epoch_0"))
     spark.createDataFrame([], "doc_id long, content_hash string").write.parquet(
         str(tmp_path / "state" / "kept" / "epoch_0")
@@ -2479,11 +2477,17 @@ def test_stream_face_sees_its_swapped_base(
     assert face(spark, str(landing), work) == batch(spark, pre + after)
 
 
-def _dedup_partial(spark, rows):
-    from pyspark.sql import functions as F
+def _dedup_hashes(spark, texts):
+    """The fingerprints the dedup handler stores for ``texts``, computed
+    by its own hash expression (``exact_dedup_groups``)."""
+    from tickdb_spark.operators.dedup import exact_dedup_groups
 
-    texts = spark.createDataFrame([(t,) for _, t in rows], "text string")
-    return "fingerprints", texts.select(F.md5("text").alias("content_hash"))
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    return exact_dedup_groups(docs, "text", "doc_id").select("content_hash")
+
+
+def _dedup_partial(spark, rows):
+    return "fingerprints", _dedup_hashes(spark, [t for _, t in rows])
 
 
 def _scd2_partial(spark, rows):

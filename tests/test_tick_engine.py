@@ -1063,3 +1063,113 @@ def test_expiring_every_partition_of_a_series_drops_it_from_the_catalog(tmp_path
     day_q = {"index": "b", "from": "2016-08-01T00:00:00Z", "to": "2016-08-02T00:00:00Z",
              "group": "day", "fields": {"v": "sum"}}
     assert [r["v_sum"] for r in route_tick_query(spark, db, day_q).collect()] == [1.0]
+
+
+DAY = 86_400 * NS
+MIDNIGHT = parse_time_ns("2024-01-03T00:00:00Z")
+
+
+def test_ts_utc_dt_and_day_bucket_follow_integer_division(tmp_path, spark):
+    """``ts_utc``, ``dt`` and the day bucket of a tick are what Python
+    ``//`` gives, next to midnight, before 1970 and far past 2^53."""
+    import datetime as _dt
+
+    from pyspark.sql import functions as F
+
+    tdb = _mk(tmp_path, spark)
+    times = [MIDNIGHT - 1, MIDNIGHT, -1, 2**62 + 999]
+    tdb.put("db1", [{"time": t, "index": "s", "value": {"v": 1.0}} for t in times])
+    rows = tdb.ticks("db1").select("ts", F.unix_micros("ts_utc").alias("us"), "dt").collect()
+    epoch = _dt.date(1970, 1, 1)
+    assert sorted((r["ts"], r["us"], r["dt"]) for r in rows) == sorted(
+        (t, t // 1000, epoch + _dt.timedelta(days=t // DAY)) for t in times
+    )
+    days = tdb.query("db1", {"index": "s", "from": -DAY, "to": 2**62 + DAY,
+                             "group": "day", "fields": {"v": "count"}}).collect()
+    assert {r["bucket"]: r["v_count"] for r in days} == {t // DAY * DAY: 1 for t in times}
+
+
+def test_delete_of_the_last_ns_before_midnight(tmp_path, spark):
+    """``delete [midnight - 1 ns, midnight)`` finds that tick's day and
+    removes it, and no other tick."""
+    tdb = _mk(tmp_path, spark)
+    times = [MIDNIGHT - 2, MIDNIGHT - 1, MIDNIGHT, MIDNIGHT + 1]
+    tdb.put("db1", [{"time": t, "index": "s", "value": {"v": 1.0}} for t in times])
+    tdb.delete("db1", "s", MIDNIGHT - 1, MIDNIGHT)
+    assert sorted(r["ts"] for r in tdb.ticks("db1").collect()) == [
+        MIDNIGHT - 2, MIDNIGHT, MIDNIGHT + 1
+    ]
+
+
+def _collected(spark, monkeypatch):
+    """Every DataFrame collected while the patch is on, in order."""
+    frame = type(spark.range(1))
+    seen, collect = [], frame.collect
+
+    def record(self):
+        seen.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(frame, "collect", record)
+    return seen
+
+
+def test_reads_open_only_the_days_they_overlap(tmp_path, spark, monkeypatch):
+    """On a clean table of one file per day, a one-day bucket query and
+    a GET each open exactly one file; on an unclean table the ``dt``
+    filter still reaches the scan, below the dedup aggregate."""
+    from tickdb_spark.plans import files_read, partition_filters
+
+    tdb = _mk(tmp_path, spark)
+    tdb.put("db1", [
+        {"time": f"2016-08-0{d}T{h:02d}:00:00Z", "index": "s", "value": {"v": float(h)}}
+        for d in (1, 2, 3, 4) for h in (0, 6, 12, 18)
+    ])
+    day = {"index": "s", "from": "2016-08-03T00:00:00Z", "to": "2016-08-04T00:00:00Z",
+           "group": "hour", "fields": {"v": "sum"}}
+    q = tdb.query("db1", day)
+    assert [r["v_sum"] for r in q.collect()] == [0.0, 6.0, 12.0, 18.0]
+    assert files_read(q) == 1
+    seen = _collected(spark, monkeypatch)
+    assert tdb.get("db1", "s", "2016-08-03T06:00:00Z") == {"v": 6.0}
+    assert files_read(seen[-1]) == 1
+    monkeypatch.undo()
+
+    tdb.put("db1", [{"time": "2016-08-03T06:00:00Z", "index": "s", "value": {"v": 60.0}}])
+    q = tdb.query("db1", day)
+    assert "Aggregate" in q._jdf.queryExecution().logical().toString()  # dedup path
+    assert [r["v_sum"] for r in q.collect()] == [0.0, 60.0, 12.0, 18.0]
+    (pf,) = partition_filters(q)
+    assert "dt" in pf
+    assert files_read(q) == 2  # 08-03's two files: the first batch's and the upsert's
+
+
+@pytest.mark.parametrize("spec", [
+    pytest.param({}, id="raw"),
+    pytest.param({"v": ["sum", "count", "first"]}, id="bucket"),
+    pytest.param({"v": "ma:2"}, id="ma"),
+])
+def test_pruned_reads_equal_unpruned_reads_at_day_edges(tmp_path, spark, spec):
+    """A read pruned by ``dt`` answers what the same read over the
+    unpruned view answers, with ``from``/``to`` at midnight, 1 ns on
+    either side of it and before 1970, on a clean and an unclean table."""
+    from tickdb_spark.ingest import read_ticks
+    from tickdb_spark.tickquery import run_tick_query
+
+    tdb = _mk(tmp_path, spark)
+    times = [m + d for m in (-DAY, 0, MIDNIGHT) for d in (-2, -1, 0, 1, 3_600 * NS)]
+    docs = [{"time": t, "index": "s", "value": {"v": float(i)}} for i, t in enumerate(times)]
+    db = tdb.catalog._existing("db1")
+    windows = [
+        w for m in (0, MIDNIGHT) for e in (m - 1, m, m + 1) for w in ((e, m + DAY), (m - DAY, e))
+    ]
+    for batch in (docs, docs[::3]):  # the second put makes the table unclean
+        tdb.put("db1", batch)
+        ticks = read_ticks(spark, db)
+        for f, t in windows:
+            q = {"index": "s", "from": f, "to": t, "group": "hour", "fields": spec}
+            pruned = [tuple(r) for r in run_tick_query(ticks, q).collect()]
+            unpruned = [tuple(r) for r in run_tick_query(ticks.drop("dt"), q).collect()]
+            assert pruned == unpruned, (f, t)
+            if not spec:
+                assert [r[0] for r in pruned] == [x for x in sorted(times) if f <= x < t]

@@ -4,8 +4,9 @@ time-series store), rebuilt Spark-first.
 
 Design (see SURVEY.md):
 - One canonical ``ticks`` table ``(series, ts, ts_utc, value)`` partitioned
-  by ``(series, date)`` instead of one file per index
-  (reference: ``database.go:49-69``).
+  by ``(series, dt)`` instead of one file per index
+  (reference: ``database.go:49-69``); ``dt`` is the UTC day of ``ts``,
+  and reads filter on it to open only the days they overlap.
 - Calendar-bucket aggregation is ``groupBy(date_trunc(...))`` answered by
   Catalyst's partial+final hash aggregate instead of the reference's
   materialized rollup tree (``storage/node.go:39-53``); optional persistent

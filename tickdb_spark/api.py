@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tickdb_spark import ingest as _ingest
 from tickdb_spark.catalog import Catalog
-from tickdb_spark.schema import parse_time_ns
+from tickdb_spark.schema import ns_to_day, parse_time_ns
 from tickdb_spark.tickquery import TickQuery, run_tick_query
 
 
@@ -53,7 +53,9 @@ class TickDB:
 
     # -- reads --------------------------------------------------------
     def ticks(self, db: str, as_of_seq: int | None = None) -> DataFrame:
-        """Canonical LWW-deduped view of all series in a database.
+        """Canonical LWW-deduped view of all series in a database:
+        ``(series, ts, ts_utc, value, dt)``, where ``dt`` is the UTC day
+        of ``ts`` and a filter on it prunes the scan to those days.
         ``as_of_seq`` reads the snapshot as of that ingest batch (time
         travel; see :func:`tickdb_spark.ingest.read_ticks`)."""
         return _ingest.read_ticks(
@@ -62,8 +64,9 @@ class TickDB:
 
     def get(self, db: str, series: str, time) -> dict | None:
         """Exact point lookup, ``GET /{db}/{index}/{time}`` (Q1:
-        ``handlers.go:98-113``, ``storage/db.go:127-138``). Partition-pruned
-        equality filter; returns the value map or None (ErrNotFound).
+        ``handlers.go:98-113``, ``storage/db.go:127-138``). Pruned to the
+        series' partition of ``ts``'s day (``dt``), so it opens one file
+        on a compacted table; returns the value map or None (ErrNotFound).
         ``(series, ts)`` is unique after dedup, so the answer has at most
         one row: ``collect()`` reads it in one job, where ``take(1)``
         scans one split first and starts a second job on every miss."""
@@ -72,7 +75,11 @@ class TickDB:
 
         rows = (
             self.ticks(db)
-            .where((F.col("series") == series) & (F.col("ts") == ts))
+            .where(
+                (F.col("series") == series)
+                & (F.col("dt") == ns_to_day(ts))
+                & (F.col("ts") == ts)
+            )
             .select("value")
             .collect()
         )
@@ -93,8 +100,9 @@ class TickDB:
     # -- SQL surface ----------------------------------------------------
     def sql(self, db: str, query: str) -> DataFrame:
         """Run arbitrary Spark SQL with the database's LWW tick view
-        registered as ``ticks`` — the full relational surface (joins,
-        windows, CTEs) over warehouse data; nothing comparable exists in
+        registered as ``ticks`` (the :meth:`ticks` columns, ``dt`` the
+        UTC day of ``ts``: filter on it to prune days) — the full
+        relational surface (joins, windows, CTEs) over warehouse data; nothing comparable exists in
         the reference (its only query language is the JSON spec,
         ``query.go:9-18``)."""
         self.ticks(db).createOrReplaceTempView("ticks")

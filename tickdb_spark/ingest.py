@@ -13,7 +13,9 @@ write); dedup-on-read is a single hash aggregate on ``(series, ts)`` that
 partial-aggregates map-side; ``compact()`` amortizes it away; partition
 layout ``series/dt`` gives both series pruning (reference: file-per-index,
 ``database.go:49-69``) and time pruning (reference: tree descent,
-``cursor.go:188-241``).
+``cursor.go:188-241``): ``read_ticks`` carries ``dt``, so a read's range
+on ``ts`` becomes a ``dt`` partition filter (``tickquery.push_ts_range``,
+``TickDB.get``) and opens only the days it overlaps.
 
 Rewrites: every operation that replaces or removes warehouse
 directories (``compact``, ``delete_range``, ``expire_before``, the
@@ -50,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tickdb_spark import cachereg
-from tickdb_spark.schema import TICKS_SCHEMA, ns_to_ts, parse_time_ns
+from tickdb_spark.schema import TICKS_SCHEMA, ns_to_day, ns_to_dt, ns_to_ts, parse_time_ns
 
 TICKS_DIR = "ticks"
 META_FILE = "_meta.json"
@@ -238,6 +240,14 @@ def read_table(
     return cachereg.table_scan(spark, (path, schema), version, lambda: reader.parquet(path))
 
 
+def _derived(ticks: DataFrame) -> DataFrame:
+    """``ts_utc`` and ``dt`` derived from ``ts`` (``schema.ns_to_ts``,
+    ``schema.ns_to_dt``), whatever the input carried: every writer stores
+    the day that read bounds compute."""
+    ts = F.col("ts")
+    return ticks.withColumn("ts_utc", ns_to_ts(ts)).withColumn("dt", ns_to_dt(ts))
+
+
 def append_batch(db_path: str, ticks: DataFrame) -> int:
     """Atomically-visible batch append (fixes B11: the reference never
     flushes on any handler path), under the writer lock so concurrent
@@ -245,9 +255,7 @@ def append_batch(db_path: str, ticks: DataFrame) -> int:
     with writer(db_path):
         meta = _read_meta(db_path)
         seq = meta["next_seq"]
-        out = ticks.withColumn("ingest_seq", F.lit(seq).cast("long")).withColumn(
-            "dt", F.to_date("ts_utc")
-        )
+        out = _derived(ticks.withColumn("ingest_seq", F.lit(seq).cast("long")))
         # Cluster rows by their target partition so each (series, dt) is
         # written by one task in parallel — one file per partition instead of
         # one task sequentially emitting every partition's files. (Measured
@@ -282,7 +290,12 @@ def read_ticks(
     as_of_seq: int | None = None,
     evolved_fields: "T.StructType | None" = None,
 ) -> DataFrame:
-    """Canonical LWW view of a database's ticks.
+    """Canonical LWW view of a database's ticks: ``(series, ts, ts_utc,
+    value, dt)`` plus any evolved fields, where ``dt`` is the UTC day of
+    ``ts`` and the table's date partition. A filter on ``dt`` prunes the
+    scan to those days' files, on the clean path and below the dedup
+    aggregate alike (``dt`` is one of its keys and depends only on
+    ``ts``, so the groups are the same).
 
     ``dedup=None`` consults metadata: a compacted (clean) table skips the
     dedup aggregate entirely — the hot path for query-heavy workloads.
@@ -336,16 +349,17 @@ def read_ticks(
     if dedup is None:
         dedup = not _read_meta(db_path).get("clean", False)
     if not dedup:
-        return df.select("series", "ts", "ts_utc", "value", *extra)
+        return df.select("series", "ts", "ts_utc", "value", "dt", *extra)
     latest = F.max_by(F.struct("ts_utc", "value", *extra), "ingest_seq").alias("r")
     return (
-        df.groupBy("series", "ts")
+        df.groupBy("series", "ts", "dt")
         .agg(latest)
         .select(
             "series",
             "ts",
             F.col("r.ts_utc").alias("ts_utc"),
             F.col("r.value").alias("value"),
+            "dt",
             *[F.col(f"r.{c}").alias(c) for c in extra],
         )
     )
@@ -355,7 +369,8 @@ def compact(spark: SparkSession, db_path: str) -> None:
     """Materialize the LWW view, replacing the table (Delta-MERGE stand-in).
 
     After compaction ``read_ticks`` serves partition-pruned scans with no
-    dedup shuffle.
+    dedup shuffle. ``ts_utc`` and ``dt`` are derived from ``ts`` again,
+    so a row a writer once stored under the wrong day moves to its own.
     """
     path = os.path.join(db_path, TICKS_DIR)
     with writer(db_path):
@@ -364,7 +379,7 @@ def compact(spark: SparkSession, db_path: str) -> None:
         )
         tmp = _stage_dir(db_path)
         (
-            deduped.withColumn("dt", F.to_date("ts_utc"))
+            _derived(deduped)
             .repartition("series", "dt")
             .sortWithinPartitions("ts")
             .write.mode("overwrite")
@@ -392,8 +407,7 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
     frm_ns, to_ns = parse_time_ns(frm), parse_time_ns(to)
     if to_ns <= frm_ns:
         return
-    d_from = dt.datetime.fromtimestamp(frm_ns / 1e9, dt.timezone.utc).date()
-    d_to = dt.datetime.fromtimestamp(max(frm_ns, to_ns - 1) / 1e9, dt.timezone.utc).date()
+    d_from, d_to = ns_to_day(frm_ns), ns_to_day(to_ns - 1)
     base = os.path.join(db_path, TICKS_DIR)
     with writer(db_path):
         series_dir = partition_dirs(base).get(series)
@@ -450,11 +464,7 @@ def expire_before(spark: SparkSession, db_path: str, cutoff) -> list[tuple[str, 
     One journaled commit of removals, like every rewrite. Returns the
     dropped (series, dt) pairs."""
     cutoff_ns = parse_time_ns(cutoff)
-    # Integer day math: cutoff_ns / 1e9 on a >2^53 nanosecond value can
-    # round across midnight for non-second-aligned cutoffs (ADVICE r13).
-    cutoff_day = dt.date(1970, 1, 1) + dt.timedelta(
-        days=cutoff_ns // 86_400_000_000_000
-    )
+    cutoff_day = ns_to_day(cutoff_ns)
     base = os.path.join(db_path, TICKS_DIR)
     with writer(db_path):
         dropped: list[tuple[str, str]] = []

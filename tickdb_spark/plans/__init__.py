@@ -37,3 +37,26 @@ def count_op(df: DataFrame, op: str) -> int:
 
 def scan_read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: (struct<[^\n]*)", physical_plan(df))
+
+
+def partition_filters(df: DataFrame) -> list[str]:
+    """The PartitionFilters entry of each of the plan's file scans."""
+    return re.findall(r"PartitionFilters: \[(.*?)\]\n", physical_plan(df))
+
+
+def files_read(df: DataFrame) -> int:
+    """Files the scans of ``df``'s executed plan opened (their
+    ``numFiles`` SQL metric), summed; read it after an action ran ``df``."""
+
+    def walk(plan) -> int:
+        kind = plan.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(plan.executedPlan())
+        if kind.endswith("QueryStageExec"):
+            return walk(plan.plan())
+        metrics = plan.metrics()
+        n = metrics.apply("numFiles").value() if metrics.contains("numFiles") else 0
+        kids = plan.children()
+        return n + sum(walk(kids.apply(i)) for i in range(kids.size()))
+
+    return walk(df._jdf.queryExecution().executedPlan())

@@ -44,7 +44,7 @@ from tickdb_spark.ingest import (
     read_ticks,
     writer,
 )
-from tickdb_spark.schema import ns_to_ts, parse_time_ns
+from tickdb_spark.schema import NS_PER_DAY, ns_to_day, ns_to_dt, parse_time_ns
 from tickdb_spark.session import scan_splits
 from tickdb_spark.tickquery import (
     _UNIT_NS,
@@ -184,9 +184,12 @@ class RollupStore:
 
         Ingest/delete record touched ``(series, dt)`` partitions in the
         db metadata; per level we recompute ONLY the buckets covering
-        those dates (partition-pruned raw scan for the base level, pruned
-        finer-level scan for merges), keep every untouched row of the
-        dirty series, and swap in just the dirty series' partitions.
+        those dates (for the base level a raw scan pruned to the dirty
+        series and to the ``dt`` partitions those buckets cover: the
+        dirty dates for minute/hour/day, their whole months or years for
+        a coarser base; for merges the staged finer level), keep every
+        untouched row of the dirty series, and swap in just the dirty
+        series' partitions.
         Untouched series are never read or written. The recomputed
         buckets follow from the dirty dates, not from the ticks left in
         them, so a bucket whose every tick was deleted goes away.
@@ -228,15 +231,21 @@ class RollupStore:
             else:
                 # a dirty date invalidates every bucket covering it: the base
                 # level re-reduces all ticks inside those buckets, a coarser
-                # one merges all staged finer rows inside them
+                # one merges all staged finer rows inside them. On the base
+                # level the dt predicate prunes the scan to the covered days;
+                # the ts one keeps the selection exact for a row an older
+                # writer stored under the neighbouring day
                 if prev is None:
-                    inside = _covers(ts_to_trunc_ns(F.col("ts"), unit), unit, dates)
+                    inside = _covers(F.col("dt"), unit, dates) & _covers(
+                        ns_to_dt(F.col("ts")), unit, dates
+                    )
                     fresh = rollup_from_ticks(ticks.where(inside), unit)
                 else:
-                    inside = _covers(ts_to_trunc_ns(F.col("bucket"), unit), unit, dates)
+                    inside = _covers(ns_to_dt(F.col("bucket")), unit, dates)
                     fresh = rollup_merge(prev.where(inside), unit)
                 kept = self.read(unit).where(
-                    F.col("series").isin(series) & ~_covers(F.col("bucket"), unit, dates)
+                    F.col("series").isin(series)
+                    & ~_covers(ns_to_dt(F.col("bucket")), unit, dates)
                 )
                 df = kept.unionByName(fresh)
                 live = partition_dirs(self._path(unit))
@@ -260,30 +269,25 @@ class RollupStore:
         _commit(self.db_path, [*swaps, (stage, None)], meta)
 
 
-def _covers(bucket, unit: str, dates: list[str]):
-    """Whether the level-``unit`` bucket starting at ``bucket`` (epoch ns)
-    covers one of ``dates`` (ISO days): a dirty date invalidates every
-    minute and hour bucket inside it, and the one day, month or year
-    bucket containing it."""
-    if unit in ("minute", "hour"):
-        return F.to_date(ns_to_ts(bucket)).isin(dates)
-    starts = set()
-    for d in map(dt.date.fromisoformat, dates):
-        if unit != "day":
-            d = d.replace(day=1) if unit == "month" else d.replace(month=1, day=1)
-        starts.add((d - dt.date(1970, 1, 1)).days * _ALIGN_CHECK["day"])
-    return bucket.isin(sorted(starts))
+def _covers(day, unit: str, dates: list[str]):
+    """Whether the level-``unit`` bucket holding UTC day ``day`` (a date
+    column) covers one of ``dates`` (ISO days): a dirty date invalidates
+    every minute and hour bucket inside it, and the one day, month or
+    year bucket containing it. On the ``dt`` partition column this is a
+    partition filter."""
+    days = sorted(map(dt.date.fromisoformat, dates))
+    if unit in ("minute", "hour", "day"):
+        return day.isin(days)
+    starts = {d.replace(day=1) if unit == "month" else d.replace(month=1, day=1) for d in days}
+    return F.trunc(day, unit).isin(sorted(starts))
 
 
 def _aligned(ns: int, unit: str) -> bool:
     if unit in _ALIGN_CHECK:
         return ns % _ALIGN_CHECK[unit] == 0
-    # month/year alignment: must be at a month boundary (UTC)
-    t = dt.datetime.fromtimestamp(ns / 1e9, dt.timezone.utc)
-    month_ok = t.day == 1 and t.hour == t.minute == t.second == 0 and t.microsecond == 0
-    if unit == "month":
-        return month_ok and ns % 1000 == 0
-    return month_ok and t.month == 1 and ns % 1000 == 0
+    # month/year alignment: UTC midnight on the 1st of a month (of January)
+    d = ns_to_day(ns)
+    return ns % NS_PER_DAY == 0 and d.day == 1 and (unit == "month" or d.month == 1)
 
 
 def route_tick_query(

@@ -8,7 +8,11 @@ anti-pattern at 100 TB, while ``partitionBy(series, date)`` gives the same
 pruning the reference gets from its file-per-index + time-tree descent.
 
 ``ts`` stays authoritative BIGINT nanoseconds (Spark TimestampType is
-µs-only); ``ts_utc`` is the derived µs timestamp used for calendar ops.
+µs-only); ``ts_utc`` is the derived µs timestamp used for calendar ops,
+and ``dt`` (the date partition) the UTC day of ``ts``. Both derive from
+``ts`` by integer floor division, never through a double: the stored
+``dt`` and the day bounds a read prunes with (``ns_to_day``) must agree
+to the nanosecond, or a tick next to midnight is pruned away.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ from pyspark.sql import types as T
 
 NS_PER_US = 1_000
 NS_PER_SECOND = 1_000_000_000
+NS_PER_DAY = 86_400 * NS_PER_SECOND
+_EPOCH_DAY = _dt.date(1970, 1, 1)
 
 #: Canonical tick table: the reference's open per-point field map
 #: (schemaless, ``storage/point.go:8-11``) becomes a MapType column.
@@ -53,9 +59,30 @@ POST_SCHEMA = T.StructType(
 GRANULARITIES = ("second", "minute", "hour", "day", "month", "year")
 
 
+def _floor_div(col: Column, d: int) -> Column:
+    """``col // d`` on BIGINT, exact over the whole range: ``div``
+    truncates toward zero, so a negative remainder steps down by one."""
+    return F.call_function("div", col, F.lit(d)) - (col % d < 0).cast("long")
+
+
 def ns_to_ts(col: Column) -> Column:
-    """BIGINT epoch-ns → TimestampType (µs truncation)."""
-    return F.timestamp_micros((col / NS_PER_US).cast("long"))
+    """BIGINT epoch-ns → TimestampType, floored to the µs (integer
+    division: a tick 1 ns before a µs, second or day boundary stays
+    before it)."""
+    return F.timestamp_micros(_floor_div(col, NS_PER_US))
+
+
+def ns_to_dt(col: Column) -> Column:
+    """BIGINT epoch-ns → its UTC day (DateType): the ``dt`` partition
+    value. The column half of the one ns → day derivation; the Python
+    half is :func:`ns_to_day`."""
+    return F.date_from_unix_date(_floor_div(col, NS_PER_DAY).cast("int"))
+
+
+def ns_to_day(ns: int) -> _dt.date:
+    """Epoch-ns → its UTC day, with the same floor division as
+    :func:`ns_to_dt` (the day bounds of every pruned read or rewrite)."""
+    return _EPOCH_DAY + _dt.timedelta(days=ns // NS_PER_DAY)
 
 
 def ts_to_ns(col: Column) -> Column:

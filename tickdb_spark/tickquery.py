@@ -26,7 +26,7 @@ from dataclasses import dataclass, field as dc_field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from tickdb_spark.schema import NS_PER_SECOND, ns_to_ts, parse_time_ns
+from tickdb_spark.schema import NS_PER_SECOND, ns_to_day, ns_to_ts, parse_time_ns
 
 #: Fixed-width units usable for N-unit (from-anchored) buckets, in ns.
 _UNIT_NS = {
@@ -211,26 +211,36 @@ def _agg_expr(value: Column, ts: Column, red: Reducer, alias: str, exact: bool =
 
 
 def push_ts_range(df: DataFrame, frm_ns: int, to_ns: int) -> DataFrame:
-    """Redundant range filter on the raw timestamp column ``ts_raw``, when
-    the frame has one. The ns column is computed from a timestamp-typed
-    source, so its range predicate cannot reach the parquet scan; the
-    same range on the raw column (conservatively widened to whole µs —
-    callers keep their exact ns predicate) pushes down, turning the scan
-    into a time-slice read instead of a corpus read."""
-    if "ts_raw" not in df.columns:
-        return df
-    dt = df.schema["ts_raw"].dataType
-    lo = F.timestamp_micros(F.lit(frm_ns // 1_000)).cast(dt)
-    hi = F.timestamp_micros(F.lit(-(-to_ns // 1_000))).cast(dt)
-    return df.where((F.col("ts_raw") >= lo) & (F.col("ts_raw") < hi))
+    """Redundant filters that let the scan skip what ``[frm_ns, to_ns)``
+    on ``ts`` excludes; callers keep their exact ns predicate.
+
+    * ``dt`` (the warehouse's date partition, the UTC day of ``ts``, see
+      ``ingest.read_ticks``): ``dt BETWEEN day(from) AND day(to - 1 ns)``,
+      a partition filter, so the read opens only the days it overlaps
+      (the reference's calendar-tree descent, ``cursor.go:188-241``).
+    * ``ts_raw`` (a timestamp-typed source whose ``ts`` is computed, so
+      its range cannot reach the parquet scan): the same range on the
+      raw column, widened to whole µs, pushes down and turns the scan
+      into a time-slice read instead of a corpus read.
+
+    A frame with neither column passes through untouched."""
+    if "dt" in df.columns:
+        df = df.where(F.col("dt").between(ns_to_day(frm_ns), ns_to_day(to_ns - 1)))
+    if "ts_raw" in df.columns:
+        raw = df.schema["ts_raw"].dataType
+        lo = F.timestamp_micros(F.lit(frm_ns // 1_000)).cast(raw)
+        hi = F.timestamp_micros(F.lit(-(-to_ns // 1_000))).cast(raw)
+        df = df.where((F.col("ts_raw") >= lo) & (F.col("ts_raw") < hi))
+    return df
 
 
 def run_tick_query(ticks: DataFrame, query: TickQuery | dict) -> DataFrame:
     """Execute a tick query against the canonical (deduped) ticks DataFrame.
 
     Returns one row per non-empty bucket: ``(bucket BIGINT ns, <field>_<reducer>...)``
-    ordered by bucket. Plan shape: partition-pruned scan → partial
-    aggregate → one exchange → final aggregate → one partition (optional
+    ordered by bucket. Plan shape: partition-pruned scan (the series and,
+    through ``push_ts_range``, the ``dt`` days ``[from, to)`` overlaps)
+    → partial aggregate → one exchange → final aggregate → one partition (optional
     ``ma:<k>`` window, then a sort within it). The answer is at most one
     row per bucket and goes to the driver whole, so everything after the
     aggregate runs in one partition: no exchange for the window and no
@@ -249,7 +259,7 @@ def run_tick_query(ticks: DataFrame, query: TickQuery | dict) -> DataFrame:
         cond = (F.col("series") == query.series) & cond
     elif query.series is not None:
         cond = F.col("series").isin(list(query.series)) & cond
-    df = push_ts_range(ticks, frm, to).where(cond).drop("ts_raw")
+    df = push_ts_range(ticks, frm, to).where(cond).drop("ts_raw", "dt")
     bucket = bucket_start_ns(F.col("ts"), count, unit, frm).alias("bucket")
 
     aggs, ma_cols = [], []
