@@ -102,9 +102,9 @@ class TickDB:
         """Run arbitrary Spark SQL with the database's LWW tick view
         registered as ``ticks`` (the :meth:`ticks` columns, ``dt`` the
         UTC day of ``ts``: filter on it to prune days) — the full
-        relational surface (joins, windows, CTEs) over warehouse data; nothing comparable exists in
-        the reference (its only query language is the JSON spec,
-        ``query.go:9-18``)."""
+        relational surface (joins, windows, CTEs) over warehouse data;
+        nothing comparable exists in the reference (its only query
+        language is the JSON spec, ``query.go:9-18``)."""
         self.ticks(db).createOrReplaceTempView("ticks")
         return self.spark.sql(query)
 

@@ -240,12 +240,12 @@ def run_tick_query(ticks: DataFrame, query: TickQuery | dict) -> DataFrame:
     Returns one row per non-empty bucket: ``(bucket BIGINT ns, <field>_<reducer>...)``
     ordered by bucket. Plan shape: partition-pruned scan (the series and,
     through ``push_ts_range``, the ``dt`` days ``[from, to)`` overlaps)
-    → partial aggregate → one exchange → final aggregate → one partition (optional
-    ``ma:<k>`` window, then a sort within it). The answer is at most one
-    row per bucket and goes to the driver whole, so everything after the
-    aggregate runs in one partition: no exchange for the window and no
-    range-partitioned global sort (that sort's sampling job and second
-    shuffle cost more driver time than the rows they order).
+    → partial aggregate → one exchange → final aggregate → one partition
+    (optional ``ma:<k>`` window, then a sort within it). The answer is at
+    most one row per bucket and goes to the driver whole, so everything
+    after the aggregate runs in one partition: no exchange for the window
+    and no range-partitioned global sort (that sort's sampling job and
+    second shuffle cost more driver time than the rows they order).
     """
     if isinstance(query, dict):
         query = TickQuery.from_dict(query)
