@@ -175,7 +175,8 @@ def _write_meta(db_path: str, meta: dict) -> None:
 
 
 def normalize_docs(spark: SparkSession, docs: list[dict], ingest_seq: int) -> DataFrame:
-    """``[{"time": ..., "index": ..., "value": {...}}]`` → canonical rows.
+    """``[{"time": ..., "index": ..., "value": {...}}]`` → canonical rows,
+    ``ts_utc`` left NULL (``append_batch`` derives it from ``ts``).
 
     Mirrors the reference's ingest doc shape (``database.go:24-28``) with
     errors propagated instead of swallowed (quirk B10).
@@ -188,8 +189,7 @@ def normalize_docs(spark: SparkSession, docs: list[dict], ingest_seq: int) -> Da
         value = {str(k): float(v) for k, v in doc["value"].items()}
         key = (str(doc["index"]), ts)
         rows[key] = (key[0], ts, None, value, ingest_seq)
-    df = spark.createDataFrame(list(rows.values()), TICKS_SCHEMA)
-    return df.withColumn("ts_utc", ns_to_ts(F.col("ts")))
+    return spark.createDataFrame(list(rows.values()), TICKS_SCHEMA)
 
 
 def partition_dirs(path: str) -> dict[str, str]:
