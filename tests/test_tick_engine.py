@@ -18,6 +18,23 @@ def _mk(tmp_path, spark, name="db1"):
     return tdb
 
 
+def _unsorted_files(table_dir):
+    """Data files under ``table_dir`` whose ``ts`` column is not
+    non-decreasing in file order."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(f"{table_dir}/**/*.parquet", recursive=True)
+    assert files, table_dir
+    out = []
+    for f in files:
+        ts = pq.ParquetFile(f).read(columns=["ts"]).column("ts").to_pylist()
+        if ts != sorted(ts):
+            out.append(f)
+    return out
+
+
 def test_parse_group():
     assert parse_group("minute") == (1, "minute")
     assert parse_group("5minutes") == (5, "minute")
@@ -150,13 +167,19 @@ def test_reducers_match_semantics(tmp_path, spark):
 
 def test_range_delete(tmp_path, spark):
     tdb = _mk(tmp_path, spark)
+    # each day holds v=d at noon and 0-valued points around it, put in
+    # falling time order
     docs = [
-        {"time": f"2016-08-0{d}T12:00:00Z", "index": "del", "value": {"v": float(d)}}
-        for d in range(1, 6)
+        {"time": f"2016-08-0{d}T{h:02d}:00:00Z", "index": "del",
+         "value": {"v": float(d) if h == 12 else 0.0}}
+        for d in range(1, 6) for h in (23, 12, 6, 1)
     ]
     tdb.put("db1", docs)
-    # interior delete [day2 , day4) → days 2,3 gone (half-open, D7)
-    tdb.delete("db1", "del", "2016-08-02T00:00:00Z", "2016-08-04T00:00:00Z")
+    # interior delete [day2, day4 03:00) → days 2,3 gone (half-open, D7),
+    # day 4 rewritten without its 01:00 point
+    tdb.delete("db1", "del", "2016-08-02T00:00:00Z", "2016-08-04T03:00:00Z")
+    day4 = tmp_path / "warehouse" / "db1" / "ticks" / "series=del" / "dt=2016-08-04"
+    assert _unsorted_files(day4) == []
     left = sorted(r["v_sum"] for r in tdb.query(
         "db1",
         {
@@ -206,6 +229,17 @@ def test_escaped_series_names(tmp_path, spark):
     assert [(r["series"], r["ts"]) for r in tdb.ticks("db1").collect()] == [
         ("plain", parse_time_ns("2016-08-03T12:00:00Z"))
     ]
+
+
+def test_compact_keeps_a_series_name_that_reads_as_a_number(tmp_path, spark):
+    """``compact`` rewrites series ``007`` under its own name, not as the
+    integer ``7`` Spark would infer from ``series=007``."""
+    tdb = _mk(tmp_path, spark)
+    for v in (1.0, 2.0):
+        tdb.put("db1", [{"time": "2016-08-01T12:00:00Z", "index": "007", "value": {"v": v}}])
+    tdb.compact("db1")
+    assert tdb.db_info("db1")["indexes"] == ["007"]
+    assert tdb.get("db1", "007", "2016-08-01T12:00:00Z") == {"v": 2.0}
 
 
 def test_dirty_partitions_ignore_the_writer_clock(tmp_path, spark, monkeypatch):
@@ -328,8 +362,8 @@ def test_compaction_collapses_files_and_preserves_results(tmp_path, spark):
 
     db = str(tmp_path / "db")
     os.makedirs(db)
-    rows = [
-        ("A", (1704067200 + i * 3600) * 10**9, None, {"v": float(i)})
+    rows = [  # hourly points in scrambled order; rows[0] is the earliest
+        ("A", (1704067200 + (i * 7 % 48) * 3600) * 10**9, None, {"v": float(i)})
         for i in range(48)
     ]
     ticks = spark.createDataFrame(
@@ -340,6 +374,7 @@ def test_compaction_collapses_files_and_preserves_results(tmp_path, spark):
     # one LWW overwrite batch
     append_batch(db, ticks.where(F.col("ts") == rows[0][1]).withColumn(
         "value", F.create_map(F.lit("v"), F.lit(99.0))))
+    assert _unsorted_files(f"{db}/ticks") == []
 
     def files():
         return [p for p in glob.glob(f"{db}/ticks/series=*/dt=*/*") if p.endswith(".parquet")]
@@ -351,12 +386,107 @@ def test_compaction_collapses_files_and_preserves_results(tmp_path, spark):
         )
 
     before_files, before_state = len(files()), state()
-    compact(spark, db)
+    # keep one dedup task per shuffle partition, as at scale, so the
+    # files' ts order cannot come from Spark merging them into one
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    coalesce = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        compact(spark, db)
+    finally:
+        spark.conf.set(key, coalesce)
     after_files, after_state = len(files()), state()
     assert before_files > after_files, (before_files, after_files)
     assert after_files == 2  # 48 hourly points span 2 days -> 2 partitions
+    assert _unsorted_files(f"{db}/ticks") == []
     assert after_state == before_state
     assert after_state[0][2] == {"v": 99.0}  # LWW overwrite materialized
+
+
+def test_evolved_columns_survive_delete_and_compact(tmp_path, spark):
+    """A column only some batches carry stays with its rows through every
+    rewrite: ``delete_range`` and ``compact`` keep it."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from tickdb_spark.ingest import append_batch, compact, delete_range, read_ticks
+
+    db = str(tmp_path / "db")
+    t0 = parse_time_ns("2016-08-01T12:00:00Z")
+    evolved = T.StructType([T.StructField("src", T.StringType())])
+
+    def put(points, src):
+        append_batch(db, spark.createDataFrame(
+            [("s", ts, {"v": v}) for ts, v in points],
+            "series string, ts long, value map<string,double>",
+        ).withColumn("src", F.lit(src)))
+
+    def srcs():
+        return sorted(
+            (r["ts"], r["src"])
+            for r in read_ticks(spark, db, evolved_fields=evolved).collect()
+        )
+
+    put([(t0, 1.0), (t0 + NS, 2.0)], "web")
+    delete_range(spark, db, "s", t0, t0 + 1)
+    assert srcs() == [(t0 + NS, "web")]
+    put([(t0 + 2 * NS, 3.0)], "app")
+    compact(spark, db)
+    assert srcs() == [(t0 + NS, "web"), (t0 + 2 * NS, "app")]
+
+
+def test_files_that_store_ts_utc_read_as_before(tmp_path, spark):
+    """A warehouse in the older layout, whose files also store ``ts_utc``,
+    reads like one written now, in clean and dedup mode, also after a
+    newer append; ``compact`` rewrites it without that column."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from tickdb_spark.ingest import append_batch, compact, read_ticks
+    from tickdb_spark.schema import ns_to_dt, ns_to_ts
+
+    t0 = parse_time_ns("2016-08-01T23:00:00Z")  # the points cross midnight
+    batches = [
+        [("s", t0 + i * 1800 * NS, {"v": float(i)}) for i in range(4)],
+        [("s", t0 + 1800 * NS, {"v": 9.0}), ("t", t0, {"v": 5.0})],  # one LWW upsert
+    ]
+    old_db, new_db = str(tmp_path / "old"), str(tmp_path / "new")
+    for seq, rows in enumerate(batches):
+        df = spark.createDataFrame(rows, "series string, ts long, value map<string,double>")
+        append_batch(new_db, df)
+        df.select(
+            "series", "ts", ns_to_ts(F.col("ts")).alias("ts_utc"), "value",
+            F.lit(seq).cast("long").alias("ingest_seq"), ns_to_dt(F.col("ts")).alias("dt"),
+        ).write.mode("append").partitionBy("series", "dt").parquet(f"{old_db}/ticks")
+    with open(f"{old_db}/_meta.json", "w") as f:
+        json.dump({"next_seq": len(batches), "clean": False}, f)
+
+    def files(db):
+        return glob.glob(f"{db}/ticks/**/*.parquet", recursive=True)
+
+    def view(db, **kw):
+        df = read_ticks(spark, db, **kw)
+        assert df.columns == ["series", "ts", "ts_utc", "value", "dt"]
+        return sorted(
+            (r["series"], r["ts"], r["us"], tuple(sorted(r["value"].items())), r["dt"])
+            for r in df.withColumn("us", F.unix_micros("ts_utc")).collect()
+        )
+
+    assert all("ts_utc" in pq.read_schema(f).names for f in files(old_db))
+    for dedup in (False, True):
+        assert view(old_db, dedup=dedup) == view(new_db, dedup=dedup)
+    later = spark.createDataFrame(
+        [("s", t0, {"v": 7.0})], "series string, ts long, value map<string,double>"
+    )
+    for db in (old_db, new_db):
+        append_batch(db, later)
+    assert view(old_db) == view(new_db)
+    compact(spark, old_db)
+    assert files(old_db) and not any("ts_utc" in pq.read_schema(f).names for f in files(old_db))
+    assert view(old_db) == view(new_db)
 
 
 def test_salted_join_equals_plain_join(spark):

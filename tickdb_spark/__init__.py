@@ -3,10 +3,10 @@ data-processing capabilities of vimrus/tickdb (reference: a Go single-node
 time-series store), rebuilt Spark-first.
 
 Design (see SURVEY.md):
-- One canonical ``ticks`` table ``(series, ts, ts_utc, value)`` partitioned
-  by ``(series, dt)`` instead of one file per index
-  (reference: ``database.go:49-69``); ``dt`` is the UTC day of ``ts``,
-  and reads filter on it to open only the days they overlap.
+- One canonical ``ticks`` table ``(series, ts, value)``, time-sorted files
+  partitioned by ``(series, dt)`` instead of one file per index (reference:
+  ``database.go:49-69``); ``dt`` (the UTC day of ``ts``, which reads filter
+  on to open only the days they overlap) and ``ts_utc`` derive from ``ts``.
 - Calendar-bucket aggregation is ``groupBy(date_trunc(...))`` answered by
   Catalyst's partial+final hash aggregate instead of the reference's
   materialized rollup tree (``storage/node.go:39-53``); optional persistent

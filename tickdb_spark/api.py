@@ -54,8 +54,8 @@ class TickDB:
     # -- reads --------------------------------------------------------
     def ticks(self, db: str, as_of_seq: int | None = None) -> DataFrame:
         """Canonical LWW-deduped view of all series in a database:
-        ``(series, ts, ts_utc, value, dt)``, where ``dt`` is the UTC day
-        of ``ts`` and a filter on it prunes the scan to those days.
+        ``(series, ts, ts_utc, value, dt)``; ``ts_utc`` and ``dt`` (its UTC
+        day, a filter on which prunes the scan) are derived from ``ts``.
         ``as_of_seq`` reads the snapshot as of that ingest batch (time
         travel; see :func:`tickdb_spark.ingest.read_ticks`)."""
         return _ingest.read_ticks(

@@ -8,6 +8,10 @@ Reference path: ``POST /{db}`` → ``putDocuments`` → ``dbstore`` → per-doc
 are carried by a monotone ``ingest_seq`` and resolved by dedup-on-read or
 ``compact()`` — the no-Delta equivalent of MERGE.
 
+Layout: each ``series=/dt=`` directory holds files of ``ts``, ``value``,
+``ingest_seq`` and any evolved columns, sorted on ``ts``; ``ts_utc`` is
+derived on read. ``_write_ticks`` writes every one of them.
+
 Scale notes (100 TB): appends are append-only file commits (no read-modify-
 write); dedup-on-read is a single hash aggregate on ``(series, ts)`` that
 partial-aggregates map-side; ``compact()`` amortizes it away; partition
@@ -59,6 +63,8 @@ META_FILE = "_meta.json"
 JOURNAL_FILE = "_commit_journal.json"
 LOCK_FILE = "_writer.lock"
 STAGE_PREFIX = "_stage-"
+#: columns of the table itself; any other column a file holds is evolved
+_CANONICAL = {*TICKS_SCHEMA.fieldNames(), "ts_utc", "dt"}
 
 
 def _meta_path(db_path: str) -> str:
@@ -175,8 +181,8 @@ def _write_meta(db_path: str, meta: dict) -> None:
 
 
 def normalize_docs(spark: SparkSession, docs: list[dict], ingest_seq: int) -> DataFrame:
-    """``[{"time": ..., "index": ..., "value": {...}}]`` → canonical rows,
-    ``ts_utc`` left NULL (``append_batch`` derives it from ``ts``).
+    """``[{"time": ..., "index": ..., "value": {...}}]`` → ``TICKS_SCHEMA``
+    rows, ready for ``append_batch`` (which sets their ``ingest_seq``).
 
     Mirrors the reference's ingest doc shape (``database.go:24-28``) with
     errors propagated instead of swallowed (quirk B10).
@@ -188,7 +194,7 @@ def normalize_docs(spark: SparkSession, docs: list[dict], ingest_seq: int) -> Da
         ts = parse_time_ns(doc["time"])
         value = {str(k): float(v) for k, v in doc["value"].items()}
         key = (str(doc["index"]), ts)
-        rows[key] = (key[0], ts, None, value, ingest_seq)
+        rows[key] = (key[0], ts, value, ingest_seq)
     return spark.createDataFrame(list(rows.values()), TICKS_SCHEMA)
 
 
@@ -240,12 +246,26 @@ def read_table(
     return cachereg.table_scan(spark, (path, schema), version, lambda: reader.parquet(path))
 
 
-def _derived(ticks: DataFrame) -> DataFrame:
-    """``ts_utc`` and ``dt`` derived from ``ts`` (``schema.ns_to_ts``,
-    ``schema.ns_to_dt``), whatever the input carried: every writer stores
-    the day that read bounds compute."""
-    ts = F.col("ts")
-    return ticks.withColumn("ts_utc", ns_to_ts(ts)).withColumn("dt", ns_to_dt(ts))
+def _write_ticks(ticks: DataFrame, dest: str, mode: str) -> None:
+    """Write ``ticks`` as ticks-table data files under ``dest``; the only
+    code that does. ``dt`` is derived from ``ts`` (``ns_to_dt``), so each
+    row lies under the day read bounds compute; ``ts_utc`` is dropped
+    (``read_ticks`` derives it); every other column is kept, so evolved
+    fields survive a rewrite. Each ``(series, dt)`` is one task's one
+    file (2.3× the ingest throughput of one task writing every partition,
+    at sf0.1), sorted on ``ts`` so row-group stats prune ``[from, to)``
+    within a day, as the reference's leaves keep time order
+    (``node.go:229-245``). The sort leads with the partition columns, so
+    the write adds no sort of its own (which would drop the ``ts`` one)."""
+    (
+        ticks.drop("ts_utc")
+        .withColumn("dt", ns_to_dt(F.col("ts")))
+        .repartition("series", "dt")
+        .sortWithinPartitions("series", "dt", "ts")
+        .write.mode(mode)
+        .partitionBy("series", "dt")
+        .parquet(dest)
+    )
 
 
 def append_batch(db_path: str, ticks: DataFrame) -> int:
@@ -255,19 +275,10 @@ def append_batch(db_path: str, ticks: DataFrame) -> int:
     with writer(db_path):
         meta = _read_meta(db_path)
         seq = meta["next_seq"]
-        out = _derived(ticks.withColumn("ingest_seq", F.lit(seq).cast("long")))
-        # Cluster rows by their target partition so each (series, dt) is
-        # written by one task in parallel — one file per partition instead of
-        # one task sequentially emitting every partition's files. (Measured
-        # 2.3× ingest throughput at sf0.1; at cluster scale this is also the
-        # small-files defense.)
-        # Time-sort inside each file: parquet row-group min/max stats on ts
-        # then prune [from, to) scans within a day — the file-level analogue
-        # of the reference's time-sorted leaf order (node.go:229-245).
-        out = out.repartition("series", "dt").sortWithinPartitions("ts")
         path = os.path.join(db_path, TICKS_DIR)
         before = partition_files(path, 2)
-        out.write.mode("append").partitionBy("series", "dt").parquet(path)
+        # ts, value, ingest_seq (+ evolved columns) in (series, dt, ts) order
+        _write_ticks(ticks.withColumn("ingest_seq", F.lit(seq).cast("long")), path, "append")
         # Dirty (series, dt) for incremental rollup refresh (reference:
         # dirty-path tracking, node.go:34 / cursor.go:34-39): every write job
         # names its files with a fresh UUID, so the partitions whose file set
@@ -292,8 +303,9 @@ def read_ticks(
 ) -> DataFrame:
     """Canonical LWW view of a database's ticks: ``(series, ts, ts_utc,
     value, dt)`` plus any evolved fields, where ``dt`` is the UTC day of
-    ``ts`` and the table's date partition. A filter on ``dt`` prunes the
-    scan to those days' files, on the clean path and below the dedup
+    ``ts`` and the table's date partition, and ``ts_utc`` is derived from
+    ``ts`` (``ns_to_ts``), never read from a file. A filter on ``dt``
+    prunes the scan to those days' files, on the clean path and below the dedup
     aggregate alike (``dt`` is one of its keys and depends only on
     ``ts``, so the groups are the same).
 
@@ -348,16 +360,17 @@ def read_ticks(
         dedup = True  # snapshot must LWW-resolve within the retained batches
     if dedup is None:
         dedup = not _read_meta(db_path).get("clean", False)
+    ts_utc = ns_to_ts(F.col("ts")).alias("ts_utc")
     if not dedup:
-        return df.select("series", "ts", "ts_utc", "value", "dt", *extra)
-    latest = F.max_by(F.struct("ts_utc", "value", *extra), "ingest_seq").alias("r")
+        return df.select("series", "ts", ts_utc, "value", "dt", *extra)
+    latest = F.max_by(F.struct("value", *extra), "ingest_seq").alias("r")
     return (
         df.groupBy("series", "ts", "dt")
         .agg(latest)
         .select(
             "series",
             "ts",
-            F.col("r.ts_utc").alias("ts_utc"),
+            ts_utc,
             F.col("r.value").alias("value"),
             "dt",
             *[F.col(f"r.{c}").alias(c) for c in extra],
@@ -369,23 +382,17 @@ def compact(spark: SparkSession, db_path: str) -> None:
     """Materialize the LWW view, replacing the table (Delta-MERGE stand-in).
 
     After compaction ``read_ticks`` serves partition-pruned scans with no
-    dedup shuffle. ``ts_utc`` and ``dt`` are derived from ``ts`` again,
-    so a row a writer once stored under the wrong day moves to its own.
+    dedup shuffle. Every column any file holds is kept, and ``dt`` is
+    derived from ``ts`` again, so a row a writer once stored under the
+    wrong day moves to its own.
     """
     path = os.path.join(db_path, TICKS_DIR)
     with writer(db_path):
-        deduped = read_ticks(spark, db_path, dedup=True).withColumn(
-            "ingest_seq", F.lit(0).cast("long")
-        )
+        union = spark.read.option("mergeSchema", "true").parquet(path).schema
+        evolved = T.StructType([f for f in union.fields if f.name not in _CANONICAL])
+        deduped = read_ticks(spark, db_path, dedup=True, evolved_fields=evolved)
         tmp = _stage_dir(db_path)
-        (
-            _derived(deduped)
-            .repartition("series", "dt")
-            .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .partitionBy("series", "dt")
-            .parquet(tmp)
-        )
+        _write_ticks(deduped.withColumn("ingest_seq", F.lit(0).cast("long")), tmp, "overwrite")
         meta = _read_meta(db_path)
         meta["clean"] = True
         meta["next_seq"] = max(1, meta.get("next_seq", 1))
@@ -419,15 +426,16 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
         }
         if not affected:
             return
+        # every column of the affected files; the series as asked, not inferred
         keep = (
             spark.read.option("basePath", base)
+            .option("mergeSchema", "true")
             .parquet(*affected.values())
             .where(~((F.col("ts") >= frm_ns) & (F.col("ts") < to_ns)))
+            .withColumn("series", F.lit(series))
         )
         tmp = _stage_dir(db_path)
-        keep.select("ts", "ts_utc", "value", "ingest_seq", "dt").write.mode(
-            "overwrite"
-        ).partitionBy("dt").parquet(tmp)
+        _write_ticks(keep, tmp, "overwrite")
         # deletes invalidate rollups for the touched partitions too
         meta = _read_meta(db_path)
         dirty = {tuple(x) for x in meta.get("dirty", [])}
@@ -435,7 +443,8 @@ def delete_range(spark: SparkSession, db_path: str, series: str, frm, to) -> Non
         meta["dirty"] = sorted([list(t) for t in dirty])
         # partitionBy only materializes partitions with surviving rows: an
         # affected partition with no staged replacement just goes away
-        staged = partition_dirs(tmp)
+        staged_series = partition_dirs(tmp).get(series)
+        staged = partition_dirs(staged_series) if staged_series else {}
         swaps = [(ddir, staged.get(day)) for day, ddir in sorted(affected.items())]
         if not staged and len(affected) == len(days):
             swaps.append((series_dir, None))  # no partition of the series is left
@@ -520,12 +529,8 @@ def snapshot_diff(
     if series is not None:
         a = a.where(F.col("series") == series)
         b = b.where(F.col("series") == series)
-    an = a.select(
-        "series", "ts", F.col("ts_utc").alias("_utc_a"), F.col("value").alias("value_a")
-    )
-    bn = b.select(
-        "series", "ts", F.col("ts_utc").alias("_utc_b"), F.col("value").alias("value_b")
-    )
+    an = a.select("series", "ts", F.col("value").alias("value_a"))
+    bn = b.select("series", "ts", F.col("value").alias("value_b"))
     j = an.join(bn, ["series", "ts"], "full")
     norm_a = F.array_sort(F.map_entries(F.col("value_a")))
     norm_b = F.array_sort(F.map_entries(F.col("value_b")))
@@ -538,11 +543,6 @@ def snapshot_diff(
         j.withColumn("change", change)
         .where(F.col("change").isNotNull())
         .select(
-            "series",
-            "ts",
-            F.coalesce(F.col("_utc_b"), F.col("_utc_a")).alias("ts_utc"),
-            "change",
-            "value_a",
-            "value_b",
+            "series", "ts", ns_to_ts(F.col("ts")).alias("ts_utc"), "change", "value_a", "value_b"
         )
     )

@@ -3713,7 +3713,6 @@ def _lifecycle_warehouse(spark: SparkSession, sf_dir: str) -> str:
         upserts = ev.where((F.col("event_type") == "click") & (F.col("user_id") < 10)).select(
             F.col("event_type").alias("series"),
             F.col("ts"),
-            F.timestamp_micros(F.expr("ts div 1000")).alias("ts_utc"),
             F.create_map(F.lit("value"), F.col("value") * 2).alias("value"),
         )
         _append_batch(db_path, upserts)
@@ -3814,7 +3813,6 @@ def _evolution_warehouse(spark: SparkSession, sf_dir: str) -> str:
         v2 = _read_events(spark, sf_dir).where(F.col("event_type") == "click").select(
             F.lit("evolved").alias("series"),
             F.col("ts"),
-            F.timestamp_micros(F.expr("ts div 1000")).alias("ts_utc"),
             F.create_map(F.lit("value"), F.col("value")).alias("value"),
             F.expr(_EVO_SRC_EXPR).alias("src"),
         )
@@ -4022,7 +4020,6 @@ def _fragmented_warehouse(spark: SparkSession, sf_dir: str) -> str:
         ).select(
             F.col("event_type").alias("series"),
             F.col("ts"),
-            F.timestamp_micros(F.expr("ts div 1000")).alias("ts_utc"),
             F.create_map(F.lit("value"), F.col("value") * 3).alias("value"),
         )
         _append_batch(db_path, upserts)

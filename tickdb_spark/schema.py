@@ -8,11 +8,12 @@ anti-pattern at 100 TB, while ``partitionBy(series, date)`` gives the same
 pruning the reference gets from its file-per-index + time-tree descent.
 
 ``ts`` stays authoritative BIGINT nanoseconds (Spark TimestampType is
-µs-only); ``ts_utc`` is the derived µs timestamp used for calendar ops,
-and ``dt`` (the date partition) the UTC day of ``ts``. Both derive from
-``ts`` by integer floor division, never through a double: the stored
-``dt`` and the day bounds a read prunes with (``ns_to_day``) must agree
-to the nanosecond, or a tick next to midnight is pruned away.
+µs-only) and is the only time the table stores; ``ts_utc``, the µs
+timestamp used for calendar ops, is derived from it on read, and ``dt``
+(the date partition) is the UTC day of ``ts``. Both derive from ``ts``
+by integer floor division, never through a double: the stored ``dt``
+and the day bounds a read prunes with (``ns_to_day``) must agree to the
+nanosecond, or a tick next to midnight is pruned away.
 """
 
 from __future__ import annotations
@@ -28,13 +29,13 @@ NS_PER_SECOND = 1_000_000_000
 NS_PER_DAY = 86_400 * NS_PER_SECOND
 _EPOCH_DAY = _dt.date(1970, 1, 1)
 
-#: Canonical tick table: the reference's open per-point field map
-#: (schemaless, ``storage/point.go:8-11``) becomes a MapType column.
+#: Canonical tick table (``ts_utc`` is derived on read, not stored): the
+#: reference's open per-point field map (schemaless,
+#: ``storage/point.go:8-11``) becomes a MapType column.
 TICKS_SCHEMA = T.StructType(
     [
         T.StructField("series", T.StringType(), False),
         T.StructField("ts", T.LongType(), False),  # epoch nanoseconds
-        T.StructField("ts_utc", T.TimestampType(), True),  # derived, µs
         T.StructField("value", T.MapType(T.StringType(), T.DoubleType()), True),
         # Monotone per-batch sequence for last-write-wins upsert semantics
         # (reference replaces the whole value map on duplicate ts,
