@@ -242,6 +242,19 @@ def test_compact_keeps_a_series_name_that_reads_as_a_number(tmp_path, spark):
     assert tdb.get("db1", "007", "2016-08-01T12:00:00Z") == {"v": 2.0}
 
 
+def test_a_series_name_that_reads_as_a_number_stays_a_string(tmp_path, spark):
+    """The default read path keeps series ``007`` a string; an inferred
+    partition type would read ``series=007`` back as the integer 7."""
+    from pyspark.sql import types as T
+
+    tdb = _mk(tmp_path, spark)
+    tdb.put("db1", [{"time": "2016-08-01T12:00:00Z", "index": "007", "value": {"v": 1.0}}])
+    ticks = tdb.ticks("db1")
+    assert ticks.schema["series"].dataType == T.StringType()
+    assert [r.series for r in ticks.select("series").collect()] == ["007"]
+    assert tdb.get("db1", "007", "2016-08-01T12:00:00Z") == {"v": 1.0}
+
+
 def test_dirty_partitions_ignore_the_writer_clock(tmp_path, spark, monkeypatch):
     """Append dirty tracking reads no clock: with the writer's clock an
     hour ahead of the filesystem's, a batch that crosses midnight still
@@ -945,12 +958,16 @@ def _jobs(spark, group, fn):
 
 
 def test_second_read_of_an_unchanged_table_runs_no_job(tmp_path, spark):
-    """Listing and schema inference run once per table version, so a
-    repeated read builds its frame without any Spark job."""
+    """Listing runs once per table version, so a repeated read builds its
+    frame without any Spark job. The series spans 33 day directories, more
+    than ``parallelPartitionDiscovery.threshold`` (32), so the first read
+    lists them in a Spark job; the read schema is fixed, so no job infers
+    one."""
     from tickdb_spark.ingest import read_ticks
 
     tdb = _mk(tmp_path, spark)
-    tdb.put("db1", [{"time": "2016-08-01T12:00:00Z", "index": "s", "value": {"v": 1.0}}])
+    t0, day = parse_time_ns("2016-08-01T12:00:00Z"), 86_400 * 10**9
+    tdb.put("db1", [{"time": t0 + d * day, "index": "s", "value": {"v": 1.0}} for d in range(33)])
     db = tdb.catalog._existing("db1")
     assert _jobs(spark, f"first-{db}", lambda: read_ticks(spark, db)) > 0
     assert _jobs(spark, f"second-{db}", lambda: read_ticks(spark, db)) == 0

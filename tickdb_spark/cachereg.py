@@ -71,6 +71,26 @@ runs no file-listing or schema-inference job per request.
   file index, never data.
 * *Eviction*: a context change, or ``evict_all()``.
 
+**Generated classes** — the Janino-compiled classes of whole-stage code
+generation and generated projections. Nothing here holds them; they are
+listed so that this cache too has a stated owner and size.
+
+* *Owner*: Spark's JVM-wide ``CodeGenerator`` cache. It is sized when
+  the JVM generates its first class, so only sessions ``get_spark``
+  builds get the size below; a session someone else builds first keeps
+  Spark's default (100).
+* *Key*: the generated source (with the loading class loader). Long and
+  date literals are inlined into the source, so only identical plans
+  hit: a sliding-window read whose bounds move with every request never
+  does.
+* *Capacity*: ``spark.sql.codegen.cache.maxEntries`` in
+  ``session._BASE_CONF`` (1000), above the measured working sets (163
+  classes per opbank pass; 40 for serve's set-up plus 146 per round over
+  its request pool), so a repeated plan compiles once per JVM.
+* *Eviction*: least recently used, once the cache is full (Guava's
+  per-segment approximation). Nothing evicts it on a context change:
+  the classes outlive sessions in the same JVM.
+
 Out of scope: persistence inside one entry's plan (``.cache()`` or
 ``localCheckpoint`` of a frame several branches of one action read)
 belongs to that plan. Never memoize an entry's own output frame: that

@@ -342,7 +342,7 @@ def read_ticks(
     # table dir itself may be mid-swap, so this must precede the read
     path = os.path.join(db_path, TICKS_DIR)
     extra: list[str] = []
-    schema = None
+    schema = TICKS_SCHEMA  # never inferred: series ``007`` stays a string
     if evolved_fields is not None:
         extra = list(evolved_fields.fieldNames())
         schema = T.StructType(

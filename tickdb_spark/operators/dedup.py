@@ -495,15 +495,6 @@ def _sigs_from_hashed(sh: DataFrame, k: int) -> DataFrame:
     return sh.groupBy("id").agg(*aggs)
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, k: int = MINHASH_K
-) -> DataFrame:
-    """k-permutation MinHash signature per doc: mh_i = min((a_i·h + b_i)
-    mod P) over shingles, h = 44-bit md5 prefix. One md5 per shingle +
-    one groupBy with k integer min-aggregates (map-side partial)."""
-    return _sigs_from_hashed(_hashed_shingles(df, text_col, id_col), k)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,

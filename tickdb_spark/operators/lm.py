@@ -51,19 +51,6 @@ def _doc_bigrams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def bigram_model(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    train_fraction: float = 0.5,
-) -> DataFrame:
-    """Train-split bigram counts: ``(bigram, model_count)``."""
-    train = hash_sample(docs, id_col, train_fraction)
-    return (
-        _doc_bigrams(train, text_col, id_col)
-        .groupBy("bigram")
-        .agg(F.sum("mult").cast("long").alias("model_count"))
-    )
-
-
 def bigram_familiarity(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     train_fraction: float = 0.5,

@@ -86,11 +86,6 @@ def ns_to_day(ns: int) -> _dt.date:
     return _EPOCH_DAY + _dt.timedelta(days=ns // NS_PER_DAY)
 
 
-def ts_to_ns(col: Column) -> Column:
-    """TimestampType → BIGINT epoch-ns (µs-precise)."""
-    return F.unix_micros(col) * NS_PER_US
-
-
 def parse_time_ns(s: str | int | _dt.datetime) -> int:
     """Parse a time spec to epoch nanoseconds.
 

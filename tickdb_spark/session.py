@@ -33,6 +33,14 @@ _BASE_CONF = {
     # Parquet TIMESTAMP(NANOS) columns (e.g. the driver's events table)
     # surface as BIGINT epoch-ns — the engine's native tick resolution.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated-class cache (``cachereg``'s policy docstring): Spark's
+    # default of 100 classes is below this engine's working set. One
+    # opbank pass generates 163 classes; serve's set-up 40 and one round
+    # over its 42-request pool 146 more. At 100, LRU evicted them between
+    # passes, so Janino recompiled 78-105 classes per later opbank pass
+    # and 120 per serve round, and the JIT warmed each new class again;
+    # at this size a second pass compiles none.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

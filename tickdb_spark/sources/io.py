@@ -49,28 +49,6 @@ def write_any(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "error
     writer.options(**options).save(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a bucketed (hash-clustered) managed table: rows with equal
-    bucket-key hashes land in the same bucket file, so a join or
-    aggregation on the bucket columns needs NO shuffle — both sides are
-    already co-partitioned on disk. This is the persistent form of
-    ``repartition``: pay the shuffle once at write time, skip it on every
-    subsequent join (the big-fact ⋈ big-fact pattern a broadcast can't
-    cover at 100 TB). ``sort_cols`` additionally orders within buckets
-    (sort-merge joins then skip the sort too)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
 def read_tick_docs(spark: SparkSession, path: str, fmt: str = "json", **options) -> DataFrame:
     """Read ingest-doc batches ({time, index, value{}}) and normalize to
     canonical tick rows (series, ts, ts_utc, value). CSV carries the field
