@@ -16,6 +16,7 @@ module) by walking code objects' global and attribute names
 transitively through ``tickdb_spark``; it prints them before running.
 """
 
+import argparse
 import importlib
 import inspect
 import os
@@ -132,19 +133,37 @@ def _driver_like_spark():
     return spark
 
 
+def _entries(argv: list[str], qs: dict) -> list[str]:
+    """The registry entries the command line names; exits (usage or an
+    error) before any Spark session starts."""
+    p = argparse.ArgumentParser(
+        description="Run registry entries against the DuckDB oracle.",
+        epilog="With no entry and no --reaching: the head-50 the driver samples.",
+    )
+    p.add_argument("names", nargs="*", metavar="entry", help="registry entries, or 'all'")
+    p.add_argument(
+        "--reaching", metavar="FN,FN",
+        help="the entries whose construction reaches these functions or classes",
+    )
+    a = p.parse_args(argv)
+    if a.reaching is not None:
+        if a.names:
+            p.error("give entry names or --reaching, not both")
+        names = reaching(set(a.reaching.split(",")), qs)
+        print(f"{len(names)} entries reach {a.reaching}: {' '.join(names)}")
+        return names
+    if a.names == ["all"]:
+        return list(qs)
+    unknown = [n for n in a.names if n not in qs]
+    if unknown:
+        p.error(f"unknown entries: {' '.join(unknown)}")
+    return a.names or list(qs)[:50]
+
+
 def main() -> int:
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     qs, osql = E.queries(), E.oracle_sql()
-    args = sys.argv[1:]
-    if not args:
-        names = list(qs)[:50]
-    elif args == ["all"]:
-        names = list(qs)
-    elif args[0] == "--reaching":
-        names = reaching(set(args[1].split(",")), qs)
-        print(f"{len(names)} entries reach {args[1]}: {' '.join(names)}")
-    else:
-        names = args
+    names = _entries(sys.argv[1:], qs)
     spark = _driver_like_spark()
 
     def oracle(sql: str):

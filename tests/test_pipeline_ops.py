@@ -609,7 +609,8 @@ def test_multitable_lsh_recall_floor(spark):
         return len(g & d) / len(g)
 
     r1, rm = recall(one), recall(multi)
-    # measured on this corpus (scripts/bench_ann_recall.py sweep): single
+    # measured on this corpus (scripts/bench_ann_recall.py sweep, since
+    # deleted: git log --diff-filter=D -- scripts/bench_ann_recall.py): single
     # 0.147, r7 default 24x6 0.767 at 32.5% candidates — floor at 0.70
     # pins the VERDICT r6 ask (>=0.7 recall under 60% candidate volume)
     # with noise margin only
@@ -703,7 +704,9 @@ def test_neardup_decontam_catches_paraphrases_exact_misses(spark):
     misses nearly all of them) are near-dups that MinHash-LSH + Jaccard
     verification still catches (3-gram shingle Jaccard ~= 0.44 >= the
     0.4 verify threshold). Measured at sf0.01 (scripts/
-    measure_decontam_replant.py): exact 1/50, LSH(12 bands) 50/50."""
+    measure_decontam_replant.py, since deleted: ``git log --diff-filter=D
+    -- scripts/measure_decontam_replant.py``): exact 1/50, LSH(12 bands)
+    50/50."""
     from pyspark.sql import functions as F
 
     from tickdb_spark.operators.decontam import (

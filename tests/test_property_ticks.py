@@ -17,7 +17,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from tickdb_spark.api import TickDB
-from tickdb_spark.ingest import _read_meta, _write_meta
+from tickdb_spark.ingest import manifest
 from tickdb_spark.schema import NS_PER_SECOND
 
 BASE = 1470092400  # 2016-08-01T23:00:00Z: batches cross midnight
@@ -103,15 +103,18 @@ def test_engine_matches_oracle_on_random_batches(batches, tdb_factory):
             }
             for d in batch
         ]
+        before = {tuple(p) for p in manifest(path)["dirty"]}
         tdb.put("p", docs)
-        # dirty grew from empty by exactly this batch's (series, dt)
-        meta = _read_meta(path)
-        assert {tuple(p) for p in meta["dirty"]} == {
+        # the commit added files in exactly this batch's (series, dt), and
+        # dirty grew by them
+        m = manifest(path)
+        files = {f["path"]: f for f in m["tables"]["ticks"]}
+        touched = {(files[p]["series"], files[p]["dt"]) for p in m["commit"]["added"]}
+        assert touched == {
             (d["series"], str(dt.datetime.fromtimestamp(BASE + d["off"], dt.timezone.utc).date()))
             for d in batch
         }
-        meta["dirty"] = []  # consumed, as a rollup refresh does
-        _write_meta(path, meta)
+        assert {tuple(p) for p in m["dirty"]} == before | touched
 
     out = tdb.query(
         "p",

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from tickdb_spark.api import TickDB
+from tickdb_spark.ingest import expire_before
 from tickdb_spark.rollup import RollupStore, route_tick_query
 from tickdb_spark.tickquery import run_tick_query
 
@@ -182,7 +183,7 @@ def test_rollup_scan_is_smaller(db, spark):
 def test_incremental_refresh_matches_full(tmp_path, spark):
     """Incremental refresh after new batches + a delete must produce the
     same rollup tables as a full rebuild."""
-    from tickdb_spark.ingest import _read_meta
+    from tickdb_spark.ingest import manifest
 
     tdb = TickDB(spark, str(tmp_path / "wh"))
     tdb.create_db("inc")
@@ -194,7 +195,7 @@ def test_incremental_refresh_matches_full(tmp_path, spark):
     tdb.put("inc", batch1)
     store = RollupStore(spark, path)
     store.refresh(("minute", "hour", "day", "month"))
-    assert _read_meta(path)["dirty"] == []
+    assert manifest(path)["dirty"] == []
 
     # new batch: new dates AND an upsert of an existing (series, ts)
     batch2 = [
@@ -205,10 +206,10 @@ def test_incremental_refresh_matches_full(tmp_path, spark):
     tdb.put("inc", batch2)
     # delete a slice of series b (dirties its partitions too)
     tdb.delete("inc", "b", "2016-08-20T00:00:00Z", "2016-08-21T00:00:00Z")
-    assert _read_meta(path)["dirty"] != []
+    assert manifest(path)["dirty"] != []
 
     store.refresh_incremental()
-    assert _read_meta(path)["dirty"] == []
+    assert manifest(path)["dirty"] == []
     incremental = {
         u: sorted(
             (r["series"], r["bucket"], r["field"], float(r["sum"]), r["count"],
@@ -291,9 +292,11 @@ def test_refresh_salted_write_bounds_files_per_series(db, spark, tmp_path):
     writers and files per series — at most SPLITS_PER_SERIES parquet
     files in any series dir at any level (the small-files guarantee the
     removed per-series exchange used to give, without its one-writer-
-    per-series straggler). Full and incremental refreshes share it."""
-    import os
+    per-series straggler). Full and incremental refreshes share it; the
+    files counted are those the level's table lists in the manifest."""
+    from collections import Counter
 
+    from tickdb_spark.ingest import manifest
     from tickdb_spark.rollup import SPLITS_PER_SERIES
 
     tdb = TickDB(spark, str(tmp_path / "wh"))
@@ -313,15 +316,8 @@ def test_refresh_salted_write_bounds_files_per_series(db, spark, tmp_path):
     RollupStore(spark, incremental).refresh_incremental()
     for path in (db[1], incremental):
         for unit in ("minute", "hour", "day"):
-            lvl = os.path.join(path, "rollups", unit)
-            assert os.path.isdir(lvl)
-            per_series = {}
-            for root, _dirs, files in os.walk(lvl):
-                pq = [f for f in files if f.endswith(".parquet")]
-                if pq and "series=" in root:
-                    key = [p for p in root.split(os.sep) if p.startswith("series=")][0]
-                    per_series[key] = per_series.get(key, 0) + len(pq)
-            assert per_series, f"no series dirs under {lvl}"
+            per_series = Counter(f["series"] for f in manifest(path)["tables"][f"rollups/{unit}"])
+            assert per_series, f"no files in level {unit}"
             assert max(per_series.values()) <= SPLITS_PER_SERIES, (unit, per_series)
 
 
@@ -407,9 +403,11 @@ def _rollup_rows(df):
 
 def test_rollup_scan_reuse_follows_refreshes(tmp_path, spark):
     """RollupStore.read reuses a level's scan until a full or incremental
-    refresh rewrites the level; the next read equals an uncached one."""
+    refresh rewrites the level; the next read equals an uncached read of
+    the files the newest manifest lists."""
     import os
 
+    from tickdb_spark.ingest import manifest
     from tickdb_spark.rollup import LEVELS
 
     tdb, path = _two_series_db(tmp_path, spark, "ru")
@@ -417,7 +415,8 @@ def test_rollup_scan_reuse_follows_refreshes(tmp_path, spark):
 
     def check():
         for unit in LEVELS:
-            fresh = spark.read.parquet(os.path.join(path, "rollups", unit))
+            files = [os.path.join(path, f["path"]) for f in manifest(path)["tables"][f"rollups/{unit}"]]
+            fresh = spark.read.option("basePath", os.path.join(path, "rollups", unit)).parquet(*files)
             assert _rollup_rows(store.read(unit)) == _rollup_rows(fresh), unit
 
     check()
@@ -526,30 +525,39 @@ def test_result_order_of_raw_and_routed_bucket_queries(tmp_path, spark, unshrunk
     assert rows(tdb.query("o", plain)) == want
 
 
-def _crash_on_call(m, n):
-    """Make the (n+1)-th ``os.rename`` or ``shutil.rmtree`` call, counted
-    together, raise: a crash injected at one step of a rewrite."""
+def _crash_on_call(m, db, n):
+    """Make the (n+1)-th step of a commit raise, counting together its
+    Spark data writes, the ``os.link`` that publishes its manifest and
+    every ``os.remove`` under the database (the temp manifest, the files
+    it drops, the older manifests), with no grace period, so a crash
+    lands after a data write, at or after the publish, or during the
+    deletion."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     import tickdb_spark.ingest as ing
 
     calls = {"k": 0}
 
-    def crashing(real):
+    def crashing(real, counts=lambda *a: True):
         def call(*a, **kw):
-            if calls["k"] >= n:
-                raise RuntimeError("injected crash")
-            calls["k"] += 1
+            if counts(*a):
+                if calls["k"] >= n:
+                    raise RuntimeError("injected crash")
+                calls["k"] += 1
             return real(*a, **kw)
 
         return call
 
-    m.setattr(ing.os, "rename", crashing(ing.os.rename))
-    m.setattr(ing.shutil, "rmtree", crashing(ing.shutil.rmtree))
+    m.setattr(ing, "GRACE_S", 0.0)
+    m.setattr(DataFrameWriter, "parquet", crashing(DataFrameWriter.parquet))
+    m.setattr(ing.os, "link", crashing(ing.os.link))
+    m.setattr(ing.os, "remove", crashing(ing.os.remove, lambda path: path.startswith(db)))
 
 
 _REWRITES = {
-    "refresh": lambda tdb, store: store.refresh(),
-    "refresh_incremental": lambda tdb, store: store.refresh_incremental(),
-    "drop_index": lambda tdb, store: tdb.drop_index("cr", "b"),
+    "refresh": lambda tdb, store, name: store.refresh(),
+    "refresh_incremental": lambda tdb, store, name: store.refresh_incremental(),
+    "drop_index": lambda tdb, store, name: tdb.drop_index(name, "b"),
 }
 
 
@@ -563,11 +571,14 @@ def test_rollup_rewrite_crash_rolls_forward(
     tmp_path, spark, monkeypatch, rewrite, calls_before_crash
 ):
     """A crash at any step of a full refresh, an incremental refresh or
-    an index drop is finished by the next read's recover(): every level
-    then holds the rows of an uninterrupted run, no staging dir is left
-    behind, and a later incremental refresh runs."""
+    an index drop leaves every level with the rows it had before (crash
+    before the publish) or with those of an uninterrupted run (at or
+    after it), every file the manifest lists on disk, and a rerun ending
+    where one uninterrupted run does."""
     import os
+    import shutil
 
+    from tickdb_spark.ingest import manifest
     from tickdb_spark.rollup import LEVELS
 
     tdb = TickDB(spark, str(tmp_path / "wh"))
@@ -580,23 +591,139 @@ def test_rollup_rewrite_crash_rolls_forward(
     store = RollupStore(spark, path)
     store.refresh()
     tdb.put("cr", [{"time": "2016-08-03T07:00:00Z", "index": "a", "value": {"v": 10.0}}])
-    before = {u: _rollup_rows(store.read(u)) for u in LEVELS}
+    shutil.copytree(path, os.path.join(tmp_path, "wh", "cr2"))
+    store2 = RollupStore(spark, tdb.catalog._existing("cr2"))
+    _REWRITES[rewrite](tdb, store2, "cr2")
+
+    def state(s, name):
+        return {u: _rollup_rows(s.read(u)) for u in LEVELS}, sorted(
+            (r["series"], r["ts"]) for r in tdb.ticks(name).collect()
+        )
+
+    before, n = state(store, "cr"), manifest(path)["n"]
+    uninterrupted = state(store2, "cr2")
+    assert uninterrupted != before
     with monkeypatch.context() as m:
-        _crash_on_call(m, calls_before_crash)
+        _crash_on_call(m, path, calls_before_crash)
         with pytest.raises(RuntimeError, match="injected crash"):
-            _REWRITES[rewrite](tdb, store)
-    tdb.ticks("cr")  # any read rolls the journaled commit forward
-    got = {u: _rollup_rows(store.read(u)) for u in LEVELS}
-    assert sorted(os.listdir(os.path.join(path, "rollups"))) == sorted(LEVELS)
-    assert not [n for n in os.listdir(path) if n.startswith("_stage-")]
-    store.refresh_incremental()
-    if rewrite == "drop_index":
-        expected = {u: [r for r in rows if r[0] != "b"] for u, rows in before.items()}
+            _REWRITES[rewrite](tdb, store, "cr")
+    published = manifest(path)["n"] > n
+    assert state(store, "cr") == (uninterrupted if published else before)
+    listed = [f["path"] for fs in manifest(path)["tables"].values() for f in fs]
+    assert all(os.path.isfile(os.path.join(path, p)) for p in listed)
+    _REWRITES[rewrite](tdb, store, "cr")
+    assert state(store, "cr") == uninterrupted
+
+
+@pytest.fixture(scope="module")
+def crash_base(tmp_path_factory, spark):
+    """A database with rollups built, then an upsert and a new tick (so
+    every rewrite has work), and a cache of each rewrite's uninterrupted
+    result."""
+    wh = tmp_path_factory.mktemp("crash_base")
+    tdb = TickDB(spark, str(wh))
+    tdb.create_db("base")
+    tdb.put("base", [
+        {"time": f"2016-08-0{d}T06:00:00Z", "index": s, "value": {"v": float(d)}}
+        for s, days in (("a", (1, 2, 3)), ("b", (1,))) for d in days
+    ])
+    RollupStore(spark, tdb.catalog._existing("base")).refresh()
+    tdb.put("base", [
+        {"time": "2016-08-01T06:00:00Z", "index": "a", "value": {"v": 5.0}},
+        {"time": "2016-08-03T07:00:00Z", "index": "a", "value": {"v": 10.0}},
+    ])
+    return tdb.catalog._existing("base"), {}
+
+
+_OPS = {
+    "compact": lambda tdb, store, name: tdb.compact(name),
+    "delete_range": lambda tdb, store, name: tdb.delete(
+        name, "a", "2016-08-02T00:00:00Z", "2016-08-03T07:00:00Z"
+    ),
+    "expire_before": lambda tdb, store, name: expire_before(
+        tdb.spark, store.db_path, "2016-08-02T00:00:00Z"
+    ),
+    **_REWRITES,
+}
+
+
+def _crash_at(m, db, point):
+    """Crash a commit before its manifest's link (``write``: its data
+    files, if any, are written), right after the link (``publish``), or
+    at the first removal of a data file it drops (``delete``). With no
+    grace period, the commit deletes what it drops."""
+    import tickdb_spark.ingest as ing
+
+    link, remove = ing.os.link, ing.os.remove
+
+    def crash(*a):
+        raise RuntimeError("injected crash")
+
+    def linked(*a):
+        link(*a)
+        crash()
+
+    def removing(path):
+        if path.startswith(db) and path.endswith(".parquet"):
+            crash()
+        return remove(path)
+
+    m.setattr(ing, "GRACE_S", 0.0)
+    if point == "delete":
+        m.setattr(ing.os, "remove", removing)
     else:
-        store.refresh()
-        expected = {u: _rollup_rows(store.read(u)) for u in LEVELS}
-        assert ("a", 1470207600 * 10**9) in {r[:2] for r in expected["hour"]}
-    assert got == expected
+        m.setattr(ing.os, "link", crash if point == "write" else linked)
+
+
+@pytest.mark.parametrize("point", ["write", "publish", "delete"])
+@pytest.mark.parametrize("op", list(_OPS))
+def test_every_rewrite_ends_like_an_uninterrupted_run_at_every_crash_point(
+    tmp_path, spark, monkeypatch, crash_base, op, point
+):
+    """For every rewrite and every crash point: a crash before the
+    publish leaves the old rows exactly, one at or after it the rows of
+    an uninterrupted run (ticks, every rollup level, the catalog and the
+    manifest's fields), every file the manifest lists is on disk, and a
+    rerun ends where one uninterrupted run does."""
+    import os
+    import shutil
+
+    from tickdb_spark.ingest import manifest
+    from tickdb_spark.rollup import LEVELS
+
+    base, done = crash_base
+    tdb = TickDB(spark, str(tmp_path))
+
+    def copy(name):
+        shutil.copytree(base, tmp_path / name)
+        return RollupStore(spark, str(tmp_path / name))
+
+    def state(store, name):
+        m = manifest(store.db_path)
+        return (
+            {u: _rollup_rows(store.read(u)) for u in LEVELS},
+            sorted((r["series"], r["ts"], r["value"]["v"]) for r in tdb.ticks(name).collect()),
+            tdb.catalog.list_indexes(name),
+            [m[k] for k in ("next_seq", "clean", "dirty", "history_from_seq", "expired_before_ns")],
+        )
+
+    if op not in done:
+        _OPS[op](tdb, copy("u"), "u")
+        done[op] = state(RollupStore(spark, str(tmp_path / "u")), "u")
+    store = copy("c")
+    before, n = state(store, "c"), manifest(store.db_path)["n"]
+    assert done[op] != before
+    with monkeypatch.context() as m:
+        _crash_at(m, store.db_path, point)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            _OPS[op](tdb, store, "c")
+    published = manifest(store.db_path)["n"] > n
+    assert published is (point != "write")
+    assert state(store, "c") == (done[op] if published else before)
+    listed = [f["path"] for fs in manifest(store.db_path)["tables"].values() for f in fs]
+    assert all(os.path.isfile(os.path.join(store.db_path, p)) for p in listed)
+    _OPS[op](tdb, store, "c")
+    assert state(store, "c") == done[op]
 
 
 @pytest.mark.parametrize("levels, files", [

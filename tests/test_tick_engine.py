@@ -261,7 +261,7 @@ def test_dirty_partitions_ignore_the_writer_clock(tmp_path, spark, monkeypatch):
     marks both of its days dirty."""
     import time
 
-    from tickdb_spark.ingest import _read_meta
+    from tickdb_spark.ingest import manifest
 
     tdb = _mk(tmp_path, spark)
     real = time.time
@@ -271,7 +271,7 @@ def test_dirty_partitions_ignore_the_writer_clock(tmp_path, spark, monkeypatch):
             {"time": "2016-08-01T23:59:00Z", "index": "s", "value": {"v": 1.0}},
             {"time": "2016-08-02T00:01:00Z", "index": "s", "value": {"v": 2.0}},
         ])
-    meta = _read_meta(tdb.catalog._existing("db1"))
+    meta = manifest(tdb.catalog._existing("db1"))
     assert meta["dirty"] == [["s", "2016-08-01"], ["s", "2016-08-02"]]
 
 
@@ -363,10 +363,10 @@ def test_bucket_edges_f4(tmp_path, spark):
 
 def test_compaction_collapses_files_and_preserves_results(tmp_path, spark):
     """compact() must (a) shrink the per-partition file spray from
-    multi-batch appends back to one file per (series, dt), and (b) leave
+    multi-batch appends back to one file per (series, dt) in the table
+    its manifest lists, and (b) leave
     query results bit-identical while flipping reads to the clean
     (no-dedup-shuffle) path."""
-    import glob
     import os
 
     from pyspark.sql import functions as F
@@ -390,7 +390,7 @@ def test_compaction_collapses_files_and_preserves_results(tmp_path, spark):
     assert _unsorted_files(f"{db}/ticks") == []
 
     def files():
-        return [p for p in glob.glob(f"{db}/ticks/series=*/dt=*/*") if p.endswith(".parquet")]
+        return _table_files(db)
 
     def state():
         return sorted(
@@ -449,16 +449,15 @@ def test_evolved_columns_survive_delete_and_compact(tmp_path, spark):
 
 
 def test_files_that_store_ts_utc_read_as_before(tmp_path, spark):
-    """A warehouse in the older layout, whose files also store ``ts_utc``,
-    reads like one written now, in clean and dedup mode, also after a
-    newer append; ``compact`` rewrites it without that column."""
-    import glob
-    import json
-
+    """A warehouse in the older layout, whose files also store ``ts_utc``
+    and which has no manifest, reads like one written now, in clean and
+    dedup mode, also after a newer append: its first read lists it into
+    manifest 0, with ``next_seq`` after the highest stored batch.
+    ``compact`` rewrites it without that column."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from tickdb_spark.ingest import append_batch, compact, read_ticks
+    from tickdb_spark.ingest import append_batch, compact, manifest, read_ticks
     from tickdb_spark.schema import ns_to_dt, ns_to_ts
 
     t0 = parse_time_ns("2016-08-01T23:00:00Z")  # the points cross midnight
@@ -474,11 +473,9 @@ def test_files_that_store_ts_utc_read_as_before(tmp_path, spark):
             "series", "ts", ns_to_ts(F.col("ts")).alias("ts_utc"), "value",
             F.lit(seq).cast("long").alias("ingest_seq"), ns_to_dt(F.col("ts")).alias("dt"),
         ).write.mode("append").partitionBy("series", "dt").parquet(f"{old_db}/ticks")
-    with open(f"{old_db}/_meta.json", "w") as f:
-        json.dump({"next_seq": len(batches), "clean": False}, f)
 
     def files(db):
-        return glob.glob(f"{db}/ticks/**/*.parquet", recursive=True)
+        return _table_files(db)
 
     def view(db, **kw):
         df = read_ticks(spark, db, **kw)
@@ -491,6 +488,7 @@ def test_files_that_store_ts_utc_read_as_before(tmp_path, spark):
     assert all("ts_utc" in pq.read_schema(f).names for f in files(old_db))
     for dedup in (False, True):
         assert view(old_db, dedup=dedup) == view(new_db, dedup=dedup)
+    assert manifest(old_db)["next_seq"] == len(batches)
     later = spark.createDataFrame(
         [("s", t0, {"v": 7.0})], "series string, ts long, value map<string,double>"
     )
@@ -665,18 +663,60 @@ def test_snapshot_diff_classifies_all_three_changes(tmp_path, spark):
     assert snapshot_diff(spark, db, 1, 1).count() == 0
 
 
-def _crash_after(monkeypatch_ctx, module_obj, attr, n, exc_msg):
-    """Patch module_obj.attr so the (n+1)-th call raises — crash injection."""
-    real = getattr(module_obj, attr)
-    calls = {"k": 0}
+def _table_files(db, table="ticks"):
+    """A table's data files as the database's newest manifest lists them."""
+    from tickdb_spark.ingest import manifest
 
-    def wrapper(*a, **kw):
-        if calls["k"] >= n:
-            raise RuntimeError(exc_msg)
-        calls["k"] += 1
-        return real(*a, **kw)
+    return [f"{db}/{f['path']}" for f in manifest(db)["tables"].get(table, [])]
 
-    monkeypatch_ctx.setattr(module_obj, attr, wrapper)
+
+def _crash_at_publish(m, published):
+    """Crash a commit at its publish, after its data files are written:
+    before the manifest's link (``published=0``: nothing commits) or
+    right after it (``published=1``: the commit is in, deleting the files
+    it drops is not)."""
+    import tickdb_spark.ingest as ing
+
+    real = ing.os.link
+
+    def link(*a, **kw):
+        if published:
+            real(*a, **kw)
+        raise RuntimeError("injected crash")
+
+    m.setattr(ing.os, "link", link)
+
+
+def _crash_in_deletion(m, db, removals):
+    """With no grace period, crash a commit after ``removals`` removals
+    of the data and checksum files it drops."""
+    import tickdb_spark.ingest as ing
+
+    m.setattr(ing, "GRACE_S", 0.0)
+    real, calls = ing.os.remove, {"k": 0}
+
+    def remove(path):
+        if path.startswith(db) and ing.MANIFEST_DIR not in path:
+            if calls["k"] >= removals:
+                raise RuntimeError("injected crash")
+            calls["k"] += 1
+        return real(path)
+
+    m.setattr(ing.os, "remove", remove)
+
+
+def _orphans(db):
+    """Data files on disk that the newest manifest neither lists nor
+    holds for deletion."""
+    import glob
+
+    from tickdb_spark.ingest import manifest
+
+    m = manifest(db)
+    known = {f["path"] for fs in m["tables"].values() for f in fs}
+    known |= {g["path"] for g in m["garbage"]}
+    on_disk = glob.glob(f"{db}/**/*.parquet", recursive=True)
+    return sorted(p for p in on_disk if p[len(db) + 1:] not in known)
 
 
 def _mk_crash_db(tmp_path, spark):
@@ -715,112 +755,98 @@ def _state(spark, db):
     )
 
 
-@pytest.mark.parametrize("renames_before_crash", [0, 1])
-def test_compact_crash_midswap_recovers(tmp_path, spark, monkeypatch, renames_before_crash):
-    """Kill compact between the staged-write and the directory swap (crash
-    before the first rename, and between the two renames — the exact
-    window VERDICT r12 flagged). The journal is the commit point: the next
-    read rolls the swap forward and sees exactly the compacted table."""
-    import os as _os
-
+@pytest.mark.parametrize("published", [0, 1])
+def test_compact_crash_midswap_recovers(tmp_path, spark, monkeypatch, published):
+    """Kill compact at its publish, after the compacted files are
+    written: before the manifest's link, reads see exactly the old
+    table and a rerun compacts it; after the link, reads see exactly the
+    compacted one. No recovery step runs either way."""
     import tickdb_spark.ingest as ing
 
     db, _rows = _mk_crash_db(tmp_path, spark)
     expected = _state(spark, db)
+    old = ing.manifest(db)
 
     with monkeypatch.context() as m:
-        _crash_after(m, ing.os, "rename", renames_before_crash, "injected crash")
+        _crash_at_publish(m, published)
         with pytest.raises(RuntimeError, match="injected crash"):
             ing.compact(spark, db)
-    # journal persisted before any destructive step -> recovery possible
-    assert _os.path.exists(ing._journal_path(db))
-    # plain read triggers recover(): old-or-new, never partial
-    assert _state(spark, db) == expected
-    assert not _os.path.exists(ing._journal_path(db))
-    meta = ing._read_meta(db)
-    assert meta["clean"] is True  # the journaled compact COMMITTED
-    # table dir healthy, no leftover staging/old dirs
-    leftovers = [n for n in _os.listdir(db) if n.startswith("ticks.")]
-    assert leftovers == []
-    # and the system keeps working after recovery
+    assert _state(spark, db) == expected  # LWW view: same rows either way
+    meta = ing.manifest(db)
+    assert meta["n"] == old["n"] + published
+    assert meta["clean"] is bool(published)  # the linked compact COMMITTED
+    assert bool(_orphans(db)) is not bool(published)  # unlinked files stay unread
+    # and the system keeps working after the crash
     ing.compact(spark, db)
     assert _state(spark, db) == expected
+    assert ing.manifest(db)["clean"] is True
+    assert _orphans(db) == []
 
 
-@pytest.mark.parametrize("renames_before_crash", [0, 1])
-def test_delete_range_crash_midswap_recovers(
-    tmp_path, spark, monkeypatch, renames_before_crash
-):
-    """Kill delete_range mid-partition-swap (after the pure-delete rmtree,
-    before/between the replacement renames). Recovery must complete the
-    delete — readers see the post-delete table, never a state where a kept
-    row of an affected partition is missing."""
-    import os as _os
-
+@pytest.mark.parametrize("published", [0, 1])
+def test_delete_range_crash_midswap_recovers(tmp_path, spark, monkeypatch, published):
+    """Kill delete_range at its publish, after the survivors of the
+    affected days are written. Before the link, reads see every old row;
+    after it, the post-delete table, never a state where a kept row of an
+    affected partition is missing. A rerun ends where one uninterrupted
+    delete does."""
     import tickdb_spark.ingest as ing
 
     db, rows = _mk_crash_db(tmp_path, spark)
     # range: last 12h of day 1 .. first 12h of day 3 -> day 2 is a PURE
-    # delete (no survivors), days 1 and 3 get staged replacements
+    # delete (no survivors), days 1 and 3 get rewritten survivors
     frm = rows[12][1]
     to = rows[60][1]
-    expected = [
+    before = _state(spark, db)
+    expected = sorted(
         (s, ts, v if ts != rows[0][1] else {"v": 99.0})
         for (s, ts, _t, v) in rows
         if not (frm <= ts < to)
-    ]
-    expected = sorted(expected)
+    )
 
     with monkeypatch.context() as m:
-        _crash_after(m, ing.os, "rename", renames_before_crash, "injected crash")
+        _crash_at_publish(m, published)
         with pytest.raises(RuntimeError, match="injected crash"):
             ing.delete_range(spark, db, "A", frm, to)
-    assert _os.path.exists(ing._journal_path(db))
+    assert _state(spark, db) == (expected if published else before)
+    ing.delete_range(spark, db, "A", frm, to)
     assert _state(spark, db) == expected
-    assert not _os.path.exists(ing._journal_path(db))
-    # day-2 partition physically gone; days 1/3 swapped in
-    sdir = _os.path.join(db, ing.TICKS_DIR, "series=A")
-    assert sorted(_os.listdir(sdir)) == ["dt=2024-01-01", "dt=2024-01-03"]
-    # no staging leftovers
-    assert [n for n in _os.listdir(db) if n.startswith("_delete-")] == []
-    # dirty partitions recorded through the journaled meta
-    dirty = {tuple(t) for t in ing._read_meta(db).get("dirty", [])}
+    # day 2 has no file left; days 1/3 hold their survivors
+    assert sorted({f["dt"] for f in ing.manifest(db)["tables"]["ticks"]}) == [
+        "2024-01-01", "2024-01-03"
+    ]
+    assert _orphans(db) == []
+    # dirty partitions recorded in the manifest
+    dirty = {tuple(t) for t in ing.manifest(db)["dirty"]}
     assert ("A", "2024-01-02") in dirty
 
 
 def test_crash_during_staging_leaves_table_untouched(tmp_path, spark, monkeypatch):
-    """A crash BEFORE the journal write (e.g. during the staged Spark
-    write) must leave the live table byte-identical: no journal, no
-    recovery, reads serve the old state."""
-    import os as _os
-
+    """A crash after a rewrite's data write and before its publish must
+    leave what readers see untouched: no new manifest, reads serve the
+    old state from the old files."""
     import tickdb_spark.ingest as ing
 
     db, rows = _mk_crash_db(tmp_path, spark)
     before = _state(spark, db)
+    old = ing.manifest(db)
 
     with monkeypatch.context() as m:
-        def boom(*a, **kw):
-            raise RuntimeError("staging crash")
-
-        m.setattr(ing, "_write_journal", boom)
-        with pytest.raises(RuntimeError, match="staging crash"):
+        _crash_at_publish(m, 0)
+        with pytest.raises(RuntimeError, match="injected crash"):
             ing.delete_range(spark, db, "A", rows[12][1], rows[60][1])
-        with pytest.raises(RuntimeError, match="staging crash"):
+        with pytest.raises(RuntimeError, match="injected crash"):
             ing.compact(spark, db)
-    assert not _os.path.exists(ing._journal_path(db))
-    assert ing.recover(db) is False
+    assert ing.manifest(db) == old
     assert _state(spark, db) == before
 
 
 def test_expire_before_downsampled_retention_and_crash(tmp_path, spark, monkeypatch):
-    """Retention lifecycle: expire_before drops whole days physically
-    (O(partitions), no rewrite), rollups built over them keep answering
+    """Retention lifecycle: expire_before drops whole days (a file-list
+    edit, no rewrite), rollups built over them keep answering
     (downsampled retention — expiry must NOT dirty the rollup), raw
-    reads see only the retained tail, and a kill mid-rmtree rolls
-    forward via the journal."""
-    import os as _os
-
+    reads see only the retained tail, also when a crash stops the
+    deletion of the dropped files after the first one."""
     import tickdb_spark.ingest as ing
     from tickdb_spark.rollup import RollupStore, route_tick_query
 
@@ -838,28 +864,16 @@ def test_expire_before_downsampled_retention_and_crash(tmp_path, spark, monkeypa
               for r in route_tick_query(spark, db, day_q).collect()}
     assert len(before) == 3
 
-    # crash mid-expiry (after the first rmtree) -> journal rolls forward
+    # crash mid-deletion (after the first removal): the expiry committed
     with monkeypatch.context() as m:
-        real = ing.shutil.rmtree
-        calls = {"k": 0}
-
-        def boom(*a, **kw):
-            if calls["k"] >= 1:
-                raise RuntimeError("injected crash")
-            calls["k"] += 1
-            return real(*a, **kw)
-
-        m.setattr(ing.shutil, "rmtree", boom)
+        _crash_in_deletion(m, db, 1)
         with pytest.raises(RuntimeError, match="injected crash"):
             ing.expire_before(spark, db, "2024-01-03T00:00:00Z")
-    assert _os.path.exists(ing._journal_path(db))
-    # any read triggers recovery and sees the POST-expiry raw state
     raw_days = sorted(
         {r["ts"] // (86_400 * 10**9) for r in ing.read_ticks(spark, db).collect()}
     )
     assert raw_days == [19725]  # only 2024-01-03 remains raw
-    assert not _os.path.exists(ing._journal_path(db))
-    assert ing._read_meta(db)["expired_before_ns"] > 0
+    assert ing.manifest(db)["expired_before_ns"] > 0
 
     # rollup-served day query still covers the FULL range, bit-identical
     after = {r["bucket"]: (r["v_sum"], r["v_count"])
@@ -877,13 +891,12 @@ def _raw_rows(df):
 
 
 def _assert_scan_is_fresh(spark, db):
-    """The reused base scan reads exactly what an uncached read reads."""
-    import os as _os
+    """The reused base scan reads exactly what an uncached read of the
+    newest manifest's files reads."""
+    from tickdb_spark.ingest import read_ticks
 
-    from tickdb_spark.ingest import TICKS_DIR, read_ticks
-
-    reused = read_ticks(spark, db, dedup=False)  # recovers first
-    fresh = spark.read.parquet(_os.path.join(db, TICKS_DIR))
+    reused = read_ticks(spark, db, dedup=False)
+    fresh = spark.read.option("basePath", f"{db}/ticks").parquet(*_table_files(db))
     assert _raw_rows(reused) == _raw_rows(fresh)
 
 
@@ -919,10 +932,10 @@ def test_scan_reuse_follows_every_write_kind(tmp_path, spark, monkeypatch):
     put(6)
     _assert_scan_is_fresh(spark, db)
     with monkeypatch.context() as m:
-        _crash_after(m, ing.os, "rename", 1, "injected crash")
+        _crash_at_publish(m, 1)
         with pytest.raises(RuntimeError, match="injected crash"):
             ing.compact(spark, db)
-    _assert_scan_is_fresh(spark, db)  # recover() rolls the swap forward
+    _assert_scan_is_fresh(spark, db)  # the linked manifest is the commit
     assert sorted(r["ts"] for r in ing.read_ticks(spark, db).collect()) == [
         parse_time_ns(f"2016-08-0{d}T12:00:00Z") for d in (5, 6)
     ]
@@ -1006,14 +1019,14 @@ def test_table_scan_pairs_each_version_with_its_own_frame(spark, monkeypatch):
     assert len(cachereg._SCANS) == 1
 
 
-@pytest.mark.parametrize("rmtrees_before_crash", [None, 1, 2, 3])
+@pytest.mark.parametrize("removals_before_crash", [None, 1, 2, 3])
 def test_deleting_every_tick_of_a_series_drops_it_from_the_catalog(
-    tmp_path, spark, monkeypatch, rmtrees_before_crash
+    tmp_path, spark, monkeypatch, removals_before_crash
 ):
-    """A delete that empties every partition of a series removes the
-    series directory too, live and when ``recover()`` rolls an injected
-    crash forward (after 1 or 2 partition removals, or after the staging
-    directory's removal)."""
+    """A delete that empties every partition of a series drops it from
+    the catalog, also when a crash stops the deletion of its files
+    (after 1, 2 or 3 of its data and checksum files are removed, with no
+    grace period): the commit already happened."""
     import tickdb_spark.ingest as ing
 
     tdb = _mk(tmp_path, spark)
@@ -1024,14 +1037,13 @@ def test_deleting_every_tick_of_a_series_drops_it_from_the_catalog(
     db = tdb.catalog._existing("db1")
     assert tdb.db_info("db1")["indexes"] == ["a", "b"]
     frm, to = "2016-08-01T00:00:00Z", "2016-08-03T00:00:00Z"
-    if rmtrees_before_crash is None:
+    if removals_before_crash is None:
         tdb.delete("db1", "b", frm, to)
     else:
         with monkeypatch.context() as m:
-            _crash_after(m, ing.shutil, "rmtree", rmtrees_before_crash, "injected crash")
+            _crash_in_deletion(m, db, removals_before_crash)
             with pytest.raises(RuntimeError, match="injected crash"):
                 ing.delete_range(spark, db, "b", frm, to)
-        assert ing.recover(db)
     assert tdb.catalog.list_indexes("db1") == ["a"]
     assert tdb.db_info("db1")["indexes"] == ["a"]
     assert tdb.get("db1", "b", "2016-08-01T12:00:00Z") is None
@@ -1040,8 +1052,8 @@ def test_deleting_every_tick_of_a_series_drops_it_from_the_catalog(
 
 def test_rewrites_keep_a_database_whose_name_holds_an_equals_sign(tmp_path, spark):
     """A database named like a partition dir (``k=v``) survives every
-    rewrite: compact swaps its ticks dir, and a delete or an expiry that
-    empties a series removes that series dir alone."""
+    rewrite: compact replaces its ticks, and a delete or an expiry that
+    empties a series drops that series alone."""
     import os as _os
 
     import tickdb_spark.ingest as ing
@@ -1056,7 +1068,7 @@ def test_rewrites_keep_a_database_whose_name_holds_an_equals_sign(tmp_path, spar
     tdb.delete("k=v", "b", "2016-08-01T00:00:00Z", "2016-08-06T00:00:00Z")
     tdb.delete("k=v", "a", "2016-08-01T00:00:00Z", "2016-08-02T00:00:00Z")
     ing.expire_before(spark, db, "2016-08-03T00:00:00Z")
-    assert _os.path.isfile(ing._meta_path(db))
+    assert _os.listdir(_os.path.join(db, ing.MANIFEST_DIR))
     assert tdb.db_info("k=v")["indexes"] == ["a", "c"]
     assert tdb.get("k=v", "c", "2016-08-05T12:00:00Z") == {"v": 5.0}
     assert tdb.get("k=v", "a", "2016-08-02T12:00:00Z") is None
@@ -1068,11 +1080,9 @@ def test_rewrites_keep_a_database_whose_name_holds_an_equals_sign(tmp_path, spar
 def test_failed_staging_write_leaves_nothing_behind(
     tmp_path, spark, monkeypatch, rewrite, writes_before_failure
 ):
-    """A staging write that fails after its output landed changes nothing
-    a reader sees, and the next writer removes what the failed rewrite
-    staged."""
-    import os as _os
-
+    """A rewrite's data write that fails after its output landed changes
+    nothing a reader sees, and the rerun removes the files the failed
+    one wrote, which no manifest lists."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     import tickdb_spark.ingest as ing
@@ -1099,18 +1109,14 @@ def test_failed_staging_write_leaves_nothing_behind(
         if len(calls) > writes_before_failure:
             raise RuntimeError("write failed")
 
-    def staged():
-        return [n for n in _os.listdir(db) if n.startswith(ing.STAGE_PREFIX)]
-
     with monkeypatch.context() as m:
         m.setattr(DataFrameWriter, "parquet", failing)
         with pytest.raises(RuntimeError, match="write failed"):
             run()
-    assert len(staged()) == 1
+    assert _orphans(db)
     assert seen() == before
     run()
-    assert staged() == []
-    assert not _os.path.exists(ing._journal_path(db))
+    assert _orphans(db) == []
 
 
 def test_each_read_runs_its_fewest_jobs(tmp_path, spark):
@@ -1181,7 +1187,7 @@ def test_concurrent_puts_each_get_their_own_seq(tmp_path, spark):
         sys.setswitchinterval(old)
     assert errors == [] and not any(t.is_alive() for t in threads)
     assert sorted(seqs.values()) == list(range(n))
-    meta = ing._read_meta(db)
+    meta = ing.manifest(db)
     assert meta["next_seq"] == n
     assert meta["clean"] is False
     rows = tdb.ticks("db1").collect()

@@ -52,18 +52,18 @@ outlive one entry but whose size follows the output, not token volume
   plans is small and fixed.
 
 **Table scans** — ``table_scan(spark, key, version, build)`` returns
-the base relation of one on-disk table (``spark.read.parquet`` of its
-directory), rebuilt only when the table changes, so a long-lived reader
-runs no file-listing or schema-inference job per request.
+the base relation of one warehouse table (``spark.read.parquet`` of the
+files its database's manifest lists), rebuilt only when the table
+changes, so a long-lived reader runs no file-listing or
+schema-inference job per request.
 
-* *Key*: ``(applicationId, table path, read schema or None)``.
-* *Version*: the table's data-file set, listed by the caller before it
-  builds (``ingest.partition_files``). Every write job names its files
-  with a fresh UUID, so any append, delete, compaction, expiry, index
-  drop, journal roll-forward or rollup refresh changes it; no clock,
-  mtime or counter is involved. Listing before the build means a write
-  racing the build can only pair an older version with a newer frame,
-  which the next call rebuilds.
+* *Key*: ``(applicationId, table path, read schema)``.
+* *Version*: the table's file set in the manifest the caller read
+  (``ingest.read_table``); the frame is built over exactly those files.
+  Every write job names its files with a fresh UUID, so any append,
+  delete, compaction, expiry, index drop or rollup refresh that touches
+  the table changes it; no clock, mtime or counter is involved, and a
+  version always matches its frame.
 * *One value per key*: ``(version, frame)`` is stored as one tuple, so a
   reader thread never sees a new version with an old frame; a new
   version replaces the old value.

@@ -6,7 +6,8 @@ The reference's catalog *is* the filesystem: a database is a directory
 refreshingly simple model — a warehouse directory with one subdirectory per
 database — but an "index" is a ``series=`` partition of the single ticks
 table, not a separate file (one-table layout scales; file-per-series does
-not).
+not), and the database's manifest, not a directory listing, says which
+series hold ticks.
 
 Fixed quirks: drop_db removes recursively (reference uses non-recursive
 ``os.Remove`` and fails on non-empty dbs, ``database.go:115-117``);
@@ -18,8 +19,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from tickdb_spark.ingest import TICKS_DIR, _commit, _read_meta, partition_dirs, writer
-from tickdb_spark.rollup import LEVELS, ROLLUPS_DIR
+from tickdb_spark.ingest import TICKS_DIR, _publish, manifest, writer
 
 
 class DatabaseExistsError(Exception):
@@ -61,21 +61,20 @@ class Catalog:
         shutil.rmtree(self._existing(name))
 
     def list_indexes(self, name: str) -> list[str]:
-        return sorted(partition_dirs(os.path.join(self._existing(name), TICKS_DIR)))
+        """The series holding ticks, as the database's manifest lists them."""
+        ticks = manifest(self._existing(name))["tables"].get(TICKS_DIR, [])
+        return sorted({f["series"] for f in ticks})
 
     def drop_index(self, name: str, series: str) -> None:
         """Reference S7: ``DELETE /{db}/{index}/_all`` (``handlers.go:115-124``)
-        — here a partition-subtree drop, no table rewrite. The series'
-        slice of every rollup level goes with it, in the same commit, so a
+        — here a file-list edit, no table rewrite. The series' files of
+        every rollup level go with its ticks, in the same commit, so a
         routed query cannot answer for a dropped index."""
         path = self._existing(name)
-        tables = [os.path.join(path, TICKS_DIR)]
-        tables += [os.path.join(path, ROLLUPS_DIR, unit) for unit in LEVELS]
-        with writer(path):
-            targets = [partition_dirs(table).get(series) for table in tables]
-            swaps = [(target, None) for target in targets if target is not None]
-            if swaps:
-                _commit(path, swaps, _read_meta(path))
+        with writer(path) as m:
+            tables = {t: [f for f in fs if f["series"] != series] for t, fs in m["tables"].items()}
+            if tables != m["tables"]:
+                _publish(path, m, "drop_index", tables)
 
     def _existing(self, name: str) -> str:
         path = self.db_path(name)

@@ -105,7 +105,8 @@ def bucket_expr(
 #: irreducible).
 #:
 #: 24 tables x 6 planes is the r7 frontier pick on the gate corpus
-#: (scripts/bench_ann_recall.py sweep, table in BASELINE.md): recall@5
+#: (scripts/bench_ann_recall.py sweep, since deleted: ``git log
+#: --diff-filter=D -- scripts/bench_ann_recall.py``; table in BASELINE.md): recall@5
 #: 0.767 at 32.5% of corpus scored per query — the SAME candidate volume
 #: as the old 6x4 default (0.533 at 32.2%) with +0.23 recall, and it
 #: dominates every swept config under 40% candidates (16x5: 0.753 at

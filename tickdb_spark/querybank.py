@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from tickdb_spark import cachereg as _cachereg
 from tickdb_spark.operators.asof import asof_join
-from tickdb_spark.session import scan_splits
+from tickdb_spark.session import parquet_bytes, scan_splits
 from tickdb_spark.tickquery import push_ts_range, run_tick_query
 
 DEC = "decimal(18,6)"  # exact-sum carrier type (see EXACT_DECIMAL)
@@ -132,7 +132,7 @@ def _fan_small(
     push through a Repartition). See ``_read_fanned`` for the
     size-adaptive gate and the order-independence contract."""
     try:
-        splits = scan_splits(spark, f"{sf_dir}/{table}.parquet")
+        splits = scan_splits(spark, parquet_bytes(f"{sf_dir}/{table}.parquet"))
     except OSError:
         return df
     par = spark.sparkContext.defaultParallelism
@@ -1880,7 +1880,8 @@ def _neardup_decontam_oracle() -> str:
     "Planted paraphrases (eval docs with every 7th token dropped: max "
     "intact run 6 < 8, so exact 8-gram decontamination catches 1/50 "
     "while 3-gram shingle Jaccard ~0.44 keeps LSH at 50/50 with 12 "
-    "bands — measured at sf0.01, scripts/measure_decontam_replant.py)",
+    "bands — measured at sf0.01 by scripts/measure_decontam_replant.py, "
+    "since deleted: git log --diff-filter=D -- scripts/measure_decontam_replant.py)",
 )
 def decontam_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tickdb_spark.operators.decontam import neardup_contamination
@@ -5122,10 +5123,11 @@ PMI_BROADCAST_VOCAB_CEILING = 10_000_000
 
 
 def pmi_collocations(docs: DataFrame, est_vocab: int | None = None) -> DataFrame:
-    """PMI-lift collocation mining over any ``(text)`` frame — shared by
-    the gate entry and scripts/bench_analytics_scale.py (scaling rows,
-    VERDICT r8 ask #6). The unigram table is vocab-bounded and joins
-    broadcast by default; pass the corpus' (estimated) distinct-token
+    """PMI-lift collocation mining over any ``(text)`` frame — used by
+    the gate entry; the scaling rows of VERDICT r8 ask #6 came from
+    scripts/bench_analytics_scale.py, since deleted (``git log
+    --diff-filter=D -- scripts/bench_analytics_scale.py``). The unigram
+    table is vocab-bounded and joins broadcast by default; pass the corpus' (estimated) distinct-token
     count as ``est_vocab`` and above ``PMI_BROADCAST_VOCAB_CEILING`` the
     two unigram joins plan as shuffled hash joins instead (hash-equal
     output, plan-pinned in tests). The two 1-row totals always
@@ -5246,8 +5248,8 @@ def eval_quality_auc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def quality_auc(docs: DataFrame) -> DataFrame:
     """Per-source ROC AUC (exact Mann-Whitney over the distinct-score
-    aggregate) over any ``(source, lang, text)`` frame — shared by the
-    gate entry and scripts/bench_analytics_scale.py."""
+    aggregate) over any ``(source, lang, text)`` frame — used by the
+    gate entry (and by scripts/bench_analytics_scale.py, since deleted)."""
     spark = docs.sparkSession
     hits = _text.stopword_hits(F.col("text"), "en").cast("long")
     n_tok = _text.token_count(F.col("text")).cast("long")
@@ -11928,8 +11930,8 @@ def link_weighted_customers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DOWNSAMPLED RETENTION — the TSDB storage lifecycle the reference "
     "lacks entirely: ingest → rollup refresh → ingest.expire_before "
     "physically drops raw (series, dt) partitions older than the cutoff "
-    "(directory-level, O(partitions), journal-crash-safe like compact/"
-    "delete) while the rollup cascade built over them REMAINS queryable. "
+    "(a file-list edit in one manifest commit, O(files), crash-safe like "
+    "compact/delete) while the rollup cascade built over them REMAINS queryable. "
     "The entry proves both halves at once: day buckets served from the "
     "rollup cover the FULL month (value_sum through decimal states, "
     "hash-identical to the raw-built answer the oracle computes), while "
@@ -11981,7 +11983,8 @@ def tick_retention_downsample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "min/max stats on the ORIGINAL columns then prune multi-dimensional "
     "box queries (measured: 2-D box reads 13% of row groups vs 100% "
     "time-sorted, and BOTH single-dim predicates prune — 1-D sort "
-    "serves only its own dim; scripts/bench_zorder_pruning.py). The "
+    "serves only its own dim; scripts/bench_zorder_pruning.py, since "
+    "deleted: git log --diff-filter=D -- scripts/bench_zorder_pruning.py). The "
     "key is exact integer arithmetic, codegen end to end. Since r15 the "
     "entry exercises the SELF-TUNING layout path (n_files=None → "
     "zorder_plan derives the group count from one row count — the r14 "

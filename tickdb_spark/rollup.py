@@ -35,11 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tickdb_spark.ingest import (
+    ROLLUPS_DIR,
     TICKS_DIR,
-    _commit,
-    _read_meta,
-    _stage_dir,
-    partition_dirs,
+    _publish,
+    _write,
+    manifest,
     read_table,
     read_ticks,
     writer,
@@ -55,8 +55,6 @@ from tickdb_spark.tickquery import (
     ts_to_trunc_ns,
 )
 
-ROLLUPS_DIR = "rollups"
-
 #: Every level's schema (``series`` is the partition column). Reads pass
 #: it, so a level with no rows reads as zero rows, with no inference.
 ROLLUP_SCHEMA = (
@@ -66,6 +64,8 @@ ROLLUP_SCHEMA = (
 
 #: Cascade order, finest first.
 LEVELS = ("minute", "hour", "day", "month", "year")
+#: Each level's table: its name in the manifest and its dir in the database.
+_TABLES = {u: f"{ROLLUPS_DIR}/{u}" for u in LEVELS}
 
 #: ns widths used only for alignment checks (months/years align via
 #: date_trunc, not fixed widths).
@@ -130,7 +130,7 @@ def rollup_merge(finer: DataFrame, unit: str) -> DataFrame:
 SPLITS_PER_SERIES = 8
 
 
-def _shape_for_write(spark: SparkSession, df: DataFrame, src_paths: list[str]) -> DataFrame:
+def _shape_for_write(spark: SparkSession, df: DataFrame, src: list[dict]) -> DataFrame:
     """The pre-write exchange for one cascade level: one explicit
     exchange on (series, salt), salt = pmod(xxhash64(bucket),
     SPLITS_PER_SERIES). It bounds files AND writers per series at
@@ -141,41 +141,42 @@ def _shape_for_write(spark: SparkSession, df: DataFrame, src_paths: list[str]) -
     The partition count is SIZE-ADAPTIVE (never a constant tuned to one
     box): ceil(source bytes / maxPartitionBytes), floored at
     defaultParallelism — the sources the level reads (raw ticks for the
-    base level, the just-staged finer level for merges, plus the kept
-    rows of an incremental refresh) upper-bound the level's state, and
-    extra partitions beyond the distinct (series, salt) pairs stay empty
-    (no files, scheduling-only cost)."""
-    par = max(spark.sparkContext.defaultParallelism, scan_splits(spark, *src_paths))
+    base level, the just-written finer level for merges, plus the kept
+    rows of an incremental refresh; ``src`` holds their manifest entries)
+    upper-bound the level's state, and extra partitions beyond the
+    distinct (series, salt) pairs stay empty (no files, scheduling-only
+    cost)."""
+    nbytes = sum(f["bytes"] for f in src)
+    par = max(spark.sparkContext.defaultParallelism, scan_splits(spark, nbytes))
     salt = F.pmod(F.xxhash64(F.col("bucket")), F.lit(SPLITS_PER_SERIES))
     return df.repartition(par, F.col("series"), salt)
 
 
 class RollupStore:
-    """Persisted rollup cascade for one database directory."""
+    """Persisted rollup cascade for one database: one table per level."""
 
     def __init__(self, spark: SparkSession, db_path: str):
         self.spark = spark
         self.db_path = db_path
 
-    def _path(self, unit: str) -> str:
-        return os.path.join(self.db_path, ROLLUPS_DIR, unit)
-
-    def available(self) -> list[str]:
-        return [u for u in LEVELS if os.path.isdir(self._path(u))]
+    def available(self, m: dict | None = None) -> list[str]:
+        """The built levels, as manifest ``m`` (default: the newest) lists them."""
+        tables = (m or manifest(self.db_path))["tables"]
+        return [u for u in LEVELS if _TABLES[u] in tables]
 
     def refresh(self, levels: tuple[str, ...] = LEVELS) -> None:
         """(Re)build the cascade. Each level reads the previous level's
         parquet (not raw ticks), so the whole refresh is one raw scan plus
         progressively tiny merges. A full rebuild supersedes any pending
         incremental work."""
-        with writer(self.db_path):
-            self._rebuild(levels, None)
+        with writer(self.db_path) as m:
+            self._rebuild(m, levels, None)
 
-    def read(self, unit: str) -> DataFrame:
-        """One level's table. The scan is built once per version of the
-        level's data-file set and reused until a refresh or an index drop
-        changes it (``ingest.read_table``)."""
-        return read_table(self.spark, self._path(unit), 1, ROLLUP_SCHEMA)
+    def read(self, unit: str, m: dict | None = None) -> DataFrame:
+        """One level's table as manifest ``m`` (default: the newest) lists
+        it; the scan is reused while that file set is unchanged
+        (``ingest.read_table``)."""
+        return read_table(self.spark, self.db_path, _TABLES[unit], ROLLUP_SCHEMA, m)
 
     def refresh_incremental(self) -> None:
         """Rebuild only the rollup slices invalidated since the last
@@ -183,55 +184,51 @@ class RollupStore:
         path re-reduce (``node.go:213-226``, ``523-579``).
 
         Ingest/delete record touched ``(series, dt)`` partitions in the
-        db metadata; per level we recompute ONLY the buckets covering
+        manifest; per level we recompute ONLY the buckets covering
         those dates (for the base level a raw scan pruned to the dirty
         series and to the ``dt`` partitions those buckets cover: the
         dirty dates for minute/hour/day, their whole months or years for
-        a coarser base; for merges the staged finer level), keep every
-        untouched row of the dirty series, and swap in just the dirty
-        series' partitions.
+        a coarser base; for merges the just-written finer level), keep
+        every untouched row of the dirty series, and replace just the
+        dirty series' files.
         Untouched series are never read or written. The recomputed
         buckets follow from the dirty dates, not from the ticks left in
         them, so a bucket whose every tick was deleted goes away.
         """
-        with writer(self.db_path):
-            levels = tuple(self.available())
-            dirty = [tuple(x) for x in _read_meta(self.db_path).get("dirty", [])]
+        with writer(self.db_path) as m:
+            levels = tuple(self.available(m))
+            dirty = [tuple(x) for x in m["dirty"]]
             if not levels:
-                self._rebuild(LEVELS, None)
+                self._rebuild(m, LEVELS, None)
             elif dirty:
-                self._rebuild(levels, dirty)
+                self._rebuild(m, levels, dirty)
 
-    def _rebuild(self, levels: tuple[str, ...], dirty: list[tuple[str, str]] | None) -> None:
-        """Stage ``levels`` finest first, each merged from the staged level
-        before it, then commit them in one swap list whose metadata clears
-        ``dirty``: whole level dirs when ``dirty`` is None, else the dirty
-        series' partitions, whose buckets covering a dirty date are
-        recomputed and whose other rows are kept. A reader sees each level
-        (or series partition) old or new, never half-written."""
-        meta = _read_meta(self.db_path)
-        stage = _stage_dir(self.db_path)
-        os.makedirs(os.path.join(self.db_path, ROLLUPS_DIR), exist_ok=True)
+    def _rebuild(self, m: dict, levels: tuple[str, ...], dirty: list[tuple[str, str]] | None):
+        """Write ``levels`` finest first, each merged from the files just
+        written for the level before it, then commit them all in one
+        manifest that clears ``dirty``: whole levels when ``dirty`` is
+        None, else the dirty series' files, whose buckets covering a dirty
+        date are recomputed and whose other rows are kept."""
         ticks = read_ticks(self.spark, self.db_path)
-        src = [os.path.join(self.db_path, TICKS_DIR)]
+        src = m["tables"].get(TICKS_DIR, [])
         if dirty is not None:
             series = sorted({s for s, _ in dirty})
             dates = sorted({d for _, d in dirty})
             ticks = ticks.where(F.col("series").isin(series))
-            src = [d for s, d in partition_dirs(src[0]).items() if s in series]
+            src = [f for f in src if f["series"] in series]
         prev: DataFrame | None = None
-        swaps: list[tuple[str, str | None]] = []
+        tables: dict[str, list[dict]] = {}
         for unit in LEVELS:
             if unit not in levels:
                 continue  # a coarser level merges fine from any finer one
-            staged = os.path.join(stage, unit)
+            table = _TABLES[unit]
+            kept_files: list[dict] = []
             if dirty is None:
                 df = rollup_from_ticks(ticks, unit) if prev is None else rollup_merge(prev, unit)
-                swaps.append((self._path(unit), staged))
             else:
                 # a dirty date invalidates every bucket covering it: the base
                 # level re-reduces all ticks inside those buckets, a coarser
-                # one merges all staged finer rows inside them. On the base
+                # one merges all new finer rows inside them. On the base
                 # level the dt predicate prunes the scan to the covered days;
                 # the ts one keeps the selection exact for a row an older
                 # writer stored under the neighbouring day
@@ -243,30 +240,25 @@ class RollupStore:
                 else:
                     inside = _covers(ns_to_dt(F.col("bucket")), unit, dates)
                     fresh = rollup_merge(prev.where(inside), unit)
-                kept = self.read(unit).where(
+                kept = self.read(unit, m).where(
                     F.col("series").isin(series)
                     & ~_covers(ns_to_dt(F.col("bucket")), unit, dates)
                 )
                 df = kept.unionByName(fresh)
-                live = partition_dirs(self._path(unit))
-                src += [d for s, d in live.items() if s in series]
-            _shape_for_write(self.spark, df, src).write.mode("overwrite").partitionBy(
-                "series"
-            ).parquet(staged)
-            prev = self.spark.read.schema(ROLLUP_SCHEMA).parquet(staged)
-            src = [staged]
-            if dirty is not None:
-                # a dirty series left with no rows has no staged partition:
-                # its live one still goes
-                new = partition_dirs(staged)
-                for s in series:
-                    if s in new:
-                        name = os.path.basename(new[s])
-                        swaps.append((os.path.join(self._path(unit), name), new[s]))
-                    elif s in live:
-                        swaps.append((live[s], None))
-        meta["dirty"] = []
-        _commit(self.db_path, [*swaps, (stage, None)], meta)
+                live = m["tables"].get(table, [])
+                src = src + [f for f in live if f["series"] in series]
+                kept_files = [f for f in live if f["series"] not in series]
+            shaped = _shape_for_write(self.spark, df, src)
+            added = _write(
+                self.db_path, m, table,
+                lambda dest: shaped.write.mode("append").partitionBy("series").parquet(dest),
+            )
+            prev = self.spark.read.schema(ROLLUP_SCHEMA).option(
+                "basePath", os.path.join(self.db_path, table)
+            ).parquet(*[os.path.join(self.db_path, f["path"]) for f in added])
+            src = added
+            tables[table] = kept_files + added
+        _publish(self.db_path, m, "refresh", tables, dirty=[])
 
 
 def _covers(day, unit: str, dates: list[str]):
@@ -324,13 +316,15 @@ def route_tick_query(
     if not specs or any(s.startswith("ma:") for s in specs):
         return run_tick_query(read_ticks(spark, db_path), query)
     # a queried series with writes since the last refresh has stale
-    # rollup rows (expiry dirties nothing: downsampled retention)
-    dirty = {s for s, _ in _read_meta(db_path).get("dirty", [])}
+    # rollup rows (expiry dirties nothing: downsampled retention); one
+    # manifest answers that, the built levels and the level's files
+    m = manifest(db_path)
+    dirty = {s for s, _ in m["dirty"]}
     queried = {query.series} if isinstance(query.series, str) else query.series
     if dirty and (queried is None or not dirty.isdisjoint(queried)):
         return run_tick_query(read_ticks(spark, db_path), query)
     store = RollupStore(spark, db_path)
-    avail = store.available()
+    avail = store.available(m)
     frm, to = parse_time_ns(query.frm), parse_time_ns(query.to)
     usable = None
     if count == 1 and unit in LEVELS:
@@ -352,7 +346,7 @@ def route_tick_query(
             break
     if usable is None:
         return run_tick_query(read_ticks(spark, db_path), query)
-    return _answer_from_rollup(store.read(usable), query, count, unit, frm)
+    return _answer_from_rollup(store.read(usable, m), query, count, unit, frm)
 
 
 def _answer_from_rollup(

@@ -60,7 +60,7 @@ def size_bytes(value: str) -> int:
 
 def parquet_bytes(path: str) -> int:
     """Bytes of the parquet file at ``path``, or of every ``.parquet``
-    file under a (partitioned) table directory."""
+    file under a directory."""
     if os.path.isfile(path):
         return os.path.getsize(path)
     return sum(
@@ -71,13 +71,13 @@ def parquet_bytes(path: str) -> int:
     )
 
 
-def scan_splits(spark: SparkSession, *paths: str) -> int:
-    """ceil(:func:`parquet_bytes` / ``maxPartitionBytes``): about how many
-    splits a scan of ``paths`` is cut into."""
+def scan_splits(spark: SparkSession, nbytes: int) -> int:
+    """ceil(``nbytes`` / ``maxPartitionBytes``): about how many splits a
+    scan of that many parquet bytes is cut into."""
     max_split = size_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    return -(-sum(map(parquet_bytes, paths)) // max_split)
+    return -(-nbytes // max_split)
 
 
 def get_spark(

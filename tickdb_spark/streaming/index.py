@@ -266,8 +266,8 @@ def swap_compacted(table_dir: str, dest: str | None = None) -> str:
     "caller swaps probes over and retires the log" step of the
     compact_index contract, made a primitive.
 
-    Crash atomicity is JOURNALED ROLL-FORWARD (the delete_range/recover
-    discipline, >2 artifacts are touched): the journal (atomic
+    Crash atomicity is JOURNALED ROLL-FORWARD (>2 artifacts are
+    touched, and readers list the dir, not a manifest): the journal (atomic
     ``os.replace``) records the full plan — install file moves + the
     retire list — before any mutation; any kill point re-runs through
     :func:`swap_recover` (each step is an idempotent move/delete).
