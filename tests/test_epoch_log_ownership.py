@@ -1,7 +1,8 @@
 """The epoch-log format (stated in ``streaming/index.py``'s module
 docstring) has one owner: a few private helpers there. This structural
-check keeps hand-rolled stream loops, log-dir listings and epoch-dir
-names from creeping back into other code under ``tickdb_spark/streaming/``."""
+check keeps hand-rolled stream loops, directory listings and epoch-dir
+names from creeping back into ``tickdb_spark/streaming/``: a log is what
+its work dir's manifest lists, and an epoch is a key on a file entry."""
 
 from __future__ import annotations
 
@@ -19,20 +20,10 @@ OWNERS = {
         # the warehouse ingest stream feeds append_batch, not an epoch log
         ("ingest.py", "read_doc_stream"),
     },
-    "os listing": {
-        ("index.py", "_list_log"),
-        # lists the work dir's tables, not one log
-        ("index.py", "compact_all"),
-        # the swap's own install and retire steps
-        ("index.py", "swap_compacted"),
-        ("index.py", "_swap_roll_forward"),
-    },
-    "epoch_": {
-        ("index.py", "_write_epoch"),
-        ("index.py", "_EpochLog"),
-        # names the epoch dirs a swap absorbs
-        ("index.py", "swap_compacted"),
-    },
+    # readers and writers alike go through the manifest
+    "os listing": set(),
+    # an epoch key is the bare id (``3``, ``rebuild_5``), never a dir name
+    "epoch_": set(),
     "recursiveFileLookup": set(),
 }
 

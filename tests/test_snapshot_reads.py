@@ -1,6 +1,7 @@
-"""Readers take no lock: a read scans the files of the manifest that was
-newest when it started, so a commit running beside it never removes a
-file it opens and never shows it part of a write."""
+"""Readers take no lock: a read of a warehouse table or of a stream
+state log scans the files of the manifest that was newest when it
+started, so a commit running beside it never removes a file it opens
+and never shows it part of a write."""
 
 from __future__ import annotations
 
@@ -112,3 +113,95 @@ def test_reads_during_appends_see_whole_batches(tmp_path, spark):
     assert counts
     assert [c for c in counts if c % size] == []
     assert tdb.ticks("p").count() == 9 * size
+
+
+def _signature_log(spark, tmp_path):
+    """A work dir whose signature log a stream face built from 3
+    landing files of 20 vectors each; returns (work dir, log path)."""
+    import os
+
+    from tickdb_spark.streaming.index import stream_ann_index_maintenance
+
+    emb = (
+        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(60)
+    )
+    pdf = emb.toPandas()
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for i in range(3):
+        pdf.iloc[i * 20 : (i + 1) * 20].to_parquet(landing / f"b{i}.parquet", index=False)
+    work = str(tmp_path / "state")
+    stream_ann_index_maintenance(spark, str(landing), work, schema=emb.schema)
+    return work, os.path.join(work, "signatures")
+
+
+def test_reads_during_state_log_compaction_see_no_error_and_no_wrong_count(tmp_path, spark):
+    """One thread loops a count of a stream face's signature log while
+    the main thread runs six forced ``compact_all`` passes over its
+    work dir; each pass rewrites the log in place and drops the files
+    the previous one wrote."""
+    from tickdb_spark.streaming.index import (
+        _SIG_SCHEMA,
+        _read_maintained,
+        compact_all,
+        compaction_policy,
+    )
+
+    work, sig_dir = _signature_log(spark, tmp_path)
+    want = 60 * 24  # 24 LSH tables per vector
+    stop = threading.Event()
+    counts: list[int] = []
+    errors: list[str] = []
+    reader = threading.Thread(
+        target=_loop,
+        args=(lambda: _read_maintained(spark, sig_dir, _SIG_SCHEMA).count(), stop, counts, errors),
+    )
+    reader.start()
+    try:
+        for _ in range(6):
+            compact_all(spark, work, force=True)
+    finally:
+        stop.set()
+        reader.join(timeout=300)
+    assert not reader.is_alive()
+    assert errors == []
+    assert counts
+    assert [c for c in counts if c != want] == []
+    # every pass adopted its rewrite: the log is one base, no epochs
+    assert compaction_policy(sig_dir)["epochs"] == 0
+
+
+def test_reads_during_epoch_commits_see_whole_epochs(tmp_path, spark):
+    """A reader counting a state log while epochs land sees each epoch
+    whole or not at all: every epoch is 8 files of 10 rows, so every
+    count is a multiple of 80."""
+    from tickdb_spark.streaming.index import _read_maintained, _write_epoch
+
+    log = str(tmp_path / "state" / "log")
+
+    def epoch(e):
+        _write_epoch(spark.range(80).repartition(8), log, e)
+
+    epoch(0)
+    stop = threading.Event()
+    counts: list[int] = []
+    errors: list[str] = []
+    reader = threading.Thread(
+        target=_loop,
+        args=(lambda: _read_maintained(spark, log, "id long").count(), stop, counts, errors),
+    )
+    reader.start()
+    try:
+        for e in range(1, 9):
+            epoch(e)
+    finally:
+        stop.set()
+        reader.join(timeout=300)
+    assert not reader.is_alive()
+    assert errors == []
+    assert counts
+    assert [c for c in counts if c % 80] == []
+    assert _read_maintained(spark, log, "id long").count() == 9 * 80

@@ -562,8 +562,8 @@ def test_stream_ann_index_incremental_and_probe_reads_stored(tmp_path, spark):
     assert k2 == w2 and len(k2) == len(pdf) * 24
     assert all(k2[key] == v for key, v in k1.items())  # old rows untouched
 
-    # probe reads the STORED table (epoch-subdir layout from the
-    # idempotent per-epoch writes); no signature kernel in the plan
+    # probe reads the STORED table (the epoch log's manifest-listed
+    # files); no signature kernel in the plan
     from tickdb_spark.streaming.index import _SIG_SCHEMA, _read_maintained
 
     stored = _read_maintained(spark, str(tmp_path / "state" / "signatures"), _SIG_SCHEMA)
@@ -616,16 +616,14 @@ def test_stream_pq_index_incremental_matches_batch(tmp_path, spark):
 
 
 def test_stream_index_epoch_writes_are_idempotent(tmp_path, spark):
-    """ADVICE r9: a crash between the parquet write and the checkpoint
+    """ADVICE r9: a crash between the epoch's commit and the checkpoint
     commit re-runs the epoch. Simulate the half-committed state by
-    pre-planting garbage rows in the epoch_0 directory the first batch
-    will claim — the overwrite-per-epoch sink must REPLACE them, so the
-    maintained table still equals the batch-built index (a plain append
-    would keep the garbage and duplicate the epoch)."""
-    from pyspark.sql import functions as F  # noqa: F401
-
+    committing garbage rows as epoch 0, the epoch the first batch will
+    claim — the per-epoch sink must REPLACE them, so the maintained
+    table still equals the batch-built index (a plain append would keep
+    the garbage and duplicate the epoch)."""
     from tickdb_spark.operators.similarity import lsh_signature_table
-    from tickdb_spark.streaming.index import stream_ann_index_maintenance
+    from tickdb_spark.streaming.index import _write_epoch, stream_ann_index_maintenance
 
     emb = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -643,7 +641,7 @@ def test_stream_index_epoch_writes_are_idempotent(tmp_path, spark):
     garbage = spark.createDataFrame(
         [(999_999, 0, 7), (999_998, 1, 3)], "vec_id long, table_id int, bucket int"
     )
-    garbage.write.parquet(str(tmp_path / "state" / "signatures" / "epoch_0"))
+    _write_epoch(garbage, str(tmp_path / "state" / "signatures"), 0)
 
     got = stream_ann_index_maintenance(spark, str(landing), work, schema=emb.schema)
     k = {(r[0], r[1]): r[2] for r in got.collect()}
@@ -849,15 +847,15 @@ def test_stream_bm25_index_incremental_and_probe_reads_postings_only(
 
 
 def test_compact_index_preserves_probe_results_and_reduces_files(tmp_path, spark):
-    """Index compaction (build -> maintain -> compact): the epoch-dir
-    log rewrites into ONE sorted file with identical rows; a BM25 probe
+    """Index compaction (build -> maintain -> compact): the epoch log
+    rewrites into ONE sorted file with identical rows; a BM25 probe
     over the compacted postings equals the probe over the log, and the
-    parquet file count actually drops."""
-    import glob
-
+    number of files the manifest lists actually drops."""
+    from tickdb_spark.ingest import manifest
     from tickdb_spark.operators.bm25 import bm25_topk_from_index
     from tickdb_spark.streaming.index import (
         _POSTING_SCHEMA,
+        _read_maintained,
         compact_index,
         stream_bm25_index_maintenance,
     )
@@ -877,13 +875,13 @@ def test_compact_index_preserves_probe_results_and_reduces_files(tmp_path, spark
     idx, n, tot = stream_bm25_index_maintenance(spark, str(landing), work, docs.schema)
 
     post_dir = str(tmp_path / "state" / "postings")
-    dest = compact_index(spark, post_dir, _POSTING_SCHEMA, ["token", "doc_id"])
-    compacted = spark.read.parquet(dest)
+    n_log = len(manifest(work)["tables"]["postings"])
+    compact_index(spark, post_dir, _POSTING_SCHEMA, ["token", "doc_id"])
+    compacted = _read_maintained(spark, post_dir, _POSTING_SCHEMA)
     assert sorted(map(tuple, compacted.collect())) == sorted(
         map(tuple, idx.collect())
     )
-    n_log = len(glob.glob(post_dir + "/**/*.parquet", recursive=True))
-    n_comp = len(glob.glob(dest + "/*.parquet"))
+    n_comp = len(manifest(work)["tables"]["postings"])
     assert n_comp == 1 < n_log
 
     queries = [(0, "hash join merge")]
@@ -894,14 +892,15 @@ def test_compact_index_preserves_probe_results_and_reduces_files(tmp_path, spark
 
 def test_stream_dedup_epoch_rerun_does_not_lose_or_duplicate(tmp_path, spark):
     """Crash-replay idempotence for the dedup stream: simulate a crash
-    AFTER the fingerprint write but BEFORE the checkpoint commit by
-    pre-planting epoch_0's fingerprints (and a partial kept write).
+    AFTER the fingerprint commit but BEFORE the checkpoint commit by
+    committing epoch 0's fingerprints (and a partial kept write) first.
     With plain appends the re-run's anti-join would see its own hashes
     and silently drop every keeper; with own-epoch-excluded reads +
     per-epoch overwrite, the kept set equals the clean-run result."""
     import pandas as pd
 
     from tickdb_spark.streaming.dedup import stream_dedup_ingest
+    from tickdb_spark.streaming.index import _write_epoch
 
     pdf = pd.DataFrame(
         {"doc_id": [1, 2, 3], "text": ["aa", "bb", "aa"]}
@@ -914,9 +913,10 @@ def test_stream_dedup_epoch_rerun_does_not_lose_or_duplicate(tmp_path, spark):
     # half-committed epoch 0: fingerprints written, kept partial, no
     # checkpoint commit -> the stream will re-run epoch 0
     fp0 = _dedup_hashes(spark, ["aa"])  # the exact hash the batch will produce
-    fp0.write.parquet(str(tmp_path / "state" / "fingerprints" / "epoch_0"))
-    spark.createDataFrame([], "doc_id long, content_hash string").write.parquet(
-        str(tmp_path / "state" / "kept" / "epoch_0")
+    _write_epoch(fp0, str(tmp_path / "state" / "fingerprints"), 0)
+    _write_epoch(
+        spark.createDataFrame([], "doc_id long, content_hash string"),
+        str(tmp_path / "state" / "kept"), 0,
     )
 
     kept = stream_dedup_ingest(spark, str(landing), work).orderBy("doc_id").collect()
@@ -931,6 +931,7 @@ def test_compact_index_with_tombstones_drops_rows_physically(tmp_path, spark):
     from tickdb_spark.operators.similarity import lsh_signature_table
     from tickdb_spark.streaming.index import (
         _SIG_SCHEMA,
+        _read_maintained,
         compact_index,
         stream_ann_index_maintenance,
         tombstone_filter,
@@ -957,14 +958,15 @@ def test_compact_index_with_tombstones_drops_rows_physically(tmp_path, spark):
     assert dead
 
     filtered = tombstone_filter(sigs, tomb)
-    dest = compact_index(
+    sig_dir = str(tmp_path / "state" / "signatures")
+    compact_index(
         spark,
-        str(tmp_path / "state" / "signatures"),
+        sig_dir,
         _SIG_SCHEMA,
         ["vec_id", "table_id"],
         tombstones=tomb,
     )
-    compacted = spark.read.parquet(dest)
+    compacted = _read_maintained(spark, sig_dir, _SIG_SCHEMA)
     got_ids = {r.vec_id for r in compacted.select("vec_id").distinct().collect()}
     assert got_ids.isdisjoint(dead)
     assert sorted(map(tuple, compacted.collect())) == sorted(
@@ -985,15 +987,16 @@ def test_maintained_index_schema_evolution_null_backfills(tmp_path, spark):
     footer-merge pass (the explicit schema IS the merged schema)."""
     from pyspark.sql import types as T
 
-    from tickdb_spark.streaming.index import _read_maintained
+    from tickdb_spark.streaming.index import _read_maintained, _write_epoch
 
     base = tmp_path / "log"
-    spark.createDataFrame([(1, 10), (2, 20)], "doc_id long, tf long").write.parquet(
-        str(base / "epoch_0")
+    _write_epoch(
+        spark.createDataFrame([(1, 10), (2, 20)], "doc_id long, tf long"), str(base), 0
     )
-    spark.createDataFrame(
-        [(3, 30, "en")], "doc_id long, tf long, lang string"
-    ).write.parquet(str(base / "epoch_1"))
+    _write_epoch(
+        spark.createDataFrame([(3, 30, "en")], "doc_id long, tf long, lang string"),
+        str(base), 1,
+    )
 
     evolved = T.StructType(
         [
@@ -1064,13 +1067,13 @@ def test_quantile_face_tombstones_and_compaction(tmp_path, spark):
     sample equal the estimates over the filtered log, and the filtered
     sample is still a valid bottom-k' sample of the survivors (any
     survivor outside it hashes above every retained row per epoch)."""
-    import glob
-
     from pyspark.sql import functions as F
 
+    from tickdb_spark.ingest import manifest
     from tickdb_spark.operators.sketch import bottomk_quantiles
     from tickdb_spark.streaming.index import (
         _BKSAMPLE_SCHEMA,
+        _read_maintained,
         compact_index,
         stream_quantile_sketch_maintenance,
         tombstone_filter,
@@ -1098,23 +1101,19 @@ def test_quantile_face_tombstones_and_compaction(tmp_path, spark):
     dead = {r._key for r in tomb.collect()}
     smp_dir = str(tmp_path / "state" / "bk_samples")
     live_log = tombstone_filter(
-        spark.read.schema(_BKSAMPLE_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(smp_dir),
-        tomb,
-        "_key",
-    )
-    dest = compact_index(
+        _read_maintained(spark, smp_dir, _BKSAMPLE_SCHEMA), tomb, "_key"
+    ).select(*_BKSAMPLE_SCHEMA.fieldNames())
+    n_log = len(manifest(work)["tables"]["bk_samples"])
+    compact_index(
         spark, smp_dir, _BKSAMPLE_SCHEMA, ["_h", "_key"],
         tombstones=tomb, id_col="_key",
     )
-    compacted = spark.read.parquet(dest)
+    compacted = _read_maintained(spark, smp_dir, _BKSAMPLE_SCHEMA)
     assert {r._key for r in compacted.collect()}.isdisjoint(dead)
     assert sorted(map(tuple, compacted.collect())) == sorted(
         map(tuple, live_log.collect())
     )
-    n_log = len(glob.glob(smp_dir + "/**/*.parquet", recursive=True))
-    n_comp = len(glob.glob(dest + "/*.parquet"))
+    n_comp = len(manifest(work)["tables"]["bk_samples"])
     assert n_comp == 1 < n_log
 
     # probe equality: quantiles off the compacted merged sample == off
@@ -1134,12 +1133,12 @@ def test_docstats_face_tombstones_and_compaction(tmp_path, spark):
     face: tombstoned docs vanish physically, the compacted log reads
     back with the evolved schema (old epochs still NULL-backfilled),
     and the surviving rows equal the stats batch-built over survivors."""
-    import glob
-
     from pyspark.sql import functions as F
 
+    from tickdb_spark.ingest import manifest
     from tickdb_spark.streaming.index import (
         _DOCSTATS_V2,
+        _read_maintained,
         compact_index,
         stream_docstats_maintenance,
         tombstone_filter,
@@ -1172,17 +1171,17 @@ def test_docstats_face_tombstones_and_compaction(tmp_path, spark):
     dead = {r.doc_id for r in tomb.collect()}
     stats_dir = str(tmp_path / "state" / "doc_stats")
     filtered = tombstone_filter(stats, tomb, "doc_id")
-    dest = compact_index(
+    n_log = len(manifest(work)["tables"]["doc_stats"])
+    compact_index(
         spark, stats_dir, _DOCSTATS_V2, ["doc_id"],
         tombstones=tomb, id_col="doc_id",
     )
-    compacted = spark.read.parquet(dest)
+    compacted = _read_maintained(spark, stats_dir, _DOCSTATS_V2)
     assert {r.doc_id for r in compacted.collect()}.isdisjoint(dead)
     assert sorted(map(tuple, compacted.collect())) == sorted(
         map(tuple, filtered.collect())
     )
-    n_log = len(glob.glob(stats_dir + "/**/*.parquet", recursive=True))
-    assert len(glob.glob(dest + "/*.parquet")) == 1 < n_log
+    assert len(manifest(work)["tables"]["doc_stats"]) == 1 < n_log
 
     # surviving rows == batch-built stats over survivors (v1 docs NULL
     # lang, v2 docs 'en')
@@ -1301,11 +1300,11 @@ def test_component_face_tombstones_and_compaction(tmp_path, spark):
     assert 11 not in after and after[10] == 1
 
     # compaction: one sorted file, identical latest-per-id labels
-    dest = compact_index(
+    compact_index(
         spark, lbl_dir, _LABEL_SCHEMA,
         sort_cols=["component", "id"], tombstones=ts, id_col="id",
     )
-    compacted = _current_labels(spark.read.schema(_LABEL_SCHEMA).parquet(dest))
+    compacted = _current_labels(_read_maintained(spark, lbl_dir, _LABEL_SCHEMA))
     assert {r.id: r.component for r in compacted.collect()} == after
 
 
@@ -1421,12 +1420,12 @@ def test_scd2_face_tombstones_and_compaction(tmp_path, spark):
     after = {(r.user_id, r.valid_from): r.event_type for r in probe.collect()}
     assert after == {(1, 10): "A", (1, 20): "B"}  # user 2 gone
 
-    dest = compact_index(
+    compact_index(
         spark, hist_dir, SCD2_HIST_SCHEMA,
         sort_cols=["user_id", "valid_from"], tombstones=ts, id_col="user_id",
     )
     compacted = scd2_current_history(
-        spark.read.schema(SCD2_HIST_SCHEMA).parquet(dest)
+        _read_maintained(spark, hist_dir, SCD2_HIST_SCHEMA)
     )
     assert {
         (r.user_id, r.valid_from): r.event_type for r in compacted.collect()
@@ -1514,11 +1513,11 @@ def test_stream_dq_maintenance_additive_and_restart(tmp_path, spark):
 
     # compaction preserves the merged report
     ctr_dir = str(tmp_path / "state" / "dq_counters")
-    dest = compact_index(
+    compact_index(
         spark, ctr_dir, DQ_COUNTER_SCHEMA, sort_cols=["check_name", "epoch"]
     )
     rep = dq_counters_report(
-        spark.read.schema(DQ_COUNTER_SCHEMA).parquet(dest), "t"
+        _read_maintained(spark, ctr_dir, DQ_COUNTER_SCHEMA), "t"
     )
     assert {
         r["check_name"]: (r["violations"], r["total"]) for r in rep.collect()
@@ -1528,26 +1527,29 @@ def test_stream_dq_maintenance_additive_and_restart(tmp_path, spark):
 def test_compaction_policy_triggers(tmp_path):
     """compaction_policy fires on any of: epoch count, small average
     file size, log-to-base bytes ratio — and stays quiet on a healthy
-    young log. Pure directory statistics, no Spark."""
-    import os as _os
-
+    young log. The manifest's file sizes only: no Spark, and the files
+    it lists need not exist."""
+    from tickdb_spark import ingest
     from tickdb_spark.streaming.index import compaction_policy
 
-    def mk(dirname, epochs, file_bytes, seed_bytes=0):
-        d = tmp_path / dirname
-        d.mkdir()
-        if seed_bytes:
-            (d / "seed.parquet").write_bytes(b"x" * seed_bytes)
-        for e in range(epochs):
-            ed = d / f"epoch_{e}"
-            ed.mkdir()
-            (ed / "part-0.parquet").write_bytes(b"x" * file_bytes)
-        return str(d)
+    work = str(tmp_path)
+
+    def mk(name, epochs, file_bytes, base_bytes=None):
+        files = [
+            {"path": f"{name}/e{e}.parquet", "bytes": file_bytes, "epoch": str(e)}
+            for e in range(epochs)
+        ]
+        if base_bytes is not None:
+            files.append({"path": f"{name}/base.parquet", "bytes": base_bytes})
+        with ingest.writer(work) as m:
+            ingest._publish(work, m, "plant", {name: files})
+        return str(tmp_path / name)
 
     # healthy young log: few epochs, big files, no base -> not due
     healthy = mk("healthy", 4, 8 << 20)
     pol = compaction_policy(healthy)
     assert pol["due"] is False and pol["epochs"] == 4 and pol["reasons"] == []
+    assert pol["base_bytes"] is None
 
     # epoch-count trigger
     old = mk("old", 70, 8 << 20)
@@ -1562,16 +1564,14 @@ def test_compaction_policy_triggers(tmp_path):
     single = mk("single", 1, 1024)
     assert compaction_policy(single)["due"] is False
 
-    # ratio trigger: log outweighs the compacted base > 3x
-    log = mk("log", 4, 8 << 20)
-    base = tmp_path / "log_compacted"
-    base.mkdir()
-    (base / "part-0.parquet").write_bytes(b"x" * (8 << 20))
+    # ratio trigger: log outweighs the compacted base > 3x; the base's
+    # file is neither an epoch nor part of the small-files average
+    log = mk("log", 4, 8 << 20, base_bytes=8 << 20)
     pol = compaction_policy(log)
     assert pol["due"] and any("x base" in r for r in pol["reasons"])
-    assert pol["base_bytes"] == 8 << 20
+    assert (pol["base_bytes"], pol["epochs"], pol["files"]) == (8 << 20, 4, 4)
     # same log against a big-enough base -> quiet
-    (base / "part-0.parquet").write_bytes(b"x" * (16 << 20))
+    mk("log", 4, 8 << 20, base_bytes=16 << 20)
     assert compaction_policy(log)["due"] is False
 
 
@@ -1586,6 +1586,7 @@ def test_stream_groupby_mv_additive_restart_compact(tmp_path, spark):
     from pyspark.sql import types as T
 
     from tickdb_spark.streaming.index import (
+        _read_maintained,
         compact_index,
         groupby_mv_report,
         stream_groupby_mv_maintenance,
@@ -1644,8 +1645,8 @@ def test_stream_groupby_mv_additive_restart_compact(tmp_path, spark):
         + [T.StructField(c, T.LongType(), False)
            for c in ("cnt", "sum_q", "min_q", "max_q")]
     )
-    dest = compact_index(spark, mv_dir, seed, sort_cols=["g"])
-    rep = groupby_mv_report(spark.read.schema(seed).parquet(dest), ["g"])
+    compact_index(spark, mv_dir, seed, sort_cols=["g"])
+    rep = groupby_mv_report(_read_maintained(spark, mv_dir, seed), ["g"])
     assert {r["g"]: (r["cnt"], r["sum_q"], r["min_q"], r["max_q"])
             for r in rep.collect()} == rows2
 
@@ -1742,12 +1743,13 @@ def test_stream_groupby_mv_variance_states_and_rebuild(tmp_path, spark):
     # double count, no spurious delete)
     import pyspark.sql.functions as SF
 
-    from tickdb_spark.streaming.index import _mv_partial_agg
+    from tickdb_spark.streaming.index import _mv_partial_agg, _write_epoch
 
-    _mv_partial_agg(corrected, ["g"], "v", 1_000_000, 1_000).withColumn(
-        "epoch", SF.lit(2).cast("long")
-    ).withColumn("rebuilt", SF.lit(True)).write.mode("overwrite").parquet(
-        _os.path.join(work, "mv_partials", "epoch_rebuild_2")
+    _write_epoch(
+        _mv_partial_agg(corrected, ["g"], "v", 1_000_000, 1_000)
+        .withColumn("epoch", SF.lit(2).cast("long"))
+        .withColumn("rebuilt", SF.lit(True)),
+        _os.path.join(work, "mv_partials"), "rebuild_2",
     )
     mid = _got(groupby_mv_view(spark, work, schema, ["g"], sq_scale=1_000))
     assert mid == states["x"]  # old state, bit-identical
@@ -1872,10 +1874,13 @@ def test_stream_groupby_mv_hll_distinct_states(tmp_path, spark):
     # be invisible
     import pyspark.sql.functions as F
 
-    hll_hit_registers(corrected, ["g"], "u", 6).withColumn(
-        "epoch", F.lit(2).cast("long")
-    ).withColumn("rebuilt", F.lit(True)).write.mode("overwrite").parquet(
-        _os.path.join(work, "mv_hll_partials", "epoch_rebuild_2")
+    from tickdb_spark.streaming.index import _write_epoch
+
+    _write_epoch(
+        hll_hit_registers(corrected, ["g"], "u", 6)
+        .withColumn("epoch", F.lit(2).cast("long"))
+        .withColumn("rebuilt", F.lit(True)),
+        _os.path.join(work, "mv_hll_partials"), "rebuild_2",
     )
     mid = _got(groupby_mv_view(spark, work, schema, ["g"], distinct_p=6))
     assert mid == states["x"]
@@ -1957,9 +1962,9 @@ def test_mv_hll_register_log_compaction(tmp_path, spark):
 
     hll_dir = _os.path.join(work, "mv_hll_partials")
     reg_schema = _mv_hll_schema(schema, ["g"])
-    dest = compact_index(spark, hll_dir, reg_schema, sort_cols=["g", "bucket"])
+    compact_index(spark, hll_dir, reg_schema, sort_cols=["g", "bucket"])
     merged = (
-        _read_maintained(spark, dest, reg_schema)
+        _read_maintained(spark, hll_dir, reg_schema)
         .groupBy("g", "bucket")
         .agg(F.max("register").cast("long").alias("register"))
     )
@@ -1988,6 +1993,7 @@ def test_stream_groupby_mv_topk_states(tmp_path, spark):
 
     from tickdb_spark.streaming.index import (
         _mv_topk_partial,
+        _write_epoch,
         groupby_mv_rebuild_keys,
         groupby_mv_topk_view,
         stream_groupby_mv_topk_maintenance,
@@ -2051,10 +2057,11 @@ def test_stream_groupby_mv_topk_states(tmp_path, spark):
         [r for r in corrected_rows if r[0] == "a"], schema
     )
     # crash window: orphan replacement only — invisible
-    _mv_topk_partial(corrected, ["g"], "v", "rid", 1_000_000, 3).withColumn(
-        "epoch", F.lit(2).cast("long")
-    ).withColumn("rebuilt", F.lit(True)).write.mode("overwrite").parquet(
-        _os.path.join(work, "mv_topk_partials", "epoch_rebuild_2")
+    _write_epoch(
+        _mv_topk_partial(corrected, ["g"], "v", "rid", 1_000_000, 3)
+        .withColumn("epoch", F.lit(2).cast("long"))
+        .withColumn("rebuilt", F.lit(True)),
+        _os.path.join(work, "mv_topk_partials"), "rebuild_2",
     )
     assert _got(
         groupby_mv_topk_view(spark, work, schema, ["g"], 3)
@@ -2081,19 +2088,22 @@ def test_compact_all_unified_workdir_pass(tmp_path, spark):
     logs under ONE work_dir (LSH signatures + group-by MV partials);
     compact_all drives each log's compact_index off the shared
     compaction_policy trigger in one pass. Rows are bit-identical
-    before/after per table, epoch-dir counts collapse to a single
-    sorted file, checkpoint dirs and not-due logs are left alone, and
-    the report says why each log was or wasn't rewritten."""
-    import glob
+    before/after per log, each compacted log is one sorted file with no
+    epochs left, a not-due log is left alone, and the report says why
+    each log was or wasn't rewritten."""
+    import os as _os
 
     import pandas as pd
 
     from pyspark.sql import types as T
+    from tickdb_spark.ingest import manifest
     from tickdb_spark.streaming.index import (
         _SIG_SCHEMA,
+        _mv_seed_schema,
         _read_maintained,
         compact_all,
         compaction_policy,
+        groupby_mv_report,
         stream_ann_index_maintenance,
         stream_groupby_mv_maintenance,
     )
@@ -2131,61 +2141,52 @@ def test_compact_all_unified_workdir_pass(tmp_path, spark):
         spark, str(land_m), work, mv_schema, ["g"], "v"
     ).collect()
 
-    # 3 epochs each; max_epochs=2 makes both logs due, tombstone seed not
+    # 3 epochs each; max_epochs=2 makes both logs due, the tombstone log not
     reports = compact_all(spark, work, max_epochs=2)
     by_name = {r["table"]: r for r in reports}
+    assert set(by_name) == {"signatures", "mv_partials", "mv_tombstones"}
     assert by_name["signatures"]["compacted"] is True
     assert by_name["mv_partials"]["compacted"] is True
     assert any("epochs" in s for s in by_name["signatures"]["reasons"])
-    # the MV tombstone seed (0 epochs) is discovered but not rewritten
+    # the MV tombstone log (registered, 0 epochs) is reported, not rewritten
     assert by_name["mv_tombstones"]["compacted"] is False
-    assert not any(t.startswith("checkpoint") for t in by_name)
+    assert by_name["mv_tombstones"]["epochs"] == 0
 
-    # identical rows, one file, zero epoch dirs after
-    for name, before in (("signatures", sig_before),):
-        dest = by_name[name]["dest"]
-        after = spark.read.parquet(dest).collect()
-        assert sorted(map(tuple, after)) == sorted(map(tuple, before))
-        assert len(glob.glob(dest + "/*.parquet")) == 1
-        assert compaction_policy(dest)["epochs"] == 0
+    # identical rows, one file, zero epochs after
+    sig_dir = by_name["signatures"]["dest"]
+    assert sig_dir == _os.path.join(work, "signatures")
+    after = _read_maintained(spark, sig_dir, _SIG_SCHEMA).collect()
+    assert sorted(map(tuple, after)) == sorted(map(tuple, sig_before))
+    assert len(manifest(work)["tables"]["signatures"]) == 1
+    assert compaction_policy(sig_dir)["epochs"] == 0
     # MV: the merged VIEW over the compacted partials equals the live one
-    from tickdb_spark.streaming.index import groupby_mv_report
-
-    comp = spark.read.parquet(by_name["mv_partials"]["dest"])
-    view_after = groupby_mv_report(comp, ["g"]).collect()
-    assert sorted(map(tuple, view_after)) == sorted(
-        map(tuple, (r for r in mv_before))
+    comp = _read_maintained(
+        spark, by_name["mv_partials"]["dest"], _mv_seed_schema(mv_schema, ["g"], None)
     )
+    view_after = groupby_mv_report(comp, ["g"]).collect()
+    assert sorted(map(tuple, view_after)) == sorted(map(tuple, mv_before))
 
-    # second pass: nothing due anymore on the compacted bases; the live
-    # logs still carry their epochs so they stay due (the caller swaps
-    # probes to dest and retires the log, per the compact_index contract)
+    # second pass: the compacted logs hold no epochs, so nothing is due
     again = compact_all(spark, work, max_epochs=2)
     assert {r["table"] for r in again} == set(by_name)
+    assert not any(r["compacted"] for r in again)
 
 
-def test_swap_compacted_adopts_base_and_stream_continues(tmp_path, spark):
-    """The 'caller swaps probes over and retires the log' step as a
-    crash-safe primitive: maintain 3 epochs -> compact_all(swap=True)
-    adopts the rewrite as base_1/ INSIDE the table dir and retires
-    exactly the covered epoch files; the same stream (same checkpoint)
-    then lands 2 MORE epochs and the maintained view equals the batch
-    aggregate over all 5 batches. A simulated kill between install and
-    retire rolls forward via the journal on the next compact_all."""
-    import glob
-    import json as _json
+def test_compaction_adopts_base_and_stream_continues(tmp_path, spark):
+    """compact_all adopts each rewrite in place: after 3 epochs the
+    signature log is one base file with the same rows and the covered
+    epochs absorbed; the same stream (same checkpoint) then lands 2 MORE
+    epochs beside the base and the maintained view equals the batch
+    aggregate over all 5 batches."""
     import os as _os
 
-    import pandas as pd
-
-    from pyspark.sql import types as T
+    from tickdb_spark.ingest import manifest
     from tickdb_spark.streaming.index import (
         _SIG_SCHEMA,
         _read_maintained,
         compact_all,
         compaction_policy,
         stream_ann_index_maintenance,
-        swap_recover,
     )
 
     emb = (
@@ -2212,13 +2213,14 @@ def test_swap_compacted_adopts_base_and_stream_continues(tmp_path, spark):
     )
 
     sig_dir = _os.path.join(work, "signatures")
-    reports = compact_all(spark, work, max_epochs=2, swap=True)
+    reports = compact_all(spark, work, max_epochs=2)
     (r,) = [x for x in reports if x["table"] == "signatures"]
-    assert r["compacted"] and r["dest"] == _os.path.join(sig_dir, "base_1")
-    # epoch dirs retired, base adopted, rows identical, dest dir gone
+    assert r["compacted"] and r["dest"] == sig_dir
+    # the log is one base file (no epoch key), the epochs are absorbed
+    (base,) = manifest(work)["tables"]["signatures"]
+    assert "epoch" not in base
+    assert manifest(work)["absorbed"]["signatures"] == ["0", "1", "2"]
     assert compaction_policy(sig_dir)["epochs"] == 0
-    assert not _os.path.isdir(sig_dir + "_compacted")
-    assert len(glob.glob(sig_dir + "/**/*.parquet", recursive=True)) == 1
     after = sorted(
         map(tuple, _read_maintained(spark, sig_dir, _SIG_SCHEMA).collect())
     )
@@ -2243,56 +2245,98 @@ def test_swap_compacted_adopts_base_and_stream_continues(tmp_path, spark):
     assert live2 == want
     assert compaction_policy(sig_dir)["epochs"] == 2  # the new epochs only
 
-    # crash window: compact again, then simulate a kill AFTER the journal
-    # write but BEFORE any move — recovery must complete the swap
-    reports = compact_all(spark, work, max_epochs=1)
-    (r2,) = [x for x in reports if x["table"] == "signatures"]
-    assert r2["compacted"]
-    dest = r2["dest"]
-    man = _json.load(open(_os.path.join(dest, "_compact_manifest.json")))
-    journal = {
-        "dest": _os.path.abspath(dest),
-        "table_dir": _os.path.abspath(sig_dir),
-        "install_dir": "base_2",
-        "install_files": sorted(
-            f for f in _os.listdir(dest) if f.endswith(".parquet")
-        ),
-        "retire": man["sources"],
-    }
-    jp = sig_dir + "_swap_journal.json"
-    with open(jp, "w") as fh:
-        _json.dump(journal, fh)
-    assert swap_recover(sig_dir) is True
-    assert not _os.path.exists(jp)
-    assert compaction_policy(sig_dir)["epochs"] == 0
-    final = sorted(
-        map(tuple, _read_maintained(spark, sig_dir, _SIG_SCHEMA).collect())
-    )
-    assert final == want
-    # double recovery is a no-op
-    assert swap_recover(sig_dir) is False
+
+_LOG_SCHEMA = "k long, v long"
 
 
-def test_swap_absorbed_epoch_replay_does_not_double_count(tmp_path, spark):
+def _rerun_epoch_1(spark, log):
+    """A crash re-run of epoch 1 that writes other rows than its first run."""
+    from tickdb_spark.streaming.index import _write_epoch
+
+    _write_epoch(spark.createDataFrame([(10, 1), (11, 1)], _LOG_SCHEMA), log, 1)
+
+
+def _compact_dropping_k2(spark, log):
+    """A compaction that also drops tombstoned k = 2."""
+    from tickdb_spark.streaming.index import compact_index
+
+    tomb = spark.createDataFrame([(2,)], "k long")
+    compact_index(spark, log, _LOG_SCHEMA, ["k"], tombstones=tomb, id_col="k")
+
+
+_LOG_OPS = {"write_epoch": _rerun_epoch_1, "compact_index": _compact_dropping_k2}
+
+
+@pytest.mark.parametrize("point", ["write", "publish", "delete"])
+@pytest.mark.parametrize("op", list(_LOG_OPS))
+def test_log_commits_end_like_an_uninterrupted_run_at_every_crash_point(
+    tmp_path, spark, monkeypatch, op, point
+):
+    """For an epoch re-run and a compaction: a crash after the data
+    write and before the manifest link leaves the old rows and layout,
+    one right after the link or at the first deletion of a dropped file
+    gives the uninterrupted run's, every file the manifest lists is on
+    disk, and a rerun ends where one uninterrupted run does."""
+    import os as _os
+
+    from tests.test_rollup import _crash_at
+    from tickdb_spark.ingest import manifest
+    from tickdb_spark.streaming.index import _read_maintained, _write_epoch
+
+    def state(work):
+        m = manifest(work)
+        rows = _read_maintained(spark, _os.path.join(work, "log"), _LOG_SCHEMA)
+        return (
+            sorted(map(tuple, rows.collect())),
+            sorted({f.get("epoch", "") for f in m["tables"]["log"]}),
+            m.get("absorbed", {}).get("log", []),
+        )
+
+    clean, work = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for w in (clean, work):
+        for e in (0, 1):
+            rows = spark.createDataFrame([(e, e), (e + 2, e)], _LOG_SCHEMA)
+            _write_epoch(rows, _os.path.join(w, "log"), e)
+    before, n = state(work), manifest(work)["n"]
+    _LOG_OPS[op](spark, _os.path.join(clean, "log"))
+    uninterrupted = state(clean)
+    assert uninterrupted != before
+    with monkeypatch.context() as m:
+        _crash_at(m, work, point)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            _LOG_OPS[op](spark, _os.path.join(work, "log"))
+    published = manifest(work)["n"] > n
+    assert published is (point != "write")
+    assert state(work) == (uninterrupted if published else before)
+    listed = [f["path"] for fs in manifest(work)["tables"].values() for f in fs]
+    assert all(_os.path.isfile(_os.path.join(work, p)) for p in listed)
+    _LOG_OPS[op](spark, _os.path.join(work, "log"))
+    assert state(work) == uninterrupted
+
+
+def test_replayed_absorbed_epoch_publishes_nothing(tmp_path, spark):
     """The checkpoint-replay crash window (r16 review finding): an epoch
-    is written, the process dies BEFORE the stream commit, and the
-    operator runs compact_all(swap=True) before restarting — on restart
-    the checkpoint replays the batch and RE-CREATES the retired epoch
-    dir, whose rows already live in base_<n>. The absorbed-epochs ledger
-    makes the replayed dir reader-invisible (rows stay exact), and the
-    next compact cycle retires the debris."""
+    is committed, the process dies BEFORE the stream commit, and the
+    operator runs compact_all before restarting — on restart the
+    checkpoint replays the batch, whose rows already live in the base.
+    The epoch is in the log's absorbed set, so the replay's write
+    publishes nothing and writes no file: rows stay exact."""
     import os as _os
 
     import pandas as pd
 
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
+    from tickdb_spark.ingest import _data_files, manifest
     from tickdb_spark.streaming.index import (
+        _mv_partial_agg,
+        _mv_seed_schema,
         _read_maintained,
+        _write_epoch,
         compact_all,
         compaction_policy,
-        stream_groupby_mv_maintenance,
         groupby_mv_report,
-        _mv_seed_schema,
+        stream_groupby_mv_maintenance,
     )
 
     land = tmp_path / "landing"
@@ -2317,20 +2361,20 @@ def test_swap_absorbed_epoch_replay_does_not_double_count(tmp_path, spark):
         )
     )
     mv_dir = _os.path.join(work, "mv_partials")
-    compact_all(spark, work, max_epochs=2, swap=True)
+    compact_all(spark, work, max_epochs=2)
+    m, on_disk = manifest(work), _data_files(work, "mv_partials")
+    assert "1" in m["absorbed"]["mv_partials"]
 
-    # simulate the replay: re-create a retired epoch dir with the exact
-    # partial the stream handler would rewrite (epoch 1's batch)
-    from tickdb_spark.streaming.index import _mv_partial_agg
-    from pyspark.sql import functions as F
-
+    # the replay: epoch 1's batch, as the stream handler writes it
     b1 = spark.createDataFrame([("a", 2.0), ("b", 3.0)], "g string, v double")
-    _mv_partial_agg(b1, ["g"], "v", 1_000_000, None).withColumn(
-        "epoch", F.lit(1).cast("long")
-    ).withColumn("rebuilt", F.lit(False)).write.mode("overwrite").parquet(
-        _os.path.join(mv_dir, "epoch_1")
+    _write_epoch(
+        _mv_partial_agg(b1, ["g"], "v", 1_000_000, None)
+        .withColumn("epoch", F.lit(1).cast("long"))
+        .withColumn("rebuilt", F.lit(False)),
+        mv_dir, 1,
     )
-
+    assert manifest(work) == m
+    assert _data_files(work, "mv_partials") == on_disk
     seed = _mv_seed_schema(schema, ["g"], None)
     got = sorted(
         map(
@@ -2341,24 +2385,8 @@ def test_swap_absorbed_epoch_replay_does_not_double_count(tmp_path, spark):
             ).collect(),
         )
     )
-    assert got == want  # replayed epoch invisible — no double count
-    # policy: the debris dir is absorbed, not a live epoch
+    assert got == want  # no double count
     assert compaction_policy(mv_dir)["epochs"] == 0
-    # next compact cycle: identical rows, debris listed for retire
-    reports = compact_all(spark, work, max_epochs=0, force=True, swap=True)
-    (r,) = [x for x in reports if x["table"] == "mv_partials"]
-    assert r["compacted"]
-    assert not _os.path.isdir(_os.path.join(mv_dir, "epoch_1"))
-    got2 = sorted(
-        map(
-            tuple,
-            groupby_mv_report(
-                _read_maintained(spark, mv_dir, seed).drop("epoch", "rebuilt"),
-                ["g"],
-            ).collect(),
-        )
-    )
-    assert got2 == want
 
 
 def _land(landing, i, rows, columns):
@@ -2453,11 +2481,11 @@ _SCD2_COLS = ["user_id", "event_type", "ts_us", "event_id"]
 def test_stream_face_sees_its_swapped_base(
     tmp_path, spark, columns, log, before, after, face, batch
 ):
-    """After compact_all(swap=True) adopts a face's own state log into
-    base_1/, the next batch must read the committed rows from the base:
+    """After compact_all adopts a face's own state log as its base, the
+    next batch must read the committed rows from the base:
     the face's answer equals the batch-built one over everything landed
-    (a post-swap dup is dropped, a post-swap merge or late event sees
-    the pre-swap history)."""
+    (a dup landing after the compaction is dropped, a merge or late
+    event after it sees the history before it)."""
     from tickdb_spark.streaming.index import compact_all, compaction_policy
 
     landing = tmp_path / "landing"
@@ -2468,7 +2496,7 @@ def test_stream_face_sees_its_swapped_base(
     pre = [r for rows in before for r in rows]
     assert face(spark, str(landing), work) == batch(spark, pre)
 
-    reports = compact_all(spark, work, max_epochs=1, swap=True)
+    reports = compact_all(spark, work, max_epochs=1)
     (r,) = [r for r in reports if r["table"] == log]
     assert r["compacted"]
     assert compaction_policy(str(tmp_path / "state" / log))["epochs"] == 0
@@ -2521,10 +2549,12 @@ def test_stream_face_epoch_rerun_equals_clean_run(
     tmp_path, spark, columns, batches, face, batch, partial
 ):
     """Crash replay for a face that reads its own state: epoch 0's state
-    write landed but the checkpoint commit did not, so the stream
+    write was committed but the checkpoint commit was not, so the stream
     re-runs epoch 0 over its own partial write. The handler reads its
     committed state with its own epoch excluded, so the answer equals a
     clean run's."""
+    from tickdb_spark.streaming.index import _write_epoch
+
     answers = []
     for run in ("clean", "rerun"):
         landing = tmp_path / run / "landing"
@@ -2534,6 +2564,6 @@ def test_stream_face_epoch_rerun_equals_clean_run(
         work = tmp_path / run / "state"
         if run == "rerun":
             log, rows = partial(spark, batches[0])
-            rows.write.parquet(str(work / log / "epoch_0"))
+            _write_epoch(rows, str(work / log), 0)
         answers.append(face(spark, str(landing), str(work)))
     assert answers[1] == answers[0] == batch(spark, [r for b in batches for r in b])

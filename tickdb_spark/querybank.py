@@ -12274,11 +12274,11 @@ def _compact_all_fixture(spark: SparkSession, sf_dir: str) -> list:
             )
         )
         sig_live_rows = sorted(map(tuple, sig_live.collect()))
-        # swap=True: the rewrite is ADOPTED in place (base_<n>/ inside the
-        # table dir, covered epochs retired via the journaled roll-forward),
-        # so epochs_after and rows_identical are measured on the LIVE dir —
-        # the full compact → swap → read-path lifecycle in one entry
-        reports = compact_all(spark, work, max_epochs=2, swap=True)
+        # each rewrite is adopted in place (the log becomes one base and
+        # its epochs are absorbed), so epochs_after and rows_identical are
+        # measured on the LIVE log — the full compact → read-path
+        # lifecycle in one entry
+        reports = compact_all(spark, work, max_epochs=2)
         rows = []
         for r in sorted(reports, key=lambda x: x["table"]):
             if r["compacted"]:
@@ -12358,8 +12358,9 @@ def _compact_all_fixture(spark: SparkSession, sf_dir: str) -> list:
     "identical boolean comparing the compacted table (for the MV log: "
     "its merged VIEW) against the live log — the bound-check-boolean "
     "discipline that makes engine-internal lifecycle hash-checkable; "
-    "byte statistics stay out (box-dependent). The MV tombstone seed is "
-    "discovered but correctly NOT rewritten (0 epochs, nothing due)",
+    "byte statistics stay out (box-dependent). The MV tombstone log "
+    "(registered, no rebuild yet) is reported but correctly NOT "
+    "rewritten (0 epochs, nothing due)",
 )
 def index_compact_all_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = _compact_all_fixture(spark, sf_dir)

@@ -7,11 +7,12 @@ per content hash), (2) anti-joins the keepers against the seen-hash
 table, (3) appends survivors to the kept output and their hashes to the
 fingerprint table. ``foreachBatch`` is the Structured Streaming idiom for
 this read-modify-append sink shape. Writes are IDEMPOTENT per epoch
-(each batch overwrites its own ``epoch_<id>/`` subdirectory, and the
-anti-join reads every epoch EXCEPT its own), so a crash between the
-parquet writes and the checkpoint commit re-runs the epoch to the same
-state: a plain append would let the re-run see its own partial
-fingerprint write and either duplicate or silently drop keepers.
+(each batch's files replace the ones its epoch wrote before, and the
+anti-join reads every epoch EXCEPT its own; ``streaming/index.py``
+states the epoch-log format), so a crash between the writes' commits
+and the checkpoint commit re-runs the epoch to the same state: a plain
+append would let the re-run see its own partial fingerprint write and
+either duplicate or silently drop keepers.
 
 Scale: state is externalized to the fingerprint table (16 bytes/doc in
 parquet, bucketable by hash for a co-located join) instead of Spark
@@ -81,8 +82,8 @@ def stream_dedup_ingest(
             T.StructField("content_hash", T.StringType(), False),
         ]
     )
-    kept_dir = _log_dir(spark, work_dir, "kept", kept_schema)
-    fp_dir = _log_dir(spark, work_dir, "fingerprints", _FP_SCHEMA)
+    kept_dir = _log_dir(work_dir, "kept")
+    fp_dir = _log_dir(work_dir, "fingerprints")
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         seen = _read_maintained(
