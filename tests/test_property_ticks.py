@@ -18,6 +18,7 @@ from hypothesis import strategies as st
 
 from tickdb_spark.api import TickDB
 from tickdb_spark.ingest import manifest
+from tickdb_spark.rollup import RollupStore, route_tick_query
 from tickdb_spark.schema import NS_PER_SECOND
 
 BASE = 1470092400  # 2016-08-01T23:00:00Z: batches cross midnight
@@ -128,9 +129,26 @@ def test_engine_matches_oracle_on_random_batches(batches, tdb_factory):
         },
     ).toPandas()
     expected = _oracle(batches, 60)
+    _assert_matches(out, expected, ["bucket", "x_sum", "x_count", "x_min", "y_last"])
 
+    # the same minutes answered from the minute level: the oracle groups
+    # over every row, so minutes holding only y answer too
+    RollupStore(tdb.spark, path).refresh(("minute",))
+    routed = route_tick_query(tdb.spark, path, {
+        "index": "s",
+        "from": BASE * NS_PER_SECOND,
+        "to": (BASE + 7260) * NS_PER_SECOND,
+        "group": "minute",
+        "fields": {"x": ["sum", "count", "min"]},
+        "exact": True,
+    })
+    assert any("/rollups/minute/" in f for f in routed.inputFiles())
+    _assert_matches(routed.toPandas(), expected, ["bucket", "x_sum", "x_count", "x_min"])
+
+
+def _assert_matches(out: pd.DataFrame, expected: pd.DataFrame, cols: list[str]) -> None:
     assert len(out) == len(expected)
-    for col in ["bucket", "x_sum", "x_count", "x_min", "y_last"]:
+    for col in cols:
         a, b = out[col].reset_index(drop=True), expected[col].reset_index(drop=True)
         both_nan = a.isna() & b.isna()
         if a.dtype.kind == "f":

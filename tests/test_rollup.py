@@ -153,9 +153,10 @@ def test_router_multiseries_routes(db, spark):
         assert a.asDict() == b.asDict(), (a, b)
 
 
-def test_router_ma_window_falls_back(db, spark):
-    """ma:<k> needs the post-aggregation window; the router must not
-    answer it from rollup merge aggregates."""
+def test_router_ma_window_routes(db, spark):
+    """ma:<k> routes: the shared finish applies the trailing window to
+    the per-bucket averages merged from the level, as it does to raw
+    ones."""
     tdb, path = db
     spec = {
         "index": "s1",
@@ -166,9 +167,47 @@ def test_router_ma_window_falls_back(db, spark):
         "exact": True,
     }
     routed_df = route_tick_query(spark, path, spec)
-    assert not _reads_rollup(routed_df, "hour")
+    assert _reads_rollup(routed_df, "hour")
     raw = run_tick_query(tdb.ticks("r"), spec).collect()
+    assert len(raw) > 3
     assert [r.asDict() for r in raw] == [r.asDict() for r in routed_df.collect()]
+
+
+@pytest.fixture(scope="module")
+def alternating(tmp_path_factory, spark):
+    """One series with a tick every hour: even hours carry only ``x``,
+    odd hours only ``y``."""
+    tdb = TickDB(spark, str(tmp_path_factory.mktemp("alt")))
+    tdb.create_db("alt")
+    tdb.put("alt", [
+        {"time": f"2016-08-01T{h:02d}:30:00Z", "index": "s",
+         "value": {"x" if h % 2 == 0 else "y": float(h + 1)}}
+        for h in range(6)
+    ])
+    path = tdb.catalog._existing("alt")
+    RollupStore(spark, path).refresh()
+    return tdb, path
+
+
+@pytest.mark.parametrize(
+    "reducers",
+    [
+        ["sum", "count", "min", "first"],  # hours without x: NULL / 0 rows
+        ["SUM", " max", "MA:3"],  # specs are parsed, not matched verbatim
+    ],
+)
+def test_routed_answer_equals_raw_answer(alternating, spark, reducers):
+    """The router answers with the raw path's finish: every bucket the
+    queried series has, also one where the queried field is absent, and
+    reducer specs read the same way."""
+    tdb, path = alternating
+    spec = {"index": "s", "from": "2016-08-01T00:00:00Z", "to": "2016-08-02T00:00:00Z",
+            "group": "hour", "fields": {"x": reducers}, "exact": True}
+    routed = route_tick_query(spark, path, spec)
+    assert _reads_rollup(routed, "hour")
+    raw = [r.asDict() for r in run_tick_query(tdb.ticks("alt"), spec).collect()]
+    assert len(raw) == 6
+    assert [r.asDict() for r in routed.collect()] == raw
 
 
 def test_rollup_scan_is_smaller(db, spark):

@@ -2411,6 +2411,25 @@ def _dedup_face(spark, landing, work):
     return sorted(r.doc_id for r in stream_dedup_ingest(spark, landing, work).collect())
 
 
+def test_dedup_replay_of_an_absorbed_epoch_keeps_its_docs(tmp_path, spark):
+    """A checkpoint replay of an epoch whose fingerprints a compaction
+    absorbed leaves that epoch's kept docs in place."""
+    import os
+
+    from tickdb_spark.streaming.index import compact_all
+
+    landing, work = tmp_path / "landing", str(tmp_path / "work")
+    landing.mkdir()
+    _land(landing, 0, [(1, "aa"), (2, "bb")], ["doc_id", "text"])
+    _land(landing, 1, [(3, "cc"), (4, "aa")], ["doc_id", "text"])
+    assert _dedup_face(spark, str(landing), work) == [1, 2, 3]
+    compact_all(spark, work, force=True)
+    commits = os.path.join(work, "checkpoint", "commits")
+    os.remove(os.path.join(commits, "1"))
+    os.remove(os.path.join(commits, ".1.crc"))
+    assert _dedup_face(spark, str(landing), work) == [1, 2, 3]
+
+
 def _dedup_batch(spark, rows):
     first = {}
     for doc_id, text in sorted(rows):

@@ -297,24 +297,6 @@ def test_sql_surface(tmp_path, spark):
     assert r["n"] == 5 and r["total"] == 10.0 and r["span_ns"] == 4 * 60 * 10**9
 
 
-def test_wide_view(tmp_path, spark):
-    from tickdb_spark.tickquery import wide_view
-
-    tdb = _mk(tmp_path, spark, "wv")
-    tdb.put(
-        "wv",
-        [
-            {"time": "2016-08-01T00:00:00Z", "index": "x",
-             "value": {"open": 1.0, "close": 2.0}},
-            {"time": "2016-08-01T00:00:01Z", "index": "x", "value": {"open": 3.0}},
-        ],
-    )
-    rows = wide_view(tdb.ticks("wv"), ["open", "close", "volume"]).orderBy("ts").collect()
-    assert [r["open"] for r in rows] == [1.0, 3.0]
-    assert [r["close"] for r in rows] == [2.0, None]
-    assert all(r["volume"] is None for r in rows)
-
-
 def test_bucket_edges_f4(tmp_path, spark):
     """FIXTURES.md F4: leap day, exact boundaries, 23:59:59.999999 vs
     next-midnight neighbors, mid-bucket from/to, from == to."""

@@ -20,10 +20,11 @@ ticks reads 365 rows/series instead of ~31M — the same asymptotic win the
 reference's tree gives, with Parquet partition pruning standing in for
 tree descent.
 
-Routing: a bucket query at calendar granularity G with G-aligned bounds is
-answered from the coarsest rollup ≤ G; everything else falls back to raw
-ticks. Pure Python planning — no Catalyst extension needed (SURVEY.md
-§4.2.1).
+Routing: a bucket query whose buckets are unions of whole level-L buckets
+and whose bounds are L-aligned is answered from the coarsest such built
+level; everything else falls back to raw ticks. Either input goes through
+the same finish, ``tickquery.answer``. Pure Python planning — no Catalyst
+extension needed (SURVEY.md §4.2.1).
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tickdb_spark.ingest import (
@@ -48,10 +49,12 @@ from tickdb_spark.schema import NS_PER_DAY, ns_to_day, ns_to_dt, parse_time_ns
 from tickdb_spark.session import scan_splits
 from tickdb_spark.tickquery import (
     _UNIT_NS,
+    Reducer,
     TickQuery,
-    bucket_start_ns,
+    answer,
     parse_group,
     run_tick_query,
+    select_range,
     ts_to_trunc_ns,
 )
 
@@ -66,15 +69,6 @@ ROLLUP_SCHEMA = (
 LEVELS = ("minute", "hour", "day", "month", "year")
 #: Each level's table: its name in the manifest and its dir in the database.
 _TABLES = {u: f"{ROLLUPS_DIR}/{u}" for u in LEVELS}
-
-#: ns widths used only for alignment checks (months/years align via
-#: date_trunc, not fixed widths).
-_ALIGN_CHECK = {
-    "minute": 60 * 10**9,
-    "hour": 3_600 * 10**9,
-    "day": 86_400 * 10**9,
-}
-
 
 def rollup_from_ticks(ticks: DataFrame, unit: str) -> DataFrame:
     """Base rollup: explode the field map and aggregate per
@@ -105,22 +99,26 @@ def rollup_from_ticks(ticks: DataFrame, unit: str) -> DataFrame:
     )
 
 
+#: The state merge law (reference ``node.go:553-577``, with the B6 min
+#: fix): each state of a bucket from the states of the finer buckets
+#: inside it, ``c(state)`` reading one state column.
+_MERGE = {
+    "sum": lambda c: F.sum(c("sum")),
+    "max": lambda c: F.max(c("max")),
+    "min": lambda c: F.min(c("min")),
+    "count": lambda c: F.sum(c("count")),
+    "first": lambda c: F.min_by(c("first"), c("first_ts")),
+    "first_ts": lambda c: F.min(c("first_ts")),
+    "last": lambda c: F.max_by(c("last"), c("last_ts")),
+    "last_ts": lambda c: F.max(c("last_ts")),
+}
+
+
 def rollup_merge(finer: DataFrame, unit: str) -> DataFrame:
-    """Coarsen a rollup one level by merging partial states
-    (reference ``node.go:553-577``, with the B6 min fix)."""
+    """Coarsen a rollup one level by merging partial states."""
     bucket = ts_to_trunc_ns(F.col("bucket"), unit).alias("bucket")
-    return (
-        finer.groupBy("series", bucket, "field")
-        .agg(
-            F.sum("sum").alias("sum"),
-            F.max("max").alias("max"),
-            F.min("min").alias("min"),
-            F.sum("count").alias("count"),
-            F.min_by("first", "first_ts").alias("first"),
-            F.min("first_ts").alias("first_ts"),
-            F.max_by("last", "last_ts").alias("last"),
-            F.max("last_ts").alias("last_ts"),
-        )
+    return finer.groupBy("series", bucket, "field").agg(
+        *[merge(F.col).alias(state) for state, merge in _MERGE.items()]
     )
 
 
@@ -274,145 +272,81 @@ def _covers(day, unit: str, dates: list[str]):
     return F.trunc(day, unit).isin(sorted(starts))
 
 
-def _aligned(ns: int, unit: str) -> bool:
-    if unit in _ALIGN_CHECK:
-        return ns % _ALIGN_CHECK[unit] == 0
+def _aligned(ns: int, level: str) -> bool:
+    if level in _UNIT_NS:
+        return ns % _UNIT_NS[level] == 0
     # month/year alignment: UTC midnight on the 1st of a month (of January)
     d = ns_to_day(ns)
-    return ns % NS_PER_DAY == 0 and d.day == 1 and (unit == "month" or d.month == 1)
+    return ns % NS_PER_DAY == 0 and d.day == 1 and (level == "month" or d.month == 1)
+
+
+def _level(query: TickQuery, m: dict) -> str | None:
+    """The coarsest level built in manifest ``m`` that answers ``query``,
+    or None. A level answers when the query asks for reducers, no queried
+    series has writes since the last refresh (``dirty``; expiry dirties
+    nothing: downsampled retention), both bounds are level-aligned, and
+    every query bucket is a union of whole level buckets: for a
+    fixed-width bucket (N-unit anchored ones too, as the anchor IS
+    ``from``) when the level's width divides the bucket's, for an N-month
+    or N-year bucket at every level up to the bucket's unit."""
+    queried = {query.series} if isinstance(query.series, str) else query.series
+    dirty = {s for s, _ in m["dirty"]}
+    if not query.reducers() or (dirty and (queried is None or not dirty.isdisjoint(queried))):
+        return None
+    count, unit = parse_group(query.group)
+    frm, to = parse_time_ns(query.frm), parse_time_ns(query.to)
+    for lv in reversed(LEVELS):
+        if unit in _UNIT_NS:
+            fits = lv in _UNIT_NS and count * _UNIT_NS[unit] % _UNIT_NS[lv] == 0
+        else:
+            fits = LEVELS.index(lv) <= LEVELS.index(unit)
+        if fits and _TABLES[lv] in m["tables"] and _aligned(frm, lv) and _aligned(to, lv):
+            return lv
+    return None
+
+
+def _merged(field: str, red: Reducer) -> Column:
+    """``red`` over ``field``'s merged states (``_MERGE``), equal to the
+    exact-mode raw aggregate (``tickquery._agg_expr``). Rows of other
+    fields read NULL, which every merge aggregate skips (min_by/max_by
+    skip NULL ordering keys, like min/max skip NULLs)."""
+
+    def c(state: str) -> Column:
+        return F.when(F.col("field") == field, F.col(state))
+
+    if red.name == "sum":
+        return _MERGE["sum"](c).cast("double")
+    if red.name == "count":
+        # a field absent from a bucket counts 0 raw, not NULL
+        return F.coalesce(_MERGE["count"](c), F.lit(0).cast("long"))
+    if red.name in ("avg", "ma"):
+        return _MERGE["sum"](c).cast("double") / _MERGE["count"](c)
+    if red.name in ("max", "min", "first", "last"):
+        return _MERGE[red.name](c)
+    raise ValueError(f"unknown reducer: {red.name}")
 
 
 def route_tick_query(
     spark: SparkSession, db_path: str, query: TickQuery | dict
 ) -> DataFrame:
-    """Answer a bucket query from the best rollup, falling back to raw
-    ticks when semantics demand it (unaligned bounds, bucket widths no
-    level divides, or no rollup built), like the reference's
-    rollup-vs-leaf read path (``cursor.go:269-352``). The routed result
-    equals the EXACT-mode raw answer (``exact=True``), not the default
-    double one: the rollup's ``sum`` state is ``decimal(28,6)``, which
-    rounds each value to 6 fractional digits, so ``sum``/``avg`` of a
-    routed answer drop every value smaller than 5e-7 in magnitude
+    """Answer a bucket query from the best rollup level (``_level``),
+    falling back to raw ticks when none answers it, like the reference's
+    rollup-vs-leaf read path (``cursor.go:269-352``). Both go through
+    ``tickquery.answer``; a routed one merges every reducer's field
+    states in one groupBy over the level's rows. The routed result equals
+    the EXACT-mode raw answer (``exact=True``), not the default double one:
+    the rollup's ``sum`` state is ``decimal(28,6)``, which rounds each
+    value to 6 fractional digits, so ``sum``/``avg``/``ma`` of a routed
+    answer drop every value smaller than 5e-7 in magnitude
     (``max``/``min``/``count``/``first``/``last`` match either way).
 
-    N-unit anchored buckets (D4) route too: a ``count > 1`` bucket is a
-    union of whole level-L buckets whenever L's width divides the bucket
-    width and both bounds are L-aligned (the anchor IS ``from``), so e.g.
-    a 5-minute anchored query merges 5 minute-states per bucket instead
-    of rescanning raw ticks. N-month/N-year buckets are unions of whole
-    months, so they route from the month (or day/…) level when bounds sit
-    on month boundaries."""
+    Dirty series, built levels and the level's files all come from one
+    manifest."""
     if isinstance(query, dict):
         query = TickQuery.from_dict(query)
-    count, unit = parse_group(query.group)
-    # semantics the rollup answerer doesn't cover: raw scans (no fields)
-    # and windowed moving averages (ma:<k> needs a post-agg window over
-    # the full bucket sequence) go to the raw path
-    specs = [
-        r
-        for rs in query.fields.values()
-        for r in ([rs] if isinstance(rs, str) else rs)
-    ]
-    if not specs or any(s.startswith("ma:") for s in specs):
-        return run_tick_query(read_ticks(spark, db_path), query)
-    # a queried series with writes since the last refresh has stale
-    # rollup rows (expiry dirties nothing: downsampled retention); one
-    # manifest answers that, the built levels and the level's files
     m = manifest(db_path)
-    dirty = {s for s, _ in m["dirty"]}
-    queried = {query.series} if isinstance(query.series, str) else query.series
-    if dirty and (queried is None or not dirty.isdisjoint(queried)):
+    level = _level(query, m)
+    if level is None:
         return run_tick_query(read_ticks(spark, db_path), query)
-    store = RollupStore(spark, db_path)
-    avail = store.available(m)
-    frm, to = parse_time_ns(query.frm), parse_time_ns(query.to)
-    usable = None
-    if count == 1 and unit in LEVELS:
-        candidates = tuple(reversed(LEVELS[: LEVELS.index(unit) + 1]))
-    elif unit in _UNIT_NS:
-        # fixed-width bucket (incl. count==1 week / N-second): usable
-        # levels are the fixed-width ones whose width divides the bucket's
-        width = count * _UNIT_NS[unit]
-        candidates = tuple(
-            lv for lv in ("day", "hour", "minute") if width % _ALIGN_CHECK[lv] == 0
-        )
-    elif unit == "month":
-        candidates = ("month", "day", "hour", "minute")
-    else:  # year (N-year buckets are unions of whole years and months)
-        candidates = ("year", "month", "day", "hour", "minute")
-    for candidate in candidates:
-        if candidate in avail and _aligned(frm, candidate) and _aligned(to, candidate):
-            usable = candidate
-            break
-    if usable is None:
-        return run_tick_query(read_ticks(spark, db_path), query)
-    return _answer_from_rollup(store.read(usable, m), query, count, unit, frm)
-
-
-def _answer_from_rollup(
-    rollup: DataFrame, query: TickQuery, count: int, unit: str, anchor_ns: int
-) -> DataFrame:
-    """One conditional-aggregation pass: every (field, reducer) pair is a
-    field-gated merge aggregate in a single groupBy(bucket) — one shuffle
-    over the (tiny) rollup rows instead of the aggregate-then-pivot
-    two-shuffle shape. As in ``run_tick_query``, the at-most-one-row-per-
-    bucket answer is then sorted within one partition, not globally."""
-    frm, to = parse_time_ns(query.frm), parse_time_ns(query.to)
-    multi = not isinstance(query.series, str)
-    cond = (F.col("bucket") >= frm) & (F.col("bucket") < to)
-    if isinstance(query.series, str):
-        cond = (F.col("series") == query.series) & cond
-    elif query.series is not None:
-        cond = F.col("series").isin(list(query.series)) & cond
-    df = rollup.where(cond)
-    # Pre-filter to queried fields: a bucket whose rollup rows cover only
-    # non-queried fields must emit NO row (matching the raw-scan answer),
-    # not a row of all-NULL aggregates — and gated-out rows never entering
-    # the aggregate is cheaper anyway.
-    df = df.where(F.col("field").isin(list(query.fields)))
-    # bucket_start_ns maps a (finer) rollup bucket start to its query
-    # bucket for every group shape: calendar truncation for count == 1,
-    # anchored BIGINT arithmetic for N-unit, month-index arithmetic for
-    # N-month/N-year — the same expression raw ticks go through, applied
-    # to level-bucket starts instead of tick timestamps.
-    bucket = bucket_start_ns(F.col("bucket"), count, unit, anchor_ns).alias("bucket")
-    aggs = []
-    for fname, rspecs in query.fields.items():
-        if isinstance(rspecs, str):
-            rspecs = [rspecs]
-        gate = F.col("field") == fname
-        for rspec in rspecs:
-            aggs.append(_merge_reducer_gated(rspec, f"{fname}_{rspec}", gate))
-    if not aggs:
-        raise ValueError("raw scans cannot be answered from a rollup")
-    group_cols = (["series"] if multi else []) + [bucket]
-    order_cols = (["series"] if multi else []) + ["bucket"]
-    return df.groupBy(*group_cols).agg(*aggs).coalesce(1).sortWithinPartitions(*order_cols)
-
-
-def _merge_reducer_gated(rspec: str, alias: str, gate):
-    """Merge aggregate over one field's rollup states; rows of other
-    fields are gated to NULL, which every aggregate here ignores
-    (min_by/max_by skip NULL ordering keys, like min/max skip NULLs)."""
-    name = rspec.split(":", 1)[0]
-
-    def g(c: str):
-        return F.when(gate, F.col(c))
-
-    if name == "sum":
-        return F.sum(g("sum")).cast("double").alias(alias)
-    if name == "max":
-        return F.max(g("max")).alias(alias)
-    if name == "min":
-        return F.min(g("min")).alias(alias)
-    if name == "count":
-        # raw-path count of a field absent from a (non-empty) bucket is 0,
-        # not NULL — coalesce so merged states agree bit-for-bit
-        return F.coalesce(F.sum(g("count")), F.lit(0).cast("long")).alias(alias)
-    if name in ("avg", "ma"):
-        return (F.sum(g("sum")).cast("double") / F.sum(g("count"))).alias(alias)
-    if name == "first":
-        return F.min_by(g("first"), g("first_ts")).alias(alias)
-    if name == "last":
-        return F.max_by(g("last"), g("last_ts")).alias(alias)
-    raise ValueError(f"unknown reducer: {name}")
+    rows = select_range(RollupStore(spark, db_path).read(level, m), query, "bucket")
+    return answer(rows, query, "bucket", _merged)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tickdb_spark.ingest import manifest
 from tickdb_spark.streaming.index import (
     _drain_landing,
     _log_dir,
@@ -86,6 +87,12 @@ def stream_dedup_ingest(
     fp_dir = _log_dir(work_dir, "fingerprints")
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
+        # kept is written before fingerprints, so a fingerprint epoch a
+        # compaction absorbed proves its kept rows were published; a
+        # checkpoint replay of it would find its own hashes in the
+        # compacted base, elect no keepers and empty its kept epoch
+        if str(epoch_id) in manifest(work_dir).get("absorbed", {}).get("fingerprints", []):
+            return
         seen = _read_maintained(
             batch.sparkSession, fp_dir, _FP_SCHEMA, exclude_epoch=epoch_id
         )

@@ -21,6 +21,7 @@ trailing moving average via ``ma:<k>``.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column, DataFrame, Window
@@ -120,6 +121,15 @@ class TickQuery:
             exact=bool(spec.get("exact", False)),
         )
 
+    def reducers(self) -> list[tuple[str, Reducer]]:
+        """``fields`` as ``(field, Reducer)`` pairs in request order; the
+        answer names each one's column ``<field>_<reducer name>``."""
+        return [
+            (f, Reducer.parse(r))
+            for f, rs in self.fields.items()
+            for r in ([rs] if isinstance(rs, str) else rs)
+        ]
+
 
 def bucket_start_ns(ts_ns: Column, count: int, unit: str, anchor_ns: int) -> Column:
     """Bucket-start epoch-ns for a timestamp.
@@ -178,35 +188,33 @@ def ts_to_trunc_ns(ts_ns: Column, unit: str) -> Column:
 EXACT_DECIMAL = "decimal(18,6)"
 
 
-def _agg_expr(value: Column, ts: Column, red: Reducer, alias: str, exact: bool = False) -> Column:
-    """Per-bucket aggregate for one (field, reducer).
+def _agg_expr(field: str, red: Reducer, exact: bool) -> Column:
+    """Per-bucket aggregate of one (field, reducer) over raw ticks.
 
     first/last use ``min_by``/``max_by`` keyed on ts *where the field is
     present*, matching DuckDB ``arg_min/arg_max`` NULL handling — the
     reference instead reads its rollup's first/last slots
     (``cursor.go:316-329``) and emits 0.0 for absent fields (B8 → NULL).
     """
-    name = red.name
+    name, value = red.name, F.col("value").getItem(field)
     if name == "sum":
         if exact:
-            return F.sum(value.cast(EXACT_DECIMAL)).cast("double").alias(alias)
-        return F.sum(value).alias(alias)
+            return F.sum(value.cast(EXACT_DECIMAL)).cast("double")
+        return F.sum(value)
     if name == "max":
-        return F.max(value).alias(alias)
+        return F.max(value)
     if name == "min":
-        return F.min(value).alias(alias)
+        return F.min(value)
     if name == "count":
-        return F.count(value).alias(alias)
+        return F.count(value)
     if name in ("avg", "ma"):  # bucket-level state; real MA applied post-agg
         if exact:
-            return (
-                F.sum(value.cast(EXACT_DECIMAL)).cast("double") / F.count(value)
-            ).alias(alias)
-        return F.avg(value).alias(alias)
+            return F.sum(value.cast(EXACT_DECIMAL)).cast("double") / F.count(value)
+        return F.avg(value)
     if name == "first":
-        return F.min_by(value, F.when(value.isNotNull(), ts)).alias(alias)
+        return F.min_by(value, F.when(value.isNotNull(), F.col("ts")))
     if name == "last":
-        return F.max_by(value, F.when(value.isNotNull(), ts)).alias(alias)
+        return F.max_by(value, F.when(value.isNotNull(), F.col("ts")))
     raise ValueError(f"unknown reducer: {name}")
 
 
@@ -234,69 +242,67 @@ def push_ts_range(df: DataFrame, frm_ns: int, to_ns: int) -> DataFrame:
     return df
 
 
+def select_range(df: DataFrame, query: TickQuery, col: str) -> DataFrame:
+    """The rows of the queried series with ``col`` in ``[from, to)``."""
+    cond = (F.col(col) >= parse_time_ns(query.frm)) & (F.col(col) < parse_time_ns(query.to))
+    if isinstance(query.series, str):
+        cond = (F.col("series") == query.series) & cond
+    elif query.series is not None:
+        cond = F.col("series").isin(list(query.series)) & cond
+    return df.where(cond)
+
+
+def answer(
+    df: DataFrame, query: TickQuery, col: str, agg: Callable[[str, Reducer], Column]
+) -> DataFrame:
+    """The one finish of every bucket answer, raw or routed: group the
+    selected rows by ``(series?, bucket of col)`` into ``agg(field,
+    reducer)`` for each ``query.reducers()`` pair, named
+    ``<field>_<reducer>``, then the ``ma:<k>`` windows and the order, all
+    in one partition.
+
+    ``col`` is a tick's ``ts`` or a rollup row's bucket start: every
+    level bucket the router reads lies inside one query bucket, so the
+    same expression maps either to its query bucket. The answer is at
+    most one row per bucket and goes to the driver whole, so the window
+    needs no exchange and the sort is within that partition, not a
+    range-partitioned global sort (whose sampling job and second shuffle
+    cost more driver time than the rows they order)."""
+    count, unit = parse_group(query.group)
+    multi = not isinstance(query.series, str)
+    keys = ["series"] if multi else []
+    bucket = bucket_start_ns(F.col(col), count, unit, parse_time_ns(query.frm))
+    pairs = query.reducers()
+    aggs = [agg(f, red).alias(f"{f}_{red.name}") for f, red in pairs]
+    out = df.groupBy(*keys, bucket.alias("bucket")).agg(*aggs).coalesce(1)
+    for fname, red in pairs:
+        if red.name == "ma" and red.ma_window > 1:
+            alias = f"{fname}_ma"
+            base = Window.partitionBy("series") if multi else Window
+            w = base.orderBy("bucket").rowsBetween(-(red.ma_window - 1), 0)
+            out = out.withColumn(alias, F.avg(alias).over(w))
+    return out.sortWithinPartitions(*keys, "bucket")
+
+
 def run_tick_query(ticks: DataFrame, query: TickQuery | dict) -> DataFrame:
     """Execute a tick query against the canonical (deduped) ticks DataFrame.
 
     Returns one row per non-empty bucket: ``(bucket BIGINT ns, <field>_<reducer>...)``
     ordered by bucket. Plan shape: partition-pruned scan (the series and,
     through ``push_ts_range``, the ``dt`` days ``[from, to)`` overlaps)
-    → partial aggregate → one exchange → final aggregate → one partition
-    (optional ``ma:<k>`` window, then a sort within it). The answer is at
-    most one row per bucket and goes to the driver whole, so everything
-    after the aggregate runs in one partition: no exchange for the window
-    and no range-partitioned global sort (that sort's sampling job and
-    second shuffle cost more driver time than the rows they order).
+    → partial aggregate → one exchange → final aggregate → ``answer``'s
+    one partition (optional ``ma:<k>`` window, then a sort within it).
     """
     if isinstance(query, dict):
         query = TickQuery.from_dict(query)
-    frm = parse_time_ns(query.frm)
-    to = parse_time_ns(query.to)
-    count, unit = parse_group(query.group)
-
+    parse_group(query.group)  # a bad group fails a raw scan too
+    frm, to = parse_time_ns(query.frm), parse_time_ns(query.to)
+    df = select_range(push_ts_range(ticks, frm, to), query, "ts").drop("ts_raw", "dt")
+    if query.reducers():
+        return answer(df, query, "ts", lambda f, red: _agg_expr(f, red, query.exact))
+    # raw range scan (D2) when no reducers requested: every row goes to
+    # the driver, so on a clean table (no dedup exchange) the scan itself
+    # then reads in that one partition
     multi = not isinstance(query.series, str)
-    cond = (F.col("ts") >= frm) & (F.col("ts") < to)
-    if isinstance(query.series, str):
-        cond = (F.col("series") == query.series) & cond
-    elif query.series is not None:
-        cond = F.col("series").isin(list(query.series)) & cond
-    df = push_ts_range(ticks, frm, to).where(cond).drop("ts_raw", "dt")
-    bucket = bucket_start_ns(F.col("ts"), count, unit, frm).alias("bucket")
-
-    aggs, ma_cols = [], []
-    for fname, rspecs in query.fields.items():
-        if isinstance(rspecs, str):
-            rspecs = [rspecs]
-        for rspec in rspecs:
-            red = Reducer.parse(rspec)
-            alias = f"{fname}_{red.name}"
-            value = F.col("value").getItem(fname)
-            aggs.append(_agg_expr(value, F.col("ts"), red, alias, exact=query.exact))
-            if red.name == "ma" and red.ma_window > 1:
-                ma_cols.append((alias, red.ma_window))
-
-    if not aggs:  # raw range scan (D2) when no reducers requested
-        # every row goes to the driver: on a clean table (no dedup
-        # exchange) the scan itself then reads in that one partition
-        cols = (["series"] if multi else []) + ["ts", "value"]
-        return (
-            df.select(*cols).coalesce(1).sortWithinPartitions(*cols[: 2 if multi else 1])
-        )
-
-    group_cols = (["series"] if multi else []) + [bucket]
-    out = df.groupBy(*group_cols).agg(*aggs).coalesce(1)
-    order_cols = (["series"] if multi else []) + ["bucket"]
-    for alias, k in ma_cols:
-        base = Window.partitionBy("series") if multi else Window
-        w = base.orderBy("bucket").rowsBetween(-(k - 1), 0)
-        out = out.withColumn(alias, F.avg(alias).over(w))
-    return out.sortWithinPartitions(*order_cols)
-
-
-def wide_view(ticks: DataFrame, fields: list[str]) -> DataFrame:
-    """Pivot the schemaless map into fixed columns (SURVEY.md §1.2): one
-    DOUBLE column per requested field, NULL where absent. The ergonomic
-    shape for fixed-schema workloads (OHLC candles etc.); map access is
-    a per-row lookup, so this is pure projection — no shuffle."""
-    cols = [F.col("series"), F.col("ts"), F.col("ts_utc")]
-    cols += [F.col("value").getItem(f).alias(f) for f in fields]
-    return ticks.select(*cols)
+    cols = (["series"] if multi else []) + ["ts", "value"]
+    return df.select(*cols).coalesce(1).sortWithinPartitions(*cols[: 2 if multi else 1])
